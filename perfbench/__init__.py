@@ -1,0 +1,5 @@
+"""Geo-engine benchmark: workloads, per-layer ladder and event-log trace.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see perfbench/README.md.
+"""
