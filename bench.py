@@ -237,8 +237,8 @@ def flagship(spark, path: str, sink: str = "count") -> int:
         .withColumn("tile_x", tile_x(F.col("lon"), 12))
         .withColumn("tile_y", tile_y(F.col("lat"), 12))
     )
-    # broadcast cell-cover index fused into the kernel stage: ONE python
-    # hop for the whole job; captions/ids never cross the Arrow boundary
+    # broadcast cell-cover index inside the match UDF (the job's second
+    # Arrow crossing); captions/ids never cross the Arrow boundary
     polys = make_polygons(64)
     joined = spatial_join_fused(pts, polys, level=8, cell_col="cell", cell_level=10)
     if sink == "noop":

@@ -462,7 +462,12 @@ def main(argv=None) -> int:
         it = iter(rest)
         for a in it:
             if a == "--max-op-skips":
-                max_op_skips = int(next(it))
+                try:
+                    max_op_skips = int(next(it))
+                except (StopIteration, ValueError):
+                    print("usage: gie [-v] [--max-op-skips N] FILE...",
+                          file=sys.stderr)
+                    return 2
             elif not a.startswith("-"):
                 files.append(a)
         return run_gie_files(files, sys.stdout, verbose=verbose,

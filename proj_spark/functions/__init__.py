@@ -253,34 +253,6 @@ def cell_parent(cell: Column, level: int) -> Column:
     return cell.bitwiseAND(F.lit(-lsb)).bitwiseOR(F.lit(lsb))
 
 
-def image_geo_udf(level: int = 10, utm_spec: str = "+proj=utm +ellps=WGS84"):
-    """Fused flagship kernel: phash -> struct<lon, lat, utm_x, utm_y, cell>.
-
-    ONE Arrow round trip for the whole per-point chain (coords from phash,
-    Poder/Engsager UTM with per-point zone, S2 cell id) — the distributed
-    analogue of PROJ's fused pipeline execution (reference
-    src/pipeline.cpp:163-176 runs all steps per point; we run all steps per
-    Arrow batch). Tiles stay JVM-side Column math on the returned lon/lat.
-    """
-    from proj_spark.sources.synth import lonlat_from_phash
-
-    pipe = compile_pipeline(utm_spec)
-
-    @pandas_udf("lon double, lat double, utm_x double, utm_y double, cell long")
-    def _udf(ph: pd.Series) -> pd.DataFrame:
-        phv = ph.to_numpy()
-
-        def run(sl):
-            lon, lat = lonlat_from_phash(phv[sl])
-            x, y, _, _ = pipe.fwd_deg(lon, lat)
-            cid = cells.s2_cell_id(lon, lat, level)
-            return {"lon": lon, "lat": lat, "utm_x": x, "utm_y": y, "cell": cid}
-
-        return _chunked(run, len(phv), ["lon", "lat", "utm_x", "utm_y", "cell"])
-
-    return _udf
-
-
 # the gie-fixture-style CRS chain every record passes through in the
 # flagship/bench job (north star: "Every record is reprojected through the
 # same CRS pipeline steps PROJ's gie/builtins.gie regression suite

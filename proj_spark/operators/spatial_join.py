@@ -139,22 +139,23 @@ def spatial_join_fused(
     cell_level: int,
 ) -> DataFrame:
     """Broadcast-index variant: the cover (cell -> candidate poly indices)
-    ships INSIDE the pandas UDF as a plain dict, and the UDF returns the
+    ships INSIDE a pandas UDF as a CSR array index, and the UDF returns the
     matching poly indices per point as ``array<int>`` — exploded and mapped
-    to polygon ids by JVM codegen.
+    to polygon ids by a JVM lookup into a literal array.
 
-    vs the relational ``spatial_join``: no join stage, no second python
-    hop, and pass-through payload columns (captions, image bytes) never
-    cross the Arrow boundary — one python stage total. This is the north
-    rule's "broadcast of the polygon R-tree/cell-cover index when it
-    fits"; fall back to ``spatial_join(strategy='smj')`` when it doesn't.
+    vs the relational ``spatial_join``: no join stage and no Python-RDD
+    scan, and pass-through payload columns (captions, image bytes) never
+    cross the Arrow boundary; only (lon, lat, cell) go in. The match UDF
+    is still its own Arrow crossing, so after an upstream kernel UDF the
+    plan holds two ArrowEvalPython nodes. This is the north rule's
+    "broadcast of the polygon R-tree/cell-cover index when it fits"; fall
+    back to ``spatial_join(strategy='smj')`` when it doesn't.
     """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     from proj_spark.functions import cell_parent
 
-    spark = points.sparkSession
     cover_pdf = polygon_cover(polys, level).sort_values(["cell", "poly_idx"])
     # CSR layout: sorted unique cells -> [start, end) ranges into poly ids
     cov_cells, starts = np.unique(cover_pdf["cell"].to_numpy(np.int64),
@@ -252,11 +253,10 @@ def spatial_join_fused(
     matched = pts.withColumn(
         "_pidx", F.explode(_matches(F.col(lon_col), F.col(lat_col), F.col("_cell_j")))
     ).drop("_cell_j")
-    id_map = spark.createDataFrame(
-        [(i, p.polygon_id) for i, p in enumerate(poly_list)],
-        "_pidx int, polygon_id string",
-    )
-    return matched.join(F.broadcast(id_map), "_pidx").drop("_pidx")
+    # poly index -> id inside codegen: a literal-array lookup, not a join
+    # against a driver-built (Python-RDD) table
+    poly_ids = F.array(*[F.lit(p.polygon_id) for p in poly_list])
+    return matched.withColumn("polygon_id", F.get(poly_ids, F.col("_pidx"))).drop("_pidx")
 
 
 def spatial_join(

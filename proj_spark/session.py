@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that contains the proj_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "proj-spark",
@@ -65,6 +68,18 @@ def get_spark(
     # default elsewhere.
     if os.environ.get("PROJ_SPARK_UDS", "").lower() in ("1", "true", "yes"):
         b = b.config("spark.python.unix.domain.socket.enabled", "true")
+    # Every Python task re-reads pyspark.zip's directory 16 times inside
+    # importlib.invalidate_caches() (~0.27 CPU-s per task, 97% of a small
+    # task's worker time); the engine's daemon re-reads an archive only
+    # when its bytes changed (see proj_spark/_daemon.py). Workers import
+    # it, and the UDF closures, from the package root shipped on their
+    # PYTHONPATH, so any working directory serves. Sessions not built here
+    # (spark-submit --py-files runs) keep the stock daemon: py-files reach
+    # the workers only after the daemon has started.
+    pythonpath = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, os.environ.get("PYTHONPATH")) if p)
+    b = b.config("spark.executorEnv.PYTHONPATH", pythonpath)
+    b = b.config("spark.python.daemon.module", "proj_spark._daemon")
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -88,6 +88,16 @@ def test_gie_skip_budget_flags_compile_regressions(tmp_path, capsys):
     assert "exceed budget" in out
 
 
+@pytest.mark.parametrize("argv", [["--max-op-skips"], ["--max-op-skips", "x"]])
+def test_gie_max_op_skips_needs_an_integer(argv, capsys):
+    """A missing or non-integer budget is a usage error (exit 2), not a
+    StopIteration/ValueError traceback."""
+    from proj_spark.cli import main
+
+    assert main(["gie", *argv]) == 2
+    assert "usage: gie" in capsys.readouterr().err
+
+
 def test_gie_z_lane_uses_declared_tolerance():
     """gie folds z into ONE 3D distance under the declared tolerance
     (gie.cpp proj_xyz_dist) — a 0.2 mm z error must fail a 0.1 mm
