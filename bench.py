@@ -117,64 +117,6 @@ def _bench_only_queries() -> dict:
             "minhash_sigs_xx": minhash_sigs_xx}
 
 
-def loopback_probe(bulk_bytes: int = 32 << 20, pings: int = 200) -> dict:
-    """Measure loopback-TCP RTT and bandwidth (~0.2 s): the Arrow
-    JVM<->python pipe rides loopback, and this host throttles it ~2x in
-    hours-long "slow phases" (BENCH/REGRESSION.md round-4 forensics:
-    fast ~73 us / ~620 MB/s, slow ~153 us / ~390 MB/s). The verdict
-    decides the worker transport below and is stamped into the JSON so
-    the recorded artifact carries its own phase evidence."""
-    import socket
-    import statistics
-    import threading
-
-    srv = socket.socket()
-    srv.bind(("127.0.0.1", 0))
-    srv.listen(1)
-    port = srv.getsockname()[1]
-
-    def _serve():
-        c, _ = srv.accept()
-        with c:
-            for _ in range(pings):
-                b = c.recv(1)
-                if not b:
-                    return
-                c.sendall(b)
-            got = 0
-            while got < bulk_bytes:
-                d = c.recv(1 << 20)
-                if not d:
-                    break
-                got += len(d)
-            c.sendall(b"k")
-
-    t = threading.Thread(target=_serve, daemon=True)
-    t.start()
-    s = socket.create_connection(("127.0.0.1", port))
-    s.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-    rtts = []
-    for _ in range(pings):
-        t0 = time.perf_counter()
-        s.sendall(b"p")
-        s.recv(1)
-        rtts.append(time.perf_counter() - t0)
-    chunk = b"\0" * (1 << 20)
-    t0 = time.perf_counter()
-    for _ in range(bulk_bytes >> 20):
-        s.sendall(chunk)
-    s.recv(1)
-    bulk_s = time.perf_counter() - t0
-    s.close()
-    srv.close()
-    rtt_us = statistics.median(rtts) * 1e6
-    mbps = bulk_bytes / bulk_s / 1e6
-    # midpoints between the two measured phase signatures
-    slow = rtt_us > 113.0 or mbps < 500.0
-    return {"rtt_us": round(rtt_us, 1), "loopback_mbps": round(mbps, 1),
-            "verdict": "slow" if slow else "fast"}
-
-
 def _sf_from_dir(d: str) -> float:
     base = os.path.basename(d.rstrip("/"))
     try:
@@ -256,17 +198,6 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
 
-    # phase-robust transport (round-4 verdict #1): probe the loopback
-    # phase BEFORE the session exists; in a slow phase flip the worker
-    # IPC to unix-domain sockets (measured stable 2.6-2.8M img/s in both
-    # phases vs TCP's 1.9-4.0M swing). BENCH_TRANSPORT=tcp|uds overrides.
-    probe = loopback_probe()
-    transport = os.environ.get("BENCH_TRANSPORT", "auto")
-    if transport == "auto":
-        transport = "uds" if probe["verdict"] == "slow" else "tcp"
-    if transport == "uds":
-        os.environ["PROJ_SPARK_UDS"] = "1"
-
     spark = get_spark("proj-spark-bench", cores=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -276,21 +207,6 @@ def main() -> None:
     # pays ~25s of python-worker spawn + codegen + broadcast warmup that a
     # long-lived cluster job pays exactly once
     matched = flagship(spark, path)
-
-    # mid-run phase recheck: warmup takes long enough for the host to
-    # slip into a slow phase after a fast-phase start probe. TCP can't
-    # switch transport in a live JVM, so restart the session on UDS —
-    # cheaper than letting every timed number ride a throttled pipe.
-    if transport == "tcp":
-        p2 = loopback_probe()
-        if p2["verdict"] == "slow":
-            spark.stop()
-            os.environ["PROJ_SPARK_UDS"] = "1"
-            transport = "uds-midrun-flip"
-            probe = {**probe, "midrun": p2}
-            spark = get_spark("proj-spark-bench-uds", cores=CPUS)
-            spark.sparkContext.setLogLevel("ERROR")
-            matched = flagship(spark, path)  # re-warm the new session
 
     # best-of-k: the sandbox VM's cycle delivery is erratic (loopback-TCP
     # throttling phases measured at 2-20x on Arrow-heavy stages — see
@@ -322,10 +238,6 @@ def main() -> None:
     timings: dict[str, float] = {"flagship_spatial_join": round(flagship_sec, 3)}
     medians: dict[str, float] = {}
     side: dict[str, float] = {}
-    # per-query phase verdicts: a quick probe after each query marks
-    # which timings rode a throttled loopback, so a polluted draw is
-    # visible in the artifact instead of needing forensics
-    q_phase: dict[str, str] = {}
 
     def _time(name):
         fn = qs[name]
@@ -345,14 +257,10 @@ def main() -> None:
 
     for name in names:
         timings[name], medians[name] = _time(name)
-        if transport.startswith("tcp"):
-            q_phase[name] = loopback_probe(bulk_bytes=8 << 20,
-                                           pings=50)["verdict"]
     if names:  # side tier timed only on full (non-overridden) runs
         for name in (SIDE if names == HEADLINE else []):
             side[name], _ = _time(name)
 
-    probe_end = loopback_probe()
     # the flagship is the headline number and runs FIRST, so an early
     # slow phase pollutes it even when the rest of the suite caught fast
     # draws; one end-of-run re-time (best kept) gives it a second phase
@@ -366,9 +274,6 @@ def main() -> None:
         timings["flagship_spatial_join"] = round(flagship_sec, 3)
     total = round(sum(timings.values()), 3)
     print(json.dumps({
-        "host_phase": {"start": probe, "end": probe_end,
-                       "transport": transport,
-                       "per_query": q_phase},
         "metric": "spatial-join+tile throughput and headline query suite",
         "value": total,
         "unit": "sec",

@@ -4,13 +4,14 @@ reference's catalogue (SURVEY §2.4 bulk), vectorized.
 Each kernel is a numpy re-derivation of the same-named reference file in
 /root/reference/src/projections/ (constants are the published Snyder /
 author values the reference also uses). Ops whose reference has no
-inverse raise NotImplementedError from `inv`; ops whose reference inverts
+inverse define only `<op>_fwd`; ops whose reference inverts
 via the generic 2D Newton (wink2) or a specialized Newton (aitoff/wintri,
 vandg) use kernels.common.generic_inverse_2d seeded with the forward's
 approximate inverse — converging to the same fixed point within gie
 tolerances.
 
-Registry of (fwd, inv, needs_params) lives in OPS at the bottom.
+The op table that wires these kernels (setup, radius, lam0) is
+`plans/pipeline._PROJECTIONS`.
 """
 
 from __future__ import annotations
@@ -25,12 +26,6 @@ from proj_spark.kernels.common import generic_inverse_2d
 HALFPI = math.pi / 2
 FORTPI = math.pi / 4
 PI = math.pi
-
-
-def _no_inverse(name):
-    def inv(x, y, C=None):
-        raise NotImplementedError(f"{name}: no inverse (reference has none)")
-    return inv
 
 
 def _newton_theta(phi, k, num=10, tol=1e-7, form="moll"):

@@ -24,7 +24,7 @@ tree walk.
 from __future__ import annotations
 
 import math
-from typing import Sequence
+from typing import NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
@@ -112,6 +112,8 @@ def _ray_cast(lon: np.ndarray, lat: np.ndarray, ring: np.ndarray) -> np.ndarray:
 
 
 def _point_in_poly(lon: np.ndarray, lat: np.ndarray, p: Polygon) -> np.ndarray:
+    """One polygon at a time: the brute-force reference the tests compare
+    both joins against. The joins themselves use ``_verify_vec``."""
     if p.kind == "cap":
         clon, clat, radius = p.cap
         d = np.degrees(
@@ -126,6 +128,72 @@ def _point_in_poly(lon: np.ndarray, lat: np.ndarray, p: Polygon) -> np.ndarray:
         )
         return d <= radius
     return _ray_cast(lon, lat, p.ring)
+
+
+class _Edges(NamedTuple):
+    """Padded edge matrices, (n_polys, max_edges) each, plus cap rows."""
+
+    x1: np.ndarray
+    y1: np.ndarray
+    x2: np.ndarray
+    y2: np.ndarray
+    cap: np.ndarray      # (n_polys, 3): lon, lat, radius; NaN for rings
+    is_cap: np.ndarray
+
+
+def _edge_matrices(polys: Sequence[Polygon]) -> _Edges:
+    """Degenerate padding edges (repeated first vertex => y1 == y2)
+    contribute no ray crossings, so a single (candidates x max_edges)
+    broadcast evaluates EVERY candidate against its own polygon with no
+    per-polygon python loop."""
+    max_e = max((len(p.ring) // 2 for p in polys if p.kind == "poly"), default=1)
+    P = len(polys)
+    EX1 = np.zeros((P, max_e)); EY1 = np.zeros((P, max_e))
+    EX2 = np.zeros((P, max_e)); EY2 = np.zeros((P, max_e))
+    CAP = np.full((P, 3), np.nan)
+    is_cap = np.zeros(P, dtype=bool)
+    for k, p in enumerate(polys):
+        if p.kind == "cap":
+            is_cap[k] = True
+            CAP[k] = p.cap
+            continue
+        xs, ys = p.ring[0::2], p.ring[1::2]
+        ne = len(xs)
+        EX1[k, :ne] = xs; EY1[k, :ne] = ys
+        EX2[k, :ne] = np.roll(xs, -1); EY2[k, :ne] = np.roll(ys, -1)
+        if ne < max_e:  # pad with the closing vertex (degenerate edges)
+            EX1[k, ne:] = xs[0]; EY1[k, ne:] = ys[0]
+            EX2[k, ne:] = xs[0]; EY2[k, ne:] = ys[0]
+    return _Edges(EX1, EY1, EX2, EY2, CAP, is_cap)
+
+
+def _verify_vec(edges: _Edges, lon: np.ndarray, lat: np.ndarray,
+                pl: np.ndarray) -> np.ndarray:
+    """Vectorized exact test for candidate (point, poly index) pairs."""
+    out = np.zeros(len(pl), dtype=bool)
+    ring_sel = ~edges.is_cap[pl]
+    if ring_sel.any():
+        rp = pl[ring_sel]
+        x1 = edges.x1[rp]; y1 = edges.y1[rp]; x2 = edges.x2[rp]; y2 = edges.y2[rp]
+        py = lat[ring_sel][:, None]
+        cond = (y1 > py) != (y2 > py)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
+        parity = np.zeros(len(rp), dtype=np.int64)
+        for px in (lon[ring_sel], lon[ring_sel] + 360.0):  # antimeridian
+            cross = cond & (px[:, None] < xint)
+            parity += cross.sum(axis=1)
+        # the two parities are mutually exclusive per the ring layout
+        out[ring_sel] = (parity % 2).astype(bool)
+    cap_sel = edges.is_cap[pl]
+    if cap_sel.any():
+        cp = edges.cap[pl[cap_sel]]
+        d = np.degrees(np.arccos(np.clip(
+            np.sin(np.radians(cp[:, 1])) * np.sin(np.radians(lat[cap_sel]))
+            + np.cos(np.radians(cp[:, 1])) * np.cos(np.radians(lat[cap_sel]))
+            * np.cos(np.radians(lon[cap_sel] - cp[:, 0])), -1.0, 1.0)))
+        out[cap_sel] = d <= cp[:, 2]
+    return out
 
 
 def spatial_join_fused(
@@ -163,56 +231,7 @@ def spatial_join_fused(
     cov_polys = cover_pdf["poly_idx"].to_numpy(np.int64)
     ends = np.append(starts[1:], len(cov_polys))
     poly_list = list(polys)
-
-    # padded edge matrices: (n_polys, max_edges). Degenerate padding edges
-    # (repeated last vertex => y1 == y2) contribute no ray crossings, so a
-    # single (candidates x max_edges) broadcast evaluates EVERY candidate
-    # against its own polygon with no per-polygon python loop.
-    max_e = max((len(p.ring) // 2 for p in poly_list if p.kind == "poly"), default=1)
-    P = len(poly_list)
-    EX1 = np.zeros((P, max_e)); EY1 = np.zeros((P, max_e))
-    EX2 = np.zeros((P, max_e)); EY2 = np.zeros((P, max_e))
-    CAP = np.full((P, 3), np.nan)
-    is_cap = np.zeros(P, dtype=bool)
-    for k, p in enumerate(poly_list):
-        if p.kind == "cap":
-            is_cap[k] = True
-            CAP[k] = p.cap
-            continue
-        xs, ys = p.ring[0::2], p.ring[1::2]
-        ne = len(xs)
-        EX1[k, :ne] = xs; EY1[k, :ne] = ys
-        EX2[k, :ne] = np.roll(xs, -1); EY2[k, :ne] = np.roll(ys, -1)
-        if ne < max_e:  # pad with the closing vertex (degenerate edges)
-            EX1[k, ne:] = xs[0]; EY1[k, ne:] = ys[0]
-            EX2[k, ne:] = xs[0]; EY2[k, ne:] = ys[0]
-
-    def _verify_vec(lon: np.ndarray, lat: np.ndarray, pl: np.ndarray) -> np.ndarray:
-        """Vectorized exact test for candidate (point, poly) pairs."""
-        out = np.zeros(len(pl), dtype=bool)
-        ring_sel = ~is_cap[pl]
-        if ring_sel.any():
-            rp = pl[ring_sel]
-            x1 = EX1[rp]; y1 = EY1[rp]; x2 = EX2[rp]; y2 = EY2[rp]
-            py = lat[ring_sel][:, None]
-            cond = (y1 > py) != (y2 > py)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
-            parity = np.zeros(len(rp), dtype=np.int64)
-            for px in (lon[ring_sel], lon[ring_sel] + 360.0):  # antimeridian
-                cross = cond & (px[:, None] < xint)
-                parity += cross.sum(axis=1)
-            # the two parities are mutually exclusive per the ring layout
-            out[ring_sel] = (parity % 2).astype(bool)
-        cap_sel = is_cap[pl]
-        if cap_sel.any():
-            cp = CAP[pl[cap_sel]]
-            d = np.degrees(np.arccos(np.clip(
-                np.sin(np.radians(cp[:, 1])) * np.sin(np.radians(lat[cap_sel]))
-                + np.cos(np.radians(cp[:, 1])) * np.cos(np.radians(lat[cap_sel]))
-                * np.cos(np.radians(lon[cap_sel] - cp[:, 0])), -1.0, 1.0)))
-            out[cap_sel] = d <= cp[:, 2]
-        return out
+    edges = _edge_matrices(poly_list)
 
     @pandas_udf("array<int>")
     def _matches(lon_s: pd.Series, lat_s: pd.Series, cell_s: pd.Series) -> pd.Series:
@@ -232,7 +251,7 @@ def spatial_join_fused(
         offs = np.arange(csum[-1]) - np.repeat(csum[:-1], cnt)
         pl_idx = cov_polys[np.repeat(starts[pos_c], cnt) + offs]
         # exact test for ALL candidates in one vectorized evaluation
-        match = _verify_vec(lon[pt_idx], lat[pt_idx], pl_idx)
+        match = _verify_vec(edges, lon[pt_idx], lat[pt_idx], pl_idx)
         # assemble array<int> per point from the (small) match set
         m_pt = pt_idx[match]
         m_pl = pl_idx[match]
@@ -317,20 +336,15 @@ def spatial_join(
     # strings (image_id, caption, ...) never cross the Arrow boundary; the
     # filter itself runs JVM-side. This is what makes the stage scale: the
     # python path moves 3 numeric columns in and 1 bit out per candidate.
-    poly_list = list(polys)
+    edges = _edge_matrices(list(polys))
 
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("boolean")
     def _inside(lon_s: pd.Series, lat_s: pd.Series, pidx_s: pd.Series) -> pd.Series:
-        lon = lon_s.to_numpy(dtype=np.float64)
-        lat = lat_s.to_numpy(dtype=np.float64)
-        pidx = pidx_s.to_numpy(dtype=np.int64)
-        mask = np.zeros(len(lon), dtype=bool)
-        for k in np.unique(pidx):
-            sel = pidx == k
-            mask[sel] = _point_in_poly(lon[sel], lat[sel], poly_list[k])
-        return pd.Series(mask)
+        return pd.Series(_verify_vec(edges, lon_s.to_numpy(dtype=np.float64),
+                                     lat_s.to_numpy(dtype=np.float64),
+                                     pidx_s.to_numpy(dtype=np.int64)))
 
     keep = list(keep_cols) if keep_cols else [c for c in points.columns]
     sel_cols = list(dict.fromkeys(keep + [lon_col, lat_col, "polygon_id"]))

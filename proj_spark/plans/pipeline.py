@@ -22,9 +22,11 @@ carry NaN through the remaining steps, like PROJ's HUGE_VAL convention.
 
 from __future__ import annotations
 
+import importlib
 import math
 import os
 import re
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
@@ -32,7 +34,6 @@ import numpy as np
 from proj_spark.crs import ELLIPSOIDS, Ellipsoid, resolve_ellipsoid
 from proj_spark.kernels import cart as k_cart
 from proj_spark.kernels import helmert as k_helmert
-from proj_spark.kernels import lcc as k_lcc
 from proj_spark.kernels import merc as k_merc
 from proj_spark.kernels import tmerc as k_tmerc
 from proj_spark.kernels.common import adjlon
@@ -284,6 +285,7 @@ class ProjectionStep(Step):
     Applies PROJ's fwd_prepare/fwd_finalize normalization around a
     dimensionless kernel (reference src/fwd.cpp:88-175): subtract lam0 with
     longitude wrap, run the kernel, scale by a and add false easting/northing.
+    Built only by ``_proj_step``, from the op registry below.
     """
 
     left = "rad"
@@ -1817,279 +1819,6 @@ class ObTranStep(Step):
         return adjlon(lam + self.lam0), phi, z, t
 
 
-def _interrupted_builder(name: str):
-    """goode / igh / igh_o / imoll / imoll_o (kernels/interrupted.py)."""
-
-    from proj_spark.kernels import interrupted as I
-
-    fns = {
-        "goode": (I.goode_fwd, I.goode_inv),
-        "igh": (I.igh_fwd, I.igh_inv),
-        "igh_o": (I.igh_o_fwd, I.igh_o_inv),
-        "imoll": (I.imoll_fwd, I.imoll_inv),
-        "imoll_o": (I.imoll_o_fwd, I.imoll_o_inv),
-    }[name]
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        return ProjectionStep(
-            fns[0], fns[1], Ellipsoid.sphere(ell.a), _angle(params, "lon_0"),
-            float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-    return build
-
-
-def _build_healpix(params: dict) -> Step:
-    from proj_spark.kernels import healpix as H
-
-    ell = resolve_ellipsoid(params)
-    rhealpix = params.get("proj") == "rhealpix" or "north_square" in params \
-        or "south_square" in params
-    name = str(params.get("proj", "healpix"))
-    C = H.setup_healpix(
-        ell,
-        rot_xy=_angle(params, "rot_xy"),
-        north_square=int(params.get("north_square", 0)),
-        south_square=int(params.get("south_square", 0)))
-    if name == "rhealpix":
-        fwd = lambda lam, phi: H.rhealpix_fwd(lam, phi, C)
-        inv = lambda x, y: H.rhealpix_inv(x, y, C)
-    else:
-        fwd = lambda lam, phi: H.healpix_fwd(lam, phi, C)
-        inv = lambda x, y: H.healpix_inv(x, y, C)
-    # ellipsoid variant scales by the AUTHALIC radius (healpix.cpp:568-571)
-    return ProjectionStep(
-        fwd, inv, Ellipsoid.sphere(C.auth_a), _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-
-def _build_qsc(params: dict) -> Step:
-    from proj_spark.kernels import qsc as Q
-
-    ell = resolve_ellipsoid(params)
-    lam0 = _angle(params, "lon_0")
-    C = Q.setup_qsc(ell, lam0, _angle(params, "lat_0"))
-    return ProjectionStep(
-        lambda lam, phi: Q.qsc_fwd(lam, phi, C),
-        lambda x, y: Q.qsc_inv(x, y, C),
-        ell, lam0,
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-
-def _build_isea(params: dict) -> Step:
-    from proj_spark.kernels import isea as I
-
-    ell = resolve_ellipsoid(params)
-    C = I.setup_isea(
-        ell,
-        orient=str(params.get("orient", "isea")),
-        lat_0=float(params["lat_0"]) if "lat_0" in params else None,
-        lon_0=float(params["lon_0"]) if "lon_0" in params else None,
-        azi=float(params.get("azi", 0.0)),
-        mode=str(params.get("mode", "plane")),
-    )
-    # like the reference, isea consumes +lon_0 as an orientation override in
-    # setup (isea.cpp:1027-1029) AND the generic fwd_prepare subtraction
-    # applies — mirror by passing lam0 through as well
-    return ProjectionStep(
-        lambda lam, phi: I.isea_fwd(lam, phi, C),
-        lambda x, y: I.isea_inv(x, y, C),
-        ell, _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-
-def _som_builder(name: str):
-    """Space Oblique Mercator family (kernels/som.py). The ascending
-    longitude plays the role of lam0 (subtracted pre-kernel like any
-    central meridian, reference som.cpp P->lam0)."""
-
-    from proj_spark.kernels import som as S
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        if name == "som":
-            C = S.setup_som(
-                ell, alf=_angle(params, "inc_angle"),
-                p22=float(params.get("ps_rev", 0.0)),
-                lam0=_angle(params, "asc_lon"))
-        elif name == "lsat":
-            C = S.setup_lsat(ell, int(params["lsat"]), int(params["path"]))
-        else:
-            C = S.setup_misrsom(ell, int(params["path"]))
-        return ProjectionStep(
-            lambda lam, phi: S.som_fwd(lam, phi, C),
-            lambda x, y: S.som_inv(x, y, C),
-            ell, C.lam0,
-            float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-    return build
-
-
-def _adams_builder(name: str):
-    """guyou / peirce_q / adams_* conformal-square family (kernels/adams.py)."""
-
-    from proj_spark.kernels import adams as A
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        C = A.setup_adams(name, params)
-        if name == "adams_ws2":
-            inv = lambda x, y: A.adams_ws2_inv(x, y, C)
-        elif name == "peirce_q" and C.shape == "square":
-            inv = lambda x, y: A.peirce_q_square_inv(x, y, C)
-        elif name == "peirce_q" and C.shape == "diamond":
-            inv = lambda x, y: A.peirce_q_diamond_inv(x, y, C)
-        else:
-            def inv(x, y):
-                raise NotImplementedError(f"{name}: no inverse (reference has none)")
-        return ProjectionStep(
-            lambda lam, phi: A.adams_fwd(lam, phi, C), inv,
-            Ellipsoid.sphere(ell.a), _angle(params, "lon_0"),
-            float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-    return build
-
-
-def _world4_builder(name: str):
-    """Builders for the batch-4 catalogue (kernels/world4.py)."""
-
-    from proj_spark.kernels import world4 as W4
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        lam0 = _angle(params, "lon_0")
-        x0 = float(params.get("x_0", 0.0))
-        y0 = float(params.get("y_0", 0.0))
-        k0 = float(params.get("k_0", params.get("k", 1.0)))
-
-        def noinv(msg):
-            def inv(x, y):
-                raise NotImplementedError(msg)
-            return inv
-
-        if name in ("eck2", "hatano", "mbt_fps", "mbtfpq"):
-            fwd, inv = {
-                "eck2": (W4.eck2_fwd, W4.eck2_inv),
-                "hatano": (W4.hatano_fwd, W4.hatano_inv),
-                "mbt_fps": (W4.mbt_fps_fwd, W4.mbt_fps_inv),
-                "mbtfpq": (W4.mbtfpq_fwd, W4.mbtfpq_inv),
-            }[name]
-            return ProjectionStep(fwd, inv, ell.sphere(ell.a), lam0, x0, y0)
-        if name in ("putp6", "putp6p"):
-            C = W4.PUTP6 if name == "putp6" else W4.PUTP6P
-            return ProjectionStep(
-                lambda lam, phi: W4.putp6_fwd(lam, phi, C),
-                lambda x, y: W4.putp6_inv(x, y, C),
-                ell.sphere(ell.a), lam0, x0, y0)
-        if name == "tcea":
-            C = W4.TceaConsts(k0, _angle(params, "lat_0"))
-            return ProjectionStep(
-                lambda lam, phi: W4.tcea_fwd(lam, phi, C),
-                lambda x, y: W4.tcea_inv(x, y, C),
-                ell.sphere(ell.a), lam0, x0, y0)
-        if name == "ccon":
-            C = W4.setup_ccon(float(params.get("lat_1", 0.0)))
-            return ProjectionStep(
-                lambda lam, phi: W4.ccon_fwd(lam, phi, C),
-                lambda x, y: W4.ccon_inv(x, y, C),
-                ell.sphere(ell.a), lam0, x0, y0)
-        if name == "rpoly":
-            C = W4.setup_rpoly(float(params.get("lat_ts", 0.0)),
-                               float(params.get("lat_0", 0.0)))
-            return ProjectionStep(
-                lambda lam, phi: W4.rpoly_fwd(lam, phi, C),
-                noinv("rpoly: no inverse (reference has none)"),
-                ell.sphere(ell.a), lam0, x0, y0)
-        if name == "bertin1953":
-            # fixed lam0/phi0 (reference bertin1953.cpp:81-87)
-            return ProjectionStep(
-                W4.bertin1953_fwd,
-                noinv("bertin1953: no inverse (reference has none)"),
-                ell.sphere(ell.a), 0.0, x0, y0)
-        if name == "oea":
-            C = W4.setup_oea(float(params["n"]), float(params["m"]),
-                             float(params.get("theta", 0.0)),
-                             float(params.get("lat_0", 0.0)))
-            return ProjectionStep(
-                lambda lam, phi: W4.oea_fwd(lam, phi, C),
-                lambda x, y: W4.oea_inv(x, y, C),
-                ell.sphere(ell.a), lam0, x0, y0)
-        if name == "lcca":
-            C = W4.setup_lcca(ell, float(params.get("lat_0", 0.0)), k0)
-            return ProjectionStep(
-                lambda lam, phi: W4.lcca_fwd(lam, phi, C),
-                lambda x, y: W4.lcca_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name == "gstmerc":
-            C = W4.setup_gstmerc(ell, float(params.get("lat_0", 0.0)), k0)
-            return ProjectionStep(
-                lambda lam, phi: W4.gstmerc_fwd(lam, phi, C),
-                lambda x, y: W4.gstmerc_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name == "col_urban":
-            C = W4.setup_col_urban(ell, float(params.get("lat_0", 0.0)),
-                                   float(params.get("h_0", 0.0)))
-            return ProjectionStep(
-                lambda lam, phi: W4.col_urban_fwd(lam, phi, C),
-                lambda x, y: W4.col_urban_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name == "labrd":
-            C = W4.setup_labrd(ell, float(params.get("lat_0", 0.0)),
-                               float(params.get("azi", 0.0)), k0)
-            return ProjectionStep(
-                lambda lam, phi: W4.labrd_fwd(lam, phi, C),
-                lambda x, y: W4.labrd_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name == "chamb":
-            C = W4.setup_chamb(
-                float(params.get("lat_1", 0.0)), float(params.get("lon_1", 0.0)),
-                float(params.get("lat_2", 0.0)), float(params.get("lon_2", 0.0)),
-                float(params.get("lat_3", 0.0)), float(params.get("lon_3", 0.0)),
-                lam0)
-            return ProjectionStep(
-                lambda lam, phi: W4.chamb_fwd(lam, phi, C),
-                noinv("chamb: no inverse (reference has none)"),
-                Ellipsoid.sphere(ell.a), lam0, x0, y0)
-        if name == "bipc":
-            ns = "ns" in params and str(params.get("ns")) not in ("False", "0")
-            return ProjectionStep(
-                lambda lam, phi: W4.bipc_fwd(lam, phi, ns),
-                lambda x, y: W4.bipc_inv(x, y, ns),
-                Ellipsoid.sphere(ell.a), lam0, x0, y0)
-        if name == "imw_p":
-            C = W4.setup_imw_p(
-                ell, float(params["lat_1"]), float(params["lat_2"]),
-                float(params["lon_1"]) if "lon_1" in params else None)
-            return ProjectionStep(
-                lambda lam, phi: W4.imw_p_fwd(lam, phi, C),
-                lambda x, y: W4.imw_p_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name == "rouss":
-            C = W4.setup_rouss(ell, float(params.get("lat_0", 0.0)), k0)
-            return ProjectionStep(
-                lambda lam, phi: W4.rouss_fwd(lam, phi, C),
-                lambda x, y: W4.rouss_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name in ("mil_os", "lee_os", "gs48", "alsk", "gs50"):
-            C = W4.setup_mod_ster(name, ell.es)
-            a = C.a if C.a is not None else ell.a
-            return ProjectionStep(
-                lambda lam, phi: W4.mod_ster_fwd(lam, phi, C),
-                lambda x, y: W4.mod_ster_inv(x, y, C),
-                Ellipsoid.sphere(a), C.lam0,
-                float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-        if name == "nzmg":
-            # fixed Earth: intl ellipsoid, lam0=173E, phi0=41S, NZ offsets
-            # (reference nzmg.cpp:112-118); user x_0/y_0/lon_0 ignored.
-            intl = ELLIPSOIDS["intl"]
-            return ProjectionStep(
-                W4.nzmg_fwd, W4.nzmg_inv, intl,
-                math.radians(173.0), 2510000.0, 6023150.0)
-        raise ValueError(name)
-
-    return build
-
-
 # --------------------------------------------------------------------------
 # op registry
 # --------------------------------------------------------------------------
@@ -2098,33 +1827,319 @@ def _angle(params: dict, key: str, default: float = 0.0) -> float:
     return math.radians(float(params[key])) if key in params else default
 
 
-def _build_tmerc(params: dict, exact_default: bool = True) -> Step:
-    ell = resolve_ellipsoid(params)
-    k0 = float(params.get("k_0", params.get("k", 1.0)))
-    lam0 = _angle(params, "lon_0")
-    phi0 = _angle(params, "lat_0")
-    x0 = float(params.get("x_0", 0.0))
-    y0 = float(params.get("y_0", 0.0))
-    use_approx = ("approx" in params) or params.get("algo") == "evenden_snyder" or ell.is_sphere
-    if use_approx:
-        C = k_tmerc.setup_approx(ell, k0=k0, phi0=phi0)
-        if ell.is_sphere:
-            return ProjectionStep(
-                lambda lam, phi: k_tmerc.sph_fwd(lam, phi, C),
-                lambda x, y: k_tmerc.sph_inv(x, y, C),
-                ell, lam0, x0, y0,
-            )
-        return ProjectionStep(
-            lambda lam, phi: k_tmerc.approx_fwd(lam, phi, C),
-            lambda x, y: k_tmerc.approx_inv(x, y, C),
-            ell, lam0, x0, y0,
-        )
-    C = k_tmerc.setup_exact(ell, k0=k0, phi0=phi0)
+def _num(params: dict, key: str, default: float = 0.0) -> float:
+    return float(params.get(key, default))
+
+
+def _opt(params: dict, key: str) -> float | None:
+    return float(params[key]) if key in params else None
+
+
+def _k0(params: dict) -> float:
+    return float(params.get("k_0", params.get("k", 1.0)))
+
+
+def _proj_step(params: dict, ell: Ellipsoid, fwd, inv, C=None,
+               lam0: float | None = None) -> Step:
+    """The one place a ProjectionStep is built. Like PROJ's generic
+    fwd_prepare/fwd_finalize (reference src/fwd.cpp), it reads +lon_0
+    (unless the op fixes lam0 itself), +over and +x_0/+y_0 for every
+    projection. ``inv=None`` means the reference has no inverse."""
+    if inv is None:
+        op = params.get("proj")
+
+        def kinv(x, y):
+            raise NotImplementedError(f"{op}: no inverse (reference has none)")
+    else:
+        def kinv(x, y):
+            return inv(x, y, C)
     return ProjectionStep(
-        lambda lam, phi: k_tmerc.exact_fwd(lam, phi, C),
-        lambda x, y: k_tmerc.exact_inv(x, y, C),
-        ell, lam0, x0, y0,
-    )
+        lambda lam, phi: fwd(lam, phi, C), kinv, ell,
+        _angle(params, "lon_0") if lam0 is None else lam0,
+        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
+        over=bool(params.get("over")))
+
+
+@dataclass(frozen=True)
+class _Proj:
+    """One table projection (the PROJ_HEAD analogue): kernels/<mod>.py
+    supplies ``<stem>_fwd`` and ``<stem>_inv`` (``inv=False``: the
+    reference has none; a str names another inverse). ``setup(k, ell,
+    params)`` freezes the kernel constants C. ``sphere`` forces es=0 with
+    radius a; ``lam0`` is "lon_0", "C" (the setup's C.lam0) or fixed
+    radians."""
+
+    mod: str
+    stem: str
+    setup: Callable | None = None
+    inv: bool | str = True
+    sphere: bool = False
+    lam0: str | float = "lon_0"
+
+
+def _build_projection(params: dict) -> Step:
+    P = _PROJECTIONS[params["proj"]]
+    # kernel modules load on first use: Spark workers import this module
+    k = importlib.import_module(f"proj_spark.kernels.{P.mod}")
+    ell = resolve_ellipsoid(params)
+    if P.sphere:
+        ell = Ellipsoid.sphere(ell.a)
+    C = P.setup(k, ell, params) if P.setup else None
+    inv = None if P.inv is False else getattr(
+        k, P.inv if isinstance(P.inv, str) else f"{P.stem}_inv")
+    lam0 = C.lam0 if P.lam0 == "C" else None if P.lam0 == "lon_0" else P.lam0
+    return _proj_step(params, ell, getattr(k, f"{P.stem}_fwd"), inv, C, lam0)
+
+
+def _setup_sconics(k, ell, p):
+    if "lat_1" not in p or "lat_2" not in p:
+        raise ValueError(f"{p['proj']}: lat_1 and lat_2 required")
+    return k.setup_sconics(p["proj"], float(p["lat_1"]), float(p["lat_2"]),
+                           _num(p, "lat_0"))
+
+
+def _setup_urmfps(k, ell, p):
+    n = float(p["n"]) if p["proj"] == "urmfps" else 0.8660254037844386467637231707
+    if not (0.0 < n <= 1.0):
+        raise ValueError("urmfps: n must be in ]0,1]")
+    return k.NConsts(n, C_y=1.139753528477 / n)
+
+
+def _setup_urm5(k, ell, p):
+    n = float(p["n"])
+    alpha = _angle(p, "alpha")
+    t = n * math.sin(alpha)
+    m = math.cos(alpha) / math.sqrt(1.0 - t * t)
+    return k.NConsts(n, m=m, rmn=1.0 / (m * n), q3=_num(p, "q") / 3.0)
+
+
+def _setup_fouc_s(k, ell, p):
+    n = _num(p, "n")
+    if not (0.0 <= n <= 1.0):
+        raise ValueError("fouc_s: n must be in [0,1]")
+    return k.NConsts(n)
+
+
+def _setup_phi1(k, ell, p):
+    """loxim / wink1 / wag3 standard parallel."""
+    op = p["proj"]
+    phi1 = math.radians(_num(p, "lat_ts" if op == "wag3" else "lat_1",
+                             40.0 if op == "loxim" else 0.0))
+    if op == "wag3":
+        c = math.cos(phi1) / math.cos(2.0 * phi1 / 3.0)
+    else:
+        c = math.cos(phi1)
+        if op == "loxim" and c < 1e-8:
+            raise ValueError("loxim: |lat_1| must be < 90")
+    return k.Phi1Consts(phi1, c, math.tan(math.pi / 4 + 0.5 * phi1))
+
+
+def _lat_1(default: float):
+    """wink2 / wintri: +lat_1 and its cosine."""
+    def setup(k, ell, p):
+        phi1 = _angle(p, "lat_1", default)
+        return k.Phi1Consts(phi1, math.cos(phi1))
+    return setup
+
+
+def _setup_hammer(k, ell, p):
+    w = abs(_num(p, "W", 0.5))
+    m0 = abs(_num(p, "M", 1.0))
+    if w <= 0 or m0 <= 0:
+        raise ValueError("hammer: W and M must be > 0")
+    return k.HammerConsts(w, m0 / w, 1.0 / m0)
+
+
+def _nsper(k, ell, p):
+    tpers = p["proj"] == "tpers"
+    return k.setup_nsper(ell.a, _num(p, "lat_0"), float(p["h"]),
+                         tilt=_num(p, "tilt") if tpers else None,
+                         azi=_num(p, "azi") if tpers else None)
+
+
+def _setup_adams(k, ell, p):
+    return k.setup_adams(p["proj"], p)
+
+
+_PROJECTIONS: dict[str, _Proj] = {
+    # conic / cylindrical / azimuthal (ellipsoidal)
+    "lcc": _Proj("lcc", "lcc", lambda k, ell, p: k.setup_lcc(
+        ell, lat_1=_num(p, "lat_1"), lat_2=_opt(p, "lat_2"),
+        lat_0=_opt(p, "lat_0"), k0=_k0(p))),
+    "merc": _Proj("merc", "merc", lambda k, ell, p: k.setup_merc(
+        ell, lat_ts=_opt(p, "lat_ts"), k0=_k0(p))),
+    "aea": _Proj("conic", "aea", lambda k, ell, p: k.setup_aea(
+        ell, _num(p, "lat_1"), _num(p, "lat_2", _num(p, "lat_1")),
+        _num(p, "lat_0"))),
+    "leac": _Proj("conic", "aea", lambda k, ell, p: k.setup_aea(
+        ell, -90.0 if "south" in p else 90.0, _num(p, "lat_1"),
+        _num(p, "lat_0"))),
+    "eqdc": _Proj("conic", "eqdc", lambda k, ell, p: k.setup_eqdc(
+        ell, _num(p, "lat_1"), _num(p, "lat_2"), _num(p, "lat_0"))),
+    "bonne": _Proj("conic", "bonne",
+                   lambda k, ell, p: k.setup_bonne(ell, float(p["lat_1"]))),
+    "stere": _Proj("azimuthal", "stere", lambda k, ell, p: k.setup_stere(
+        ell, _num(p, "lat_0"), _opt(p, "lat_ts"), _k0(p))),
+    "sterea": _Proj("azimuthal", "sterea", lambda k, ell, p: k.setup_sterea(
+        ell, _num(p, "lat_0"), _k0(p))),
+    "laea": _Proj("azimuthal", "laea",
+                  lambda k, ell, p: k.setup_laea(ell, _num(p, "lat_0"))),
+    "gnom": _Proj("azimuthal", "gnom",
+                  lambda k, ell, p: k.setup_gnom(ell, _num(p, "lat_0"))),
+    "ortho": _Proj("azimuthal", "ortho", lambda k, ell, p: k.setup_ortho(
+        ell, _num(p, "lat_0"), _k0(p), _num(p, "alpha"))),
+    "aeqd": _Proj("azimuthal", "aeqd", lambda k, ell, p: k.setup_aeqd(
+        ell, _num(p, "lat_0"), guam="guam" in p)),
+    "cea": _Proj("cyl", "cea", lambda k, ell, p: k.setup_cea(
+        ell, _opt(p, "lat_ts"), _k0(p))),
+    "cass": _Proj("cyl", "cass", lambda k, ell, p: k.setup_cass(
+        ell, _num(p, "lat_0"), hyperbolic="hyperbolic" in p)),
+    "eqc": _Proj("cyl", "eqc", lambda k, ell, p: k.setup_eqc(
+        _num(p, "lat_ts"), _num(p, "lat_0"))),
+    "mill": _Proj("cyl", "mill"),
+    "somerc": _Proj("cyl", "somerc", lambda k, ell, p: k.setup_somerc(
+        ell, _num(p, "lat_0"), _k0(p))),
+    "poly": _Proj("world3", "poly",
+                  lambda k, ell, p: k.setup_poly(ell, _num(p, "lat_0"))),
+    "omerc": _Proj("oblique", "omerc", lambda k, ell, p: k.setup_omerc(
+        ell, p, _k0(p)), lam0="C"),
+    "ocea": _Proj("oblique", "ocea",
+                  lambda k, ell, p: k.setup_ocea(p, _k0(p)), lam0="C"),
+    "geos": _Proj("oblique", "geos", lambda k, ell, p: k.setup_geos(
+        ell, float(p["h"]), str(p.get("sweep", "y")))),
+    "lcca": _Proj("world4", "lcca", lambda k, ell, p: k.setup_lcca(
+        ell, _num(p, "lat_0"), _k0(p))),
+    "gstmerc": _Proj("world4", "gstmerc", lambda k, ell, p: k.setup_gstmerc(
+        ell, _num(p, "lat_0"), _k0(p))),
+    "col_urban": _Proj("world4", "col_urban", lambda k, ell, p:
+                       k.setup_col_urban(ell, _num(p, "lat_0"), _num(p, "h_0"))),
+    "labrd": _Proj("world4", "labrd", lambda k, ell, p: k.setup_labrd(
+        ell, _num(p, "lat_0"), _num(p, "azi"), _k0(p))),
+    "imw_p": _Proj("world4", "imw_p", lambda k, ell, p: k.setup_imw_p(
+        ell, float(p["lat_1"]), float(p["lat_2"]), _opt(p, "lon_1"))),
+    "rouss": _Proj("world4", "rouss", lambda k, ell, p: k.setup_rouss(
+        ell, _num(p, "lat_0"), _k0(p))),
+    "qsc": _Proj("qsc", "qsc", lambda k, ell, p: k.setup_qsc(
+        ell, _angle(p, "lon_0"), _angle(p, "lat_0"))),
+    # isea reads +lon_0 as an orientation override in setup AND gets the
+    # generic lam0 subtraction, like the reference (isea.cpp:1027-1029)
+    "isea": _Proj("isea", "isea", lambda k, ell, p: k.setup_isea(
+        ell, orient=str(p.get("orient", "isea")), lat_0=_opt(p, "lat_0"),
+        lon_0=_opt(p, "lon_0"), azi=_num(p, "azi"),
+        mode=str(p.get("mode", "plane")))),
+    # Space Oblique Mercator: the ascending longitude is lam0 (som.cpp)
+    "som": _Proj("som", "som", lambda k, ell, p: k.setup_som(
+        ell, alf=_angle(p, "inc_angle"), p22=_num(p, "ps_rev"),
+        lam0=_angle(p, "asc_lon")), lam0="C"),
+    "lsat": _Proj("som", "som", lambda k, ell, p: k.setup_lsat(
+        ell, int(p["lsat"]), int(p["path"])), lam0="C"),
+    "misrsom": _Proj("som", "som", lambda k, ell, p: k.setup_misrsom(
+        ell, int(p["path"])), lam0="C"),
+    # pseudocylindrical families
+    **dict.fromkeys(("sinu", "gn_sinu", "eck6", "mbtfps"), _Proj(
+        "pseudocyl", "sinu", lambda k, ell, p: k.setup_gn_sinu(
+            ell, _opt(p, "m"), _opt(p, "n"), proj=p["proj"]))),
+    **dict.fromkeys(("moll", "wag4", "wag5"), _Proj(
+        "pseudocyl", "moll", lambda k, ell, p: k.setup_moll(p["proj"]))),
+    "eck4": _Proj("pseudocyl", "eck4"),
+    "robin": _Proj("pseudocyl", "robin"),
+    # spherical catalogue (kernels/world.py)
+    **{op: _Proj("world", op) for op in (
+        "cc eck1 crast eck5 fahey wag2 gall nell nell_h collg putp2 "
+        "mbtfpp").split()},
+    **{op: _Proj("world", op, inv=False) for op in (
+        "larr gins8 wag7 tcc august denoy lask boggs nicol").split()},
+    **dict.fromkeys(("eck3", "kav7", "wag6", "putp1"), _Proj(
+        "world", "eck3", lambda k, ell, p: k._ECK3_FAMILY[p["proj"]])),
+    **dict.fromkeys(("fouc", "kav5", "qua_aut", "mbt_s"), _Proj(
+        "world", "sts", lambda k, ell, p: k._STS_FAMILY[p["proj"]])),
+    "putp5": _Proj("world", "putp5", lambda k, ell, p: k.Putp5Consts(2.0, 1.0)),
+    "putp5p": _Proj("world", "putp5", lambda k, ell, p: k.Putp5Consts(1.5, 0.5)),
+    "putp3": _Proj("world", "putp3",
+                   lambda k, ell, p: k.Putp3Consts(4.0 * 0.1013211836)),
+    "putp3p": _Proj("world", "putp3",
+                    lambda k, ell, p: k.Putp3Consts(2.0 * 0.1013211836)),
+    "putp4p": _Proj("world", "putp4p",
+                    lambda k, ell, p: k.Putp4pConsts(0.874038744, 3.883251825)),
+    "weren": _Proj("world", "putp4p",
+                   lambda k, ell, p: k.Putp4pConsts(1.0, 4.442882938)),
+    **dict.fromkeys(("urmfps", "wag1"), _Proj("world", "urmfps", _setup_urmfps)),
+    "urm5": _Proj("world", "urm5", _setup_urm5, inv=False),
+    "fouc_s": _Proj("world", "fouc_s", _setup_fouc_s),
+    **{op: _Proj("world", op, _setup_phi1) for op in ("loxim", "wink1", "wag3")},
+    "wink2": _Proj("world", "wink2", _lat_1(0.0)),
+    "hammer": _Proj("world", "hammer", _setup_hammer),
+    "aitoff": _Proj("world", "aitoff"),
+    "wintri": _Proj("world", "aitoff", _lat_1(math.acos(2.0 / math.pi))),
+    # vandg's kernel flips a sign beyond |lam| > pi under +over (vandg.cpp:46-48)
+    "vandg": _Proj("world", "vandg",
+                   lambda k, ell, p: {"over": bool(p.get("over"))}),
+    # kernels/world2.py
+    "airy": _Proj("world2", "airy", lambda k, ell, p: k.setup_airy(
+        _num(p, "lat_0"), _num(p, "lat_b"), bool(p.get("no_cut"))), inv=False),
+    "nsper": _Proj("world2", "nsper", _nsper),
+    "tpers": _Proj("world2", "nsper", _nsper),
+    "lagrng": _Proj("world2", "lagrng", lambda k, ell, p: k.setup_lagrng(
+        _num(p, "W", 2.0), _num(p, "lat_1"))),
+    **{op: _Proj("world2", "vandg2", lambda k, ell, p: {
+        "vdg3": p["proj"] == "vandg3"}, inv=False) for op in ("vandg2", "vandg3")},
+    "vandg4": _Proj("world2", "vandg4", inv=False),
+    **{op: _Proj("world2", "bacon", lambda k, ell, p: {
+        "bacn": p["proj"] == "bacon", "ortl": p["proj"] == "ortel"}, inv=False)
+       for op in ("bacon", "apian", "ortel")},
+    "tobmerc": _Proj("world2", "tobmerc", lambda k, ell, p: _k0(p)),
+    "eqearth": _Proj("world2", "eqearth", lambda k, ell, p: k.setup_eqearth(ell)),
+    **{op: _Proj("world2", op) for op in ("times", "natearth", "natearth2",
+                                          "patterson", "comill")},
+    # kernels/world3.py
+    **dict.fromkeys(("euler", "murd1", "murd2", "murd3", "pconic", "tissot",
+                     "vitk1"), _Proj("world3", "sconics", _setup_sconics)),
+    "tpeqd": _Proj("world3", "tpeqd", lambda k, ell, p: k.setup_tpeqd(
+        _num(p, "lat_1"), _num(p, "lon_1"), _num(p, "lat_2"), _num(p, "lon_2")),
+        lam0="C"),
+    # kernels/world4.py, spherical
+    **{op: _Proj("world4", op, sphere=True)
+       for op in ("eck2", "hatano", "mbt_fps", "mbtfpq")},
+    "putp6": _Proj("world4", "putp6", lambda k, ell, p: k.PUTP6, sphere=True),
+    "putp6p": _Proj("world4", "putp6", lambda k, ell, p: k.PUTP6P, sphere=True),
+    "tcea": _Proj("world4", "tcea", lambda k, ell, p: k.TceaConsts(
+        _k0(p), _angle(p, "lat_0")), sphere=True),
+    "ccon": _Proj("world4", "ccon", lambda k, ell, p: k.setup_ccon(
+        _num(p, "lat_1")), sphere=True),
+    "rpoly": _Proj("world4", "rpoly", lambda k, ell, p: k.setup_rpoly(
+        _num(p, "lat_ts"), _num(p, "lat_0")), inv=False, sphere=True),
+    # fixed lam0/phi0 (reference bertin1953.cpp:81-87)
+    "bertin1953": _Proj("world4", "bertin1953", inv=False, sphere=True, lam0=0.0),
+    "oea": _Proj("world4", "oea", lambda k, ell, p: k.setup_oea(
+        float(p["n"]), float(p["m"]), _num(p, "theta"), _num(p, "lat_0")),
+        sphere=True),
+    "chamb": _Proj("world4", "chamb", lambda k, ell, p: k.setup_chamb(
+        _num(p, "lat_1"), _num(p, "lon_1"), _num(p, "lat_2"), _num(p, "lon_2"),
+        _num(p, "lat_3"), _num(p, "lon_3"), _angle(p, "lon_0")),
+        inv=False, sphere=True),
+    "bipc": _Proj("world4", "bipc", lambda k, ell, p: (
+        "ns" in p and str(p.get("ns")) not in ("False", "0")), sphere=True),
+    # interrupted (kernels/interrupted.py) and conformal-square families
+    **{op: _Proj("interrupted", op, sphere=True)
+       for op in ("goode", "igh", "igh_o", "imoll", "imoll_o")},
+    **{op: _Proj("adams", "adams", _setup_adams, inv=False, sphere=True)
+       for op in ("guyou", "adams_hemi", "adams_ws1")},
+    "adams_ws2": _Proj("adams", "adams", _setup_adams, inv="adams_ws2_inv",
+                       sphere=True),
+}
+
+
+def _build_tmerc(params: dict) -> Step:
+    ell = resolve_ellipsoid(params)
+    k0, phi0 = _k0(params), _angle(params, "lat_0")
+    if ell.is_sphere:
+        C = k_tmerc.setup_approx(ell, k0=k0, phi0=phi0)
+        return _proj_step(params, ell, k_tmerc.sph_fwd, k_tmerc.sph_inv, C)
+    if "approx" in params or params.get("algo") == "evenden_snyder":
+        C = k_tmerc.setup_approx(ell, k0=k0, phi0=phi0)
+        return _proj_step(params, ell, k_tmerc.approx_fwd, k_tmerc.approx_inv, C)
+    C = k_tmerc.setup_exact(ell, k0=k0, phi0=phi0)
+    return _proj_step(params, ell, k_tmerc.exact_fwd, k_tmerc.exact_inv, C)
 
 
 def _build_utm(params: dict) -> Step:
@@ -2133,58 +2148,21 @@ def _build_utm(params: dict) -> Step:
         raise ValueError("utm requires an ellipsoid")
     if "zone" in params and params["zone"] is not True:
         zone = int(params["zone"])
-        p = k_tmerc.utm_params(zone, south="south" in params)
     elif "lon_0" in params:
         lon0 = math.radians(float(params["lon_0"]))
         zone = int(np.clip(math.floor((float(adjlon(np.array([lon0]))[0]) + math.pi) * 30.0 / math.pi), 0, 59)) + 1
-        p = k_tmerc.utm_params(zone, south="south" in params)
     else:
         return UTMAutoStep(ell)
+    z = k_tmerc.utm_params(zone, south="south" in params)
+    # the zone fixes the central meridian and false origin (tmerc.cpp)
+    params = {**params, "x_0": z["x0"], "y_0": z["y0"]}
     if "approx" in params:
-        C = k_tmerc.setup_approx(ell, k0=p["k0"], phi0=p["phi0"])
-        return ProjectionStep(
-            lambda lam, phi: k_tmerc.approx_fwd(lam, phi, C),
-            lambda x, y: k_tmerc.approx_inv(x, y, C),
-            ell, p["lam0"], p["x0"], p["y0"],
-        )
-    C = k_tmerc.setup_exact(ell, k0=p["k0"], phi0=p["phi0"])
-    return ProjectionStep(
-        lambda lam, phi: k_tmerc.exact_fwd(lam, phi, C),
-        lambda x, y: k_tmerc.exact_inv(x, y, C),
-        ell, p["lam0"], p["x0"], p["y0"],
-    )
-
-
-def _build_lcc(params: dict) -> Step:
-    ell = resolve_ellipsoid(params)
-    C = k_lcc.setup_lcc(
-        ell,
-        lat_1=float(params.get("lat_1", 0.0)),
-        lat_2=float(params["lat_2"]) if "lat_2" in params else None,
-        lat_0=float(params["lat_0"]) if "lat_0" in params else None,
-        k0=float(params.get("k_0", params.get("k", 1.0))),
-    )
-    return ProjectionStep(
-        lambda lam, phi: k_lcc.lcc_fwd(lam, phi, C),
-        lambda x, y: k_lcc.lcc_inv(x, y, C),
-        ell, _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-    )
-
-
-def _build_merc(params: dict) -> Step:
-    ell = resolve_ellipsoid(params)
-    C = k_merc.setup_merc(
-        ell,
-        lat_ts=float(params["lat_ts"]) if "lat_ts" in params else None,
-        k0=float(params.get("k_0", params.get("k", 1.0))),
-    )
-    return ProjectionStep(
-        lambda lam, phi: k_merc.merc_fwd(lam, phi, C),
-        lambda x, y: k_merc.merc_inv(x, y, C),
-        ell, _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-    )
+        C = k_tmerc.setup_approx(ell, k0=z["k0"], phi0=z["phi0"])
+        return _proj_step(params, ell, k_tmerc.approx_fwd, k_tmerc.approx_inv,
+                          C, z["lam0"])
+    C = k_tmerc.setup_exact(ell, k0=z["k0"], phi0=z["phi0"])
+    return _proj_step(params, ell, k_tmerc.exact_fwd, k_tmerc.exact_inv, C,
+                      z["lam0"])
 
 
 def _build_webmerc(params: dict) -> Step:
@@ -2193,510 +2171,102 @@ def _build_webmerc(params: dict) -> Step:
     if params.get("datum") == "WGS84":
         params["ellps"] = "WGS84"
     ell = resolve_ellipsoid(params)
-    C = k_merc.setup_webmerc(ell)
-    return ProjectionStep(
-        lambda lam, phi: k_merc.merc_fwd(lam, phi, C),
-        lambda x, y: k_merc.merc_inv(x, y, C),
-        ell, _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-    )
-
-
-def _proj_step(kmod_fwd, kmod_inv, C, params: dict, ell: Ellipsoid) -> Step:
-    return ProjectionStep(
-        lambda lam, phi: kmod_fwd(lam, phi, C),
-        lambda x, y: kmod_inv(x, y, C),
-        ell, _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-        over=bool(params.get("over")),
-    )
-
-
-def _build_aea(params: dict) -> Step:
-    from proj_spark.kernels import conic as k
-
-    ell = resolve_ellipsoid(params)
-    if params.get("proj") == "leac":
-        lat_2 = float(params.get("lat_1", 0.0))
-        lat_1 = -90.0 if "south" in params else 90.0
-    else:
-        lat_1 = float(params.get("lat_1", 0.0))
-        lat_2 = float(params.get("lat_2", lat_1))
-    C = k.setup_aea(ell, lat_1, lat_2, float(params.get("lat_0", 0.0)))
-    return _proj_step(k.aea_fwd, k.aea_inv, C, params, ell)
-
-
-def _build_eqdc(params: dict) -> Step:
-    from proj_spark.kernels import conic as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_eqdc(ell, float(params.get("lat_1", 0.0)),
-                     float(params.get("lat_2", 0.0)),
-                     float(params.get("lat_0", 0.0)))
-    return _proj_step(k.eqdc_fwd, k.eqdc_inv, C, params, ell)
-
-
-def _build_bonne(params: dict) -> Step:
-    from proj_spark.kernels import conic as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_bonne(ell, float(params["lat_1"]))
-    return _proj_step(k.bonne_fwd, k.bonne_inv, C, params, ell)
-
-
-def _build_stere(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_stere(
-        ell, float(params.get("lat_0", 0.0)),
-        float(params["lat_ts"]) if "lat_ts" in params else None,
-        float(params.get("k_0", params.get("k", 1.0))),
-    )
-    return _proj_step(k.stere_fwd, k.stere_inv, C, params, ell)
+    return _proj_step(params, ell, k_merc.merc_fwd, k_merc.merc_inv,
+                      k_merc.setup_webmerc(ell))
 
 
 def _build_ups(params: dict) -> Step:
     from proj_spark.kernels import azimuthal as k
 
-    params = dict(params)
-    params.setdefault("x_0", 2000000.0)
-    params.setdefault("y_0", 2000000.0)
+    params = {"x_0": 2000000.0, "y_0": 2000000.0, **params}
     ell = resolve_ellipsoid(params)
     if ell.is_sphere:
         raise ValueError("ups requires an ellipsoid")
     C = k.setup_stere(ell, -90.0 if "south" in params else 90.0, None,
-                      float(params.get("k_0", 0.994)))
-    return _proj_step(k.stere_fwd, k.stere_inv, C, params, ell)
+                      _num(params, "k_0", 0.994))
+    return _proj_step(params, ell, k.stere_fwd, k.stere_inv, C)
 
 
-def _build_sterea(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_sterea(ell, float(params.get("lat_0", 0.0)),
-                       float(params.get("k_0", params.get("k", 1.0))))
-    return _proj_step(k.sterea_fwd, k.sterea_inv, C, params, ell)
-
-
-def _build_laea(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
+def _build_calcofi(params: dict) -> Step:
+    from proj_spark.kernels import world3 as k
 
     ell = resolve_ellipsoid(params)
-    C = k.setup_laea(ell, float(params.get("lat_0", 0.0)))
-    return _proj_step(k.laea_fwd, k.laea_inv, C, params, ell)
-
-
-def _build_gnom(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_gnom(ell, float(params.get("lat_0", 0.0)))
-    return _proj_step(k.gnom_fwd, k.gnom_inv, C, params, ell)
-
-
-def _build_ortho(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_ortho(ell, float(params.get("lat_0", 0.0)),
-                      float(params.get("k_0", params.get("k", 1.0))),
-                      float(params.get("alpha", 0.0)))
-    return _proj_step(k.ortho_fwd, k.ortho_inv, C, params, ell)
-
-
-def _build_aeqd(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_aeqd(ell, float(params.get("lat_0", 0.0)),
-                     guam="guam" in params)
-    return _proj_step(k.aeqd_fwd, k.aeqd_inv, C, params, ell)
-
-
-def _build_cea(params: dict) -> Step:
-    from proj_spark.kernels import cyl as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_cea(ell, float(params["lat_ts"]) if "lat_ts" in params else None,
-                    float(params.get("k_0", params.get("k", 1.0))))
-    return _proj_step(k.cea_fwd, k.cea_inv, C, params, ell)
-
-
-def _build_cass(params: dict) -> Step:
-    from proj_spark.kernels import cyl as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_cass(ell, float(params.get("lat_0", 0.0)),
-                     hyperbolic="hyperbolic" in params)
-    return _proj_step(k.cass_fwd, k.cass_inv, C, params, ell)
-
-
-def _build_eqc(params: dict) -> Step:
-    from proj_spark.kernels import cyl as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_eqc(float(params.get("lat_ts", 0.0)), float(params.get("lat_0", 0.0)))
-    return _proj_step(k.eqc_fwd, k.eqc_inv, C, params, ell)
-
-
-def _build_mill(params: dict) -> Step:
-    from proj_spark.kernels import cyl as k
-
-    ell = resolve_ellipsoid(params)
-    return _proj_step(k.mill_fwd, k.mill_inv, None, params, ell)
-
-
-def _build_somerc(params: dict) -> Step:
-    from proj_spark.kernels import cyl as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_somerc(ell, float(params.get("lat_0", 0.0)),
-                       float(params.get("k_0", params.get("k", 1.0))))
-    return _proj_step(k.somerc_fwd, k.somerc_inv, C, params, ell)
-
-
-def _build_sinu_family(params: dict) -> Step:
-    from proj_spark.kernels import pseudocyl as k
-
-    ell = resolve_ellipsoid(params)
-    proj = params.get("proj")
-    C = k.setup_gn_sinu(
-        ell,
-        float(params["m"]) if "m" in params else None,
-        float(params["n"]) if "n" in params else None,
-        proj=proj,
-    )
-    return _proj_step(k.sinu_fwd, k.sinu_inv, C, params, ell)
-
-
-def _build_moll_family(params: dict) -> Step:
-    from proj_spark.kernels import pseudocyl as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_moll(params.get("proj"))
-    return _proj_step(k.moll_fwd, k.moll_inv, C, params, ell)
-
-
-def _build_eck4(params: dict) -> Step:
-    from proj_spark.kernels import pseudocyl as k
-
-    ell = resolve_ellipsoid(params)
-    return _proj_step(k.eck4_fwd, k.eck4_inv, None, params, ell)
-
-
-def _build_robin(params: dict) -> Step:
-    from proj_spark.kernels import pseudocyl as k
-
-    ell = resolve_ellipsoid(params)
-    return _proj_step(k.robin_fwd, k.robin_inv, None, params, ell)
-
-
-def _world_builder(name: str):
-    """Builder factory for the spherical catalogue (kernels/world.py).
-    Every op forces es=0 like the reference (radius = a of the given
-    ellipsoid), and wires fwd/inv (inv raising where the reference has
-    no inverse)."""
-    import math as _m
-
-    from proj_spark.kernels import world as W
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        C = None
-        if name in W._ECK3_FAMILY:
-            fwd, inv, C = W.eck3_fwd, W.eck3_inv, W._ECK3_FAMILY[name]
-        elif name in W._STS_FAMILY:
-            fwd, inv, C = W.sts_fwd, W.sts_inv, W._STS_FAMILY[name]
-        elif name in ("putp5", "putp5p"):
-            fwd, inv = W.putp5_fwd, W.putp5_inv
-            C = W.Putp5Consts(2.0, 1.0) if name == "putp5" else W.Putp5Consts(1.5, 0.5)
-        elif name in ("putp3", "putp3p"):
-            fwd, inv = W.putp3_fwd, W.putp3_inv
-            C = W.Putp3Consts((4.0 if name == "putp3" else 2.0) * 0.1013211836)
-        elif name in ("putp4p", "weren"):
-            fwd, inv = W.putp4p_fwd, W.putp4p_inv
-            C = (W.Putp4pConsts(0.874038744, 3.883251825) if name == "putp4p"
-                 else W.Putp4pConsts(1.0, 4.442882938))
-        elif name in ("urmfps", "wag1"):
-            n = (float(params["n"]) if name == "urmfps"
-                 else 0.8660254037844386467637231707)
-            if not (0.0 < n <= 1.0):
-                raise ValueError("urmfps: n must be in ]0,1]")
-            fwd, inv, C = W.urmfps_fwd, W.urmfps_inv, W.NConsts(n, C_y=1.139753528477 / n)
-        elif name == "urm5":
-            n = float(params["n"])
-            q3 = float(params.get("q", 0.0)) / 3.0
-            alpha = _m.radians(float(params.get("alpha", 0.0)))
-            t = n * _m.sin(alpha)
-            m = _m.cos(alpha) / _m.sqrt(1.0 - t * t)
-            fwd, inv, C = W.urm5_fwd, W._no_inverse("urm5"), W.NConsts(
-                n, m=m, rmn=1.0 / (m * n), q3=q3)
-        elif name == "fouc_s":
-            n = float(params.get("n", 0.0))
-            if not (0.0 <= n <= 1.0):
-                raise ValueError("fouc_s: n must be in [0,1]")
-            fwd, inv, C = W.fouc_s_fwd, W.fouc_s_inv, W.NConsts(n)
-        elif name in ("loxim", "wink1", "wag3"):
-            key = "lat_1" if name in ("loxim", "wink1") else "lat_ts"
-            phi1 = _m.radians(float(params.get(key, 40.0 if name == "loxim" else 0.0)))
-            if name == "wag3":
-                c = _m.cos(phi1) / _m.cos(2.0 * phi1 / 3.0)
-            else:
-                c = _m.cos(phi1)
-                if name == "loxim" and c < 1e-8:
-                    raise ValueError("loxim: |lat_1| must be < 90")
-            fwd = {"loxim": W.loxim_fwd, "wink1": W.wink1_fwd, "wag3": W.wag3_fwd}[name]
-            inv = {"loxim": W.loxim_inv, "wink1": W.wink1_inv, "wag3": W.wag3_inv}[name]
-            C = W.Phi1Consts(phi1, c, _m.tan(FORTPI_ := _m.pi / 4 + 0.5 * phi1))
-        elif name == "wink2":
-            phi1 = _m.radians(float(params.get("lat_1", 0.0)))
-            fwd, inv, C = W.wink2_fwd, W.wink2_inv, W.Phi1Consts(phi1, _m.cos(phi1))
-        elif name == "hammer":
-            w = abs(float(params.get("W", 0.5)))
-            m0 = abs(float(params.get("M", 1.0)))
-            if w <= 0 or m0 <= 0:
-                raise ValueError("hammer: W and M must be > 0")
-            fwd, inv, C = W.hammer_fwd, W.hammer_inv, W.HammerConsts(w, m0 / w, 1.0 / m0)
-        elif name in ("aitoff", "wintri"):
-            fwd, inv = W.aitoff_fwd, W.aitoff_inv
-            if name == "wintri":
-                phi1 = (_m.radians(float(params["lat_1"])) if "lat_1" in params
-                        else _m.acos(2.0 / _m.pi))
-                C = W.Phi1Consts(phi1, _m.cos(phi1))
-        elif name == "vandg":
-            fwd, inv, C = W.vandg_fwd, W.vandg_inv, {"over": bool(params.get("over"))}
-        else:
-            fwd = getattr(W, f"{name}_fwd")
-            inv = getattr(W, f"{name}_inv", None) or W._no_inverse(name)
-        return ProjectionStep(
-            lambda lam, phi: fwd(lam, phi, C),
-            lambda x, y: inv(x, y, C),
-            ell, _angle(params, "lon_0"),
-            float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-            over=bool(params.get("over")),
-        )
-
-    return build
-
-
-def _world2_builder(name: str):
-    import math as _m
-
-    from proj_spark.kernels import world as W
-    from proj_spark.kernels import world2 as W2
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        if name == "airy":
-            # +lat_b defaults to 0 (beta = pi/4 -> Cb = log(cos pi/4)),
-            # matching pj_param's zero default in the reference
-            C = W2.setup_airy(float(params.get("lat_0", 0.0)),
-                              float(params.get("lat_b", 0.0)),
-                              bool(params.get("no_cut")))
-            fwd, inv = W2.airy_fwd, W._no_inverse("airy")
-        elif name in ("nsper", "tpers"):
-            C = W2.setup_nsper(
-                ell.a, float(params.get("lat_0", 0.0)), float(params["h"]),
-                tilt=float(params.get("tilt", 0.0)) if name == "tpers" else None,
-                azi=float(params.get("azi", 0.0)) if name == "tpers" else None,
-            )
-            fwd, inv = W2.nsper_fwd, W2.nsper_inv
-        elif name == "lagrng":
-            C = W2.setup_lagrng(float(params.get("W", 2.0)),
-                                float(params.get("lat_1", 0.0)))
-            fwd, inv = W2.lagrng_fwd, W2.lagrng_inv
-        elif name in ("vandg2", "vandg3"):
-            C = {"vdg3": name == "vandg3"}
-            fwd, inv = W2.vandg2_fwd, W._no_inverse(name)
-        elif name == "vandg4":
-            C, fwd, inv = None, W2.vandg4_fwd, W._no_inverse(name)
-        elif name == "times":
-            C, fwd, inv = None, W2.times_fwd, W2.times_inv
-        elif name in ("bacon", "apian", "ortel"):
-            C = {"bacn": name == "bacon", "ortl": name == "ortel"}
-            fwd, inv = W2.bacon_fwd, W._no_inverse(name)
-        elif name == "tobmerc":
-            C = float(params.get("k_0", params.get("k", 1.0)))
-            fwd, inv = W2.tobmerc_fwd, W2.tobmerc_inv
-        elif name == "eqearth":
-            C = W2.setup_eqearth(ell)
-            fwd, inv = W2.eqearth_fwd, W2.eqearth_inv
-        else:  # natearth natearth2 patterson comill
-            C = None
-            fwd = getattr(W2, f"{name}_fwd")
-            inv = getattr(W2, f"{name}_inv")
-        return ProjectionStep(
-            lambda lam, phi: fwd(lam, phi, C),
-            lambda x, y: inv(x, y, C),
-            ell, _angle(params, "lon_0"),
-            float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-            over=bool(params.get("over")),
-        )
-
-    return build
-
-
-_WORLD2_OPS = ("airy nsper tpers lagrng vandg2 vandg3 vandg4 times bacon "
-               "apian ortel tobmerc eqearth natearth natearth2 patterson "
-               "comill").split()
-
-
-def _world3_builder(name: str):
-    def build(params: dict) -> Step:
-        from proj_spark.kernels import world3 as W3
-
-        ell = resolve_ellipsoid(params)
-        if name in ("euler", "murd1", "murd2", "murd3", "pconic", "tissot", "vitk1"):
-            if "lat_1" not in params or "lat_2" not in params:
-                raise ValueError(f"{name}: lat_1 and lat_2 required")
-            C = W3.setup_sconics(name, float(params["lat_1"]), float(params["lat_2"]),
-                                 float(params.get("lat_0", 0.0)))
-            fwd, inv = W3.sconics_fwd, W3.sconics_inv
-        elif name == "calcofi":
-            C = W3.CalcofiConsts(ell.e, ell.es)
-            fwd, inv = W3.calcofi_fwd, W3.calcofi_inv
-        elif name == "tpeqd":
-            C = W3.setup_tpeqd(float(params.get("lat_1", 0.0)), float(params.get("lon_1", 0.0)),
-                               float(params.get("lat_2", 0.0)), float(params.get("lon_2", 0.0)))
-            fwd, inv = W3.tpeqd_fwd, W3.tpeqd_inv
-        else:  # poly
-            C = W3.setup_poly(ell, float(params.get("lat_0", 0.0)))
-            fwd, inv = W3.poly_fwd, W3.poly_inv
-        if name == "tpeqd":
-            lam0 = C.lam0
-        elif name == "calcofi":
-            lam0 = 0.0  # reference works in absolute longitude (lon_0 ignored)
-        else:
-            lam0 = _angle(params, "lon_0")
-        x0 = 0.0 if name == "calcofi" else float(params.get("x_0", 0.0))
-        y0 = 0.0 if name == "calcofi" else float(params.get("y_0", 0.0))
-        step = ProjectionStep(
-            lambda lam, phi: fwd(lam, phi, C),
-            lambda x, y: inv(x, y, C),
-            ell, lam0, x0, y0,
-            over=bool(params.get("over")),
-        )
-        if name == "calcofi":  # line/station units: no earth-radius scaling
-            step.a = 1.0
-            step.ra = 1.0
-        return step
-
-    return build
-
-
-def _build_omerc(params: dict) -> Step:
-    from proj_spark.kernels import oblique as OB
-
-    ell = resolve_ellipsoid(params)
-    C = OB.setup_omerc(ell, params, float(params.get("k_0", params.get("k", 1.0))))
-    return ProjectionStep(
-        lambda lam, phi: OB.omerc_fwd(lam, phi, C),
-        lambda x, y: OB.omerc_inv(x, y, C),
-        ell, C.lam0,  # lam0 computed by the setup, +lon_0 intentionally ignored
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-        over=bool(params.get("over")),
-    )
-
-
-def _build_ocea(params: dict) -> Step:
-    from proj_spark.kernels import oblique as OB
-
-    ell = resolve_ellipsoid(params)
-    C = OB.setup_ocea(params, float(params.get("k_0", params.get("k", 1.0))))
-    return ProjectionStep(
-        lambda lam, phi: OB.ocea_fwd(lam, phi, C),
-        lambda x, y: OB.ocea_inv(x, y, C),
-        ell, C.lam0,
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-    )
+    # line/station output: no earth-radius scaling, no false origin, and
+    # absolute longitude (the reference ignores +lon_0)
+    return _proj_step({**params, "x_0": 0.0, "y_0": 0.0}, Ellipsoid.sphere(1.0),
+                      k.calcofi_fwd, k.calcofi_inv,
+                      k.CalcofiConsts(ell.e, ell.es), lam0=0.0)
 
 
 def _build_krovak(params: dict) -> Step:
-    from proj_spark.kernels import oblique as OB
+    from proj_spark.kernels import oblique as k
 
-    C = OB.setup_krovak(params, modified=params.get("proj") == "mod_krovak")
+    C = k.setup_krovak(params, modified=params.get("proj") == "mod_krovak")
     # krovak pins the Bessel ellipsoid regardless of +ellps
     ell = Ellipsoid("bessel-krovak", C.a, 1.0 / (1.0 - math.sqrt(1.0 - 0.006674372230614)))
-    return ProjectionStep(
-        lambda lam, phi: OB.krovak_fwd(lam, phi, C),
-        lambda x, y: OB.krovak_inv(x, y, C),
-        ell, C.lam0,
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-    )
+    return _proj_step(params, ell, k.krovak_fwd, k.krovak_inv, C, C.lam0)
 
 
-def _build_geos(params: dict) -> Step:
-    from proj_spark.kernels import oblique as OB
+def _build_nzmg(params: dict) -> Step:
+    from proj_spark.kernels import world4 as k
+
+    # fixed Earth: intl ellipsoid, lam0=173E, phi0=41S, NZ offsets
+    # (reference nzmg.cpp:112-118); user x_0/y_0/lon_0 ignored.
+    return _proj_step({**params, "x_0": 2510000.0, "y_0": 6023150.0},
+                      ELLIPSOIDS["intl"], k.nzmg_fwd, k.nzmg_inv,
+                      lam0=math.radians(173.0))
+
+
+def _build_mod_ster(params: dict) -> Step:
+    """mil_os / lee_os / gs48 / alsk / gs50: each fixes its own centre
+    and, except on a user sphere, its own radius."""
+    from proj_spark.kernels import world4 as k
 
     ell = resolve_ellipsoid(params)
-    C = OB.setup_geos(ell, float(params["h"]), str(params.get("sweep", "y")))
-    return _proj_step(OB.geos_fwd, OB.geos_inv, C, params, ell)
+    C = k.setup_mod_ster(params["proj"], ell.es)
+    return _proj_step(params, Ellipsoid.sphere(ell.a if C.a is None else C.a),
+                      k.mod_ster_fwd, k.mod_ster_inv, C, C.lam0)
 
 
-_WORLD_OPS = (
-    "larr gins8 wag7 tcc august cc denoy eck1 crast lask eck5 fahey wag2 "
-    "gall boggs nell nell_h collg putp2 mbtfpp eck3 kav7 wag6 putp1 fouc "
-    "kav5 qua_aut mbt_s putp5 putp5p putp3 putp3p putp4p weren urmfps wag1 "
-    "urm5 fouc_s loxim wink1 wag3 wink2 hammer aitoff wintri vandg nicol"
-).split()
+def _build_peirce_q(params: dict) -> Step:
+    from proj_spark.kernels import adams as k
+
+    ell = Ellipsoid.sphere(resolve_ellipsoid(params).a)
+    C = k.setup_adams("peirce_q", params)
+    inv = {"square": k.peirce_q_square_inv,
+           "diamond": k.peirce_q_diamond_inv}.get(C.shape)
+    return _proj_step(params, ell, k.adams_fwd, inv, C)
+
+
+def _build_healpix(params: dict) -> Step:
+    from proj_spark.kernels import healpix as k
+
+    C = k.setup_healpix(
+        resolve_ellipsoid(params), rot_xy=_angle(params, "rot_xy"),
+        north_square=int(params.get("north_square", 0)),
+        south_square=int(params.get("south_square", 0)))
+    stem = "rhealpix" if params.get("proj") == "rhealpix" else "healpix"
+    # ellipsoid variant scales by the AUTHALIC radius (healpix.cpp:568-571)
+    return _proj_step(params, Ellipsoid.sphere(C.auth_a),
+                      getattr(k, f"{stem}_fwd"), getattr(k, f"{stem}_inv"), C)
 
 
 _BUILDERS = {
+    **dict.fromkeys(_PROJECTIONS, _build_projection),
     "tmerc": _build_tmerc,
     "etmerc": _build_tmerc,
     "utm": _build_utm,
-    "lcc": _build_lcc,
-    "merc": _build_merc,
     "webmerc": _build_webmerc,
-    "aea": _build_aea,
-    "leac": _build_aea,
-    "eqdc": _build_eqdc,
-    "bonne": _build_bonne,
-    "stere": _build_stere,
     "ups": _build_ups,
-    "sterea": _build_sterea,
-    "laea": _build_laea,
-    "gnom": _build_gnom,
-    "ortho": _build_ortho,
-    "aeqd": _build_aeqd,
-    "cea": _build_cea,
-    "cass": _build_cass,
-    "eqc": _build_eqc,
-    "mill": _build_mill,
-    "somerc": _build_somerc,
-    "sinu": _build_sinu_family,
-    "gn_sinu": _build_sinu_family,
-    "eck6": _build_sinu_family,
-    "mbtfps": _build_sinu_family,
-    "moll": _build_moll_family,
-    "wag4": _build_moll_family,
-    "wag5": _build_moll_family,
-    "eck4": _build_eck4,
-    "robin": _build_robin,
-    **{op: _world_builder(op) for op in _WORLD_OPS},
-    **{op: _world2_builder(op) for op in _WORLD2_OPS},
-    **{op: _world3_builder(op) for op in
-       "euler murd1 murd2 murd3 pconic tissot vitk1 calcofi tpeqd poly".split()},
-    "omerc": _build_omerc,
-    "ocea": _build_ocea,
+    "calcofi": _build_calcofi,
     "krovak": _build_krovak,
     "mod_krovak": _build_krovak,
-    "geos": _build_geos,
-    **{op: _world4_builder(op) for op in
-       "eck2 hatano putp6 putp6p mbt_fps mbtfpq tcea ccon rpoly bertin1953 "
-       "oea lcca gstmerc col_urban nzmg mil_os lee_os gs48 alsk gs50 "
-       "rouss imw_p bipc chamb labrd".split()},
-    **{op: _interrupted_builder(op) for op in
-       "goode igh igh_o imoll imoll_o".split()},
-    **{op: _adams_builder(op) for op in
-       "guyou peirce_q adams_hemi adams_ws1 adams_ws2".split()},
-    "ob_tran": ObTranStep,
-    **{op: _som_builder(op) for op in "som lsat misrsom".split()},
-    "qsc": _build_qsc,
-    "isea": _build_isea,
+    "nzmg": _build_nzmg,
+    **dict.fromkeys(("mil_os", "lee_os", "gs48", "alsk", "gs50"), _build_mod_ster),
+    "peirce_q": _build_peirce_q,
     "healpix": _build_healpix,
     "rhealpix": _build_healpix,
+    "ob_tran": ObTranStep,
     "geoc": lambda p: GeocStep(resolve_ellipsoid(p)),
     "sch": SchStep,
     "s2": S2Step,

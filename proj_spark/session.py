@@ -60,14 +60,6 @@ def get_spark(
     )
     for k, v in _malloc_env.items():
         b = b.config(f"spark.executorEnv.{k}", os.environ.get(k, v))
-    # JVM<->python-worker IPC over unix-domain sockets instead of loopback
-    # TCP (Spark 4.1). Opt-in via env: on hosts whose loopback is
-    # hypervisor-throttled (this sandbox: 2-20x phase swings on
-    # Arrow-heavy stages, BENCH/REGRESSION.md round-4 section) UDS is the
-    # stable path; loopback's fast-phase peak is higher, so it stays the
-    # default elsewhere.
-    if os.environ.get("PROJ_SPARK_UDS", "").lower() in ("1", "true", "yes"):
-        b = b.config("spark.python.unix.domain.socket.enabled", "true")
     # Every Python task re-reads pyspark.zip's directory 16 times inside
     # importlib.invalidate_caches() (~0.27 CPU-s per task, 97% of a small
     # task's worker time); the engine's daemon re-reads an archive only

@@ -623,7 +623,7 @@ def epsg_to_wkt1(code, dialect: str = "GDAL") -> str:
             v = E._scale(value, uom)
         params.append(f"PARAMETER[{_q(pn[1 if esri else 0])},{_num(v)}]")
     if esri:
-        unit = (f'UNIT[{_q(_u(u_name).capitalize() if factor == 1.0 else _u(u_name))},{_num(factor)}]'
+        unit = (f'UNIT[{_q(_u(u_name))},{_num(factor)}]'
                 if factor != 1.0 else 'UNIT["Meter",1.0]')
         if P.method in ("1024", "3856"):
             params.append('PARAMETER["Auxiliary_Sphere_Type",0.0]')

@@ -1,12 +1,16 @@
-"""Unit coverage for registry ops with no gie fixtures (sch) and smoke
-roundtrips for batch-4 additions."""
+"""Unit coverage for registry ops with no gie fixtures (sch), smoke
+roundtrips for batch-4 additions, and the op table's generic handling
+(+over, missing inverses, completeness against COVERAGE.md)."""
 
 from __future__ import annotations
+
+import pathlib
+import re
 
 import numpy as np
 import pytest
 
-from proj_spark.plans.pipeline import compile_pipeline
+from proj_spark.plans.pipeline import _BUILDERS, _PROJECTIONS, compile_pipeline
 
 
 def test_sch_peg_origin_and_roundtrip():
@@ -207,3 +211,51 @@ def test_crs_to_crs_datum_path():
                                np.array([53.5]))
     assert abs(lam[0] - 7.482506019176) < 1e-8
     assert abs(phi[0] - 53.498461143331) < 1e-8
+
+
+WGS84_A = 6378137.0
+
+
+@pytest.mark.parametrize("proj", ["merc", "webmerc"])
+def test_over_keeps_longitude_past_antimeridian(proj):
+    """+over skips the longitude wrap both ways for every projection."""
+    lon, lat = np.array([200.0]), np.array([10.0])
+    over = compile_pipeline(f"+proj={proj} +ellps=WGS84 +over")
+    x, y, _, _ = over.fwd_deg(lon, lat)
+    assert x[0] == pytest.approx(WGS84_A * np.radians(200.0), abs=1e-6)
+    assert x[0] == pytest.approx(22_263_898.16, abs=0.01)
+    lon2, lat2, _, _ = over.inv_deg(x, y)
+    assert lon2[0] == pytest.approx(200.0, abs=1e-9)
+    assert lat2[0] == pytest.approx(10.0, abs=1e-9)
+    # without +over the longitude wraps to -160 degrees, as before
+    xw, yw, _, _ = compile_pipeline(f"+proj={proj} +ellps=WGS84").fwd_deg(lon, lat)
+    assert xw[0] == pytest.approx(-17_811_118.53, abs=0.01)
+    assert yw[0] == y[0]
+
+
+def test_registry_matches_coverage_table():
+    """Every op marked compiling in COVERAGE.md has a builder, and no
+    other op does (``pipeline`` itself is compiled specially)."""
+    table = (pathlib.Path(__file__).parents[1] / "COVERAGE.md").read_text()
+    marked = set(re.findall(r"`(\w+)` \| ✅ \|", table))
+    assert set(_BUILDERS) == marked - {"pipeline"}
+    assert len(_BUILDERS) == 183
+
+
+def _no_inverse_specs():
+    extra = {"urm5": " +n=0.5", "chamb": " +lat_1=0.5 +lat_2=2"}
+    specs = [f"+proj={op} +R=6400000{extra.get(op, '')}"
+             for op, entry in sorted(_PROJECTIONS.items()) if entry.inv is False]
+    # a bespoke builder whose inverse depends on its setup
+    return specs + ["+proj=peirce_q +shape=horizontal +R=6400000"]
+
+
+@pytest.mark.parametrize("spec", _no_inverse_specs())
+def test_missing_inverse_raises_one_message(spec):
+    op = spec.split()[0].split("=")[1]
+    pipe = compile_pipeline(spec)
+    x, y, _, _ = pipe.fwd_deg(np.array([10.0]), np.array([20.0]))
+    assert np.isfinite(x).all() and np.isfinite(y).all()
+    with pytest.raises(NotImplementedError,
+                       match=rf"^{op}: no inverse \(reference has none\)$"):
+        pipe.inv(x, y)

@@ -47,12 +47,6 @@ def run_at(cpus: int, n_images: int, pin: bool = True) -> dict:
         BENCH_REPEAT="1",
     )
     env.setdefault("SPARK_DRIVER_MEM", "48g")
-    # one transport for every width: bench.py's phase probe may flip a
-    # single session to UDS, which would compare widths across different
-    # IPC paths and skew the ratio; the interleaved best-of-k already
-    # handles phase noise for the scaling estimator. Override with
-    # BENCH_TRANSPORT=uds to measure the whole table on the stable path.
-    env.setdefault("BENCH_TRANSPORT", "tcp")
     cmd = [sys.executable, os.path.join(ROOT, "bench.py")]
     if pin:
         # pin to the HIGHEST-numbered cores: this box's low vCPUs are
