@@ -1715,7 +1715,7 @@ def oracle_sql() -> dict[str, str]:
     p_cols: list[tuple[str, str]] = []
     _pconds, _plams, _pphis = [], [], []
     for j, cdn in enumerate(_preach):
-        codes = _re.findall(r"EPSG:([\w-]+) ", cdn.name + " ")
+        codes = _re.findall(r"EPSG\)?:([\w-]+) ", cdn.name + " ")
         assert len(codes) == 2 and "member" in codes[0], cdn.name
         m = _by_code[codes[1]]
         assert m["kind"] == "helmert" and "rx" in m

@@ -6,7 +6,7 @@
 
 Env:
   SPARK_GRAFT_SF_DIR  (default /root/testdata/sf0.1) — oracle-table dir
-  SPARK_GRAFT_CPUS    (default 32)                   — local[N]
+  SPARK_GRAFT_CPUS    (default: host core count)     — local[N]
   BENCH_N_IMAGES      (default 600000)               — flagship table rows
   BENCH_QUERIES       (default headline set)         — comma list override
 
@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 N_IMAGES = int(os.environ.get("BENCH_N_IMAGES", "1000000"))
 CACHE_DIR = os.environ.get("BENCH_CACHE_DIR", "/tmp/spark_graft_bench")
 
@@ -40,7 +40,6 @@ HEADLINE = [
     "knn_nation_k3",
     "s2_cells_l10",
     "exact_dedup_hashes",
-    "minhash_sigs_xx",
     "cosine_top3",
     "cosine_lsh_ann",
     "cosine_ivf_ann",
@@ -53,21 +52,16 @@ HEADLINE = [
 # reported for visibility, NOT counted in the headline total — the
 # headline tracks 100 TB-path operators only
 SIDE = [
-    "minhash_sigs",   # md5 oracle tier (DuckDB parity); xx tier is the
-                      # scale path and stays in HEADLINE
+    "minhash_sigs",   # md5 oracle tier (DuckDB parity)
 ]
 
 
 def _bench_only_queries() -> dict:
     """Operator-only bench entries. CORRECTNESS grades the operators via
-    their __spark_entry__ queries (cosine_topk_lsh recall golden,
-    minhash_sigs md5-oracle parity, the xx tier's plan-hygiene test);
+    their __spark_entry__ queries (cosine_topk_lsh recall golden);
     benching those entries would time the GRADING HARNESS (brute-force
-    recall denominator / md5 Python tier), not the scale-path operator.
+    recall denominator), not the scale-path operator.
     These run the operator DAG alone."""
-    import math
-
-    from pyspark.sql import functions as F
 
     def cosine_lsh_ann(spark, sf_dir):
         import pyarrow.parquet as pq
@@ -86,17 +80,6 @@ def _bench_only_queries() -> dict:
         return rhp_lsh_topk(e, 3, dim, id_col="vec_id",
                             vec_col="embedding", n_hint=n)
 
-    def minhash_sigs_xx(spark, sf_dir):
-        from proj_spark.operators.dedup import minhash_signatures_xx
-
-        d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        # the sf parquet is one ~MB file -> one input split; spread it so
-        # the bench measures the operator, not a single-task read (at real
-        # scale the source has thousands of splits and this repartition
-        # does not exist)
-        d = d.repartition(spark.sparkContext.defaultParallelism)
-        return minhash_signatures_xx(d, text_col="text", id_col="doc_id")
-
     def cosine_ivf_ann(spark, sf_dir):
         import pyarrow.parquet as pq
 
@@ -113,8 +96,7 @@ def _bench_only_queries() -> dict:
                         vec_col="embedding", n_hint=n)
 
     return {"cosine_lsh_ann": cosine_lsh_ann,
-            "cosine_ivf_ann": cosine_ivf_ann,
-            "minhash_sigs_xx": minhash_sigs_xx}
+            "cosine_ivf_ann": cosine_ivf_ann}
 
 
 def _sf_from_dir(d: str) -> float:
@@ -133,24 +115,10 @@ def ensure_images(spark, n: int) -> str:
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         # fixed partition count so every parallelism level reads the same
-        # file layout (scaling runs must not inherit the writer's width);
-        # 256 => >= 8 waves at local[32], smoothing scheduling variance
+        # file layout (runs must not inherit the writer's width); 256 =>
+        # >= 8 waves at local[32], smoothing scheduling variance
         images_df(spark, n, partitions=256).write.mode("overwrite").parquet(path)
     return path
-
-
-_COVER_CACHE: dict = {}
-
-
-def _cover_df(spark, polys, level: int):
-    """Driver-side cover sampling + upload happen once per session — a
-    long-lived job joins thousands of batches against one polygon set."""
-    from proj_spark.operators.spatial_join import polygon_cover
-
-    key = (id(spark), level)
-    if key not in _COVER_CACHE:
-        _COVER_CACHE[key] = spark.createDataFrame(polygon_cover(polys, level))
-    return _COVER_CACHE[key]
 
 
 def flagship(spark, path: str, sink: str = "count") -> int:
@@ -190,10 +158,6 @@ def flagship(spark, path: str, sink: str = "count") -> int:
 
 
 def main() -> None:
-    # wide local[] runs buffer pass-through columns across many concurrent
-    # ArrowEvalPython queues; the 8g default heap GC-thrashes at local[32]
-    os.environ.setdefault("SPARK_DRIVER_MEM", "32g")
-
     from proj_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -211,30 +175,21 @@ def main() -> None:
     # best-of-k: the sandbox VM's cycle delivery is erratic (loopback-TCP
     # throttling phases measured at 2-20x on Arrow-heavy stages — see
     # BENCH/REGRESSION.md round-4 section); the flagship is the headline
-    # number so it gets at least 3 timed repeats to catch a fast phase
+    # number so it gets 3 timed repeats to catch a fast phase
     flagship_sec = 1e18
-    # explicit BENCH_REPEAT is a contract (bench_scaling sets 1: its k
-    # interleaved sessions ARE the repeats); only the default rises to 3
-    flag_reps = (int(os.environ["BENCH_REPEAT"])
-                 if "BENCH_REPEAT" in os.environ else 3)
-    for _ in range(flag_reps):
+    for _ in range(3):
         t0 = time.time()
         flagship(spark, path, sink="noop")
         flagship_sec = min(flagship_sec, time.time() - t0)
-    images_per_sec = N_IMAGES / flagship_sec
 
     # ---- headline queries on the sf dir
     qs = dict(entrymod.queries())
     qs.update(_bench_only_queries())
     names = os.environ.get("BENCH_QUERIES")
-    if names == "none":
-        names = []
-    else:
-        names = names.split(",") if names else HEADLINE
+    names = names.split(",") if names else HEADLINE
     # per-query best-of-k (same rationale as the flagship): sandbox cycle
     # delivery varies 1.3-4x run-to-run; min isolates engine cost, median
     # reported alongside so the noise is visible, not hidden
-    repeat = int(os.environ.get("BENCH_REPEAT", "2"))
     timings: dict[str, float] = {"flagship_spatial_join": round(flagship_sec, 3)}
     medians: dict[str, float] = {}
     side: dict[str, float] = {}
@@ -248,7 +203,7 @@ def main() -> None:
         # identical back-to-back runs in a fresh session
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         runs = []
-        for _ in range(repeat):
+        for _ in range(2):
             t0 = time.time()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             runs.append(time.time() - t0)
@@ -257,21 +212,18 @@ def main() -> None:
 
     for name in names:
         timings[name], medians[name] = _time(name)
-    if names:  # side tier timed only on full (non-overridden) runs
-        for name in (SIDE if names == HEADLINE else []):
-            side[name], _ = _time(name)
+    for name in (SIDE if names == HEADLINE else []):  # full runs only
+        side[name], _ = _time(name)
 
     # the flagship is the headline number and runs FIRST, so an early
     # slow phase pollutes it even when the rest of the suite caught fast
     # draws; one end-of-run re-time (best kept) gives it a second phase
-    # draw. Skipped under an explicit BENCH_REPEAT (the scaling
-    # harness's one-run-per-session contract).
-    if "BENCH_REPEAT" not in os.environ:
-        t0 = time.time()
-        flagship(spark, path, sink="noop")
-        flagship_sec = min(flagship_sec, time.time() - t0)
-        images_per_sec = N_IMAGES / flagship_sec
-        timings["flagship_spatial_join"] = round(flagship_sec, 3)
+    # draw.
+    t0 = time.time()
+    flagship(spark, path, sink="noop")
+    flagship_sec = min(flagship_sec, time.time() - t0)
+    images_per_sec = N_IMAGES / flagship_sec
+    timings["flagship_spatial_join"] = round(flagship_sec, 3)
     total = round(sum(timings.values()), 3)
     print(json.dumps({
         "metric": "spatial-join+tile throughput and headline query suite",

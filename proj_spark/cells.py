@@ -1,9 +1,9 @@
 """S2-style cell encoding + web-mercator slippy tiles, vectorized in numpy.
 
 The cube-face projection (lon/lat -> face, u, v -> s, t with the quadratic
-UV<->ST map) reproduces the reference's +proj=s2 semantics
+UV->ST map) reproduces the reference's +proj=s2 semantics
 (/root/reference/src/projections/s2.cpp — face selection :109-112, quadratic
-ST<->UV :126-166, face UV tables :260-334, geodetic->geocentric latitude
+UV->ST :148-166, face UV tables :260-334, geodetic->geocentric latitude
 shift :336-346). On top of the reference's per-face (s,t) we add what PROJ
 stops short of: the 64-bit Hilbert-curve cell id of the public S2 geometry
 scheme (face:3 bits, 60 position bits, trailing 1 sentinel), computed with
@@ -33,14 +33,12 @@ _POS_TO_ORIENT = (_SWAP, 0, 0, _INVERT | _SWAP)
 
 _LOOKUP_BITS = 4
 _LOOKUP_POS = np.zeros(1 << (2 * _LOOKUP_BITS + 2), dtype=np.int64)
-_LOOKUP_IJ = np.zeros(1 << (2 * _LOOKUP_BITS + 2), dtype=np.int64)
 
 
 def _init_lookup(level: int, i: int, j: int, orig: int, pos: int, orient: int) -> None:
     if level == _LOOKUP_BITS:
         ij = (i << _LOOKUP_BITS) | j
         _LOOKUP_POS[(ij << 2) | orig] = (pos << 2) | orient
-        _LOOKUP_IJ[(pos << 2) | orig] = (ij << 2) | orient
         return
     level += 1
     i <<= 1
@@ -107,16 +105,6 @@ def uv_to_st(u):
         )
 
 
-def st_to_uv(s):
-    """Quadratic ST->UV map (reference s2.cpp:126-146)."""
-    s = np.asarray(s, dtype=np.float64)
-    return np.where(
-        s >= 0.5,
-        (1.0 / 3.0) * (4.0 * s * s - 1.0),
-        (1.0 / 3.0) * (1.0 - 4.0 * (1.0 - s) * (1.0 - s)),
-    )
-
-
 # --------------------------------------------------------------------------
 # cell ids
 # --------------------------------------------------------------------------
@@ -159,63 +147,6 @@ def parent_id(cell_id, level: int):
     return (cell_id & -lsb) | lsb
 
 
-def cell_level(cell_id):
-    """Level from the position of the lowest set bit."""
-    cell_id = np.asarray(cell_id, dtype=np.int64)
-    lsb = cell_id & -cell_id
-    # log2(lsb) is even = 2*(30-level)
-    return MAX_LEVEL - (np.round(np.log2(lsb.astype(np.float64))) / 2).astype(np.int64)
-
-
-def cell_id_to_faceij(cell_id):
-    """Decode a LEVEL-30 id back to (face, i, j).
-
-    Ids are stored as SIGNED int64 (Spark LongType); faces 4-5 wrap negative,
-    so decode goes through a uint64 view for logical shifts.
-    """
-    cell_u = np.asarray(cell_id, dtype=np.int64).view(np.uint64)
-    face = (cell_u >> np.uint64(_POS_BITS)).astype(np.int64)
-    pos = ((cell_u & ((np.uint64(1) << np.uint64(_POS_BITS)) - np.uint64(1))) >> np.uint64(1)).astype(np.int64)
-    bits = face & _SWAP
-    i = np.zeros_like(pos)
-    j = np.zeros_like(pos)
-    mask = (1 << _LOOKUP_BITS) - 1
-    for k in range(7, -1, -1):
-        bits += ((pos >> (k * 2 * _LOOKUP_BITS)) & ((1 << (2 * _LOOKUP_BITS)) - 1)) << 2
-        bits = _LOOKUP_IJ[bits]
-        i += (bits >> (_LOOKUP_BITS + 2)) << (k * _LOOKUP_BITS)
-        j += ((bits >> 2) & mask) << (k * _LOOKUP_BITS)
-        bits &= _SWAP | _INVERT
-    return face, i, j
-
-
-def cell_center_lonlat(cell_id):
-    """Approximate center lon/lat degrees of a level-30 cell id."""
-    face, i, j = cell_id_to_faceij(cell_id)
-    s = (i.astype(np.float64) + 0.5) / (1 << MAX_LEVEL)
-    t = (j.astype(np.float64) + 0.5) / (1 << MAX_LEVEL)
-    u = st_to_uv(s)
-    v = st_to_uv(t)
-    major = 1.0 / np.sqrt(1.0 + u * u + v * v)
-    m1 = u * major
-    m2 = v * major
-    x = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-        [major, -m1, -m1, -major, m2, m2],
-    )
-    y = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-        [m1, major, -m2, -m2, -major, m1],
-    )
-    z = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-        [m2, m2, major, -m1, -m1, -major],
-    )
-    lon = np.degrees(np.arctan2(y, x))
-    lat = np.degrees(np.arctan2(z, np.hypot(x, y)))
-    return lon, lat
-
-
 # --------------------------------------------------------------------------
 # slippy (web-mercator) tiles — exact floor math, no sampling
 # --------------------------------------------------------------------------
@@ -234,8 +165,3 @@ def slippy_tile(lon_deg, lat_deg, zoom: int):
     tx = np.clip(tx, 0, n - 1).astype(np.int64)
     ty = np.clip(ty, 0, n - 1).astype(np.int64)
     return tx, ty
-
-
-def tile_key(zoom: int, tx, ty):
-    """Single int64 key: zoom in the top bits, then x, y."""
-    return (np.int64(zoom) << 58) | (np.asarray(tx, dtype=np.int64) << 29) | np.asarray(ty, dtype=np.int64)

@@ -23,108 +23,57 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from proj_spark import cells
-from proj_spark.plans.pipeline import Pipeline, compile_pipeline
+from proj_spark.plans.pipeline import compile_pipeline
 
 # ---------------------------------------------------------------------------
 # pandas UDF factories (numpy kernels)
 # ---------------------------------------------------------------------------
 
 
-def transform_udf(spec: str, direction: str = "fwd"):
-    """pandas UDF (lon_or_x, lat_or_y) -> struct<x double, y double>.
+def _coord_udf(op, direction: str, out: tuple[str, ...]):
+    """pandas UDF (2, 3 or 4 coordinate columns) -> struct<``out`` double>.
 
-    The full pipeline (compiled driver-side) is closure-captured; executors
-    run pure numpy over Arrow batches — the distributed analogue of
-    proj_trans_generic's strided columnar loop (reference 4D_api.cpp:609-705).
+    ``op`` is anything with fwd_deg/inv_deg: a compiled Pipeline or a
+    plans.dispatch.CandidateDispatch (per-point candidate-operation
+    dispatch with bbox ranking + invalid-result retry). It is built
+    driver-side and closure-captured; executors run pure numpy over Arrow
+    batches — the distributed analogue of proj_trans_generic's strided
+    columnar loop (reference 4D_api.cpp:609-705). The first len(out)
+    output coordinates are returned.
     """
-    pipe = compile_pipeline(spec)
+    run_op = op.fwd_deg if direction == "fwd" else op.inv_deg
 
-    @pandas_udf("x double, y double")
-    def _udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        av = a.to_numpy(dtype=np.float64)
-        bv = b.to_numpy(dtype=np.float64)
+    @pandas_udf(", ".join(f"{c} double" for c in out))
+    def _udf(*cols: pd.Series) -> pd.DataFrame:
+        vs = [c.to_numpy(dtype=np.float64) for c in cols]
 
         def run(sl):
-            if direction == "fwd":
-                x, y, _, _ = pipe.fwd_deg(av[sl], bv[sl])
-            else:
-                x, y, _, _ = pipe.inv_deg(av[sl], bv[sl])
-            return {"x": x, "y": y}
+            return dict(zip(out, run_op(*(v[sl] for v in vs))))
 
-        return _chunked(run, len(av), ["x", "y"])
+        return _chunked(run, len(vs[0]), list(out))
 
     return _udf
+
+
+def transform_udf(spec: str, direction: str = "fwd"):
+    """(lon_or_x, lat_or_y) -> struct<x, y> through a proj-string pipeline."""
+    return _coord_udf(compile_pipeline(spec), direction, ("x", "y"))
 
 
 def dispatch_udf(disp, direction: str = "fwd"):
-    """pandas UDF over a plans.dispatch.CandidateDispatch (or any object
-    with fwd_deg/inv_deg): per-point candidate-operation dispatch with
-    bbox ranking + invalid-result retry (reference 4D_api.cpp proj_trans
-    alternative-operation semantics) executed vectorized per Arrow batch."""
-
-    @pandas_udf("x double, y double")
-    def _udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        av = a.to_numpy(dtype=np.float64)
-        bv = b.to_numpy(dtype=np.float64)
-
-        def run(sl):
-            if direction == "fwd":
-                x, y, _, _ = disp.fwd_deg(av[sl], bv[sl])
-            else:
-                x, y, _, _ = disp.inv_deg(av[sl], bv[sl])
-            return {"x": x, "y": y}
-
-        return _chunked(run, len(av), ["x", "y"])
-
-    return _udf
+    """(lon_or_x, lat_or_y) -> struct<x, y> through a CandidateDispatch."""
+    return _coord_udf(disp, direction, ("x", "y"))
 
 
 def transform3d_udf(spec: str, direction: str = "fwd"):
-    """pandas UDF (x, y, z) -> struct<x,y,z double> for datum pipelines."""
-    pipe = compile_pipeline(spec)
-
-    @pandas_udf("x double, y double, z double")
-    def _udf(a: pd.Series, b: pd.Series, c: pd.Series) -> pd.DataFrame:
-        av = a.to_numpy(dtype=np.float64)
-        bv = b.to_numpy(dtype=np.float64)
-        cv = c.to_numpy(dtype=np.float64)
-
-        def run(sl):
-            if direction == "fwd":
-                x, y, z, _ = pipe.fwd_deg(av[sl], bv[sl], cv[sl])
-            else:
-                x, y, z, _ = pipe.inv_deg(av[sl], bv[sl], cv[sl])
-            return {"x": x, "y": y, "z": z}
-
-        return _chunked(run, len(av), ["x", "y", "z"])
-
-    return _udf
+    """(x, y, z) -> struct<x, y, z> for datum pipelines."""
+    return _coord_udf(compile_pipeline(spec), direction, ("x", "y", "z"))
 
 
 def transform4d_udf(spec: str, direction: str = "fwd"):
-    """pandas UDF (x, y, z, t) -> struct<x,y,z double> for 4D pipelines
-    (time-dependent Helmert: t is the coordinate epoch in decimal years,
-    reference src/transformations/helmert.cpp parameter propagation)."""
-    pipe = compile_pipeline(spec)
-
-    @pandas_udf("x double, y double, z double")
-    def _udf(a: pd.Series, b: pd.Series, c: pd.Series,
-             d: pd.Series) -> pd.DataFrame:
-        av = a.to_numpy(dtype=np.float64)
-        bv = b.to_numpy(dtype=np.float64)
-        cv = c.to_numpy(dtype=np.float64)
-        dv = d.to_numpy(dtype=np.float64)
-
-        def run(sl):
-            if direction == "fwd":
-                x, y, z, _ = pipe.fwd_deg(av[sl], bv[sl], cv[sl], dv[sl])
-            else:
-                x, y, z, _ = pipe.inv_deg(av[sl], bv[sl], cv[sl], dv[sl])
-            return {"x": x, "y": y, "z": z}
-
-        return _chunked(run, len(av), ["x", "y", "z"])
-
-    return _udf
+    """(x, y, z, t) -> struct<x, y, z>; t is the coordinate epoch in decimal
+    years (time-dependent Helmert, reference helmert.cpp)."""
+    return _coord_udf(compile_pipeline(spec), direction, ("x", "y", "z"))
 
 
 def lonlat_udf():
@@ -193,23 +142,6 @@ def geod_karney_udf(ellps: str = "WGS84"):
         return pd.DataFrame({"s12": r["s12"], "azi1": r["azi1"],
                              "azi2": r["azi2"], "m12": r["m12"],
                              "gscale": r["M12"]})
-
-    return _udf
-
-
-def geod_direct_udf(ellps: str = "WGS84"):
-    """pandas UDF (lon1, lat1, azi1, s12) -> struct<lon2, lat2, azi2>."""
-    from proj_spark.crs import ELLIPSOIDS
-    from proj_spark.kernels.geodesic import geod_direct, setup_vincenty
-
-    C = setup_vincenty(ELLIPSOIDS[ellps])
-
-    @pandas_udf("lon2 double, lat2 double, azi2 double")
-    def _udf(lon1: pd.Series, lat1: pd.Series, azi1: pd.Series, s12: pd.Series) -> pd.DataFrame:
-        lon2, lat2, a2 = geod_direct(
-            lon1.to_numpy(np.float64), lat1.to_numpy(np.float64),
-            azi1.to_numpy(np.float64), s12.to_numpy(np.float64), C)
-        return pd.DataFrame({"lon2": lon2, "lat2": lat2, "azi2": a2})
 
     return _udf
 
@@ -332,15 +264,6 @@ def image_geo_full_udf(level: int = 10):
 
 WEBMERC_A = 6378137.0
 WEBMERC_MAX_LAT = cells.WEBMERC_MAX_LAT
-
-
-def lon_from_key(key: Column) -> Column:
-    """Deterministic oracle-checkable lon from an integer key (FIXTURES §5)."""
-    return (key % 36000) / 100.0 - 180.0
-
-
-def lat_from_key(key: Column) -> Column:
-    return (key % 17000) / 100.0 - 85.0
 
 
 def webmerc_x(lon: Column) -> Column:

@@ -1,8 +1,8 @@
 """Text analysis for large-scale training-data pipelines.
 
 Everything here is either a pure Column expression (JVM codegen, pushes
-down, oracle-checkable in ANSI SQL) or a vectorized pandas UDF (the rolling
-fingerprint, where per-token iteration genuinely needs numpy).
+down, oracle-checkable in ANSI SQL) or a vectorized pandas UDF (the
+content fingerprint, where the per-byte hash chain genuinely needs numpy).
 
 Semantics are pinned so a DuckDB oracle can reproduce them exactly:
 token = maximal run of non-whitespace after trim(); all ratios are plain
@@ -50,12 +50,6 @@ def punct_ratio(text: Column) -> Column:
     return F.when(n > 0, p / n).otherwise(F.lit(0.0))
 
 
-def upper_ratio(text: Column) -> Column:
-    n = F.length(text)
-    u = n - F.length(F.regexp_replace(text, "[A-Z]", ""))
-    return F.when(n > 0, u / n).otherwise(F.lit(0.0))
-
-
 def digit_ratio(text: Column) -> Column:
     n = F.length(text)
     d = n - F.length(F.regexp_replace(text, "[0-9]", ""))
@@ -92,7 +86,7 @@ def quality_score(text: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# document fingerprint (rolling hash) — pandas UDF tier
+# document fingerprint — pandas UDF tier
 # ---------------------------------------------------------------------------
 
 _FNV_OFFSET = np.uint64(0xCBF29CE484222325)
@@ -140,62 +134,3 @@ def fingerprint64(text: Column) -> Column:
             return pd.Series(_fnv1a_bytes_vec(t).view(np.int64))
         _FP64 = _fp
     return _FP64(text)
-
-
-def rolling_fingerprints(window: int = 50):
-    """pandas UDF text -> array<long>: polynomial rolling hashes of
-    ``window``-token spans (near-dup span detection / dedup at passage
-    granularity). mod-2^64 wrap arithmetic, base 1099511628211.
-
-    Fully batch-vectorized: token hashes come from the byte-position FNV-1a
-    kernel over the batch's flattened token list (content-deterministic
-    across executors, unlike the process-salted builtin hash), and the
-    rolling recurrence h_{j+1} = h_j*base + t_{j+w} - t_j*base^w is computed
-    in closed form h_j = sum_i t_{j+i} * base^(w-1-i) as one sliding-window
-    dot product over the whole batch — no per-token Python anywhere."""
-    base = np.uint64(0x100000001B3)
-    # powers [base^(w-1), ..., base, 1] via wrapping multiplies (numpy **
-    # on uint64 is not a reliable modular power)
-    p = np.empty(window, dtype=np.uint64)
-    p[window - 1] = np.uint64(1)
-    with np.errstate(over="ignore"):
-        for i in range(window - 2, -1, -1):
-            p[i] = p[i + 1] * base
-
-    @pandas_udf("array<long>")
-    def _udf(text: pd.Series) -> pd.Series:
-        toks_per_doc = [(s or "").lower().split() for s in text]
-        lens = np.fromiter((len(t) for t in toks_per_doc), dtype=np.int64,
-                           count=len(toks_per_doc))
-        flat = [t for doc in toks_per_doc for t in doc]
-        th = (_fnv1a_bytes_vec(pd.Series(flat)) if flat
-              else np.empty(0, dtype=np.uint64))
-        starts = np.zeros(len(lens), dtype=np.int64)
-        if len(lens) > 1:
-            starts[1:] = np.cumsum(lens)[:-1]
-        # one sliding dot product over the flat batch; windows straddling a
-        # doc boundary are computed then discarded (~w wasted per doc).
-        # chunked so the (N, w) product stays ~tens of MB.
-        hflat = np.empty(max(len(th) - window + 1, 0), dtype=np.uint64)
-        if len(th) >= window:
-            sw = np.lib.stride_tricks.sliding_window_view(th, window)
-            step = max(1 << 18, window)
-            with np.errstate(over="ignore"):  # mod-2^64 wrap IS the algorithm
-                for lo in range(0, sw.shape[0], step):
-                    blk = sw[lo:lo + step]
-                    hflat[lo:lo + blk.shape[0]] = (blk * p).sum(
-                        axis=1, dtype=np.uint64)
-        out = []
-        with np.errstate(over="ignore"):
-            for st, ln in zip(starts, lens):
-                if ln == 0:
-                    out.append([])
-                elif ln <= window:
-                    h = (th[st:st + ln] * p[window - ln:]).sum(dtype=np.uint64)
-                    out.append([np.int64(h)])
-                else:
-                    out.append(hflat[st:st + ln - window + 1]
-                               .view(np.int64).tolist())
-        return pd.Series(out)
-
-    return _udf

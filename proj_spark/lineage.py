@@ -14,8 +14,8 @@ Design (idiomatic Spark, no external services):
     aggregate over the same shuffled data. Manifests land in
     ``_manifests/`` as parquet.
   * Resume = anti-join the full bucket list against completed manifest
-    part_ids, then run only the remainder. Because generation and salting
-    are deterministic (sources.synth, operators.skew), a resumed bucket
+    part_ids, then run only the remainder. Because generation is
+    deterministic (sources.synth), a resumed bucket
     reproduces byte-identical content — the write is idempotent at bucket
     granularity, which is exactly Iceberg's append-commit contract scaled
     down to files.
@@ -32,18 +32,10 @@ the distributed manifest is genuinely new surface per SURVEY §2.6.
 from __future__ import annotations
 
 import os
-import zlib
-from typing import Callable, Iterator, Sequence
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-MANIFEST_SCHEMA = (
-    "part_id long, rows long, min_cell long, max_cell long, "
-    "checksum long, engine_version string"
-)
 
 
 def assign_part_id(df: DataFrame, num_buckets: int, cell_col: str = "cell") -> DataFrame:
@@ -132,17 +124,6 @@ def write_with_manifests(
     finally:
         bucketed.unpersist()
     return {"written": int(n_written), "skipped": len(done)}
-
-
-def run_resumable(
-    spark: SparkSession,
-    build: Callable[[SparkSession], DataFrame],
-    out_dir: str,
-    **kw,
-) -> dict:
-    """Build-and-write with resume: crash between buckets, rerun, and only
-    missing buckets are recomputed (build must be deterministic)."""
-    return write_with_manifests(build(spark), out_dir, **kw)
 
 
 def verify_manifests(spark: SparkSession, out_dir: str) -> pd.DataFrame:

@@ -30,7 +30,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -61,11 +61,6 @@ def shingles(text: pd.Series, n: int = 3) -> list[list[str]]:
     return out
 
 
-def _shingle_hash64(sh: str) -> np.uint64:
-    """First 8 bytes of md5(shingle) as uint64 big-endian — chosen because
-    DuckDB can reproduce it: ('0x' || substr(md5(s), 1, 16))::UINT64."""
-    return np.uint64(int.from_bytes(hashlib.md5(sh.encode()).digest()[:8], "big"))
-
 
 # ---------------------------------------------------------------------------
 # exact
@@ -87,11 +82,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         .filter(F.col("n_dups") > 1)
     )
 
-
-def drop_exact_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one row (smallest id) per distinct content."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col).asc())
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 # ---------------------------------------------------------------------------
@@ -218,57 +208,6 @@ def dedup_clusters(
         F.lit(1).cast("long").alias("cluster_size"))
     return labeled.unionByName(singles)
 
-
-def minhash_signatures_xx(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    num_hashes: int = 8, shingle_n: int = 3,
-) -> DataFrame:
-    """(id, m0..m{k-1}) minhash signatures computed ENTIRELY JVM-side —
-    the 100 TB scale tier.
-
-    Tokenization, shingling, hashing (xxhash64 seeded per permutation) and
-    the per-doc minima all run inside whole-stage codegen: a map-only
-    explode followed by a partial-aggregated groupBy — no Python boundary,
-    no per-row interpreter work. The md5-based ``minhash_signatures``
-    stays as the DuckDB-oracle-parity tier; LSH banding downstream is
-    identical for both (xx signatures are just a different permutation
-    family, equally uniform).
-    """
-    # materialize the token array as a projected column FIRST: referencing
-    # the split(...) expression inside the transform() lambda would
-    # re-evaluate the regex split per shingle (no CSE across higher-order
-    # function boundaries) — O(tokens^2) regex work per document
-    toks = df.select(
-        F.col(id_col),
-        F.filter(F.split(F.lower(F.col(text_col)), r"\s+"),
-                 lambda w: w != F.lit("")).alias("_w"))
-    words = F.col("_w")
-    sh = F.when(
-        F.size(words) == 0, F.array()
-    ).when(
-        F.size(words) < shingle_n,
-        F.array(F.array_join(words, " ")),
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - shingle_n + 1),
-            lambda i: F.array_join(F.slice(words, i, shingle_n), " "),
-        )
-    )
-    df = toks
-    # explode_outer keeps empty docs as one NULL-shingle row, so the
-    # all-zero-sig convention for empties (same as the md5 tier) falls out
-    # of a conditional min + coalesce — ONE pass over the corpus, no
-    # anti-join (which would recompute the whole explode+agg branch)
-    exploded = df.select(F.col(id_col), F.explode_outer(sh).alias("_sh"))
-    aggs = [
-        F.coalesce(
-            F.min(F.when(F.col("_sh").isNotNull(),
-                         F.xxhash64(F.lit(i), F.col("_sh")))),
-            F.lit(0).cast("long"),
-        ).alias(f"m{i}")
-        for i in range(num_hashes)
-    ]
-    return exploded.groupBy(id_col).agg(*aggs)
 
 
 def minhash_lsh_pairs(

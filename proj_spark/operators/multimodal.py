@@ -27,7 +27,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from proj_spark.sources.synth import _gradient_pixels, decode_png
 
@@ -46,13 +45,6 @@ def decode_image(blob: bytes, w: int, h: int, fmt: str) -> np.ndarray:
         "this container; plug cv2.imdecode/PIL.Image.open here"
     )
 
-
-def resize_nearest(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize in pure numpy (fancy-indexing gather)."""
-    h, w, _ = px.shape
-    yi = np.minimum((np.arange(out_h) * h) // out_h, h - 1)
-    xi = np.minimum((np.arange(out_w) * w) // out_w, w - 1)
-    return px[yi[:, None], xi[None, :]]
 
 
 FEATURE_SCHEMA = (
@@ -94,134 +86,4 @@ def image_features(df: DataFrame, *, strict: bool = False) -> DataFrame:
 
     return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
         run, schema=FEATURE_SCHEMA
-    )
-
-
-THUMB_SCHEMA = "image_id string, thumb binary, tw int, th int"
-
-
-def thumbnails(df: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
-    """Decode -> nearest-neighbor resize -> raw RGB bytes out.
-
-    The shape of a real thumbnailing stage: binary in, binary out, fixed
-    small output size so the result column is shuffle-safe.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for img_id, blob, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                try:
-                    px = decode_image(blob, int(w), int(h), fmt)
-                except NotImplementedError:
-                    continue
-                ids.append(img_id)
-                blobs.append(resize_nearest(px, out_w, out_h).tobytes())
-            yield pd.DataFrame(
-                {"image_id": ids, "thumb": blobs,
-                 "tw": np.full(len(ids), out_w, dtype=np.int32),
-                 "th": np.full(len(ids), out_h, dtype=np.int32)}
-            )
-
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        run, schema=THUMB_SCHEMA
-    )
-
-
-def phash_from_pixels(px: np.ndarray) -> int:
-    """8x8 average-hash (aHash) — the deterministic fake perceptual hash
-    used to validate near-dup-by-phash joins end to end."""
-    g = resize_nearest(px, 8, 8).mean(axis=2)
-    bits = (g > g.mean()).ravel()
-    return int(sum(1 << i for i, b in enumerate(bits) if b))
-
-
-def image_near_dup_pairs(
-    df: DataFrame, max_hamming: int = 3, rotations: int = 4,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """(id_a, id_b, hamming): near-duplicate image pairs by perceptual
-    hash, via the same rotate-and-prefix pigeonhole bucketing as text
-    SimHash (a pair within hamming d < rotations shares one identical
-    16-bit block in some rotation) — a banded equi-join, never an
-    all-pairs comparison. Pixels are decoded ONCE into 64-bit hashes;
-    only the 8-byte hashes shuffle."""
-    from pyspark.sql import functions as F
-
-    sig = ahash64(df).withColumnRenamed("image_id", id_col)
-    cands = None
-    for rot in range(rotations):
-        shift = 16 * rot
-        block = F.shiftrightunsigned(F.col("ahash"), shift) \
-            .bitwiseAND(F.lit(0xFFFF))
-        s = sig.withColumn(
-            "bk", F.concat(F.lit(rot * 100000), block.cast("long")))
-        left = s.select(F.col(id_col).alias("id_a"),
-                        F.col("ahash").alias("ha"), "bk")
-        right = s.select(F.col(id_col).alias("id_b"),
-                         F.col("ahash").alias("hb"), "bk")
-        p = left.join(right, "bk").filter(F.col("id_a") < F.col("id_b"))
-        cands = p if cands is None else cands.unionByName(p)
-    cands = cands.select("id_a", "id_b", "ha", "hb").distinct()
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return cands.withColumn("hamming", ham.cast("int")).filter(
-        F.col("hamming") <= max_hamming).select("id_a", "id_b", "hamming")
-
-
-def image_dedup_clusters(
-    df: DataFrame, max_hamming: int = 3, id_col: str = "image_id",
-) -> DataFrame:
-    """(image_id, cluster_id, cluster_size): perceptual-hash duplicate
-    clusters — image_near_dup_pairs edges through the same hash-to-min
-    label propagation as text dedup (operators.dedup.connected_components).
-    String ids are mapped to dense hashes for the numeric CC kernel and
-    mapped back; the min-id canonical member is stable."""
-    from pyspark.sql import functions as F
-
-    from proj_spark.operators.dedup import connected_components
-
-    pairs = image_near_dup_pairs(df, max_hamming=max_hamming, id_col=id_col)
-    ids = df.select(F.col(id_col)).distinct().withColumn(
-        "nid", F.xxhash64(F.col(id_col)))
-    edges = (pairs
-             .join(ids.select(F.col(id_col).alias("id_a"),
-                              F.col("nid").alias("na")), "id_a")
-             .join(ids.select(F.col(id_col).alias("id_b"),
-                              F.col("nid").alias("nb")), "id_b")
-             .select("na", "nb"))
-    comp = connected_components(edges, "na", "nb")
-    labeled = (ids.join(comp.withColumnRenamed("node", "nid"), "nid", "left")
-               .withColumn("component",
-                           F.coalesce(F.col("component"), F.col("nid"))))
-    # canonical member: the lexicographically-smallest original id
-    canon = labeled.groupBy("component").agg(
-        F.min(id_col).alias("cluster_id"),
-        F.count(F.lit(1)).alias("cluster_size"))
-    return labeled.join(canon, "component").select(
-        id_col, "cluster_id", "cluster_size")
-
-
-def ahash64(df: DataFrame) -> DataFrame:
-    """(image_id, ahash long) via decode + 8x8 average hash."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hs = [], []
-            for img_id, blob, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                try:
-                    px = decode_image(blob, int(w), int(h), fmt)
-                except NotImplementedError:
-                    continue
-                ids.append(img_id)
-                hs.append(np.uint64(phash_from_pixels(px)))
-            yield pd.DataFrame({"image_id": ids,
-                                "ahash": np.array(hs, dtype=np.uint64).view(np.int64)
-                                if hs else np.array([], dtype=np.int64)})
-
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        run, schema="image_id string, ahash long"
     )

@@ -89,29 +89,6 @@ def cosine_knn_bruteforce(
     )
 
 
-def rhp_signature(
-    df: DataFrame, dim: int, *, id_col: str = "vec_id", vec_col: str = "embedding",
-    bits: int = 64, seed: int = 0x5EED,
-) -> DataFrame:
-    """(id, sig long): random-hyperplane sign signature.
-
-    Hyperplanes are a deterministic (bits x dim) float matrix derived from
-    splitmix64(seed, i, j) — identical on every executor and every run,
-    no broadcast needed beyond closure capture.
-    """
-    idx = np.arange(bits * dim, dtype=np.uint64) + np.uint64(seed) * np.uint64(0x1000003)
-    H = (splitmix64(idx).astype(np.float64) / 2.0**64 - 0.5).reshape(bits, dim)
-
-    @pandas_udf("long")
-    def _sig(v: pd.Series) -> pd.Series:
-        M = _as_matrix(v)
-        signs = (M @ H.T) > 0  # (batch, bits)
-        weights = (np.uint64(1) << np.arange(bits, dtype=np.uint64))[None, :]
-        sig = np.where(signs, weights, np.uint64(0)).sum(axis=1, dtype=np.uint64)
-        return pd.Series(sig.view(np.int64))
-
-    return df.select(F.col(id_col), F.col(vec_col), _sig(F.col(vec_col)).alias("sig"))
-
 
 def rhp_band_keys(
     df: DataFrame, dim: int, *, id_col: str = "vec_id",

@@ -10,8 +10,7 @@ Plan shape (the north rule's prescribed strategy):
 
 Why this scales: the expensive O(points x polygons) predicate becomes an
 int64 equality join Catalyst can broadcast or SMJ; AQE handles skewed
-megacells (plus optional explicit salting, see operators/skew.py). The
-exact test is vectorized numpy over Arrow batches grouped by polygon —
+megacells. The exact test is vectorized numpy over Arrow batches grouped by polygon —
 no per-row Python.
 
 The only spatial index in the reference is a bucket quadtree used for

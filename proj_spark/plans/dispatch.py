@@ -198,29 +198,3 @@ class CandidateDispatch:
 
     def inv_deg(self, x, y, z=None, t=None):
         return self._run(x, y, z, t, "inv")
-
-
-def crs_to_crs_dispatch(
-    pairs: list[tuple[str, dict]], src: str | None = None,
-    dst: str | None = None,
-) -> CandidateDispatch:
-    """Convenience: build a dispatch from (proj-string, opts) pairs, or —
-    when ``src``/``dst`` are given — from candidate DATUM HOOK variants of
-    a crs-to-crs pair (each pair entry then supplies the datum options,
-    e.g. [('+nadgrids=x.gsb', {'src_bbox': ..., 'accuracy': 0.05}),
-    ('+towgs84=...', {'accuracy': 2.0})] applied to the src CRS)."""
-    from proj_spark.plans.pipeline import compile_crs_to_crs
-
-    cands = []
-    for spec, opts in pairs:
-        if src is not None and dst is not None:
-            pipe = compile_crs_to_crs(f"{src} {spec}", dst)
-            needs = any(k in spec for k in
-                        ("nadgrids", "+grids", "geoidgrids"))
-            cands.append(Candidate(
-                pipe, opts.get("src_bbox"), opts.get("dst_bbox"),
-                opts.get("accuracy", -1.0), needs_grids=needs,
-                name=opts.get("name", spec)))
-        else:
-            cands.append(candidate(spec, **opts))
-    return CandidateDispatch(cands)

@@ -150,7 +150,9 @@ def _ops_by_crs():
                 continue
             mem_name = str(db["geodetic_crs"][mem_crs][2])
             op = {
-                "kind": "ensemble_null",
+                # the code is synthetic, so it is not labelled EPSG
+                # (the reference's DERIVED_FROM(EPSG) convention)
+                "kind": "ensemble_null", "auth": "DERIVED_FROM(EPSG)",
                 "code": f"{ens_datum}-member-{mem}",
                 "name": f"{ens_name} to {mem_name}",
                 "method": "ensemble", "method_name": "datum ensemble member",

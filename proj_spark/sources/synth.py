@@ -250,18 +250,3 @@ def make_polygons(count: int = 64, seed: int = 42) -> list[Polygon]:
     polys.append(Polygon("poly_polarcap", "cap", np.empty(0),
                          (-180.0, 86.0, 180.0, 90.0), cap=(0.0, 90.0, 4.0)))
     return polys
-
-
-def polygons_df(spark, polys: list[Polygon]):
-    rows = [
-        (p.polygon_id, p.kind, p.ring.tolist(),
-         p.bbox[0], p.bbox[1], p.bbox[2], p.bbox[3],
-         list(p.cap) if p.cap else None)
-        for p in polys
-    ]
-    return spark.createDataFrame(
-        rows,
-        "polygon_id string, kind string, ring array<double>, "
-        "min_lon double, min_lat double, max_lon double, max_lat double, "
-        "cap array<double>",
-    )

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -54,18 +53,6 @@ def test_fingerprint_deterministic_and_distinct(spark):
     assert fp[1] == fp[2] != fp[3]
 
 
-def test_rolling_fingerprints_detect_shared_passage(spark):
-    shared = " ".join(f"tok{i}" for i in range(60))
-    a = "intro words " + shared + " tail a"
-    b = "other opening phrase " + shared + " completely different ending"
-    df = spark.createDataFrame([(1, a), (2, b), (3, "no overlap at all here")],
-                               "doc_id long, text string")
-    out = df.select("doc_id", T.rolling_fingerprints(50)(F.col("text")).alias("fps")).toPandas()
-    sets = {r.doc_id: set(r.fps) for r in out.itertuples()}
-    assert sets[1] & sets[2], "shared 60-token passage must collide"
-    assert not (sets[1] & sets[3])
-
-
 # -------------------------------------------------------------- dedup
 
 
@@ -87,14 +74,6 @@ def test_exact_dedup(spark, dup_docs):
     out = dedup.exact_dedup(dup_docs).toPandas()
     assert len(out) == 2
     assert set(out["n_dups"]) == {2}
-
-
-def test_drop_exact_dups(spark, dup_docs):
-    kept = dedup.drop_exact_dups(dup_docs)
-    assert kept.count() == dup_docs.count() - 2
-    # canonical = smallest id survives
-    ids = {r.doc_id for r in kept.collect()}
-    assert 100001 not in ids and 100002 not in ids
 
 
 def test_minhash_lsh_finds_planted_near_dup(spark, dup_docs):
@@ -151,23 +130,6 @@ def test_minhash_empty_and_short_docs(spark):
         .set_index("doc_id")
     assert (sig.loc[1] == 0).all() and (sig.loc[2] == 0).all()
     assert (sig.loc[3] != 0).any() and (sig.loc[4] != 0).any()
-
-
-def test_minhash_xx_scale_tier(spark, dup_docs):
-    """JVM xxhash64 tier: map-only plan, exact dups share every component,
-    near-dups share most, and no Python stage appears in the plan."""
-    sig = dedup.minhash_signatures_xx(dup_docs, num_hashes=8)
-    plan = sig._sc._jvm.PythonSQLUtils.explainString(
-        sig._jdf.queryExecution(), "formatted") \
-        if False else sig._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    pdf = sig.toPandas().set_index("doc_id")
-    base = dup_docs.toPandas().sort_values("doc_id")
-    fid = base["doc_id"].tolist()
-    cols = [f"m{i}" for i in range(8)]
-    assert (pdf.loc[fid[0], cols] == pdf.loc[100001, cols]).all()
-    shared = (pdf.loc[fid[2], cols] == pdf.loc[100003, cols]).sum()
-    assert shared >= 4  # near dup: most minima survive one mutated token
 
 
 def test_simhash_reference_values(spark):
@@ -311,20 +273,6 @@ def test_image_features_skips_undecodable_unless_strict(spark):
         multimodal.image_features(df, strict=True).count()
 
 
-def test_thumbnails_shape(spark):
-    imgs = images_df(spark, 16, real_png=True)
-    th = multimodal.thumbnails(imgs, 8, 8).toPandas()
-    assert len(th) == 16
-    assert all(len(b) == 8 * 8 * 3 for b in th["thumb"])
-
-
-def test_ahash_identical_images_collide(spark):
-    imgs = images_df(spark, 8)
-    h = multimodal.ahash64(imgs).toPandas()
-    assert len(h) == 8
-    assert h["ahash"].nunique() > 1
-
-
 def test_connected_components_chain_and_clusters(spark):
     # chain 1-2-3-4 plus pair (10,11) plus self-contained triangle
     edges = spark.createDataFrame(
@@ -351,26 +299,3 @@ def test_dedup_clusters_lsh_tier_matches_exact(spark, dup_docs):
     base = dup_docs.toPandas().sort_values("doc_id")["doc_id"].tolist()
     assert by_id.loc[base[0], "cluster_id"] == by_id.loc[100001, "cluster_id"]
     assert by_id.loc[base[0], "cluster_size"] >= 2
-
-
-def test_image_dedup_clusters_planted(spark):
-    """Plant exact-pixel duplicate images under new ids; the perceptual-
-    hash pair banding + connected components must group them, with the
-    lexicographically-smallest id as the canonical cluster label."""
-    rows = [make_image_row(i) for i in range(12)]
-    dup0 = dict(make_image_row(0)); dup0["image_id"] = "img_copy_0"
-    dup3 = dict(make_image_row(3)); dup3["image_id"] = "img_copy_3"
-    rows += [dup0, dup3]
-    pdf = pd.DataFrame(rows)
-    imgs = spark.createDataFrame(pdf)
-    out = multimodal.image_dedup_clusters(imgs, max_hamming=0).toPandas() \
-        .set_index("image_id")
-    assert len(out) == 14
-    assert out.loc["img_copy_0", "cluster_id"] == \
-        out.loc["img000000000000", "cluster_id"]
-    assert out.loc["img_copy_0", "cluster_size"] >= 2
-    assert out.loc["img_copy_3", "cluster_id"] == \
-        out.loc["img000000000003", "cluster_id"]
-    # unrelated image stays alone unless its hash collides by chance
-    sizes = out["cluster_size"]
-    assert (sizes == 1).sum() >= 8

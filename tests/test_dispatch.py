@@ -5,9 +5,8 @@ reference's proj_trans alternative-operation semantics (4D_api.cpp
 import numpy as np
 import pytest
 
-from proj_spark.plans.dispatch import (
-    Candidate, CandidateDispatch, candidate, crs_to_crs_dispatch)
-from proj_spark.plans.pipeline import compile_pipeline
+from proj_spark.plans.dispatch import Candidate, CandidateDispatch, candidate
+from proj_spark.plans.pipeline import compile_crs_to_crs, compile_pipeline
 from proj_spark.sources.ntv2 import synth_grid, write_gsb
 
 
@@ -94,13 +93,15 @@ def test_inverse_uses_dst_bbox():
 def test_crs_to_crs_dispatch_mixed_region(grid_path):
     """cs2cs-style: same CRS pair, two datum-op candidates (regional grid
     vs global Helmert); a mixed-region point set splits per point."""
-    disp = crs_to_crs_dispatch(
-        [(f"+nadgrids={grid_path}",
-          {"src_bbox": (-5.0, 35.0, 15.0, 55.0), "accuracy": 0.05}),
-         ("+towgs84=100,0,0", {"accuracy": 2.0})],
-        src="+proj=latlong +ellps=GRS80",
-        dst="+proj=latlong +datum=WGS84",
-    )
+    src = "+proj=latlong +ellps=GRS80"
+    dst = "+proj=latlong +datum=WGS84"
+    disp = CandidateDispatch([
+        Candidate(compile_crs_to_crs(f"{src} +nadgrids={grid_path}", dst),
+                  src_bbox=(-5.0, 35.0, 15.0, 55.0), accuracy=0.05,
+                  needs_grids=True),
+        Candidate(compile_crs_to_crs(f"{src} +towgs84=100,0,0", dst),
+                  accuracy=2.0),
+    ])
     lon = np.array([5.0, 120.0])
     lat = np.array([42.0, 10.0])
     x, y, _, _ = disp.fwd_deg(lon, lat)
@@ -435,6 +436,8 @@ def test_datum_ensemble_member_null_ops():
     cands = candidate_operations("4326", "9057")
     null_op = cands[0]
     assert "WGS 84 to WGS 84 (G1762)" in null_op.name
+    # the member op's code is synthetic: labelled as the reference does
+    assert null_op.name.startswith("DERIVED_FROM(EPSG):6326-member-")
     assert null_op.accuracy == 2.0
     # identity within the ensemble accuracy
     gx, gy, _, _ = null_op.pipeline.fwd_deg(

@@ -51,14 +51,6 @@ def test_exact_dedup_partial_agg(spark, entry):
     assert re.search(r"HashAggregate.*partial", plan, re.I | re.S)
 
 
-def test_minhash_xx_tier_is_jvm_only(spark):
-    from proj_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(dedup.minhash_signatures_xx(docs))
-    assert "EvalPython" not in plan
-
-
 def test_knn_uses_broadcast_not_shuffle_cross(spark, entry):
     df = entry.queries()["knn_nation_k3"](spark, SF)
     plan = _plan(df)
@@ -175,35 +167,3 @@ def test_kmeans_codebook_empty_and_dim_guards(spark):
         kmeans_codebook(empty, 4, 64, n_hint=0)
     with _pytest.raises(ValueError, match="dim|expected"):
         kmeans_codebook(e.limit(8), 4, 63, n_hint=8)
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path_factory):
-    """Two tables bucketed+sorted on the cell key must join with ZERO
-    Exchange operators — the co-location contract for 100 TB cell joins."""
-    from pyspark.sql import functions as F
-
-    from proj_spark.operators.bucketing import (assert_no_shuffle_join,
-                                                bucketed_join,
-                                                join_exchange_count,
-                                                write_bucketed)
-
-    events = spark.read.parquet(f"{SF}/events.parquet").limit(2000) \
-        .withColumn("cell", F.xxhash64("event_id") % 64)
-    dims = events.select("cell").distinct() \
-        .withColumn("weight", F.rand(7))
-    write_bucketed(events, "ev_b", "cell", 8, sort_cols=["cell"])
-    write_bucketed(dims, "dim_b", "cell", 8, sort_cols=["cell"])
-    try:
-        # disable broadcast so the join must be SortMergeJoin: the test is
-        # about bucketing removing the exchanges, not about broadcasting
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = bucketed_join(spark, "ev_b", "dim_b", "cell")
-        j.write.format("noop").mode("overwrite").save()
-        assert_no_shuffle_join(j)
-        # sanity: the same join over plain (unbucketed) frames shuffles
-        plain = events.join(dims, "cell")
-        assert join_exchange_count(plain) > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS ev_b")
-        spark.sql("DROP TABLE IF EXISTS dim_b")

@@ -1,24 +1,19 @@
-"""Skew salting determinism + lineage manifest / checkpoint-resume tests."""
+"""Lineage manifest / checkpoint-resume tests."""
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from proj_spark import lineage
 from proj_spark.functions import s2_cell_udf
-from proj_spark.operators import skew
-from proj_spark.sources.synth import images_df
 
 
 def _points(spark, n=4000):
-    from proj_spark.functions import lat_from_key, lon_from_key
-
-    df = spark.range(n).withColumn("lon", lon_from_key(F.col("id"))).withColumn(
-        "lat", lat_from_key(F.col("id"))
+    key = F.col("id")
+    df = spark.range(n).withColumn("lon", (key % 36000) / 100.0 - 180.0).withColumn(
+        "lat", (key % 17000) / 100.0 - 85.0
     )
     # hotspot: 30% of rows piled onto one coordinate -> one megacell
     df = df.withColumn(
@@ -27,48 +22,6 @@ def _points(spark, n=4000):
         "lat", F.when(F.col("id") % 10 < 3, F.lit(2.5)).otherwise(F.col("lat"))
     )
     return df.withColumn("cell", s2_cell_udf(8)(F.col("lon"), F.col("lat")))
-
-
-def test_histogram_finds_hotspot(spark):
-    pts = _points(spark)
-    hist = skew.cell_histogram(pts, top=16)
-    assert hist.iloc[0]["cnt"] >= 1200  # the piled cell dominates
-
-
-def test_salting_splits_hot_cell_and_is_deterministic(spark):
-    pts = _points(spark)
-    hist = skew.cell_histogram(pts, top=16)
-    factors = skew.salt_factors(hist, target_rows_per_task=200)
-    assert factors, "expected at least one hot cell"
-    hot = max(factors, key=factors.get)
-
-    s1 = skew.salted(pts, factors, row_key="id")
-    s2 = skew.salted(pts, factors, row_key="id")
-    a = s1.filter(F.col("cell") == hot).groupBy("salt").count().toPandas()
-    b = s2.filter(F.col("cell") == hot).groupBy("salt").count().toPandas()
-    assert len(a) == factors[hot]  # hot cell spread over all salt buckets
-    assert a["count"].max() <= 3 * a["count"].min() + 50  # roughly even
-    pa = a.sort_values("salt").reset_index(drop=True)
-    pb = b.sort_values("salt").reset_index(drop=True)
-    assert (pa["count"] == pb["count"]).all()  # deterministic across runs
-
-    cold = s1.filter(~F.col("cell").isin(*[int(c) for c in factors])).select(
-        F.max("salt").alias("m")
-    ).collect()[0]["m"]
-    assert cold == 0
-
-
-def test_salted_join_matches_unsalted(spark):
-    pts = _points(spark, n=1000)
-    hist = skew.cell_histogram(pts, top=8)
-    factors = skew.salt_factors(hist, target_rows_per_task=100)
-    cover = pts.select("cell").distinct().withColumn("tag", F.lit("x"))
-
-    plain = pts.join(cover, "cell").count()
-    saltp = skew.salted(pts, factors, row_key="id")
-    saltc = skew.salted_cover(cover, factors)
-    joined = saltp.join(saltc, ["cell", "salt"]).count()
-    assert joined == plain
 
 
 def test_lineage_write_and_resume(spark, tmp_path):
@@ -88,24 +41,6 @@ def test_lineage_write_and_resume(spark, tmp_path):
     assert back.count() == 2000
     audit = lineage.verify_manifests(spark, out)
     assert audit["ok"].all()
-
-
-def test_salting_without_row_key_is_content_deterministic(spark):
-    """Omitted row_key must still be stable across runs (derived from row
-    content, not monotonically_increasing_id which depends on partitioning)."""
-    pts = _points(spark, n=1000)
-    hist = skew.cell_histogram(pts, top=8)
-    factors = skew.salt_factors(hist, target_rows_per_task=100)
-    assert factors
-    a = (
-        skew.salted(pts, factors).groupBy("salt").count().toPandas()
-        .sort_values("salt").reset_index(drop=True)
-    )
-    b = (
-        skew.salted(pts.repartition(7), factors).groupBy("salt").count()
-        .toPandas().sort_values("salt").reset_index(drop=True)
-    )
-    assert (a["count"].to_numpy() == b["count"].to_numpy()).all()
 
 
 def test_lineage_crash_between_data_and_manifest_no_duplicates(spark, tmp_path):

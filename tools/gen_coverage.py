@@ -1,8 +1,9 @@
 """Regenerate COVERAGE.md from the live registry + gie fixture stats.
 
-Single source of truth: `plans/pipeline._BUILDERS` (what compiles) and
-`tests/fixtures/gie/*.json` (what the reference's own corpus verifies).
-Run after adding operators:
+Single source of truth: `tests/fixtures/pj_list.txt` (the reference's
+operation list, one name per line, from its `src/pj_list.h`),
+`plans/pipeline._BUILDERS` (what compiles) and `tests/fixtures/gie/*.json`
+(what the reference's own corpus verifies). Run after adding operators:
 
     python tools/gen_coverage.py
 """
@@ -21,8 +22,7 @@ from proj_spark.plans.pipeline import _BUILDERS  # noqa: E402
 
 
 def main() -> None:
-    ref_ops = re.findall(r"PROJ_HEAD\((\w+),",
-                         open("/root/reference/src/pj_list.h").read())
+    ref_ops = (ROOT / "tests" / "fixtures" / "pj_list.txt").read_text().split()
     implemented = [o for o in ref_ops if o in _BUILDERS]
     missing = [o for o in ref_ops if o not in _BUILDERS]
 
@@ -81,12 +81,12 @@ def main() -> None:
 | Karney geodesics (direct/inverse, m12/M12/M21, antipodal-safe) | `kernels/karney.py` | reference's embedded GeographicLib test set (`tests/test_karney.py`) + `geod_karney_pairs` oracle row |
 | Vincenty geodesics (oracle-parity tier) | `kernels/geodesic.py` | recursive-CTE DuckDB mirror (`geod_vincenty_pairs`) |
 | proj_factors analogue (h, k, omega, convergence) | `plans/factors.py` | unit + `proj_factors_utm` oracle row |
-| S2 cells (Hilbert 64-bit ids) | `cells.py` | roundtrip tests + `s2_cells_l10` oracle row |
-| spatial join / kNN / tiles / skew salting / lineage / streaming | `operators/`, `streaming/` | CORRECTNESS oracle rows + unit suites |
-| dedup (exact, MinHash md5+xxhash64 tiers, SimHash, n-gram Jaccard) | `operators/dedup.py` | oracle rows + planted-dup tests |
+| S2 cells (Hilbert 64-bit ids) | `cells.py` | `s2_cells_l10` oracle row + spatial-join tests |
+| spatial join / kNN / slippy tiles / lineage manifests | `operators/`, `functions/`, `lineage.py` | CORRECTNESS oracle rows + unit suites |
+| dedup (exact, MinHash + LSH, SimHash, n-gram Jaccard) | `operators/dedup.py` | oracle rows + planted-dup tests |
 | similarity (exact brute force w/ row guard, RHP-LSH ANN + recall golden) | `operators/similarity.py` | `cosine_top3` + `cosine_topk_lsh` oracle rows |
 | text stats / quality / lang-id / fingerprints | `functions/text.py` | 3 oracle rows + `doc_fingerprints` |
-| multimodal decode/resize/features (png+raw real, jpeg stubbed) | `operators/multimodal.py` | `image_features_synth` oracle row |
+| multimodal decode/features (png+raw real, jpeg stubbed) | `operators/multimodal.py` | `image_features_synth` oracle row |
 """)
     (ROOT / "COVERAGE.md").write_text("\n".join(lines))
     print(f"COVERAGE.md: {len(implemented)}/{len(ref_ops)} registry ops, "
