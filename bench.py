@@ -124,33 +124,18 @@ def ensure_images(spark, n: int) -> str:
 def flagship(spark, path: str, sink: str = "count") -> int:
     """The north-star job. sink="noop" fully materializes every output
     column (the honest timing mode); "count" returns the matched-row count."""
-    from pyspark.sql import functions as F
-
-    from proj_spark.functions import image_geo_full_udf, tile_x, tile_y
+    from perfbench.workloads import (CELL_LEVEL, FLAGSHIP_POLYS, JOIN_LEVEL,
+                                     image_points)
     from proj_spark.operators.spatial_join import spatial_join_fused
     from proj_spark.sources.synth import make_polygons
 
     imgs = spark.read.parquet(path).select("image_id", "caption", "phash")
-    # ONE fused pandas UDF for the whole per-point kernel chain (datum
-    # Helmert + UTM exact series + LCC + S2 encode — the gie-fixture CRS
-    # steps); tiles are JVM Column math; the join reuses the level-10 cell
-    # by JVM prefix math.
-    pts = (
-        imgs.withColumn("g", image_geo_full_udf(level=10)("phash"))
-        .select(
-            "image_id", "caption",
-            F.col("g.lon").alias("lon"), F.col("g.lat").alias("lat"),
-            F.col("g.utm_x").alias("utm_x"), F.col("g.utm_y").alias("utm_y"),
-            F.col("g.lcc_x").alias("lcc_x"), F.col("g.lcc_y").alias("lcc_y"),
-            F.col("g.cell").alias("cell"),
-        )
-        .withColumn("tile_x", tile_x(F.col("lon"), 12))
-        .withColumn("tile_y", tile_y(F.col("lat"), 12))
-    )
-    # broadcast cell-cover index inside the match UDF (the job's second
-    # Arrow crossing); captions/ids never cross the Arrow boundary
-    polys = make_polygons(64)
-    joined = spatial_join_fused(pts, polys, level=8, cell_col="cell", cell_level=10)
+    # the benchmarked point stage: ONE fused pandas UDF for the whole
+    # per-point kernel chain, JVM tiles; the broadcast cell-cover index
+    # inside the match UDF is the job's second Arrow crossing, and the
+    # join reuses the level-10 cell by JVM prefix math
+    joined = spatial_join_fused(image_points(imgs), make_polygons(FLAGSHIP_POLYS),
+                                level=JOIN_LEVEL, cell_col="cell", cell_level=CELL_LEVEL)
     if sink == "noop":
         joined.write.format("noop").mode("overwrite").save()
         return -1

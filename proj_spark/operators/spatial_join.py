@@ -1,23 +1,19 @@
 """Point-in-polygon spatial join: S2 cell-cover prefilter + exact ray-cast.
 
-Plan shape (the north rule's prescribed strategy):
+The one broadcast path and its fallback:
 
-  points ──pandas_udf──> s2_cell ──┐
-                                   ├─ equi-join on cell ──> candidate pairs
-  polygons ──driver cover──> cells ┘         (broadcast if the cover fits,
-                                              sort-merge join otherwise)
-  candidates ──mapInPandas ray-cast──> exact matches
+  broadcast (``spatial_join_fused``; ``spatial_join`` when the cover fits):
+    points ──match UDF (CSR cover lookup + exact test)──> poly idx
+  smj (``spatial_join(strategy="smj")``, for a cover too big to ship; the
+  only path that reads a ``cover=`` DataFrame):
+    points ──sort-merge join on cell── cover ──exact-test UDF filter──> poly idx
+  both: poly idx ──literal-array lookup──> polygon_id
 
-Why this scales: the expensive O(points x polygons) predicate becomes an
-int64 equality join Catalyst can broadcast or SMJ; AQE handles skewed
-megacells. The exact test is vectorized numpy over Arrow batches grouped by polygon —
-no per-row Python.
-
-The only spatial index in the reference is a bucket quadtree used for
-point-in-triangle lookup (/root/reference/src/quadtree.hpp:85-123); the
-cell cover plays that role here, as a *relational* structure instead of a
-pointer structure, because at 10^12 rows the index must be a join, not a
-tree walk.
+The O(points x polygons) predicate becomes an int64 cell lookup or
+equi-join, and the exact test is vectorized numpy over Arrow batches that
+carry only numeric columns. The cell cover stands in for the reference's
+bucket quadtree (src/quadtree.hpp) as a flat or relational structure,
+because at 10^12 rows the index must be a lookup or a join, not a tree walk.
 """
 
 from __future__ import annotations
@@ -27,11 +23,12 @@ from typing import NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from proj_spark import cells
-from proj_spark.functions import s2_cell_udf
+from proj_spark.functions import cell_parent, s2_cell_udf
 from proj_spark.sources.synth import Polygon
 
 # S2 ST-space edge of one cell at level L is 1/2^L of a face; one face is
@@ -45,8 +42,9 @@ def _cell_size_deg(level: int) -> float:
 
 
 def polygon_cover(polys: Sequence[Polygon], level: int) -> pd.DataFrame:
-    """Driver-side cover: (cell, polygon_id) rows for every level-``level``
-    cell intersecting each polygon's padded bbox.
+    """Driver-side cover: int64 (cell, poly_idx) rows for every
+    level-``level`` cell intersecting each polygon's padded bbox;
+    ``poly_idx`` is the polygon's position in ``polys``.
 
     Sampling-based cover: the padded bbox is rasterized at sub-cell spacing
     and sample points are encoded; dedup yields the cell set. Deterministic,
@@ -54,7 +52,6 @@ def polygon_cover(polys: Sequence[Polygon], level: int) -> pd.DataFrame:
     one cell edge), and validated against brute force in tests.
     """
     out_cells: list[np.ndarray] = []
-    out_ids: list[np.ndarray] = []
     out_idx: list[np.ndarray] = []
     size = _cell_size_deg(level)
     pad = 1.5 * size
@@ -73,12 +70,10 @@ def polygon_cover(polys: Sequence[Polygon], level: int) -> pd.DataFrame:
         glon = ((glon + 180.0) % 360.0) - 180.0  # wrap continuous lon
         cid = np.unique(cells.s2_cell_id(glon.ravel(), glat.ravel(), level))
         out_cells.append(cid)
-        out_ids.append(np.full(cid.shape, p.polygon_id, dtype=object))
         out_idx.append(np.full(cid.shape, k, dtype=np.int64))
     return pd.DataFrame(
         {
             "cell": np.concatenate(out_cells).astype(np.int64),
-            "polygon_id": np.concatenate(out_ids),
             "poly_idx": np.concatenate(out_idx),
         }
     )
@@ -195,6 +190,12 @@ def _verify_vec(edges: _Edges, lon: np.ndarray, lat: np.ndarray,
     return out
 
 
+def _poly_id(polys: Sequence[Polygon], idx: Column) -> Column:
+    """poly index -> polygon id inside codegen: a literal-array lookup, not
+    a join against a driver-built (Python-RDD) table."""
+    return F.get(F.array(*[F.lit(p.polygon_id) for p in polys]), idx)
+
+
 def spatial_join_fused(
     points: DataFrame,
     polys: Sequence[Polygon],
@@ -205,25 +206,28 @@ def spatial_join_fused(
     cell_col: str,
     cell_level: int,
 ) -> DataFrame:
-    """Broadcast-index variant: the cover (cell -> candidate poly indices)
+    """The one broadcast path: the cover (cell -> candidate poly indices)
     ships INSIDE a pandas UDF as a CSR array index, and the UDF returns the
     matching poly indices per point as ``array<int>`` — exploded and mapped
     to polygon ids by a JVM lookup into a literal array.
 
-    vs the relational ``spatial_join``: no join stage and no Python-RDD
-    scan, and pass-through payload columns (captions, image bytes) never
-    cross the Arrow boundary; only (lon, lat, cell) go in. The match UDF
+    vs the smj path: no join stage and no Python-RDD scan, and
+    pass-through payload columns (captions, image bytes) never cross the
+    Arrow boundary; only (lon, lat, cell) go in. The match UDF
     is still its own Arrow crossing, so after an upstream kernel UDF the
     plan holds two ArrowEvalPython nodes. This is the north rule's
     "broadcast of the polygon R-tree/cell-cover index when it fits"; fall
     back to ``spatial_join(strategy='smj')`` when it doesn't.
     """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    return _fused_join(points, polys, polygon_cover(polys, level), lon_col=lon_col,
+                       lat_col=lat_col, level=level, cell_col=cell_col, cell_level=cell_level)
 
-    from proj_spark.functions import cell_parent
 
-    cover_pdf = polygon_cover(polys, level).sort_values(["cell", "poly_idx"])
+def _fused_join(points: DataFrame, polys: Sequence[Polygon], cover_pdf: pd.DataFrame, *,
+                lon_col: str, lat_col: str, level: int, cell_col: str,
+                cell_level: int) -> DataFrame:
+    """``spatial_join_fused`` over an already built ``polygon_cover``."""
+    cover_pdf = cover_pdf.sort_values(["cell", "poly_idx"])
     # CSR layout: sorted unique cells -> [start, end) ranges into poly ids
     cov_cells, starts = np.unique(cover_pdf["cell"].to_numpy(np.int64),
                                   return_index=True)
@@ -271,10 +275,7 @@ def spatial_join_fused(
     matched = pts.withColumn(
         "_pidx", F.explode(_matches(F.col(lon_col), F.col(lat_col), F.col("_cell_j")))
     ).drop("_cell_j")
-    # poly index -> id inside codegen: a literal-array lookup, not a join
-    # against a driver-built (Python-RDD) table
-    poly_ids = F.array(*[F.lit(p.polygon_id) for p in poly_list])
-    return matched.withColumn("polygon_id", F.get(poly_ids, F.col("_pidx"))).drop("_pidx")
+    return matched.withColumn("polygon_id", _poly_id(poly_list, F.col("_pidx"))).drop("_pidx")
 
 
 def spatial_join(
@@ -292,62 +293,54 @@ def spatial_join(
 ) -> DataFrame:
     """points (with lon/lat cols) x polygons -> rows that fall inside.
 
-    strategy: "broadcast" | "smj" | "auto" (broadcast when the cover is
-    small enough to ship to every executor; SMJ on (cell) otherwise).
+    strategy: "broadcast" (``spatial_join_fused``'s in-UDF cover index),
+    "smj" (sort-merge join with the cover on cell, then an exact-test UDF
+    filter) or "auto" (broadcast when the cover has <= 2,000,000 rows).
 
     cell_col/cell_level: reuse an existing cell column computed at a finer
     (>=) level — the join key becomes a pure JVM prefix-truncation instead
     of a second pandas-UDF pass over all points.
 
-    cover: a precomputed cover DataFrame (cell, polygon_id, poly_idx) from
-    ``polygon_cover`` — pass it when joining repeatedly against the same
-    polygon set so the driver-side sampling + upload happen once.
+    cover: a Spark DataFrame of ``polygon_cover`` rows, read by smj only —
+    pass it when joining repeatedly against the same polygons so the
+    sampling + upload happen once. Broadcast builds its index from polys.
     """
-    spark = points.sparkSession
-    if cover is None:
-        cover_pdf = polygon_cover(polys, level)
-        cover = spark.createDataFrame(cover_pdf)
-        n_cover = len(cover_pdf)
-    else:
-        n_cover = None
+    polys = list(polys)
+    cover_pdf = None if strategy == "smj" and cover is not None else polygon_cover(polys, level)
+    if strategy == "auto":
+        strategy = "broadcast" if len(cover_pdf) <= 2_000_000 else "smj"
 
     if cell_col is not None and (cell_level or level) >= level:
-        from proj_spark.functions import cell_parent
-
         src = F.col(cell_col)
-        pts = points.withColumn(
-            "cell", src if (cell_level or level) == level else cell_parent(src, level)
-        )
+        cell = src if (cell_level or level) == level else cell_parent(src, level)
     else:
-        pts = points.withColumn(
-            "cell", s2_cell_udf(level)(F.col(lon_col), F.col(lat_col))
-        )
+        cell = s2_cell_udf(level)(F.col(lon_col), F.col(lat_col))
+    # non-null: else the join infers isnotnull(cell), re-running the UDF; 0 is no S2 id
+    pts = points.withColumn("cell", F.coalesce(cell, F.lit(0)))
 
-    if strategy == "auto":
-        strategy = "broadcast" if (n_cover is None or n_cover <= 2_000_000) else "smj"
     if strategy == "broadcast":
-        cand = pts.join(F.broadcast(cover), "cell")
+        out = _fused_join(pts, polys, cover_pdf, lon_col=lon_col, lat_col=lat_col,
+                          level=level, cell_col="cell", cell_level=level)
     else:
+        if cover is None:
+            cover = points.sparkSession.createDataFrame(cover_pdf)
+        # Exact verify as a BOOLEAN pandas UDF over (lon, lat, poly_idx)
+        # only — strings (image_id, caption, ...) never cross the Arrow
+        # boundary; the filter itself runs JVM-side.
+        edges = _edge_matrices(polys)
+
+        @pandas_udf("boolean")
+        def _inside(lon_s: pd.Series, lat_s: pd.Series, pidx_s: pd.Series) -> pd.Series:
+            return pd.Series(_verify_vec(edges, lon_s.to_numpy(dtype=np.float64),
+                                         lat_s.to_numpy(dtype=np.float64),
+                                         pidx_s.to_numpy(dtype=np.int64)))
+
         # co-locate both sides on the cell key; AQE splits skewed cells
-        cand = pts.hint("merge").join(cover.hint("merge"), "cell")
+        out = (
+            pts.hint("merge").join(cover.hint("merge"), "cell")
+            .filter(_inside(F.col(lon_col), F.col(lat_col), F.col("poly_idx")))
+            .withColumn("polygon_id", _poly_id(polys, F.col("poly_idx")))
+        )
 
-    # Exact verify as a BOOLEAN pandas UDF over (lon, lat, poly_idx) only —
-    # strings (image_id, caption, ...) never cross the Arrow boundary; the
-    # filter itself runs JVM-side. This is what makes the stage scale: the
-    # python path moves 3 numeric columns in and 1 bit out per candidate.
-    edges = _edge_matrices(list(polys))
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def _inside(lon_s: pd.Series, lat_s: pd.Series, pidx_s: pd.Series) -> pd.Series:
-        return pd.Series(_verify_vec(edges, lon_s.to_numpy(dtype=np.float64),
-                                     lat_s.to_numpy(dtype=np.float64),
-                                     pidx_s.to_numpy(dtype=np.int64)))
-
-    keep = list(keep_cols) if keep_cols else [c for c in points.columns]
-    sel_cols = list(dict.fromkeys(keep + [lon_col, lat_col, "polygon_id"]))
-    return (
-        cand.filter(_inside(F.col(lon_col), F.col(lat_col), F.col("poly_idx")))
-        .select(*sel_cols)
-    )
+    keep = list(keep_cols) if keep_cols else points.columns
+    return out.select(*dict.fromkeys(keep + [lon_col, lat_col, "polygon_id"]))

@@ -61,15 +61,16 @@ def test_knn_uses_broadcast_not_shuffle_cross(spark, entry):
 
 
 def test_flagship_arrow_crossings(spark):
-    """The flagship plan (fused kernel UDF -> JVM tiles -> fused cover
-    join at level 8 on the level-10 cell) pays exactly two Arrow
-    crossings: the kernel UDF and the cover-match UDF. More means a
+    """The benchmarked flagship plan (perfbench's ``image_points``: fused
+    kernel UDF -> JVM tiles; then the fused cover join at level 8 on the
+    level-10 cell) pays exactly two Arrow crossings: the kernel UDF and
+    the cover-match UDF. More means a
     rewrite re-ran a UDF (e.g. a pushed-down filter evaluating the kernel
     twice); an ExistingRDD scan means a driver-built table became a
     Python-RDD job on every execution."""
+    from perfbench.workloads import CELL_LEVEL, FLAGSHIP_POLYS, JOIN_LEVEL, image_points
     from pyspark.sql import functions as F
 
-    from proj_spark.functions import image_geo_full_udf, tile_x, tile_y
     from proj_spark.operators.spatial_join import spatial_join_fused
     from proj_spark.sources.synth import make_polygons
 
@@ -77,21 +78,40 @@ def test_flagship_arrow_crossings(spark):
         F.concat(F.lit("img"), F.col("id")).alias("image_id"),
         F.lit("caption").alias("caption"),
         F.xxhash64("id").alias("phash"))
-    g = image_geo_full_udf(level=10)("phash")
-    pts = (
-        imgs.withColumn("g", g)
-        .select("image_id", "caption",
-                *[F.col(f"g.{c}").alias(c) for c in
-                  ("lon", "lat", "utm_x", "utm_y", "lcc_x", "lcc_y", "cell")])
-        .withColumn("tile_x", tile_x(F.col("lon"), 12))
-        .withColumn("tile_y", tile_y(F.col("lat"), 12))
-    )
-    df = spatial_join_fused(pts, make_polygons(64), level=8,
-                            cell_col="cell", cell_level=10)
+    df = spatial_join_fused(image_points(imgs), make_polygons(FLAGSHIP_POLYS),
+                            level=JOIN_LEVEL, cell_col="cell", cell_level=CELL_LEVEL)
     plan = _plan(df)
     assert plan.count("ArrowEvalPython") == 2, plan
     assert "BatchEvalPython" not in plan
     assert "ExistingRDD" not in plan, plan
+
+
+def test_pip_join_is_the_fused_cover_index(spark, entry):
+    """pip_raycast_join and entry() run the one broadcast path: two Arrow
+    crossings (the point UDFs, then the cover-match UDF), and no broadcast
+    hash join against a driver-uploaded (LocalTableScan) cover."""
+    for df in (entry.queries()["pip_raycast_join"](spark, SF), entry.entry(spark)):
+        plan = _plan(df)
+        assert plan.count("ArrowEvalPython") == 2, plan
+        assert "BroadcastHashJoin" not in plan and "LocalTableScan" not in plan, plan
+
+
+def test_smj_join_runs_the_cell_udf_once(spark):
+    """A nullable join key makes Spark infer isnotnull(cell) and push it
+    below the Project, where it re-runs the cell UDF. The smj plan holds
+    exactly two Arrow crossings: the cell UDF and the exact-test UDF."""
+    from pyspark.sql import functions as F
+
+    from proj_spark.operators.spatial_join import spatial_join
+    from proj_spark.sources.synth import make_polygons
+
+    pts = spark.range(1000).select(
+        "id",
+        (((F.col("id") * 9973) % 36000) / 100.0 - 180.0).alias("lon"),
+        (((F.col("id") * 7919) % 17000) / 100.0 - 85.0).alias("lat"))
+    plan = _plan(spatial_join(pts, make_polygons(24), level=8, strategy="smj"))
+    assert "SortMergeJoin" in plan, plan
+    assert plan.count("ArrowEvalPython") == 2, plan
 
 
 def test_lsh_pair_join_is_equi_join_on_band(spark):

@@ -39,9 +39,12 @@ def test_geod_inverse_symmetry(lat1, lon1, lat2, lon2):
     a = K.geod_inverse(WGS84, [lat1], [lon1], [lat2], [lon2])
     b = K.geod_inverse(WGS84, [lat2], [lon2], [lat1], [lon1])
     assert abs(a["s12"][0] - b["s12"][0]) < 1e-6
-    # forward azimuth of the reverse path is the back azimuth + 180
-    diff = (a["azi1"][0] - b["azi2"][0] + 180.0) % 360.0 - 180.0
-    assert abs(abs(diff) - 180.0) < 1e-6 or a["s12"][0] < 1.0
+    # forward azimuth of the reverse path is the back azimuth + 180; with
+    # endpoints mirrored in the equator two equal-length geodesics exist
+    # (GeographicLib documents this), so the swap may return the mirror one
+    azi2 = [b["azi2"][0]] + ([180.0 - b["azi2"][0]] if lat1 == -lat2 else [])
+    diffs = [(a["azi1"][0] - z + 180.0) % 360.0 - 180.0 for z in azi2]
+    assert any(abs(abs(d) - 180.0) < 1e-6 for d in diffs) or a["s12"][0] < 1.0
 
 
 @settings(max_examples=100, deadline=None)

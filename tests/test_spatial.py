@@ -60,6 +60,50 @@ def test_spatial_join_smj_same_result(spark, polys, points_pdf):
     assert rb == rs
 
 
+def test_spatial_join_bad_coordinates_match_nothing(spark, polys, points_pdf):
+    """NaN lon/lat rows and null cell_col rows match nothing, under both
+    strategies and both cell sources, and fail no task; the other rows
+    still match brute force."""
+    from proj_spark.functions import s2_cell_udf
+
+    bad = pd.DataFrame({"pid": [-1, -2, -3], "lon": [np.nan, 10.0, np.nan],
+                        "lat": [5.0, np.nan, np.nan]})
+    pdf = pd.concat([points_pdf.head(1000), bad], ignore_index=True)
+    pts = spark.createDataFrame(pdf)
+    # every 7th good row loses its cell
+    celled = pts.withColumn("cell", s2_cell_udf(10)(F.col("lon"), F.col("lat"))).withColumn(
+        "cell", F.when(F.col("pid") % 7 != 0, F.col("cell")))
+    expect = brute_force_matches(points_pdf.head(1000), polys)
+    assert expect
+    for strategy in ("broadcast", "smj"):
+        a = sj.spatial_join(pts, polys, level=10, strategy=strategy)
+        b = sj.spatial_join(celled, polys, level=10, strategy=strategy,
+                            cell_col="cell", cell_level=10)
+        assert {(int(r.pid), r.polygon_id) for r in a.collect()} == expect, strategy
+        assert {(int(r.pid), r.polygon_id) for r in b.collect()} == \
+            {(q, p) for q, p in expect if q % 7 != 0}, strategy
+
+
+def test_spatial_join_builds_the_cover_once(spark, polys, points_pdf, monkeypatch):
+    """One polygon_cover call per spatial_join, whichever strategy "auto"
+    picks, and the cover holds only the int64 cell and poly_idx columns."""
+    calls = []
+    build = sj.polygon_cover
+
+    def counted(ps, level):
+        calls.append(build(ps, level))
+        return calls[-1]
+
+    monkeypatch.setattr(sj, "polygon_cover", counted)
+    pts = spark.createDataFrame(points_pdf.head(200))
+    for strategy in ("auto", "broadcast", "smj"):
+        calls.clear()
+        sj.spatial_join(pts, polys, level=10, strategy=strategy)
+        assert len(calls) == 1, strategy
+    assert list(calls[0].columns) == ["cell", "poly_idx"]
+    assert all(str(t) == "int64" for t in calls[0].dtypes)
+
+
 def test_knn_matches_bruteforce(spark, points_pdf):
     qs = spark.createDataFrame(points_pdf.head(150).rename(columns={"pid": "qid"}))
     rs = spark.createDataFrame(points_pdf.tail(1200).rename(columns={"pid": "rid", "lon": "rlon", "lat": "rlat"}))
@@ -138,7 +182,7 @@ def test_images_df_deterministic(spark):
 
 def test_fused_join_matches_relational(spark):
     """spatial_join_fused (broadcast cover index inside the UDF) returns the
-    same (point, polygon) set as the relational cell-cover join."""
+    same (point, polygon) set as the relational (smj) cell-cover join."""
     from pyspark.sql import functions as F
 
     from proj_spark.functions import s2_cell_udf
@@ -152,7 +196,7 @@ def test_fused_join_matches_relational(spark):
         .withColumn("lat", ((F.col("id") * 7919) % 17000) / 100.0 - 85.0)
         .withColumn("cell", s2_cell_udf(10)(F.col("lon"), F.col("lat")))
     )
-    rel = spatial_join(pts, polys, level=8, cell_col="cell", cell_level=10)
+    rel = spatial_join(pts, polys, level=8, cell_col="cell", cell_level=10, strategy="smj")
     fus = spatial_join_fused(pts, polys, level=8, cell_col="cell", cell_level=10)
     a = {(r.id, r.polygon_id) for r in rel.select("id", "polygon_id").collect()}
     b = {(r.id, r.polygon_id) for r in fus.select("id", "polygon_id").collect()}
