@@ -1,9 +1,15 @@
 """Minimal EPSG registry resolver — `+init=epsg:XXXX` -> proj-string.
 
-Reads the reference's public EPSG SQL source files
-(/root/reference/data/sql/*.sql, the data PROJ compiles into proj.db)
-with a tiny INSERT-statement parser — no sqlite dependency, only the
-seven tables the resolver needs. Resolution follows the classic
+Reads the public registry SQL source files (the data/sql/*.sql tables
+PROJ compiles into proj.db; bundled extracts under
+tests/fixtures/epsg_sql/) without sqlite. This module is the only place
+that parses SQL text: one regex reader, `_rows`, turns every INSERT
+statement (one-line or multi-line, commented, with or without a column
+list) into (table, values) rows, and one keying function, `_keep`, files
+every row of every file under its table's key. The only rule that differs
+between the EPSG extracts and the auxiliary-authority files is which
+authorities each admits. `sources.esri` and `sources.wkt` read their ESRI
+extracts lazily through the same reader. Resolution follows the classic
 proj4-init rules the gie/GIGS corpora request (`use_proj4_init_rules`):
 lon/lat axis order, easting/northing, no datum shift implied, prime
 meridians expressed via +pm.
@@ -34,9 +40,12 @@ _SQL_DIRS = [
     "/root/reference/data/sql",
 ]
 
+# the registry: one dict per table (axis_all: every axis of a coordinate
+# system, in order)
 _TABLES = ("unit_of_measure", "ellipsoid", "prime_meridian",
            "geodetic_datum", "geodetic_crs", "conversion",
-           "projected_crs", "axis",
+           "projected_crs", "axis", "axis_all", "coordinate_system",
+           "coordinate_metadata",
            "helmert_transformation", "grid_transformation",
            "other_transformation",
            "concatenated_operation", "concatenated_operation_step",
@@ -44,109 +53,140 @@ _TABLES = ("unit_of_measure", "ellipsoid", "prime_meridian",
            "extent", "usage", "scope", "celestial_body",
            "supersession", "deprecation",
            "geodetic_datum_ensemble_member",
-           "vertical_datum_ensemble_member")
+           "vertical_datum_ensemble_member", "grid_alternatives")
+
+# The one file-kind rule: a file named after a registry table is an EPSG
+# extract and contributes EPSG rows plus PROJ's placeholder
+# extent/scope/celestial_body rows (its PROJ-authority operations, e.g.
+# helmert_transformation PROJ:ETRS89_TO_ETRF89, stay out of dispatch); any
+# other file (nkg.sql, ignf.sql, iau.sql, nrcan.sql,
+# customizations_early.sql) is auxiliary and contributes every bundled
+# authority. Auxiliary files load last, so their rows win a shared key.
+_AUX_AUTHS = ("EPSG", "NKG", "IGNF", "IAU_2015", "PROJ", "NRCAN")
+_PROJ_TABLES = ("extent", "scope", "celestial_body")
 
 _db: dict | None = None
 
-
-def _parse_values(s: str):
-    """Parse the literal list inside INSERT ... VALUES(...); handles
-    'str''escapes', numbers, NULL."""
-    out = []
-    i = 0
-    n = len(s)
-    while i < n:
-        c = s[i]
-        if c in ", \t\n\r":
-            i += 1
-            continue
-        if c == "'":
-            j = i + 1
-            buf = []
-            while j < n:
-                if s[j] == "'":
-                    if j + 1 < n and s[j + 1] == "'":
-                        buf.append("'")
-                        j += 2
-                        continue
-                    break
-                buf.append(s[j])
-                j += 1
-            out.append("".join(buf))
-            i = j + 1
-        else:
-            j = i
-            while j < n and s[j] not in ",":
-                j += 1
-            tok = s[i:j].strip()
-            if tok.upper() == "NULL":
-                out.append(None)
-            else:
-                try:
-                    out.append(float(tok) if ("." in tok or "e" in tok
-                                              or "E" in tok) else int(tok))
-                except ValueError:
-                    out.append(tok)
-            i = j + 1
-    return out
+# One tokenizer for every bundled file: a `--` comment, a quoted literal
+# ('' escapes a quote), an INSERT head (quoted or bare table name, optional
+# column list), a parenthesised tuple, or the statement-ending ';'.
+# Comments and literals are matched whole, so a '--', ';' or ')' inside
+# either never ends a tuple or a statement.
+_LIT = r"'[^']*(?:''[^']*)*'"
+_PAREN = rf"\((?:[^()'-]+|-(?!-)|--[^\n]*|{_LIT})*+\)"
+_GAP = r"(?:\s+|--[^\n]*)*+"
+_SQL = re.compile(rf'--[^\n]*|{_LIT}|INSERT INTO "?(\w+)"?{_GAP}(?:{_PAREN})?'
+                  rf"{_GAP}VALUES|({_PAREN})|(;)")
+_VALUE = re.compile(rf"--[^\n]*|({_LIT})|((?:[^\s,()'-]|-(?!-))+)")
 
 
-def _strip_sql_comments(text: str) -> str:
-    """Remove ``--`` line comments with string-literal tracking, so a
-    quoted value containing '--' (legal in a name or PROJ string) is not
-    truncated (ADVICE r4). '' escapes inside literals need no special
-    case: each quote toggles in_str and the chars between two quotes are
-    never treated as a comment start."""
-    out = []
-    in_str = False
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str and ch == "-" and i + 1 < n and text[i + 1] == "-":
-            j = text.find("\n", i)
-            i = n if j < 0 else j
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+def _value(lit: str, bare: str):
+    """One `_VALUE` match -> str, int, float or None."""
+    if lit:
+        return lit[1:-1].replace("''", "'")
+    if bare.upper() == "NULL":
+        return None
+    for cast in (int, float):
+        try:
+            return cast(bare)
+        except ValueError:
+            pass
+    return bare
 
 
-def _iter_statements(text: str):
-    """Yield (table, values) from multi-line ``INSERT INTO "t" [(cols)]
-    VALUES (...),(...);`` statements (the style of the auxiliary-authority
-    files like nkg.sql, vs the EPSG extracts' one-line inserts). Strips
-    ``--`` line comments (string-literal aware); tracks string literals so
-    parentheses, commas and semicolons inside quotes don't split tuples."""
-    text = _strip_sql_comments(text)
-    # table name quoting is optional (nkg.sql/ignf.sql quote, iau.sql not)
-    for m in re.finditer(r'INSERT INTO "?(\w+)"?\s*(?:\([^)]*\))?\s*VALUES',
-                         text):
-        table = m.group(1)
-        i = m.end()
-        depth = 0
-        in_str = False
-        start = None
-        while i < len(text):
-            ch = text[i]
-            if in_str:
-                if ch == "'":
-                    in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                if depth == 0:
-                    start = i + 1
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and start is not None:
-                    yield table, _parse_values(text[start:i])
-                    start = None
-            elif ch == ";" and depth == 0:
-                break
-            i += 1
+def _rows(text: str):
+    """Yield (table, values) for every tuple of every ``INSERT INTO t
+    [(cols)] VALUES (...), (...);`` statement in SQL text."""
+    table = None
+    for m in _SQL.finditer(text):
+        head, tup, end = m.groups()
+        if head:
+            table = head
+        elif tup and table:
+            yield table, [_value(lit, bare)
+                          for lit, bare in _VALUE.findall(tup) if lit or bare]
+        elif end:
+            table = None
+
+
+def _extract_rows(*names: str):
+    """Rows of the first of `names` found along the data directories (the
+    lazily read ESRI extracts)."""
+    for d in _SQL_DIRS:
+        for name in names:
+            path = os.path.join(d, name)
+            if os.path.exists(path):
+                with open(path, errors="replace") as f:
+                    yield from _rows(f.read())
+                return
+
+
+def _keep(db: dict, table: str, vals: list, aux: bool) -> None:
+    """Store one parsed row under its table's registry key."""
+    if table in ("supersession", "deprecation"):
+        # these two key on (object_table, code) and START with the table
+        # name, not the authority:
+        # supersession: sup_table, sup_auth, sup_code,
+        #   rep_table, rep_auth, rep_code, source, same_crs
+        # deprecation: table, depr_auth, depr_code,
+        #   rep_auth, rep_code, source
+        db[table].setdefault((str(vals[0]), str(vals[2])), []).append(vals)
+        return
+    if table.endswith("_datum_ensemble_member"):
+        # ensemble_auth, ensemble_code, member_auth, member_code, sequence —
+        # ordered member list per ensemble datum code
+        db[table].setdefault(str(vals[1]), []).append(
+            (int(vals[4]), str(vals[3])))
+        return
+    if table == "grid_alternatives":
+        # original_grid_name, proj_grid_name, old_proj_grid_name, format,
+        # method, inverse_direction, ...
+        db[table][str(vals[0])] = vals
+        return
+    if table not in db or len(vals) < 2:
+        return
+    if not (vals[0] in _AUX_AUTHS if aux else vals[0] == "EPSG"
+            or (vals[0] == "PROJ" and table in _PROJ_TABLES)):
+        return
+    if "IAU_2015" in vals:
+        # IAU codes are small numerics that collide with EPSG's in EVERY
+        # table (conversion 10.., crs 1000..): store authority-qualified
+        # and rewrite internal (IAU_2015, code) cross-reference pairs so
+        # code-keyed lookups land on the qualified rows
+        for i in range(len(vals) - 1):
+            if vals[i] == "IAU_2015" and vals[i + 1] is not None:
+                vals[i + 1] = f"IAU_2015:{vals[i + 1]}"
+    if table == "axis":
+        # axis: auth, code, name, abbrev, orientation, cs_auth, cs_code,
+        # order, uom_auth, uom_code — key by coordinate system, first axis
+        # wins, plus the full ordered list per cs (WKT2/PROJJSON export)
+        if vals[7] == 1:
+            db["axis"][str(vals[6])] = vals
+        db["axis_all"].setdefault(str(vals[6]), []).append(vals)
+    elif table == "concatenated_operation_step":
+        # composite PK (op, step_number): ordered step op codes per
+        # concatenated operation
+        db[table].setdefault(str(vals[1]), []).append(
+            (int(vals[2]), str(vals[4])))
+    elif table == "usage":
+        # authority-qualified key (NKG/IGNF reuse small numeric usage
+        # codes); consumers read usage only through .values(). IGNF extent
+        # codes are plain small integers, stored as 'IGNF:<code>' below,
+        # so the usage rows pointing at them are rewritten to match.
+        if vals[5] == "IGNF":
+            vals[6] = f"IGNF:{vals[6]}"
+        db[table][f"{vals[0]}:{vals[1]}"] = vals
+    elif table == "extent" and vals[0] == "IGNF":
+        db[table][f"IGNF:{vals[1]}"] = vals
+    else:
+        # coordinate_metadata (nrcan.sql): auth, code, desc, crs_auth,
+        # crs_code, crs_text_definition, coordinate_epoch, deprecated;
+        # coordinate_system (iau.sql): auth, code, type, dimension
+        db[table][str(vals[1])] = vals
+
+
+def _is_aux(path: str) -> bool:
+    return os.path.basename(path)[:-len(".sql")] not in _TABLES
 
 
 def _load() -> dict:
@@ -159,139 +199,16 @@ def _load() -> dict:
     if sql_dir is None:
         raise FileNotFoundError("EPSG SQL source not found")
     db: dict = {t: {} for t in _TABLES}
-    pat = re.compile(
-        r'INSERT INTO "(' + "|".join(_TABLES) + r')" VALUES\((.*)\);\s*$')
-    for path in sorted(glob.glob(os.path.join(sql_dir, "*.sql"))):
-        base = os.path.basename(path)
-        if base.startswith(("esri", "iau", "ignf", "nkg", "nrcan")):
-            continue  # auxiliary authorities: parsed statement-level below
+    # EPSG extracts first, each kind in name order
+    paths = sorted(glob.glob(os.path.join(sql_dir, "*.sql")),
+                   key=lambda p: (_is_aux(p), p))
+    for path in paths:
+        if os.path.basename(path).startswith("esri"):
+            continue  # read lazily by sources.esri / sources.wkt
+        aux = _is_aux(path)
         with open(path, errors="replace") as f:
-            for line in f:
-                m = pat.match(line)
-                if not m:
-                    continue
-                vals = _parse_values(m.group(2))
-                table = m.group(1)
-                if table in ("supersession", "deprecation"):
-                    # these two key on (object_table, code) and START with
-                    # the table name, not the authority:
-                    # supersession: sup_table, sup_auth, sup_code,
-                    #   rep_table, rep_auth, rep_code, source, same_crs
-                    # deprecation: table, depr_auth, depr_code,
-                    #   rep_auth, rep_code, source
-                    db[table].setdefault(
-                        (str(vals[0]), str(vals[2])), []).append(vals)
-                    continue
-                if table.endswith("_datum_ensemble_member"):
-                    # ensemble_auth, ensemble_code, member_auth,
-                    # member_code, sequence — ordered member list per
-                    # ensemble datum code
-                    db[table].setdefault(str(vals[1]), []).append(
-                        (int(vals[4]), str(vals[3])))
-                    continue
-                if len(vals) >= 2 and (
-                        vals[0] == "EPSG"
-                        or (vals[0] == "PROJ"
-                            and table in ("extent", "scope",
-                                          "celestial_body"))):
-                    if m.group(1) == "axis":
-                        # axis: auth, code, name, abbrev, orientation,
-                        # cs_auth, cs_code, order, uom_auth, uom_code —
-                        # key by coordinate system, first axis wins
-                        if vals[7] == 1:
-                            db["axis"][str(vals[6])] = vals
-                        # full ordered list per cs (WKT2/PROJJSON export)
-                        db.setdefault("axis_all", {}).setdefault(
-                            str(vals[6]), []).append(vals)
-                    elif m.group(1) == "concatenated_operation_step":
-                        # composite PK (op, step_number): keep ordered list
-                        # of step op codes per concatenated operation
-                        db["concatenated_operation_step"].setdefault(
-                            str(vals[1]), []).append(
-                            (int(vals[2]), str(vals[4])))
-                    else:
-                        db[m.group(1)][str(vals[1])] = vals
-    # auxiliary authorities bundled as data-only extracts: NKG (nkg.sql,
-    # time-dependent frame chains over the Nordic deformation model) and
-    # IGNF (ignf.sql, the French national registry) — multi-line INSERTs
-    # with comments, hence the statement-level parser. usage rows get
-    # authority-qualified keys (NKG/IGNF reuse small numeric usage codes
-    # that would collide with EPSG's); IGNF extent codes are plain small
-    # integers so they are stored under 'IGNF:<code>' and the usage rows
-    # that point at them are rewritten to match.
-    db["coordinate_system"] = {}
-    db["coordinate_metadata"] = {}
-    for aux in ("nkg.sql", "ignf.sql", "iau.sql", "nrcan.sql",
-                "customizations_early.sql"):
-        path = os.path.join(sql_dir, aux)
-        if not os.path.exists(path):
-            continue
-        with open(path, errors="replace") as f:
-            for table, vals in _iter_statements(f.read()):
-                if len(vals) < 2 or vals[0] not in (
-                        "EPSG", "NKG", "IGNF", "IAU_2015", "PROJ", "NRCAN"):
-                    continue
-                if table == "coordinate_metadata":
-                    # CRS + coordinate epoch (reference nrcan.sql;
-                    # proj_db_table_defs.sql coordinate_metadata): auth,
-                    # code, desc, crs_auth, crs_code, crs_text_definition
-                    # (WKT or PROJJSON), coordinate_epoch, deprecated
-                    db["coordinate_metadata"][str(vals[1])] = vals
-                    continue
-                if "IAU_2015" in vals:
-                    # IAU codes are small numerics that collide with EPSG's
-                    # in EVERY table (conversion 10.., crs 1000..): store
-                    # authority-qualified and rewrite internal
-                    # (IAU_2015, code) cross-reference pairs so code-keyed
-                    # lookups land on the qualified rows (the generalized
-                    # form of the IGNF extent-code trick below)
-                    vals = list(vals)
-                    for i in range(len(vals) - 1):
-                        if vals[i] == "IAU_2015" and vals[i + 1] is not None:
-                            vals[i + 1] = f"IAU_2015:{vals[i + 1]}"
-                if table == "coordinate_system":
-                    # iau.sql defines PROJ-authority coordinate systems
-                    # (spherical planetocentric, west-positive ographic);
-                    # row: auth, code, type, dimension
-                    db["coordinate_system"][str(vals[1])] = vals
-                    continue
-                if table == "axis":
-                    # same shape as the EPSG branch: first axis keyed by
-                    # cs code + full ordered list for export/direction
-                    if vals[7] == 1:
-                        db["axis"][str(vals[6])] = vals
-                    db.setdefault("axis_all", {}).setdefault(
-                        str(vals[6]), []).append(vals)
-                    continue
-                if table not in db:
-                    continue
-                if table == "concatenated_operation_step":
-                    db[table].setdefault(str(vals[1]), []).append(
-                        (int(vals[2]), str(vals[4])))
-                elif table == "usage":
-                    if len(vals) > 6 and vals[5] == "IGNF":
-                        vals = list(vals)
-                        vals[6] = f"IGNF:{vals[6]}"
-                    db[table][f"{vals[0]}:{vals[1]}"] = vals
-                elif table == "extent" and vals[0] == "IGNF":
-                    db[table][f"IGNF:{vals[1]}"] = vals
-                else:
-                    db[table][str(vals[1])] = vals
-
-    # grid_alternatives uses one multi-row INSERT with a column list;
-    # rows are one-per-line tuples: (original_grid_name, proj_grid_name,
-    # old_proj_grid_name, format, method, inverse_direction, ...)
-    db["grid_alternatives"] = {}
-    ga = os.path.join(sql_dir, "grid_alternatives.sql")
-    if os.path.exists(ga):
-        with open(ga, errors="replace") as f:
-            for line in f:
-                line = line.strip().rstrip(",;")
-                if not (line.startswith("(") and line.endswith(")")):
-                    continue
-                vals = _parse_values(line[1:-1])
-                if len(vals) >= 3 and vals[0]:
-                    db["grid_alternatives"][str(vals[0])] = vals
+            for table, vals in _rows(f.read()):
+                _keep(db, table, vals, aux)
     _db = db
     return db
 

@@ -13,38 +13,22 @@ second catalogue format.
 
 from __future__ import annotations
 
-import os
-import re
-
-_ROW_RE = re.compile(
-    r"VALUES\('ESRI','(\d+)','([^']*)'.*?'(PROJCS\[.*\])'")
-
-_cache: dict | None = None
+import functools
 
 
+@functools.cache
 def _catalogue() -> dict:
-    global _cache
-    if _cache is None:
-        from proj_spark.sources.epsg import _SQL_DIRS
+    """ESRI code -> embedded ESRI-WKT1 text, from the extract's
+    projected_crs rows (auth, code, name, ..., text_definition, deprecated)
+    read through the registry's SQL reader."""
+    from proj_spark.sources.epsg import _extract_rows
 
-        m: dict = {}
-        for d in _SQL_DIRS:
-            for fname in ("esri_projected_wkt.sql", "esri.sql"):
-                p = os.path.join(d, fname)
-                if not os.path.exists(p):
-                    continue
-                with open(p, errors="replace") as f:
-                    for line in f:
-                        if "PROJCS[" not in line:
-                            continue
-                        g = _ROW_RE.search(line)
-                        if g:
-                            m.setdefault(g.group(1), g.group(3))
-                break
-            if m:
-                break
-        _cache = m
-    return _cache
+    m: dict = {}
+    for table, vals in _extract_rows("esri_projected_wkt.sql", "esri.sql"):
+        if (table == "projected_crs" and vals[0] == "ESRI"
+                and str(vals[10]).startswith("PROJCS[")):
+            m.setdefault(vals[1], vals[10])
+    return m
 
 
 def esri_to_proj(code: str | int) -> str:

@@ -17,6 +17,7 @@ code.
 
 from __future__ import annotations
 
+import functools
 import math
 import re
 
@@ -760,36 +761,17 @@ def wkt_to_proj(wkt: str) -> str:
 
 # ------------------------------------------- late-binding identification
 
-_ESRI_ALIAS_RE = re.compile(
-    r"VALUES\('geodetic_crs','EPSG','(\d+)','([^']+)','ESRI'\)")
-_esri_alias_cache: dict | None = None
-
-
+@functools.cache
 def _esri_crs_aliases() -> dict:
     """ESRI GCS name -> EPSG geodetic CRS code (bundled extract of the
-    reference's data/sql/esri.sql alias_name rows)."""
-    global _esri_alias_cache
-    if _esri_alias_cache is None:
-        import os
-
-        from proj_spark.sources.epsg import _SQL_DIRS
-
-        m: dict = {}
-        for d in _SQL_DIRS:
-            for fname in ("esri_alias.sql", "esri.sql"):
-                p = os.path.join(d, fname)
-                if os.path.exists(p):
-                    with open(p, errors="replace") as f:
-                        for line in f:
-                            g = _ESRI_ALIAS_RE.search(line)
-                            if g:
-                                m.setdefault(g.group(2).strip().lower(),
-                                             g.group(1))
-                    break
-            if m:
-                break
-        _esri_alias_cache = m
-    return _esri_alias_cache
+    reference's data/sql/esri.sql alias_name rows: table_name, auth_name,
+    code, alt_name, source)."""
+    m: dict = {}
+    for table, vals in _epsg._extract_rows("esri_alias.sql", "esri.sql"):
+        if (table == "alias_name" and vals[4] == "ESRI"
+                and vals[:2] == ["geodetic_crs", "EPSG"]):
+            m.setdefault(vals[3].strip().lower(), vals[2])
+    return m
 
 
 def crs_epsg_code(src: "str | Node") -> str | None:

@@ -3,6 +3,8 @@
 These don't pin values — the gie corpus does that — they pin INVARIANTS
 over the whole input domain: inverse∘forward identity, geodesic triangle
 closure, symmetry under endpoint swap, and graceful NaN propagation.
+Every property draws a fixed example set (``derandomize=True``), so a run
+is reproducible.
 """
 
 import math
@@ -20,7 +22,7 @@ lats = st.floats(-89.99, 89.99, allow_nan=False)
 lons = st.floats(-179.99, 179.99, allow_nan=False)
 
 
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=200, deadline=None, derandomize=True)
 @given(lats, lons, lats, lons)
 def test_geod_inverse_direct_closure(lat1, lon1, lat2, lon2):
     r = K.geod_inverse(WGS84, [lat1], [lon1], [lat2], [lon2])
@@ -33,7 +35,7 @@ def test_geod_inverse_direct_closure(lat1, lon1, lat2, lon2):
     assert dlon * km * max(math.cos(math.radians(lat2)), 1e-3) < 1e-5
 
 
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=200, deadline=None, derandomize=True)
 @given(lats, lons, lats, lons)
 def test_geod_inverse_symmetry(lat1, lon1, lat2, lon2):
     a = K.geod_inverse(WGS84, [lat1], [lon1], [lat2], [lon2])
@@ -47,7 +49,7 @@ def test_geod_inverse_symmetry(lat1, lon1, lat2, lon2):
     assert any(abs(abs(d) - 180.0) < 1e-6 for d in diffs) or a["s12"][0] < 1.0
 
 
-@settings(max_examples=100, deadline=None)
+@settings(max_examples=100, deadline=None, derandomize=True)
 @given(st.floats(-80, 80), st.floats(-170, 170))
 def test_utm_roundtrip_domain(lat, lon):
     zone = int((lon + 180) // 6) + 1
@@ -57,7 +59,7 @@ def test_utm_roundtrip_domain(lat, lon):
     assert abs(lo[0] - lon) < 1e-9 and abs(la[0] - lat) < 1e-9
 
 
-@settings(max_examples=100, deadline=None)
+@settings(max_examples=100, deadline=None, derandomize=True)
 @given(st.floats(-85, 85), st.floats(-179.9, 179.9))
 def test_webmerc_nan_propagation_and_roundtrip(lat, lon):
     p = compile_pipeline("+proj=webmerc +ellps=WGS84")
@@ -67,7 +69,7 @@ def test_webmerc_nan_propagation_and_roundtrip(lat, lon):
     assert abs(lo[0] - lon) < 1e-9 and abs(la[0] - lat) < 1e-9
 
 
-@settings(max_examples=50, deadline=None)
+@settings(max_examples=50, deadline=None, derandomize=True)
 @given(st.lists(st.tuples(lons, st.floats(-80, 80)),
                 min_size=3, max_size=8, unique=True))
 def test_polygon_area_orientation_antisymmetry(ring):
