@@ -17,6 +17,7 @@ parity surface; bulk runs go through the DataFrame API.
 from __future__ import annotations
 
 import sys
+from getopt import GetoptError
 
 import numpy as np
 
@@ -47,6 +48,18 @@ def _parse_lines(lines):
     return arr, meta
 
 
+def _optarg(it, flag, conv=str):
+    """The value after option ``flag``. A missing or malformed value is a
+    usage error (GetoptError), which ``main`` reports with exit status 2."""
+    v = next(it, None)
+    if v is None:
+        raise GetoptError(f"option {flag} requires an argument", flag)
+    try:
+        return conv(v)
+    except ValueError:
+        raise GetoptError(f"option {flag}: invalid value {v!r}", flag) from None
+
+
 def _fmt(v, nd):
     return "nan" if not np.isfinite(v) else f"{v:.{nd}f}"
 
@@ -63,7 +76,7 @@ def run_cct(argv, stdin, stdout) -> int:
         if a in ("-I", "--inverse"):
             inverse = True
         elif a in ("-d", "--decimals"):
-            decimals = int(next(it))
+            decimals = _optarg(it, a, int)
         elif a.startswith("+") or "=" in a or a in ("step", "proj"):
             spec_toks.append(a)
         else:
@@ -119,7 +132,7 @@ def run_geod(argv, stdin, stdout) -> int:
         if a in ("-i", "-I", "--inverse"):
             inverse = True
         elif a in ("-d", "--decimals"):
-            decimals = int(next(it))
+            decimals = _optarg(it, a, int)
         elif a.startswith("+") or "=" in a:
             spec_toks.append(a)
         else:
@@ -183,7 +196,7 @@ def run_cs2cs(argv, stdin, stdout) -> int:
         elif a == "--dispatch":
             dispatch = True
         elif a in ("-d", "--decimals"):
-            decimals = int(next(it))
+            decimals = _optarg(it, a, int)
         elif (a.upper().startswith("EPSG:") or a.startswith("+")
               or a.lstrip().startswith(("{", "GEOGCS", "PROJCS", "GEOGCRS",
                                         "GEODCRS", "PROJCRS", "BOUNDCRS"))):
@@ -242,14 +255,14 @@ def run_projinfo(argv, stdout) -> int:
     it = iter(argv)
     for a in it:
         if a in ("-s", "--source-crs"):
-            crs.insert(0, next(it))
+            crs.insert(0, _optarg(it, a))
         elif a in ("-t", "--target-crs"):
-            crs.append(next(it))
+            crs.append(_optarg(it, a))
         elif a in ("-o", "--output"):
             # reference projinfo -o: comma list of PROJ, WKT2[:2019],
             # WKT2:2015, WKT1_GDAL, WKT1_ESRI, PROJJSON, all
             fmts = []
-            for f in next(it).split(","):
+            for f in _optarg(it, a).split(","):
                 f = f.strip().upper().replace(":", "_")
                 if f in ("WKT2", "WKT2_2019"):
                     f = "WKT2"
@@ -432,48 +445,56 @@ def run_projinfo(argv, stdout) -> int:
     return 0
 
 
+_USAGE = {
+    "cct": "cct [-I] [-d N] +proj=... [FILE...]",
+    "proj": "proj [-I] [-d N] +proj=... [FILE...]",
+    "geod": "geod [-i] [-d N] [+ellps=...] [FILE...]",
+    "cs2cs": "cs2cs [-I] [--dispatch] [-d N] SRC DST [FILE...]",
+    "projinfo": "projinfo [-o FORMATS] CRS | projinfo -s SRC -t DST",
+    "gie": "gie [-v] [--max-op-skips N] FILE...",
+}
+
+
 def main(argv=None) -> int:
     argv = list(sys.argv[1:] if argv is None else argv)
     if not argv:
         print(__doc__, file=sys.stderr)
         return 2
     cmd, rest = argv[0], argv[1:]
-    if cmd == "cct" or cmd == "proj":
-        return run_cct(rest, sys.stdin, sys.stdout)
-    if cmd == "geod":
-        return run_geod(rest, sys.stdin, sys.stdout)
-    if cmd == "cs2cs":
-        return run_cs2cs(rest, sys.stdin, sys.stdout)
-    if cmd == "projinfo":
-        try:
+    if cmd not in _USAGE:
+        cmd, rest = "cct", argv     # bare proj-string: behave like cct
+    try:
+        if cmd == "geod":
+            return run_geod(rest, sys.stdin, sys.stdout)
+        if cmd == "cs2cs":
+            return run_cs2cs(rest, sys.stdin, sys.stdout)
+        if cmd == "projinfo":
             return run_projinfo(rest, sys.stdout)
-        except (ValueError, KeyError, NotImplementedError) as e:
-            # reference projinfo prints resolution errors (unknown code,
-            # cross-celestial-body pair, unsupported output) and exits
-            # non-zero rather than tracebacking
-            print(f"projinfo: {e}", file=sys.stderr)
-            return 1
-    if cmd == "gie":
-        from proj_spark.gie import run_gie_files
+        if cmd == "gie":
+            from proj_spark.gie import run_gie_files
 
-        verbose = "-v" in rest or "--verbose" in rest
-        max_op_skips = None
-        files = []
-        it = iter(rest)
-        for a in it:
-            if a == "--max-op-skips":
-                try:
-                    max_op_skips = int(next(it))
-                except (StopIteration, ValueError):
-                    print("usage: gie [-v] [--max-op-skips N] FILE...",
-                          file=sys.stderr)
-                    return 2
-            elif not a.startswith("-"):
-                files.append(a)
-        return run_gie_files(files, sys.stdout, verbose=verbose,
-                             max_op_skips=max_op_skips)
-    # bare proj-string: behave like cct
-    return run_cct(argv, sys.stdin, sys.stdout)
+            verbose = "-v" in rest or "--verbose" in rest
+            max_op_skips = None
+            files = []
+            it = iter(rest)
+            for a in it:
+                if a == "--max-op-skips":
+                    max_op_skips = _optarg(it, a, int)
+                elif not a.startswith("-"):
+                    files.append(a)
+            return run_gie_files(files, sys.stdout, verbose=verbose,
+                                 max_op_skips=max_op_skips)
+        return run_cct(rest, sys.stdin, sys.stdout)
+    except GetoptError as e:
+        print(f"{cmd}: {e}; usage: {_USAGE[cmd]}", file=sys.stderr)
+        return 2
+    except (ValueError, KeyError, NotImplementedError, OSError) as e:
+        # like the reference apps, an input that does not resolve (unknown
+        # code, operation or ellipsoid, cross-body pair, unreadable file)
+        # is one line on stderr and exit status 1, not a traceback
+        msg = e.args[0] if isinstance(e, KeyError) and e.args else e
+        print(f"{cmd}: {msg}", file=sys.stderr)
+        return 1
 
 
 if __name__ == "__main__":

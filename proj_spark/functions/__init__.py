@@ -221,13 +221,16 @@ def _chunked(fn, n: int, out_cols: list[str]):
 
 
 def image_geo_full_udf(level: int = 10):
-    """Fused full-chain kernel: phash -> struct<lon, lat, x2020, y2020,
-    utm_x, utm_y, lcc_x, lcc_y, cell>.
+    """Fused full-chain kernel: phash -> struct<lon, lat, utm_x, utm_y,
+    lcc_x, lcc_y, cell>.
 
     datum Helmert (cart->7-param->cart^-1) + UTM(auto zone, exact series)
-    + LCC 2SP + S2 cell encode, all in ONE Arrow round trip. This is the
-    per-record work profile of the north-star job; it is compute-dominated,
-    which is what the scaling-efficiency evidence must measure.
+    + LCC 2SP + S2 cell encode, all in ONE Arrow round trip. The
+    datum-shifted lon/lat feed UTM, LCC and the cell but are not returned:
+    no caller reads them, and every returned field crosses back to the JVM.
+    This is the per-record work profile of the north-star job; it is
+    compute-dominated, which is what the scaling-efficiency evidence must
+    measure.
     """
     from proj_spark.sources.synth import lonlat_from_phash
 
@@ -235,10 +238,10 @@ def image_geo_full_udf(level: int = 10):
     utm = compile_pipeline("+proj=utm +ellps=WGS84")
     lcc = compile_pipeline(LCC_CONUS_SPEC)
 
-    cols = ["lon", "lat", "x2020", "y2020", "utm_x", "utm_y", "lcc_x", "lcc_y", "cell"]
+    cols = ["lon", "lat", "utm_x", "utm_y", "lcc_x", "lcc_y", "cell"]
 
     @pandas_udf(
-        "lon double, lat double, x2020 double, y2020 double, "
+        "lon double, lat double, "
         "utm_x double, utm_y double, lcc_x double, lcc_y double, cell long"
     )
     def _udf(ph: pd.Series) -> pd.DataFrame:
@@ -250,8 +253,8 @@ def image_geo_full_udf(level: int = 10):
             ux, uy, _, _ = utm.fwd_deg(lon2, lat2)
             lx, ly, _, _ = lcc.fwd_deg(lon2, lat2)
             cid = cells.s2_cell_id(lon2, lat2, level)
-            return {"lon": lon, "lat": lat, "x2020": lon2, "y2020": lat2,
-                    "utm_x": ux, "utm_y": uy, "lcc_x": lx, "lcc_y": ly, "cell": cid}
+            return {"lon": lon, "lat": lat, "utm_x": ux, "utm_y": uy,
+                    "lcc_x": lx, "lcc_y": ly, "cell": cid}
 
         return _chunked(run, len(phv), cols)
 

@@ -116,14 +116,19 @@ def _angular_err_m(lon1, lat1, lon2, lat2, radius=EARTH_R):
 
 
 def _op_radius(pipe) -> float:
+    return _radius(pipe) or EARTH_R
+
+
+def _radius(pipe) -> float | None:
+    """Semi-major axis of the first step that has one, looking through
+    wrapped steps and the nested pipeline of an operation with I/O hooks."""
     for s in pipe.steps:
-        a = getattr(s, "a", None)
-        if a:
-            return a
-        base = getattr(s, "base", None)
-        if base is not None and getattr(base, "a", None):
-            return base.a
-    return EARTH_R
+        for c in (s, getattr(s, "base", None)):
+            a = getattr(c, "a", None) or (
+                _radius(c) if hasattr(c, "steps") else None)
+            if a:
+                return a
+    return None
 
 
 # Known numerical-sensitivity deviations: (operation-substring, accept-x)

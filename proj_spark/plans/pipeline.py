@@ -18,6 +18,11 @@ produces ("rad" | "m" | "cart"); the pipeline exposes the outermost tags so
 callers (the gie runner, the Spark UDF factory) know whether to feed
 degrees->radians and how to read the output. Error-in-band: failed points
 carry NaN through the remaining steps, like PROJ's HUGE_VAL convention.
+
+A proj-string's I/O hooks (``+geoc``, ``+axis``, ``+units``/``+to_meter``,
+``+vunits``/``+vto_meter``; PROJ's fwd_prepare/fwd_finalize) are composed
+steps: the operation runs inside a nested ``Pipeline`` between the
+existing steps that apply them.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from proj_spark.cells import uv_to_st
 from proj_spark.crs import ELLIPSOIDS, Ellipsoid, resolve_ellipsoid
 from proj_spark.kernels import cart as k_cart
 from proj_spark.kernels import helmert as k_helmert
@@ -463,6 +469,37 @@ _LINEAR_UNITS = {
     "in": 0.0254, "mi": 1609.344, "nmi": 1852.0,
 }
 _ANGULAR_UNITS = {"rad": 1.0, "deg": DEG2RAD, "grad": math.pi / 200.0}
+
+
+def _to_meter(params: dict, key: str, units_key: str) -> float:
+    """Metres per unit from +to_meter/+units (or +vto_meter/+vunits)."""
+    if key in params:
+        return float(params[key])
+    units = params.get(units_key)
+    return 1.0 if units in (None, "m", True) else _LINEAR_UNITS[units]
+
+
+class _Scale(Step):
+    """Output unit scaling (reference fwd.cpp fwd_finalize fr_meter and
+    vfr_meter): fwd multiplies x and y by ``xy`` and z by ``z``, inv
+    divides."""
+
+    left = "whatever"
+    right = "whatever"
+
+    def __init__(self, xy: float, z: float):
+        self.xy = xy
+        self.z = z
+
+    def _apply(self, op, x, y, z, t):
+        return (*(None if v is None else op(np.asarray(v, dtype=np.float64), f)
+                  for v, f in ((x, self.xy), (y, self.xy), (z, self.z))), t)
+
+    def fwd(self, x, y, z, t):
+        return self._apply(np.multiply, x, y, z, t)
+
+    def inv(self, x, y, z, t):
+        return self._apply(np.divide, x, y, z, t)
 
 
 class UnitconvertStep(Step):
@@ -1016,29 +1053,6 @@ class LatlongStep(NoopStep):
     right = "rad"
 
 
-class GeocLatlongStep(Step):
-    """latlong with the +geoc flag: IO latitude is geocentric.
-
-    fwd converts geocentric->geodetic on input (reference src/fwd.cpp:79-81),
-    inv converts geodetic->geocentric on output (src/inv.cpp:138-140);
-    tan(theta) = (1 - es) * tan(phi).
-    """
-
-    left = "rad"
-    right = "rad"
-
-    def __init__(self, ell: Ellipsoid):
-        self.one_es = ell.one_es
-
-    def fwd(self, x, y, z, t):
-        phi = np.asarray(y, dtype=np.float64)
-        return x, np.arctan(np.tan(phi) / self.one_es), z, t
-
-    def inv(self, x, y, z, t):
-        phi = np.asarray(y, dtype=np.float64)
-        return x, np.arctan(self.one_es * np.tan(phi)), z, t
-
-
 class SchStep(Step):
     """Spherical Cross-track Height (reference src/projections/sch.cpp,
     JPL/ISCE radar geometry): geodetic -> geocentric -> peg-rotated local
@@ -1149,8 +1163,7 @@ class S2Step(Step):
         if self.kind == "linear":
             return 0.5 * (u + 1.0)
         if self.kind == "quadratic":
-            return np.where(u >= 0, 0.5 * np.sqrt(1.0 + 3.0 * u),
-                            1.0 - 0.5 * np.sqrt(1.0 - 3.0 * u))
+            return uv_to_st(u)
         if self.kind == "tangent":
             return (2.0 / math.pi) * (np.arctan(u) + math.pi / 4)
         return u
@@ -2340,36 +2353,12 @@ class PmLatlongStep(Step):
 
 def _build_latlong(params: dict) -> Step:
     pm = _pm_offset_rad(params)
+    step = PmLatlongStep(pm) if pm != 0.0 else LatlongStep()
     if "geoc" in params:
-        step: Step = GeocLatlongStep(resolve_ellipsoid(params))
-        if pm != 0.0:
-            # pm and geoc compose (lon shift vs lat conversion are
-            # independent lanes; reference fwd_prepare applies both)
-            step = _PmWrap(step, pm)
-        return step
-    if pm != 0.0:
-        return PmLatlongStep(pm)
-    return LatlongStep()
-
-
-class _PmWrap(Step):
-    """Prime-meridian shift composed around an angular<->angular step
-    (PmLatlongStep semantics: fwd Greenwich -> local subtracts pm on
-    the longitude lane, inv adds it back)."""
-
-    left = "rad"
-    right = "rad"
-
-    def __init__(self, base: Step, pm_rad: float):
-        self.base = base
-        self.pm = pm_rad
-
-    def fwd(self, x, y, z, t):
-        x, y, z, t = self.base.fwd(x, y, z, t)
-        return x - self.pm, y, z, t
-
-    def inv(self, x, y, z, t):
-        return self.base.inv(x + self.pm, y, z, t)
+        # latlong's geocentric latitude sits inside any datum shift, unlike
+        # the generic +geoc hook of _build_step, which runs before it
+        return Pipeline([Inverted(GeocStep(resolve_ellipsoid(params))), step])
+    return step
 
 
 def _pm_offset_rad(params: dict) -> float:
@@ -2479,154 +2468,40 @@ def _build_step(params: dict) -> Step:
             step = wrap
     if "pm" in params and isinstance(step, ProjectionStep):
         step.pm = _pm_offset_rad(params)
-    # generic +geoc on an angular-INPUT operation (reference fwd.cpp:79-81
-    # fwd_prepare / inv.cpp:138-140 inv_finalize: the operation's angular
-    # side carries GEOCENTRIC latitude; the core always sees geodetic).
-    # Applied OUTSIDE the datum wrap and AFTER the pm assignment: the
-    # geoc conversion is closest to the raw angular input (the reference
-    # converts geocentric->geodetic before any datum machinery), and pm
-    # rides inside the projection step it belongs to. latlong handles
-    # geoc itself, and +proj=geoc IS the conversion.
+    # the remaining I/O hooks of fwd_prepare/fwd_finalize (reference
+    # src/fwd.cpp:40-121, mirrored in inv.cpp) are existing steps run
+    # before or after the operation, in one nested Pipeline.
+    # +geoc: the operation's angular side carries GEOCENTRIC latitude; the
+    # core always sees geodetic, and the conversion precedes any datum
+    # machinery (fwd.cpp:79-81). +proj=geoc IS the conversion, and latlong
+    # places its own.
+    pre: list[Step] = []
     if ("geoc" in params and name not in ("longlat", "latlong", "geoc")
             and step.left == "rad"):
-        step = _GeocIOWrap(step, resolve_ellipsoid(params))
-    to_meter = None
-    if "to_meter" in params:
-        to_meter = float(params["to_meter"])
-    elif params.get("units") not in (None, "m", True):
-        to_meter = _LINEAR_UNITS[params["units"]]
-    if step.right == "m":
-        # output unit scaling: fwd_finalize's fr_meter (reference
-        # src/fwd.cpp:137) — composes OUTSIDE any datum wrap (prepare
-        # shifts the angular side, finalize scales the projected side)
-        if to_meter is not None and to_meter != 1.0:
-            step = _OutputScaled(step, 1.0 / to_meter)
-    elif isinstance(step, CartStep) and to_meter not in (None, 1.0):
-        # geocent/cart: fr_meter scales all three axes
-        # (fwd_finalize PJ_IO_UNITS_CARTESIAN case)
-        step = _CartScaled(step, 1.0 / to_meter)
-    # vertical unit scaling (+vto_meter / +vunits; fwd_finalize vfr_meter)
-    vto = None
-    if "vto_meter" in params:
-        vto = float(params["vto_meter"])
-    elif params.get("vunits") not in (None, "m", True):
-        vto = _LINEAR_UNITS[params["vunits"]]
-    if vto is not None and vto != 1.0 and not isinstance(step, CartStep):
-        step = _VertScaled(step, 1.0 / vto)
+        pre.append(Inverted(GeocStep(resolve_ellipsoid(params))))
+    # unit scaling (fwd_finalize's fr_meter and vfr_meter): fr_meter scales
+    # a projected x/y, or all three axes of a bare cart/geocent; a cart
+    # behind a datum or +geoc hook keeps metres, and a bare cart takes
+    # +vunits only together with +units
+    to_meter = _to_meter(params, "to_meter", "units")
+    vto = _to_meter(params, "vto_meter", "vunits")
+    cart = isinstance(step, CartStep) and not pre
+    post: list[Step] = []
+    if to_meter != 1.0 and (step.right == "m" or cart):
+        post.append(_Scale(1.0 / to_meter, 1.0 / to_meter if cart else 1.0))
+    if vto != 1.0 and (to_meter != 1.0 or not cart):
+        post.append(_Scale(1.0, 1.0 / vto))
     # generic output axis spec (+axis=enu-style; pj_adjust_axis semantics)
     if ("axis" in params and name != "axisswap"
             and str(params["axis"]) != "enu"):
-        step = _AxisWrap(step, AxisswapStep(_axisswap_order(
-            {"axis": params["axis"]})))
+        post.append(AxisswapStep(_axisswap_order({"axis": params["axis"]})))
+    # push/pop take no hooks: they move no coordinates of their own, and
+    # Pipeline._bind_stacks binds the shared stack to direct steps only
+    if (pre or post) and not isinstance(step, (PushStep, PopStep)):
+        step = Pipeline([*pre, step, *post])
     if params.get("inv"):
         step = Inverted(step)
     return step
-
-
-class _CartScaled(Step):
-    """Non-metric geocentric output: x/y/z all scaled (fwd_finalize's
-    cartesian fr_meter path)."""
-
-    left = "rad"
-    right = "cart"
-
-    def __init__(self, base: Step, fr_meter: float):
-        self.base = base
-        self.fr = fr_meter
-
-    def fwd(self, x, y, z, t):
-        x, y, z, t = self.base.fwd(x, y, z, t)
-        return (x * self.fr, y * self.fr,
-                z * self.fr if z is not None else z, t)
-
-    def inv(self, x, y, z, t):
-        return self.base.inv(
-            x / self.fr, y / self.fr,
-            z / self.fr if z is not None else z, t)
-
-
-class _VertScaled(Step):
-    """Vertical unit conversion on the projected/angular output side
-    (+vto_meter / +vunits; reference fwd_finalize vfr_meter)."""
-
-    def __init__(self, base: Step, vfr_meter: float):
-        self.base = base
-        self.vfr = vfr_meter
-        self.left = base.left
-        self.right = base.right
-
-    def fwd(self, x, y, z, t):
-        x, y, z, t = self.base.fwd(x, y, z, t)
-        return x, y, (z * self.vfr if z is not None else z), t
-
-    def inv(self, x, y, z, t):
-        return self.base.inv(
-            x, y, (z / self.vfr if z is not None else z), t)
-
-
-class _GeocIOWrap(Step):
-    """Generic +geoc on an angular-input operation: the operation's
-    angular side carries geocentric latitude (reference fwd.cpp:79-81:
-    fwd converts input geocentric->geodetic before the core;
-    inv.cpp:138-140: inv converts the core's geodetic output back to
-    geocentric). tan(theta) = (1-es) tan(phi)."""
-
-    left = "rad"
-
-    def __init__(self, base: Step, ell: Ellipsoid):
-        self.base = base
-        self.one_es = ell.one_es
-        self.right = base.right
-
-    def fwd(self, x, y, z, t):
-        phi = np.arctan(np.tan(np.asarray(y, dtype=np.float64))
-                        / self.one_es)
-        return self.base.fwd(x, phi, z, t)
-
-    def inv(self, x, y, z, t):
-        x, y, z, t = self.base.inv(x, y, z, t)
-        return x, np.arctan(
-            self.one_es * np.tan(np.asarray(y, dtype=np.float64))), z, t
-
-
-class _AxisWrap(Step):
-    """Output-side axis reordering for a coordinate operation with a
-    global +axis spec (reference pj_adjust_axis applied in
-    fwd_finalize/inv_prepare)."""
-
-    def __init__(self, base: Step, ax: "AxisswapStep"):
-        self.base = base
-        self.ax = ax
-        self.left = base.left
-        self.right = base.right
-
-    def fwd(self, x, y, z, t):
-        x, y, z, t = self.base.fwd(x, y, z, t)
-        return self.ax.fwd(x, y, z, t)
-
-    def inv(self, x, y, z, t):
-        x, y, z, t = self.ax.inv(x, y, z, t)
-        return self.base.inv(x, y, z, t)
-
-
-class _OutputScaled(Step):
-    """Wraps a projection whose output units are not metres (+to_meter/+units)."""
-
-    left = "rad"
-    right = "m"
-
-    def __init__(self, base: Step, fr_meter: float):
-        self.base = base
-        self.fr = fr_meter
-
-    def fwd(self, x, y, z, t):
-        x, y, z, t = self.base.fwd(x, y, z, t)
-        return x * self.fr, y * self.fr, z, t
-
-    def inv(self, x, y, z, t):
-        x = np.asarray(x, dtype=np.float64) / self.fr
-        y = np.asarray(y, dtype=np.float64) / self.fr
-        return self.base.inv(x, y, z, t)
 
 
 # --------------------------------------------------------------------------
@@ -2636,7 +2511,7 @@ class _OutputScaled(Step):
 @dataclass
 class Pipeline:
     steps: list[Step]
-    spec: str
+    spec: str = ""
 
     @property
     def left(self) -> str:

@@ -3,8 +3,9 @@
 import io
 
 import numpy as np
+import pytest
 
-from proj_spark.cli import run_cct, run_geod
+from proj_spark.cli import main, run_cct, run_geod
 
 
 def _run(fn, argv, text):
@@ -134,3 +135,28 @@ def test_projinfo_single_crs():
     out = _io.StringIO()
     assert run_projinfo(["EPSG:4326+5773"], out) == 0
     assert "+geoidgrids=" in out.getvalue()
+
+
+@pytest.mark.parametrize("argv,rc", [
+    # usage errors: an option without its value, or a malformed value
+    (["cct", "-d"], 2),
+    (["cs2cs", "-d"], 2),
+    (["geod", "-d"], 2),
+    (["projinfo", "-s"], 2),
+    (["projinfo", "-t"], 2),
+    (["projinfo", "-o"], 2),
+    (["cct", "-d", "x"], 2),
+    (["gie", "--max-op-skips"], 2),
+    # inputs that do not resolve
+    (["cct", "+proj=nosuch"], 1),
+    (["+proj=nosuch"], 1),
+    (["cs2cs", "EPSG:99999999", "EPSG:4326"], 1),
+    (["geod", "+ellps=nosuch"], 1),
+])
+def test_bad_input_is_one_stderr_line(argv, rc, capsys, monkeypatch):
+    monkeypatch.setattr("sys.stdin", io.StringIO(""))
+    assert main(argv) == rc
+    out, err = capsys.readouterr()
+    assert out == ""
+    assert len(err.splitlines()) == 1
+    assert err.startswith(f"{argv[0] if argv[0] != '+proj=nosuch' else 'cct'}: ")

@@ -1,7 +1,7 @@
 """Unit coverage for registry ops with no gie fixtures (sch), smoke
 roundtrips for batch-4 additions, the op table's generic handling
-(+over, missing inverses, completeness against COVERAGE.md), and the rule
-that every proj_spark module has a production caller."""
+(+over, I/O hooks, missing inverses, completeness against COVERAGE.md),
+and the rule that every proj_spark module has a production caller."""
 
 from __future__ import annotations
 
@@ -191,6 +191,147 @@ def test_over_keeps_longitude_past_antimeridian(proj):
     xw, yw, _, _ = compile_pipeline(f"+proj={proj} +ellps=WGS84").fwd_deg(lon, lat)
     assert xw[0] == pytest.approx(-17_811_118.53, abs=0.01)
     assert yw[0] == y[0]
+
+
+# float64 values of each I/O hook alone on an angular, a projected and a
+# cartesian operation, and of the combinations the hook builder forms:
+# fwd_deg of (2.5, 48.8) and of (2.5, 48.8, 100, 2020), each followed by
+# inv_deg of its output. Recorded before the hooks became composed steps.
+_HOOK_CASES = {
+    '+proj=latlong +ellps=GRS80 +geoc': (
+        (2.5, 48.99064821511069, None, None),
+        (2.5, 48.8, None, None),
+        (2.5, 48.99064821511069, 100.0, 2020.0),
+        (2.5, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=utm +zone=31 +ellps=GRS80 +geoc': (
+        (463421.95521228516, 5426536.6257463265, None, None),
+        (2.5000000000000004, 48.79999999999998, None, None),
+        (463421.95521228516, 5426536.6257463265, 100.0, 2020.0),
+        (2.5000000000000004, 48.79999999999998, 100.0, 2020.0),
+    ),
+    '+proj=cart +ellps=GRS80 +geoc': (
+        (4189228.771255329, 182905.67821247506, 4789876.376208191, None),
+        (2.5000000000000004, 48.8, -9.313225746154785e-10, None),
+        (4189294.3270216757, 182908.54043904683, 4789951.8364570495, 2020.0),
+        (2.4999999999999996, 48.8, 100.00000000093132, 2020.0),
+    ),
+    '+proj=latlong +ellps=GRS80 +pm=paris': (
+        (0.16277083333333286, 48.8, None, None),
+        (2.5, 48.8, None, None),
+        (0.16277083333333286, 48.8, 100.0, 2020.0),
+        (2.5, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=utm +zone=31 +ellps=GRS80 +pm=paris': (
+        (291659.4559127467, 5409105.868758789, None, None),
+        (2.5000000000000004, 48.79999999999998, None, None),
+        (291659.4559127467, 5409105.868758789, 100.0, 2020.0),
+        (2.5000000000000004, 48.79999999999998, 100.0, 2020.0),
+    ),
+    '+proj=cart +ellps=GRS80 +pm=paris': (
+        (4205189.134245923, 183602.5227098065, 4775937.703987054, None),
+        (2.5000000000000004, 48.800000000000004, -9.313225746154785e-10, None),
+        (4205254.940499294, 183605.39587287794, 4776012.945477943, 2020.0),
+        (2.5000000000000004, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=latlong +ellps=GRS80 +axis=wsu': (
+        (-2.5, -48.8, None, None),
+        (2.5, 48.8, None, None),
+        (-2.5, -48.8, 100.0, 2020.0),
+        (2.5, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=utm +zone=31 +ellps=GRS80 +axis=wsu': (
+        (-463282.5950068212, -5405343.663465936, None, None),
+        (2.5, 48.8, None, None),
+        (-463282.5950068212, -5405343.663465936, 100.0, 2020.0),
+        (2.5, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=cart +ellps=GRS80 +axis=wsu': (
+        (-4205189.134245923, -183602.5227098065, 4775937.703987054, None),
+        (2.5000000000000004, 48.800000000000004, -9.313225746154785e-10, None),
+        (-4205254.940499294, -183605.39587287794, 4776012.945477943, 2020.0),
+        (2.5000000000000004, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=latlong +ellps=GRS80 +units=km': (
+        (2.5, 48.8, None, None),
+        (2.5, 48.8, None, None),
+        (2.5, 48.8, 100.0, 2020.0),
+        (2.5, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=utm +zone=31 +ellps=GRS80 +units=km': (
+        (463.2825950068212, 5405.343663465936, None, None),
+        (2.5, 48.8, None, None),
+        (463.2825950068212, 5405.343663465936, 100.0, 2020.0),
+        (2.5, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=cart +ellps=GRS80 +units=km': (
+        (4205.189134245923, 183.60252270980652, 4775.937703987053, None),
+        (2.5000000000000004, 48.800000000000004, -9.313225746154785e-10, None),
+        (4205.254940499293, 183.60539587287795, 4776.012945477943, 2020.0),
+        (2.5000000000000004, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=latlong +ellps=GRS80 +vunits=ft': (
+        (2.5, 48.8, None, None),
+        (2.5, 48.8, None, None),
+        (2.5, 48.8, 328.0839895013123, 2020.0),
+        (2.5, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=utm +zone=31 +ellps=GRS80 +vunits=ft': (
+        (463282.5950068212, 5405343.663465936, None, None),
+        (2.5, 48.8, None, None),
+        (463282.5950068212, 5405343.663465936, 328.0839895013123, 2020.0),
+        (2.5, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=cart +ellps=GRS80 +vunits=ft': (
+        (4205189.134245923, 183602.5227098065, 4775937.703987054, None),
+        (2.5000000000000004, 48.800000000000004, -9.313225746154785e-10, None),
+        (4205254.940499294, 183605.39587287794, 4776012.945477943, 2020.0),
+        (2.5000000000000004, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=latlong +ellps=GRS80 +geoc +pm=paris': (
+        (0.16277083333333286, 48.99064821511069, None, None),
+        (2.5, 48.8, None, None),
+        (0.16277083333333286, 48.99064821511069, 100.0, 2020.0),
+        (2.5, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=geocent +ellps=GRS80 +units=km': (
+        (4205.189134245923, 183.60252270980652, 4775.937703987053, None),
+        (2.5000000000000004, 48.800000000000004, -9.313225746154785e-10, None),
+        (4205.254940499293, 183.60539587287795, 4776.012945477943, 2020.0),
+        (2.5000000000000004, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=latlong +ellps=GRS80 +geoc +units=km +vunits=ft +axis=wsu': (
+        (-2.5, -48.99064821511069, None, None),
+        (2.5, 48.8, None, None),
+        (-2.5, -48.99064821511069, 328.0839895013123, 2020.0),
+        (2.5, 48.8, 100.0, 2020.0),
+    ),
+    '+proj=utm +zone=31 +ellps=GRS80 +geoc +units=km +vunits=ft +axis=wsu': (
+        (-463.4219552122852, -5426.5366257463265, None, None),
+        (2.5000000000000004, 48.79999999999998, None, None),
+        (-463.4219552122852, -5426.5366257463265, 328.0839895013123, 2020.0),
+        (2.5000000000000004, 48.79999999999998, 100.0, 2020.0),
+    ),
+    '+proj=cart +ellps=GRS80 +geoc +units=km +vunits=ft +axis=wsu': (
+        (-4189228.771255329, -182905.67821247506, 15714817.50724472, None),
+        (2.5000000000000004, 48.8, -9.313225746154785e-10, None),
+        (-4189294.3270216757, -182908.54043904683, 15715065.080239661, 2020.0),
+        (2.4999999999999996, 48.8, 100.00000000093132, 2020.0),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_HOOK_CASES))
+def test_io_hooks_keep_their_values(op):
+    p = compile_pipeline(op)
+    got = []
+    for args in ((2.5, 48.8), (2.5, 48.8, 100.0, 2020.0)):
+        f = p.fwd_deg(*[np.array([v]) for v in args])
+        got += [f, p.inv_deg(*f)]
+    for run, want in zip(got, _HOOK_CASES[op], strict=True):
+        for lane, w in zip(run, want, strict=True):
+            assert (lane is None) == (w is None)
+            assert w is None or np.array_equal(lane, [w])
 
 
 def test_registry_matches_coverage_table():
