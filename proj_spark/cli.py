@@ -64,6 +64,34 @@ def _fmt(v, nd):
     return "nan" if not np.isfinite(v) else f"{v:.{nd}f}"
 
 
+def _read(files, stdin):
+    """_parse_lines of the input files, else of stdin."""
+    lines = []
+    for f in files:
+        lines.extend(open(f).readlines())
+    return _parse_lines(lines if files else stdin.readlines())
+
+
+def _run_pipe(pipe, inverse, files, stdin, stdout, decimals, dims) -> int:
+    """Run every coordinate line through ``pipe`` and write back as many
+    values as the line gave, at most ``dims`` (cct 4, cs2cs 3)."""
+    arr, meta = _read(files, stdin)
+    if len(arr):
+        z = np.where(np.isnan(arr[:, 2]), 0.0, arr[:, 2])
+        t = np.where(np.isnan(arr[:, 3]), 0.0, arr[:, 3])
+        run = pipe.inv_deg if inverse else pipe.fwd_deg
+        X, Y, Z, T = run(arr[:, 0].copy(), arr[:, 1].copy(), z, t)
+        cols = [X, Y, z if Z is None else Z, t if T is None else T]
+    for kind, payload, nvals, comment in meta:
+        if kind == "p":
+            stdout.write(payload + "\n")
+            continue
+        out = [_fmt(c[payload], decimals) for c in cols[:min(nvals, dims)]]
+        stdout.write("  ".join(out) + (("  " + comment) if comment else "")
+                     + "\n")
+    return 0
+
+
 def run_cct(argv, stdin, stdout) -> int:
     from proj_spark.plans.pipeline import compile_pipeline
 
@@ -85,36 +113,7 @@ def run_cct(argv, stdin, stdout) -> int:
         print("cct: no operation specified", file=sys.stderr)
         return 2
     pipe = compile_pipeline(" ".join(spec_toks))
-    lines = []
-    if files:
-        for f in files:
-            lines.extend(open(f).readlines())
-    else:
-        lines = stdin.readlines()
-    arr, meta = _parse_lines(lines)
-    if len(arr):
-        x, y = arr[:, 0].copy(), arr[:, 1].copy()
-        z = np.where(np.isnan(arr[:, 2]), 0.0, arr[:, 2])
-        t = np.where(np.isnan(arr[:, 3]), 0.0, arr[:, 3])
-        run = pipe.inv_deg if inverse else pipe.fwd_deg
-        X, Y, Z, T = run(x, y, z, t)
-        if Z is None:
-            Z = z
-        if T is None:
-            T = t
-    for kind, payload, nvals, comment in meta:
-        if kind == "p":
-            stdout.write(payload + "\n")
-            continue
-        i = payload
-        out = [_fmt(X[i], decimals), _fmt(Y[i], decimals)]
-        if nvals >= 3:
-            out.append(_fmt(Z[i], decimals))
-        if nvals >= 4:
-            out.append(_fmt(T[i], decimals))
-        stdout.write("  ".join(out) + (("  " + comment) if comment else "")
-                     + "\n")
-    return 0
+    return _run_pipe(pipe, inverse, files, stdin, stdout, decimals, 4)
 
 
 def run_geod(argv, stdin, stdout) -> int:
@@ -140,13 +139,7 @@ def run_geod(argv, stdin, stdout) -> int:
     ell = resolve_ellipsoid(parse_params(tokenize(" ".join(spec_toks)))) \
         if spec_toks else resolve_ellipsoid({"ellps": "WGS84"})
     C = geod_consts(ell.a, ell.f)
-    lines = []
-    if files:
-        for f in files:
-            lines.extend(open(f).readlines())
-    else:
-        lines = stdin.readlines()
-    arr, meta = _parse_lines(lines)
+    arr, meta = _read(files, stdin)
     if inverse:
         # lat1 lon1 lat2 lon2 -> azi1 azi2 s12  (geod convention)
         if len(arr):
@@ -177,9 +170,10 @@ def run_geod(argv, stdin, stdout) -> int:
 
 
 def run_cs2cs(argv, stdin, stdout) -> int:
-    """cs2cs mode: two CRS arguments (EPSG:XXXX or proj-strings),
-    inverse(src) + forward(dst) via compile_crs_to_crs. With
-    --dispatch and two EPSG geographic codes, per-point registry
+    """cs2cs mode: the first two operands are the source and target CRS
+    (any spelling plans.pipeline.crs_input reads), the rest are input
+    files; inverse(src) + forward(dst) via compile_crs_to_crs. With
+    --dispatch and two registry geographic CRSs, per-point registry
     candidate dispatch (sources.epsg_ops — the reference cs2cs's
     alternative-operation selection) replaces the single pipeline."""
     from proj_spark.plans.pipeline import compile_crs_to_crs
@@ -187,8 +181,7 @@ def run_cs2cs(argv, stdin, stdout) -> int:
     inverse = False
     dispatch = False
     decimals = 10
-    crs = []
-    files = []
+    operands = []
     it = iter(argv)
     for a in it:
         if a in ("-I", "--inverse"):
@@ -197,50 +190,19 @@ def run_cs2cs(argv, stdin, stdout) -> int:
             dispatch = True
         elif a in ("-d", "--decimals"):
             decimals = _optarg(it, a, int)
-        elif (a.upper().startswith("EPSG:") or a.startswith("+")
-              or a.lstrip().startswith(("{", "GEOGCS", "PROJCS", "GEOGCRS",
-                                        "GEODCRS", "PROJCRS", "BOUNDCRS"))):
-            # EPSG codes, proj-strings, PROJJSON, or WKT text (quoted)
-            crs.append(a)
         else:
-            files.append(a)
-    if len(crs) != 2:
-        print("cs2cs: need exactly two CRS arguments", file=sys.stderr)
+            operands.append(a)
+    if len(operands) < 2:
+        print("cs2cs: need a source and a target CRS", file=sys.stderr)
         return 2
+    crs, files = operands[:2], operands[2:]
     if dispatch:
         from proj_spark.sources.epsg_ops import crs_to_crs_epsg_dispatch
 
         pipe = crs_to_crs_epsg_dispatch(crs[0], crs[1])
     else:
         pipe = compile_crs_to_crs(crs[0], crs[1])
-    lines = []
-    if files:
-        for f in files:
-            lines.extend(open(f).readlines())
-    else:
-        lines = stdin.readlines()
-    arr, meta = _parse_lines(lines)
-    if len(arr):
-        x, y = arr[:, 0].copy(), arr[:, 1].copy()
-        z = np.where(np.isnan(arr[:, 2]), 0.0, arr[:, 2])
-        t = np.where(np.isnan(arr[:, 3]), 0.0, arr[:, 3])
-        run = pipe.inv_deg if inverse else pipe.fwd_deg
-        X, Y, Z, T = run(x, y, z, t)
-        if Z is None:
-            Z = z
-        if T is None:
-            T = t
-    for kind, payload, nvals, comment in meta:
-        if kind == "p":
-            stdout.write(payload + "\n")
-            continue
-        i = payload
-        out = [_fmt(X[i], decimals), _fmt(Y[i], decimals)]
-        if nvals >= 3:
-            out.append(_fmt(Z[i], decimals))
-        stdout.write("  ".join(out) + (("  " + comment) if comment else "")
-                     + "\n")
-    return 0
+    return _run_pipe(pipe, inverse, files, stdin, stdout, decimals, 3)
 
 
 def run_projinfo(argv, stdout) -> int:
@@ -281,131 +243,70 @@ def run_projinfo(argv, stdout) -> int:
         return 2
 
     if len(crs) == 1:
-        from proj_spark.plans.pipeline import compile_crs_to_crs
+        from proj_spark.plans.pipeline import (crs_input, crs_registry_code,
+                                               crs_spec)
 
-        c = crs[0].strip()
-        if c.lower().startswith("urn:"):
-            from proj_spark.plans.pipeline import _parse_urn, _urn_crs_spec
+        kind, auth, code = crs_input(crs[0])
+        if kind == "operation":
+            from proj_spark.sources.epsg_ops import operation_by_urn
 
-            kind, auth, code = _parse_urn(c)
-            if kind == "coordinateoperation":
-                from proj_spark.sources.epsg_ops import operation_by_urn
-
-                spec, op = operation_by_urn(code)
-                acc = op.get("accuracy", -1.0)
-                print(f"{op['name']}, "
-                      f"{f'{acc} m' if acc >= 0 else 'unknown accuracy'}",
-                      file=stdout)
-            else:
-                spec = _urn_crs_spec(auth, code)
-        elif c.upper().startswith("EPSG:"):
-            from proj_spark.sources.epsg import epsg_to_proj
-
-            spec = epsg_to_proj(c.split(":", 1)[1])
-        elif c.upper().startswith("ESRI:"):
-            from proj_spark.sources.esri import esri_to_proj
-
-            spec = esri_to_proj(c)
-        elif c.upper().startswith("IGNF:"):
-            from proj_spark.sources.epsg import epsg_to_proj
-
-            spec = epsg_to_proj(c.split(":", 1)[1])
-        elif c.upper().startswith(("IAU_2015:", "IAU:")):
-            from proj_spark.sources.epsg import epsg_to_proj
-
-            spec = epsg_to_proj("IAU_2015:" + c.split(":", 1)[1])
-        elif c.upper().startswith("NRCAN:"):
-            from proj_spark.sources.epsg import coordinate_metadata
-
-            spec, epoch = coordinate_metadata(c)
+            spec, op = operation_by_urn(code)
+            acc = op.get("accuracy", -1.0)
+            print(f"{op['name']}, "
+                  f"{f'{acc} m' if acc >= 0 else 'unknown accuracy'}",
+                  file=stdout)
+        else:
+            spec, epoch = crs_spec(crs[0])
             if epoch is not None:
                 print(f"Coordinate epoch: {epoch}", file=stdout)
-        else:
-            from proj_spark.sources.projjson import (is_projjson,
-                                                     projjson_to_proj)
-            from proj_spark.sources.wkt import is_wkt, wkt_to_proj
-
-            if is_wkt(c):
-                spec = wkt_to_proj(c)
-            elif is_projjson(c):
-                spec = projjson_to_proj(c)
-            else:
-                spec = c
         # deprecated CRS: still resolves (reference behavior) but the
         # replacement codes from deprecation.sql are surfaced
-        if c.upper().startswith("EPSG:"):
+        if kind == "code" and auth == "EPSG":
             from proj_spark.sources.epsg import (crs_deprecation_replacements,
                                                  crs_is_deprecated)
 
-            _code = c.split(":", 1)[1]
-            if crs_is_deprecated(_code):
-                reps = crs_deprecation_replacements(_code)
-                print(f"Warning: CRS EPSG:{_code} is deprecated" +
+            if crs_is_deprecated(code):
+                reps = crs_deprecation_replacements(code)
+                print(f"Warning: CRS EPSG:{code} is deprecated" +
                       (" (non-deprecated replacement: " + ", ".join(
                           "EPSG:" + r for r in reps) + ")" if reps else ""),
                       file=stdout)
-        # registry code (EPSG:NNNN or a crs URN with EPSG authority) for
-        # the WKT2/PROJJSON writers
-        epsg_code = None
-        if c.upper().startswith("EPSG:"):
-            epsg_code = c.split(":", 1)[1]
-        elif c.upper().startswith(("IAU_2015:", "IAU:")):
-            # IAU rows are stored authority-qualified in the registry
-            epsg_code = "IAU_2015:" + c.split(":", 1)[1]
-        elif c.upper().startswith(("IGNF:", "NKG:")):
-            epsg_code = c.split(":", 1)[1]
-        elif c.lower().startswith("urn:"):
-            from proj_spark.plans.pipeline import _parse_urn
-
-            kind, auth, code = _parse_urn(c)
-            if kind == "crs" and auth.upper() == "EPSG":
-                epsg_code = code
-            elif kind == "crs" and auth.upper() in ("IAU_2015", "IAU"):
-                epsg_code = f"IAU_2015:{code}"
+        # the WKT2/WKT1/PROJJSON writers read the registry row
+        key = crs_registry_code(crs[0]) if fmts != ["PROJ"] else None
         for fmt in fmts:
             if fmt == "PROJ":
                 print("PROJ string:", file=stdout)
                 print(spec, file=stdout)
-            elif fmt in ("WKT2", "WKT2_2015"):
-                from proj_spark.sources.wkt_out import epsg_to_wkt2
+                continue
+            if fmt not in ("WKT2", "WKT2_2015", "WKT1_GDAL", "WKT1_ESRI",
+                           "PROJJSON"):
+                print(f"projinfo: unknown output format {fmt}",
+                      file=sys.stderr)
+                return 2
+            if key is None:
+                print(f"{fmt.split('_')[0]} output needs a registry CRS "
+                      "code", file=sys.stderr)
+                return 2
+            from proj_spark.sources import wkt_out
 
-                if epsg_code is None:
-                    print("WKT2 output needs a registry CRS code",
-                          file=sys.stderr)
-                    return 2
+            if fmt.startswith("WKT2"):
                 ver = "2015" if fmt == "WKT2_2015" else "2019"
-                print(f"WKT2:{ver} string:", file=stdout)
-                print(epsg_to_wkt2(epsg_code, version=ver), file=stdout)
-            elif fmt in ("WKT1_GDAL", "WKT1_ESRI"):
-                from proj_spark.sources.wkt_out import epsg_to_wkt1
-
-                if epsg_code is None:
-                    print("WKT1 output needs a registry CRS code",
-                          file=sys.stderr)
-                    return 2
+                head = f"WKT2:{ver} string:"
+                txt = wkt_out.epsg_to_wkt2(key, version=ver)
+            elif fmt == "PROJJSON":
+                head, txt = "PROJJSON:", wkt_out.epsg_to_projjson(key)
+            else:
                 dialect = fmt.split("_", 1)[1]
+                head = f"WKT1:{dialect} string:"
                 try:
-                    txt = epsg_to_wkt1(epsg_code, dialect)
+                    txt = wkt_out.epsg_to_wkt1(key, dialect)
                 except NotImplementedError as e:
                     # reference WKTFormatter throws for inexpressible
                     # CRSs (e.g. spherical planetocentric in WKT1)
                     print(f"WKT1 export error: {e}", file=sys.stderr)
                     return 2
-                print(f"WKT1:{dialect} string:", file=stdout)
-                print(txt, file=stdout)
-            elif fmt == "PROJJSON":
-                from proj_spark.sources.wkt_out import epsg_to_projjson
-
-                if epsg_code is None:
-                    print("PROJJSON output needs a registry CRS code",
-                          file=sys.stderr)
-                    return 2
-                print("PROJJSON:", file=stdout)
-                print(epsg_to_projjson(epsg_code), file=stdout)
-            else:
-                print(f"projinfo: unknown output format {fmt}",
-                      file=sys.stderr)
-                return 2
+            print(head, file=stdout)
+            print(txt, file=stdout)
         return 0
 
     if fmts != ["PROJ"]:

@@ -34,7 +34,11 @@ class Ellipsoid:
     ra: float = field(init=False)
 
     def __post_init__(self) -> None:
+        if not self.a > 0:      # also NaN (reference ell_set.cpp)
+            raise ValueError("major axis or radius = 0 or not given")
         f = 1.0 / self.rf if self.rf else 0.0
+        if not 0.0 <= f < 1.0:  # b <= 0, or a prolate or NaN shape
+            raise ValueError(f"invalid flattening {f!r}")
         es = 2 * f - f * f
         object.__setattr__(self, "f", f)
         object.__setattr__(self, "b", self.a * (1.0 - f))

@@ -2585,73 +2585,107 @@ def _parse_urn(urn: str) -> tuple[str, str, str]:
     return parts[3].lower(), parts[4], ":".join(parts[6:])
 
 
-def _urn_crs_spec(auth: str, code: str) -> str:
+# the authority prefixes a CRS code may carry, each mapped to the one its
+# registry rows are stored under; a code is one token (or a compound
+# "HHHH+VVVV" pair), so it cannot splice parameters into a +init string
+_CRS_AUTHS = {"EPSG": "EPSG", "ESRI": "ESRI", "IGNF": "IGNF", "NKG": "NKG",
+              "IAU_2015": "IAU_2015", "IAU": "IAU_2015", "NRCAN": "NRCAN"}
+_CRS_CODE = re.compile(r"\w+(?:\+\w+)?", re.A)
+
+
+def crs_input(text: str) -> tuple[str, str | None, str | None]:
+    """(kind, authority, code) of a user's CRS text — the one decision
+    reference io.cpp createFromUserInput makes for every CRS-taking
+    surface. ``kind`` is "code" (AUTH:CODE or a crs URN; a bare registry
+    key such as '4230' has authority None), "metadata" (a CRS plus a
+    coordinate epoch: NRCAN codes and coordinateMetadata URNs),
+    "operation" (a coordinateOperation URN), "wkt", "projjson" or
+    "proj"; authority and code are None for the last three."""
+    from proj_spark.sources.projjson import is_projjson
+    from proj_spark.sources.wkt import is_wkt
+
+    c = text.strip()
+    if c.lower().startswith("urn:"):
+        kind, auth, code = _parse_urn(c)
+        kind = {"crs": "code", "coordinatemetadata": "metadata",
+                "coordinateoperation": "operation"}.get(kind)
+        if kind is None:
+            raise ValueError(f"URN is not a CRS: {c!r}")
+    elif is_wkt(c):
+        return "wkt", None, None
+    elif is_projjson(c):
+        return "projjson", None, None
+    elif m := re.fullmatch(r"(\w+):(.*)", c, re.S | re.A):
+        kind, auth, code = "code", m[1], m[2]
+    elif _CRS_CODE.fullmatch(c):
+        return "code", None, c
+    elif "+" in c or "=" in c:
+        return "proj", None, None
+    else:
+        raise ValueError(f"unsupported CRS {c!r}")
+    code = code.strip()
+    if not _CRS_CODE.fullmatch(code):
+        raise ValueError(f"malformed code in {c!r}")
+    if kind == "operation":
+        return kind, auth.upper(), code
+    if auth.upper() not in _CRS_AUTHS:
+        raise NotImplementedError(f"CRS authority {auth!r} not bundled")
+    auth = _CRS_AUTHS[auth.upper()]
+    return ("metadata" if auth == "NRCAN" else kind), auth, code
+
+
+def crs_registry_code(text: str) -> str | None:
+    """The bundled registry's key for a CRS spelling, or None: the bare
+    code for EPSG, IGNF and NKG, 'IAU_2015:n' for IAU (its codes collide
+    with EPSG's), and the identified code of a WKT or PROJJSON CRS."""
+    kind, auth, code = crs_input(text)
+    if kind == "wkt":
+        from proj_spark.sources.wkt import crs_epsg_code
+        return crs_epsg_code(text.strip())
+    if kind == "projjson":
+        from proj_spark.sources.projjson import crs_epsg_code
+        return crs_epsg_code(text)
+    if kind != "code" or auth == "ESRI":
+        return None
+    return f"IAU_2015:{code}" if auth == "IAU_2015" else code
+
+
+def crs_spec(text: str) -> tuple[str, float | None]:
+    """(proj-string, coordinate epoch) for any CRS spelling crs_input
+    reads; the epoch is None except for coordinate metadata, where it
+    rides on the t lane (callers pass it)."""
+    kind, auth, code = crs_input(text)
+    c = text.strip()
+    if kind == "proj":
+        return c, None
+    if kind == "wkt":
+        from proj_spark.sources.wkt import wkt_to_proj
+        return wkt_to_proj(c), None
+    if kind == "projjson":
+        from proj_spark.sources.projjson import projjson_to_proj
+        return projjson_to_proj(c), None
+    if kind == "metadata":
+        from proj_spark.sources.epsg import coordinate_metadata
+        return coordinate_metadata(code)
+    if kind == "operation":
+        raise ValueError(f"{c!r} is an operation, not a CRS")
+    if auth == "ESRI":
+        from proj_spark.sources.esri import esri_to_proj
+        return esri_to_proj(code), None
+    if auth is None:
+        raise ValueError(f"unsupported CRS {c!r}: a code needs its authority")
     from proj_spark.sources.epsg import epsg_to_proj
-
-    if auth.upper() in ("EPSG", "NKG", "IGNF"):
-        # IGNF codes live in the same bundled tables (ignf.sql), keyed by
-        # their alphanumeric codes — the EPSG resolver serves them
-        return epsg_to_proj(code)
-    if auth.upper() in ("IAU_2015", "IAU"):
-        # IAU codes are authority-qualified in the registry (they reuse
-        # small numerics that collide with EPSG codes in every table)
-        return epsg_to_proj(f"IAU_2015:{code}")
-    from proj_spark.sources.esri import esri_to_proj
-
-    if auth.upper() == "ESRI":
-        return esri_to_proj(f"ESRI:{code}")
-    raise NotImplementedError(f"URN authority {auth!r} not bundled")
+    return epsg_to_proj(crs_registry_code(c)), None
 
 
 def compile_crs_to_crs(src: str, dst: str) -> Pipeline:
-    """proj_create_crs_to_crs analogue for the supported CRS grammar
-    (proj-strings, +init codes from the minimal registry, and +datum
-    names): a two-step pipeline running the source op INVERSE to WGS84
+    """proj_create_crs_to_crs analogue for every CRS spelling crs_input
+    reads: a two-step pipeline running the source op INVERSE to WGS84
     geodetic (datum hooks included via DatumShiftWrap) then the target
     op FORWARD (reference src/4D_api.cpp proj_create_crs_to_crs ->
     pipeline of inverse(src) + forward(dst))."""
 
-    def as_spec(c: str) -> str:
-        c = c.strip()
-        if c.lower().startswith("urn:"):
-            kind, auth, code = _parse_urn(c)
-            if kind == "coordinatemetadata":
-                # CRS + coordinate epoch (reference nrcan.sql URNs)
-                from proj_spark.sources.epsg import coordinate_metadata
-                return coordinate_metadata(code)[0]
-            if kind != "crs":
-                raise ValueError(f"crs_to_crs: URN is not a CRS: {c!r}")
-            if auth.upper() == "EPSG":
-                return f"+init=epsg:{code}"
-            return _urn_crs_spec(auth, code)
-        if c.upper().startswith("EPSG:"):
-            return f"+init={c.lower()}"
-        if c.upper().startswith("ESRI:"):
-            from proj_spark.sources.esri import esri_to_proj
-            return esri_to_proj(c)
-        if c.upper().startswith("IGNF:"):
-            from proj_spark.sources.epsg import epsg_to_proj
-            return epsg_to_proj(c.split(":", 1)[1])
-        if c.upper().startswith(("IAU_2015:", "IAU:")):
-            from proj_spark.sources.epsg import epsg_to_proj
-            return epsg_to_proj("IAU_2015:" + c.split(":", 1)[1])
-        if c.upper().startswith("NRCAN:"):
-            # coordinate_metadata: a CRS + coordinate epoch; the CRS part
-            # is the pipeline endpoint, the epoch rides on the t lane
-            # (callers pass it; see sources.epsg.coordinate_metadata)
-            from proj_spark.sources.epsg import coordinate_metadata
-            return coordinate_metadata(c)[0]
-        from proj_spark.sources.wkt import is_wkt, wkt_to_proj
-        if is_wkt(c):
-            return wkt_to_proj(c)
-        from proj_spark.sources.projjson import is_projjson, projjson_to_proj
-        if is_projjson(c):
-            return projjson_to_proj(c)
-        if "+" in c or "=" in c or c.startswith("proj="):
-            return c
-        raise ValueError(f"crs_to_crs: unsupported CRS {c!r}")
-
-    def build_side(spec: str):
+    def build_side(crs: str):
         """(step, geoc_ellipsoid | None): +geoc on a CRS spec means the
         CRS's ANGULAR coordinates carry geocentric latitude (reference
         PROJStringParser: spherical-planetocentric base). The conversion
@@ -2660,7 +2694,12 @@ def compile_crs_to_crs(src: str, dst: str) -> Pipeline:
         source → '+inv +proj=geoc' before anything else; target →
         '+proj=geoc' last; a PROJECTED CRS over an ocentric base gets NO
         geoc step — its cartesian coords relate to geodetic latitude
-        through the conversion alone)."""
+        through the conversion alone). An EPSG code takes the +init
+        route: the _INIT_DEFS codes keep their legacy definitions and do
+        not load the registry."""
+        kind, auth, code = crs_input(crs)
+        spec = (f"+init=epsg:{code}" if kind == "code" and auth == "EPSG"
+                else crs_spec(crs)[0])
         params = parse_params(tokenize(spec))
         geoc_ell = None
         if "geoc" in params and params.get("proj") != "geoc":
@@ -2671,8 +2710,8 @@ def compile_crs_to_crs(src: str, dst: str) -> Pipeline:
             geoc_ell = None     # projected/geocentric CRS: no geoc step
         return step, geoc_ell, resolve_ellipsoid(params).a
 
-    s1, g1, a1 = build_side(as_spec(src))
-    s2, g2, a2 = build_side(as_spec(dst))
+    s1, g1, a1 = build_side(src)
+    s2, g2, a2 = build_side(dst)
     if abs(a1 - a2) > 0.007 * a2:
         # different celestial bodies (reference
         # coordinateoperationfactory.cpp:4459 createOperationsGeodToGeod:
@@ -2708,13 +2747,13 @@ def compile_pipeline(spec: str) -> Pipeline:
     operation by code and compiles it in its published domain;
     ``urn:ogc:def:crs:AUTH::CODE`` compiles the CRS's proj-string."""
     if spec.lstrip().lower().startswith("urn:"):
-        kind, auth, code = _parse_urn(spec.strip())
-        if kind == "coordinateoperation":
+        kind, _auth, code = crs_input(spec)
+        if kind == "operation":
             from proj_spark.sources.epsg_ops import operation_by_urn
 
             spec, _op = operation_by_urn(code)
         else:
-            spec = _urn_crs_spec(auth, code)
+            spec = crs_spec(spec)[0]
     tokens = tokenize(spec)
     # split into [global] step [step ...] on the bare "step" sentinel
     groups: list[list[str]] = [[]]

@@ -425,7 +425,8 @@ def _geog_only(code: str) -> str:
     spec = E.epsg_to_proj(code)
     if not spec.startswith("+proj=longlat"):
         raise NotImplementedError(
-            f"EPSG:{code} is not a geographic 2D CRS (got {spec.split()[0]})")
+            f"{':'.join(E.registry_id(code))} is not a geographic 2D CRS "
+            f"(got {spec.split()[0]})")
     return spec
 
 
@@ -603,36 +604,21 @@ def _build_candidate(op: dict, s_spec: str, d_spec: str, inverse: bool):
 def candidate_operations(src: str, dst: str, *, hub: str = "4326",
                          max_candidates: int = 24) -> list:
     """Ranked plans.dispatch.Candidate list for a geographic CRS pair
-    given as EPSG codes ('4230' or 'EPSG:4230'), or as WKT/PROJJSON text
-    identified to a code (explicit ID node, else the ESRI name alias
-    table — io.cpp's late-binding identification)."""
+    given as bare registry keys ('4230'), or in any spelling with a
+    registry code (plans.pipeline.crs_registry_code: 'EPSG:4230', a crs
+    URN, IGNF/NKG/IAU codes, or WKT/PROJJSON text identified to a code by
+    its ID node, the ESRI name alias table or its datum ensemble —
+    io.cpp's late-binding identification)."""
     from proj_spark.plans.dispatch import Candidate
-    from proj_spark.plans.pipeline import compile_pipeline
+    from proj_spark.plans.pipeline import crs_registry_code
 
     def norm(c: str) -> str:
-        c = str(c).strip()
-        if c.startswith("{") or c.lstrip()[:1] == "{":
-            from proj_spark.sources.projjson import crs_epsg_code as _jc
-
-            code = _jc(c)
-            if code is None:
-                raise ValueError(
-                    "PROJJSON CRS carries no EPSG id: registry dispatch "
-                    "needs an identified CRS")
-            return code
-        from proj_spark.sources.wkt import crs_epsg_code, is_wkt
-
-        if is_wkt(c):
-            code = crs_epsg_code(c)
-            if code is None:
-                raise ValueError(
-                    "WKT CRS not identifiable (no EPSG id, no ESRI "
-                    "alias): registry dispatch needs an identified CRS")
-            return code
-        if c.upper().startswith(("IAU_2015:", "IAU:")):
-            # IAU rows are authority-qualified in the registry
-            return "IAU_2015:" + c.split(":", 1)[1]
-        return c.split(":", 1)[1] if ":" in c else c
+        key = crs_registry_code(c)
+        if key is None:
+            raise ValueError(
+                f"{c!r} has no registry CRS code: registry dispatch needs "
+                "an identified CRS")
+        return key
 
     src, dst = norm(src), norm(dst)
     src_spec = _geog_only(src)

@@ -24,7 +24,7 @@ import math
 
 from proj_spark.sources import epsg as _epsg
 from proj_spark.sources.wkt import (Node, _angle_value_deg, _unit_factor,
-                                    wkt_node_to_proj)
+                                    _ensemble_geog2d_code, wkt_node_to_proj)
 
 # ------------------------------------------------------------------ units
 
@@ -72,7 +72,8 @@ def _val_deg(v) -> float:
 
 def _epsg_id(j) -> str | None:
     i = j.get("id") if isinstance(j, dict) else None
-    if i and str(i.get("authority", "")).upper() == "EPSG":
+    if (isinstance(i, dict) and "code" in i
+            and str(i.get("authority", "")).upper() == "EPSG"):
         return str(i["code"])
     return None
 
@@ -304,36 +305,8 @@ def crs_epsg_code(src: str | dict) -> str | None:
         return code
     ens = obj.get("datum_ensemble")
     if isinstance(ens, dict) and obj.get("type", "").startswith("Geographic"):
-        from proj_spark.sources.epsg import _load
-
-        db = _load()
-        members_tbl = db["geodetic_datum_ensemble_member"]
-
-        def geog2d_of(datum_code):
-            best = None
-            for ccode, r in db["geodetic_crs"].items():
-                if (not r[-1] and str(r[8]) == datum_code
-                        and r[4] == "geographic 2D"):
-                    k = ((0, int(ccode), "") if ccode.isdigit()
-                         else (1, 0, ccode))
-                    if best is None or k < best[0]:
-                        best = (k, ccode)
-            return best[1] if best else None
-
-        name = str(ens.get("name", "")).strip().lower()
-        for dcode, row in db["geodetic_datum"].items():
-            if dcode in members_tbl and \
-                    str(row[2]).strip().lower() == name:
-                return geog2d_of(dcode)
-        ids = set()
-        for m in ens.get("members", []):
-            mid = m.get("id", {})
-            if str(mid.get("authority", "")).upper() == "EPSG":
-                ids.add(str(mid.get("code")))
-        if ids:
-            for dcode, mems in members_tbl.items():
-                if ids <= {mm for _s, mm in mems}:
-                    return geog2d_of(dcode)
+        ids = {_epsg_id(m) for m in ens.get("members", [])} - {None}
+        return _ensemble_geog2d_code(str(ens.get("name", "")), ids)
     return None
 
 
@@ -343,4 +316,8 @@ def projjson_to_proj(src: str | dict) -> str:
     obj = json.loads(src) if isinstance(src, str) else src
     if not isinstance(obj, dict):
         raise ValueError("PROJJSON: top-level object expected")
-    return _to_proj(obj)
+    try:
+        return _to_proj(obj)
+    except (AttributeError, TypeError) as e:
+        # a member of the wrong JSON type (the schema's shape errors)
+        raise ValueError(f"PROJJSON: malformed CRS object: {e}") from None

@@ -800,14 +800,19 @@ def crs_epsg_code(src: "str | Node") -> str | None:
     ens = root.find("ENSEMBLE")
     if ens is not None and root.name.startswith(("GEOGCRS", "GEOGCS",
                                                  "GEODCRS")):
-        return _ensemble_geog2d_code(ens)
+        ids = [m.find("ID", "AUTHORITY") for m in ens.all("MEMBER")]
+        members = {str(int(i.nums()[0])) for i in ids
+                   if i is not None and i.str0().upper() == "EPSG"
+                   and i.nums() and math.isfinite(i.nums()[0])}
+        return _ensemble_geog2d_code(ens.str0(), members)
     return None
 
 
-def _ensemble_geog2d_code(ens: "Node") -> str | None:
-    """Canonical geographic-2D CRS code for a WKT2 ENSEMBLE node matched
-    against the bundled registry (geodetic_datum name, else the
-    geodetic_datum_ensemble_member id set)."""
+def _ensemble_geog2d_code(name: str, member_ids: set) -> str | None:
+    """Canonical geographic-2D CRS code for a datum ensemble matched
+    against the bundled registry: by geodetic_datum name, else by the
+    set of EPSG member datum ids (geodetic_datum_ensemble_member). The
+    WKT2 ENSEMBLE node and the PROJJSON datum_ensemble both read here."""
     from proj_spark.sources.epsg import _load
 
     db = _load()
@@ -824,20 +829,12 @@ def _ensemble_geog2d_code(ens: "Node") -> str | None:
                     best = (k, ccode)
         return best[1] if best else None
 
-    name = ens.str0().strip().lower()
+    name = name.strip().lower()
     for dcode, row in db["geodetic_datum"].items():
         if dcode in members and str(row[2]).strip().lower() == name:
             return geog2d_of(dcode)
-    # member-id set match
-    wkt_members = set()
-    for child in ens.all("MEMBER"):
-        mid = child.find("ID", "AUTHORITY")
-        if mid is not None and mid.str0().upper() == "EPSG":
-            n = mid.nums()
-            if n:
-                wkt_members.add(str(int(n[0])))
-    if wkt_members:
+    if member_ids:
         for dcode, mems in members.items():
-            if wkt_members <= {m for _s, m in mems}:
+            if member_ids <= {m for _s, m in mems}:
                 return geog2d_of(dcode)
     return None

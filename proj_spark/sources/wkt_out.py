@@ -133,16 +133,6 @@ def _axes(cs_code, kind: str) -> tuple[list[str], list[dict]]:
     return w, j
 
 
-def _auth_code(code) -> tuple[str, str]:
-    """Split an authority-qualified registry key ('IAU_2015:49910') into
-    (authority, display code); plain keys are EPSG."""
-    code = str(code)
-    if ":" in code:
-        auth, c = code.split(":", 1)
-        return auth, c
-    return "EPSG", code
-
-
 def _idw(auth: str, code) -> str:
     """WKT ID node; non-numeric codes (PROJ method names, IGNF keys)
     are quoted per the WKT2 grammar."""
@@ -212,7 +202,7 @@ def _ensemble(code) -> "tuple[str, dict] | None":
         mrow = db["geodetic_datum"].get(str(mcode))
         if mrow is None:
             continue
-        mauth, mdisp = _auth_code(str(mcode))
+        mauth, mdisp = E.registry_id(mcode, ("geodetic_datum",))
         wm.append(f"MEMBER[{_q(str(mrow[2]))},{_idw(mauth, mdisp)}]")
         jm.append({"name": str(mrow[2]), "id": _jid(mauth, mdisp)})
     if not wm:
@@ -291,7 +281,7 @@ def epsg_to_wkt2(code, version: str = "2019") -> str:
     use2019 = version == "2019"
     db = E._load()
     code = str(code)
-    auth, disp = _auth_code(code)
+    auth, disp = E.registry_id(code)
     if code in db["geodetic_crs"]:
         row = db["geodetic_crs"][code]
         body, _j, name = _geog_parts(code, ensemble=use2019)
@@ -320,7 +310,7 @@ def epsg_to_wkt2(code, version: str = "2019") -> str:
     if code in db["projected_crs"]:
         row = db["projected_crs"][code]
         base_code = str(row[7])
-        base_auth, base_disp = _auth_code(base_code)
+        base_auth, base_disp = E.registry_id(base_code)
         gbody, _j, gname = _geog_parts(base_code, ensemble=use2019)
         usage = _usage_wkt(code) if use2019 else ""
         wconv, _jc = _conversion(row[9])
@@ -347,7 +337,7 @@ def epsg_to_projjson(code) -> str:
     """PROJJSON (schema v0.7 shapes) for an EPSG CRS code."""
     db = E._load()
     code = str(code)
-    auth, disp = _auth_code(code)
+    auth, disp = E.registry_id(code)
     schema = "https://proj.org/schemas/v0.7/projjson.schema.json"
 
     def _geog_json(gcode: str) -> dict:
@@ -357,7 +347,7 @@ def epsg_to_projjson(code) -> str:
         nodes)."""
         grow = db["geodetic_crs"][gcode]
         _w, jg, _name = _geog_parts(gcode, ensemble=True)
-        gauth, gdisp = _auth_code(gcode)
+        gauth, gdisp = E.registry_id(gcode)
         cs_row = db["coordinate_system"].get(str(grow[6]))
         if cs_row is not None and str(cs_row[2]) == "spherical":
             _ax, jax = _axes(grow[6], "spherical")
@@ -489,7 +479,7 @@ def _u(s: str) -> str:
 
 def _wkt1_auth(code) -> str:
     """WKT1 AUTHORITY node for a (possibly authority-qualified) key."""
-    auth, disp = _auth_code(code)
+    auth, disp = E.registry_id(code)
     return f'AUTHORITY[{_q(auth)},"{disp}"]'
 
 

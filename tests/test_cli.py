@@ -152,6 +152,15 @@ def test_projinfo_single_crs():
     (["+proj=nosuch"], 1),
     (["cs2cs", "EPSG:99999999", "EPSG:4326"], 1),
     (["geod", "+ellps=nosuch"], 1),
+    # a zero, negative or missing major axis is a clean error
+    (["cct", "+proj=merc", "+a=0"], 1),
+    (["cct", "+proj=cart", "+a=0"], 1),
+    (["cct", "+proj=merc", "+R=0"], 1),
+    (["cct", "+proj=merc", "+a=-1"], 1),
+    (["cs2cs", 'GEOGCS["x",DATUM["d",SPHEROID["s",0,0]],PRIMEM["Greenwich",0],'
+      'UNIT["degree",0.0174532925199433]]', "EPSG:4326"], 1),
+    (["projinfo", "foo"], 1),
+    (["cs2cs", "EPSG:4326"], 2),
 ])
 def test_bad_input_is_one_stderr_line(argv, rc, capsys, monkeypatch):
     monkeypatch.setattr("sys.stdin", io.StringIO(""))
@@ -160,3 +169,75 @@ def test_bad_input_is_one_stderr_line(argv, rc, capsys, monkeypatch):
     assert out == ""
     assert len(err.splitlines()) == 1
     assert err.startswith(f"{argv[0] if argv[0] != '+proj=nosuch' else 'cct'}: ")
+
+
+@pytest.mark.parametrize("src,dst,xy", [
+    ("ESRI:102100", "EPSG:4326", (1113194.9, 6274861.4)),
+    ("IGNF:LAMB93", "EPSG:4326", (700000.0, 6600000.0)),
+    ("urn:ogc:def:crs:EPSG::4326", "EPSG:3857", (2.0, 49.0)),
+])
+def test_cs2cs_reads_src_dst_then_files(src, dst, xy, tmp_path, capsys):
+    """The first two operands are the CRSs, whatever their spelling, and
+    the rest are input files."""
+    from proj_spark.plans.pipeline import compile_crs_to_crs
+
+    f = tmp_path / "pts"
+    f.write_text(f"{xy[0]} {xy[1]}\n")
+    assert main(["cs2cs", src, dst, str(f)]) == 0
+    got = [float(v) for v in capsys.readouterr().out.split()]
+    X, Y, _, _ = compile_crs_to_crs(src, dst).fwd_deg(
+        np.array([xy[0]]), np.array([xy[1]]))
+    assert got == pytest.approx([X[0], Y[0]], abs=1e-9)
+
+
+_NRCAN = "NAD83_CSRS_2010_UTM10_CGVD2013_2010"
+
+
+@pytest.mark.parametrize("spellings,registry", [
+    (("EPSG:4258", "epsg:4258", "urn:ogc:def:crs:EPSG::4258"), True),
+    (("ESRI:102100", "urn:ogc:def:crs:ESRI::102100"), False),
+    (("IGNF:RGF93G", "urn:ogc:def:crs:IGNF::RGF93G"), True),
+    (("NKG:ETRF14", "urn:ogc:def:crs:NKG::ETRF14"), True),
+    (("IAU_2015:30100", "IAU:30100", "urn:ogc:def:crs:IAU_2015::30100"), True),
+    ((f"NRCAN:{_NRCAN}", f"urn:ogc:def:coordinateMetadata:NRCAN::{_NRCAN}"),
+     False),
+    (("EPSG:4326", "WKT", "PROJJSON"), True),
+], ids=["epsg", "esri", "ignf", "nkg", "iau", "nrcan", "wkt-projjson"])
+def test_every_surface_reads_every_spelling_alike(spellings, registry,
+                                                   capsys, monkeypatch):
+    """compile_crs_to_crs, projinfo, cs2cs and (for a CRS with a registry
+    code) candidate_operations give one answer for every spelling of a
+    CRS; the WKT and PROJJSON fixtures carry the id EPSG:4326."""
+    import json
+
+    from proj_spark.plans.pipeline import (compile_crs_to_crs,
+                                           crs_registry_code)
+    from proj_spark.sources.epsg_ops import candidate_operations
+    from tests.test_projjson import WGS84_GEOG as PJ_WGS84
+    from tests.test_wkt import WGS84_GEOG
+
+    spellings = [{"WKT": WGS84_GEOG, "PROJJSON": json.dumps(PJ_WGS84)}.get(
+        s, s) for s in spellings]
+
+    def outcome(fn, *args):
+        try:
+            return fn(*args)
+        except Exception as e:
+            return type(e).__name__
+
+    answers = []
+    for s in spellings:
+        pipe = outcome(compile_crs_to_crs, s, spellings[0])
+        if not isinstance(pipe, str):
+            pipe = np.stack(pipe.fwd_deg(np.array([1.0, 2.0]),
+                                         np.array([2.0, 1.0]))[:2]).tolist()
+        assert main(["projinfo", s]) == 0
+        projinfo = capsys.readouterr()
+        monkeypatch.setattr("sys.stdin", io.StringIO("1 2\n2 1\n"))
+        cs2cs = (main(["cs2cs", s, spellings[0]]), capsys.readouterr())
+        key = crs_registry_code(s)
+        assert (key is not None) == registry
+        cands = (outcome(lambda: [c.name for c in candidate_operations(
+            s, spellings[0])]) if registry else None)
+        answers.append((pipe, projinfo, cs2cs, key, cands))
+    assert all(a == answers[0] for a in answers[1:])

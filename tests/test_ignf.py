@@ -82,3 +82,22 @@ def test_ignf_projinfo_cli(capsys):
     assert main(["projinfo", "IGNF:LAMB93"]) == 0
     out = capsys.readouterr().out
     assert "+proj=lcc" in out and "+x_0=700000.0" in out
+
+
+def test_ignf_export_names_its_authority():
+    """WKT2, WKT1 and PROJJSON ids take the authority of the registry
+    row: an IGNF CRS and its IGNF base are IGNF, an EPSG one is EPSG."""
+    import json
+
+    from proj_spark.sources.wkt_out import (epsg_to_projjson, epsg_to_wkt1,
+                                            epsg_to_wkt2)
+
+    for ver in ("2019", "2015"):
+        w = epsg_to_wkt2("LAMB93", version=ver)
+        assert w.endswith('ID["IGNF","LAMB93"]]')
+        assert 'ID["IGNF","RGF93G"]' in w and '"EPSG","LAMB93"' not in w
+    assert 'AUTHORITY["IGNF","LAMB93"]' in epsg_to_wkt1("LAMB93")
+    j = json.loads(epsg_to_projjson("LAMB93"))
+    assert j["id"] == {"authority": "IGNF", "code": "LAMB93"}
+    assert j["base_crs"]["id"] == {"authority": "IGNF", "code": "RGF93G"}
+    assert epsg_to_wkt2("2154").endswith('ID["EPSG",2154]]')

@@ -1,8 +1,10 @@
-"""Property-based fuzzing (hypothesis) of the numerical cores.
+"""Property-based fuzzing (hypothesis) of the numerical cores and the CRS
+input surface.
 
 These don't pin values — the gie corpus does that — they pin INVARIANTS
 over the whole input domain: inverse∘forward identity, geodesic triangle
-closure, symmetry under endpoint swap, and graceful NaN propagation.
+closure, symmetry under endpoint swap, graceful NaN propagation, and
+documented exception types for malformed CRS text.
 Every property draws a fixed example set (``derandomize=True``), so a run
 is reproducible.
 """
@@ -10,11 +12,12 @@ is reproducible.
 import math
 
 import numpy as np
-from hypothesis import assume, given, settings
+from hypothesis import assume, example, given, settings
 from hypothesis import strategies as st
 
 from proj_spark.kernels import karney as K
-from proj_spark.plans.pipeline import compile_pipeline
+from proj_spark.plans.pipeline import (Pipeline, compile_crs_to_crs,
+                                       compile_pipeline)
 
 WGS84 = K.geod_consts(6378137.0, 1 / 298.257223563)
 
@@ -91,3 +94,26 @@ def test_polygon_area_orientation_antisymmetry(ring):
     flipped = min(abs(a_fwd + a_rev), abs(abs(a_fwd + a_rev) - area0))
     assert flipped < max(1e-3 * max(abs(a_fwd), 1.0), 1.0)
     assert abs(per_fwd - per_rev) < 1e-3
+
+
+_CRS_PREFIXES = [
+    "EPSG:", "ESRI:", "IGNF:", "NKG:", "IAU_2015:", "NRCAN:",
+    "urn:ogc:def:crs:EPSG::", "urn:ogc:def:coordinateOperation:EPSG::",
+    "{", "GEOGCRS[", 'GEOGCS["x",DATUM["d",SPHEROID["s",', "+proj=merc +a=",
+]
+
+
+@settings(max_examples=300, deadline=None, derandomize=True)
+@given(st.sampled_from(_CRS_PREFIXES), st.text(max_size=30))
+@example('GEOGCS["x",DATUM["d",SPHEROID["s",',
+         '0,0]],PRIMEM["Greenwich",0],UNIT["degree",0.0174532925199433]]')
+@example("{", '"type":"GeographicCRS","datum":1}')
+@example("+proj=merc +a=", "1 +rf=0.5")
+def test_crs_text_compiles_or_raises_a_documented_error(prefix, tail):
+    """Malformed CRS text never escapes as a traceback: compile_crs_to_crs
+    returns a Pipeline or raises one of the types the CLI reports."""
+    try:
+        assert isinstance(compile_crs_to_crs(prefix + tail, "EPSG:4326"),
+                          Pipeline)
+    except (ValueError, KeyError, NotImplementedError):
+        pass
