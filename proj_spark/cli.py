@@ -246,7 +246,7 @@ def run_projinfo(argv, stdout) -> int:
         from proj_spark.plans.pipeline import (crs_input, crs_registry_code,
                                                crs_spec)
 
-        kind, auth, code = crs_input(crs[0])
+        kind, auth, code = inp = crs_input(crs[0])
         if kind == "operation":
             from proj_spark.sources.epsg_ops import operation_by_urn
 
@@ -256,7 +256,7 @@ def run_projinfo(argv, stdout) -> int:
                   f"{f'{acc} m' if acc >= 0 else 'unknown accuracy'}",
                   file=stdout)
         else:
-            spec, epoch = crs_spec(crs[0])
+            spec, epoch = crs_spec(inp)
             if epoch is not None:
                 print(f"Coordinate epoch: {epoch}", file=stdout)
         # deprecated CRS: still resolves (reference behavior) but the
@@ -272,7 +272,7 @@ def run_projinfo(argv, stdout) -> int:
                           "EPSG:" + r for r in reps) + ")" if reps else ""),
                       file=stdout)
         # the WKT2/WKT1/PROJJSON writers read the registry row
-        key = crs_registry_code(crs[0]) if fmts != ["PROJ"] else None
+        key = crs_registry_code(inp) if fmts != ["PROJ"] else None
         for fmt in fmts:
             if fmt == "PROJ":
                 print("PROJ string:", file=stdout)
@@ -284,8 +284,8 @@ def run_projinfo(argv, stdout) -> int:
                       file=sys.stderr)
                 return 2
             if key is None:
-                print(f"{fmt.split('_')[0]} output needs a registry CRS "
-                      "code", file=sys.stderr)
+                print(f"projinfo: {fmt.split('_')[0]} output needs a "
+                      "registry CRS code", file=sys.stderr)
                 return 2
             from proj_spark.sources import wkt_out
 

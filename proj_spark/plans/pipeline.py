@@ -2586,21 +2586,23 @@ def _parse_urn(urn: str) -> tuple[str, str, str]:
 
 
 # the authority prefixes a CRS code may carry, each mapped to the one its
-# registry rows are stored under; a code is one token (or a compound
-# "HHHH+VVVV" pair), so it cannot splice parameters into a +init string
+# registry rows are stored under; a code is one token of the registry's
+# code characters (IGNF compounds read 'RGF93G.IGN69') or a compound
+# "HHHH+VVVV" pair, so it cannot splice parameters into a +init string
 _CRS_AUTHS = {"EPSG": "EPSG", "ESRI": "ESRI", "IGNF": "IGNF", "NKG": "NKG",
               "IAU_2015": "IAU_2015", "IAU": "IAU_2015", "NRCAN": "NRCAN"}
-_CRS_CODE = re.compile(r"\w+(?:\+\w+)?", re.A)
+_CRS_CODE = re.compile(r"[\w.]+(?:\+[\w.]+)?", re.A)
 
 
-def crs_input(text: str) -> tuple[str, str | None, str | None]:
+def crs_input(text: str) -> tuple[str, str | None, str]:
     """(kind, authority, code) of a user's CRS text — the one decision
     reference io.cpp createFromUserInput makes for every CRS-taking
     surface. ``kind`` is "code" (AUTH:CODE or a crs URN; a bare registry
     key such as '4230' has authority None), "metadata" (a CRS plus a
     coordinate epoch: NRCAN codes and coordinateMetadata URNs),
     "operation" (a coordinateOperation URN), "wkt", "projjson" or
-    "proj"; authority and code are None for the last three."""
+    "proj"; for the last three the authority is None and the code is the
+    stripped text. crs_spec and crs_registry_code read this triple."""
     from proj_spark.sources.projjson import is_projjson
     from proj_spark.sources.wkt import is_wkt
 
@@ -2612,15 +2614,15 @@ def crs_input(text: str) -> tuple[str, str | None, str | None]:
         if kind is None:
             raise ValueError(f"URN is not a CRS: {c!r}")
     elif is_wkt(c):
-        return "wkt", None, None
+        return "wkt", None, c
     elif is_projjson(c):
-        return "projjson", None, None
+        return "projjson", None, c
     elif m := re.fullmatch(r"(\w+):(.*)", c, re.S | re.A):
         kind, auth, code = "code", m[1], m[2]
     elif _CRS_CODE.fullmatch(c):
         return "code", None, c
     elif "+" in c or "=" in c:
-        return "proj", None, None
+        return "proj", None, c
     else:
         raise ValueError(f"unsupported CRS {c!r}")
     code = code.strip()
@@ -2634,48 +2636,49 @@ def crs_input(text: str) -> tuple[str, str | None, str | None]:
     return ("metadata" if auth == "NRCAN" else kind), auth, code
 
 
-def crs_registry_code(text: str) -> str | None:
-    """The bundled registry's key for a CRS spelling, or None: the bare
-    code for EPSG, IGNF and NKG, 'IAU_2015:n' for IAU (its codes collide
-    with EPSG's), and the identified code of a WKT or PROJJSON CRS."""
-    kind, auth, code = crs_input(text)
+def crs_registry_code(crs: tuple[str, str | None, str]) -> str | None:
+    """The bundled registry's key for a crs_input triple, or None: the
+    bare code for EPSG, IGNF and NKG, 'IAU_2015:n' for IAU (its codes
+    collide with EPSG's), and the identified code of a WKT or PROJJSON
+    CRS."""
+    kind, auth, code = crs
     if kind == "wkt":
         from proj_spark.sources.wkt import crs_epsg_code
-        return crs_epsg_code(text.strip())
+        return crs_epsg_code(code)
     if kind == "projjson":
         from proj_spark.sources.projjson import crs_epsg_code
-        return crs_epsg_code(text)
+        return crs_epsg_code(code)
     if kind != "code" or auth == "ESRI":
         return None
     return f"IAU_2015:{code}" if auth == "IAU_2015" else code
 
 
-def crs_spec(text: str) -> tuple[str, float | None]:
-    """(proj-string, coordinate epoch) for any CRS spelling crs_input
-    reads; the epoch is None except for coordinate metadata, where it
-    rides on the t lane (callers pass it)."""
-    kind, auth, code = crs_input(text)
-    c = text.strip()
+def crs_spec(crs: tuple[str, str | None, str]) -> tuple[str, float | None]:
+    """(proj-string, coordinate epoch) for a crs_input triple; the epoch
+    is None except for coordinate metadata, where it rides on the t lane
+    (callers pass it)."""
+    kind, auth, code = crs
     if kind == "proj":
-        return c, None
+        return code, None
     if kind == "wkt":
         from proj_spark.sources.wkt import wkt_to_proj
-        return wkt_to_proj(c), None
+        return wkt_to_proj(code), None
     if kind == "projjson":
         from proj_spark.sources.projjson import projjson_to_proj
-        return projjson_to_proj(c), None
+        return projjson_to_proj(code), None
     if kind == "metadata":
         from proj_spark.sources.epsg import coordinate_metadata
         return coordinate_metadata(code)
     if kind == "operation":
-        raise ValueError(f"{c!r} is an operation, not a CRS")
+        raise ValueError(f"{auth}:{code} is an operation, not a CRS")
     if auth == "ESRI":
         from proj_spark.sources.esri import esri_to_proj
         return esri_to_proj(code), None
     if auth is None:
-        raise ValueError(f"unsupported CRS {c!r}: a code needs its authority")
+        raise ValueError(f"unsupported CRS {code!r}: a code needs its "
+                         "authority")
     from proj_spark.sources.epsg import epsg_to_proj
-    return epsg_to_proj(crs_registry_code(c)), None
+    return epsg_to_proj(crs_registry_code(crs)), None
 
 
 def compile_crs_to_crs(src: str, dst: str) -> Pipeline:
@@ -2697,9 +2700,9 @@ def compile_crs_to_crs(src: str, dst: str) -> Pipeline:
         through the conversion alone). An EPSG code takes the +init
         route: the _INIT_DEFS codes keep their legacy definitions and do
         not load the registry."""
-        kind, auth, code = crs_input(crs)
+        kind, auth, code = inp = crs_input(crs)
         spec = (f"+init=epsg:{code}" if kind == "code" and auth == "EPSG"
-                else crs_spec(crs)[0])
+                else crs_spec(inp)[0])
         params = parse_params(tokenize(spec))
         geoc_ell = None
         if "geoc" in params and params.get("proj") != "geoc":
@@ -2747,13 +2750,13 @@ def compile_pipeline(spec: str) -> Pipeline:
     operation by code and compiles it in its published domain;
     ``urn:ogc:def:crs:AUTH::CODE`` compiles the CRS's proj-string."""
     if spec.lstrip().lower().startswith("urn:"):
-        kind, _auth, code = crs_input(spec)
+        kind, _auth, code = inp = crs_input(spec)
         if kind == "operation":
             from proj_spark.sources.epsg_ops import operation_by_urn
 
             spec, _op = operation_by_urn(code)
         else:
-            spec = crs_spec(spec)[0]
+            spec = crs_spec(inp)[0]
     tokens = tokenize(spec)
     # split into [global] step [step ...] on the bare "step" sentinel
     groups: list[list[str]] = [[]]

@@ -684,18 +684,6 @@ def crs_usages(code: str) -> list[tuple[str, str, tuple | None]]:
     return out
 
 
-def registry_id(key, tables=("geodetic_crs", "projected_crs",
-                             "compound_crs")) -> tuple[str, str]:
-    """(authority, code) of a registry key as its row reads them: the
-    authority is the row's first column (EPSG, IGNF, NKG, IAU_2015), and an
-    authority-qualified key ('IAU_2015:49910') shows its bare code. A key
-    with no row in ``tables`` is EPSG."""
-    key = str(key)
-    db = _load()
-    row = next((db[t][key] for t in tables if key in db[t]), None)
-    return ("EPSG" if row is None else str(row[0])), key.split(":")[-1]
-
-
 def coordinate_metadata(code: str) -> tuple[str, float | None]:
     """(proj spec, coordinate epoch) for a coordinate_metadata row
     (reference data/sql/nrcan.sql, proj_db_table_defs.sql; the

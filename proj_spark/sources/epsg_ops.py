@@ -425,7 +425,7 @@ def _geog_only(code: str) -> str:
     spec = E.epsg_to_proj(code)
     if not spec.startswith("+proj=longlat"):
         raise NotImplementedError(
-            f"{':'.join(E.registry_id(code))} is not a geographic 2D CRS "
+            f"registry CRS {code} is not a geographic 2D CRS "
             f"(got {spec.split()[0]})")
     return spec
 
@@ -610,10 +610,10 @@ def candidate_operations(src: str, dst: str, *, hub: str = "4326",
     its ID node, the ESRI name alias table or its datum ensemble —
     io.cpp's late-binding identification)."""
     from proj_spark.plans.dispatch import Candidate
-    from proj_spark.plans.pipeline import crs_registry_code
+    from proj_spark.plans.pipeline import crs_input, crs_registry_code
 
     def norm(c: str) -> str:
-        key = crs_registry_code(c)
+        key = crs_registry_code(crs_input(c))
         if key is None:
             raise ValueError(
                 f"{c!r} has no registry CRS code: registry dispatch needs "

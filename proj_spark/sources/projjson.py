@@ -304,8 +304,11 @@ def crs_epsg_code(src: str | dict) -> str | None:
     if code is not None:
         return code
     ens = obj.get("datum_ensemble")
-    if isinstance(ens, dict) and obj.get("type", "").startswith("Geographic"):
-        ids = {_epsg_id(m) for m in ens.get("members", [])} - {None}
+    if (isinstance(ens, dict)
+            and str(obj.get("type", "")).startswith("Geographic")):
+        members = ens.get("members")
+        ids = ({_epsg_id(m) for m in members} - {None}
+               if isinstance(members, list) else set())
         return _ensemble_geog2d_code(str(ens.get("name", "")), ids)
     return None
 

@@ -784,7 +784,7 @@ def crs_epsg_code(src: "str | Node") -> str | None:
     ids = root.find("ID", "AUTHORITY")
     if ids is not None and ids.str0().upper() == "EPSG":
         n = ids.nums()
-        if n:
+        if n and math.isfinite(n[0]):
             return str(int(n[0]))
         strs = [a for a in ids.args if isinstance(a, str)]
         if len(strs) >= 2 and strs[1].strip().isdigit():

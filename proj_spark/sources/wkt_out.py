@@ -134,15 +134,16 @@ def _axes(cs_code, kind: str) -> tuple[list[str], list[dict]]:
 
 
 def _idw(auth: str, code) -> str:
-    """WKT ID node; non-numeric codes (PROJ method names, IGNF keys)
-    are quoted per the WKT2 grammar."""
-    c = str(code)
+    """WKT ID node for a registry key (an authority-qualified key such as
+    'IAU_2015:49910' shows its bare code); non-numeric codes (PROJ method
+    names, IGNF keys) are quoted per the WKT2 grammar."""
+    c = str(code).split(":")[-1]
     body = c if c.lstrip("-").isdigit() else _q(c)
     return f"ID[{_q(auth)},{body}]"
 
 
 def _jid(auth: str, code) -> dict:
-    c = str(code)
+    c = str(code).split(":")[-1]
     return {"authority": auth, "code": int(c) if c.isdigit() else c}
 
 
@@ -202,9 +203,8 @@ def _ensemble(code) -> "tuple[str, dict] | None":
         mrow = db["geodetic_datum"].get(str(mcode))
         if mrow is None:
             continue
-        mauth, mdisp = E.registry_id(mcode, ("geodetic_datum",))
-        wm.append(f"MEMBER[{_q(str(mrow[2]))},{_idw(mauth, mdisp)}]")
-        jm.append({"name": str(mrow[2]), "id": _jid(mauth, mdisp)})
+        wm.append(f"MEMBER[{_q(str(mrow[2]))},{_idw(mrow[0], mcode)}]")
+        jm.append({"name": str(mrow[2]), "id": _jid(mrow[0], mcode)})
     if not wm:
         return None
     w = (f"ENSEMBLE[{_q(name)}," + ",".join(wm) + f",{ew},"
@@ -281,9 +281,9 @@ def epsg_to_wkt2(code, version: str = "2019") -> str:
     use2019 = version == "2019"
     db = E._load()
     code = str(code)
-    auth, disp = E.registry_id(code)
     if code in db["geodetic_crs"]:
         row = db["geodetic_crs"][code]
+        own_id = _idw(row[0], code)
         body, _j, name = _geog_parts(code, ensemble=use2019)
         usage = _usage_wkt(code) if use2019 else ""
         if row[4] == "geocentric":
@@ -293,8 +293,7 @@ def epsg_to_wkt2(code, version: str = "2019") -> str:
                  "LENGTHUNIT[\"metre\",1]],AXIS[\"(Y)\",geocentricY,"
                  "ORDER[2],LENGTHUNIT[\"metre\",1]],AXIS[\"(Z)\","
                  "geocentricZ,ORDER[3],LENGTHUNIT[\"metre\",1]]")
-            return (f"GEODCRS[{_q(name)},{body},{cs}{usage},"
-                    f"{_idw(auth, disp)}]")
+            return f"GEODCRS[{_q(name)},{body},{cs}{usage},{own_id}]"
         cs_row = db["coordinate_system"].get(str(row[6]))
         if cs_row is not None and str(cs_row[2]) == "spherical":
             # spherical planetocentric (IAU ocentric): GEODCRS with a
@@ -302,15 +301,14 @@ def epsg_to_wkt2(code, version: str = "2019") -> str:
             # never spells these GEOGCRS (crs.cpp isGeographic is false)
             ax, _ = _axes(row[6], "spherical")
             return (f"GEODCRS[{_q(name)},{body},CS[spherical,{len(ax)}],"
-                    + ",".join(ax) + f"{usage},{_idw(auth, disp)}]")
+                    + ",".join(ax) + f"{usage},{own_id}]")
         kw = "GEOGCRS" if use2019 else "GEODCRS"
         ax, _ = _axes(row[6], "ellipsoidal")
         return (f"{kw}[{_q(name)},{body},CS[ellipsoidal,{len(ax)}],"
-                + ",".join(ax) + f"{usage},{_idw(auth, disp)}]")
+                + ",".join(ax) + f"{usage},{own_id}]")
     if code in db["projected_crs"]:
         row = db["projected_crs"][code]
         base_code = str(row[7])
-        base_auth, base_disp = E.registry_id(base_code)
         gbody, _j, gname = _geog_parts(base_code, ensemble=use2019)
         usage = _usage_wkt(code) if use2019 else ""
         wconv, _jc = _conversion(row[9])
@@ -326,10 +324,10 @@ def epsg_to_wkt2(code, version: str = "2019") -> str:
         base_kw = ("BASEGEODCRS" if (base_ocentric or not use2019)
                    else "BASEGEOGCRS")
         return (f"PROJCRS[{_q(row[2])},{base_kw}[{_q(gname)},{gbody},"
-                f"{_idw(base_auth, base_disp)}],{wconv},"
+                f"{_idw(row[6], base_code)}],{wconv},"
                 f"CS[Cartesian,{len(ax)}]," + ",".join(ax)
-                + f"{usage},{_idw(auth, disp)}]")
-    raise KeyError(f"EPSG:{code} is not an exportable CRS "
+                + f"{usage},{_idw(row[0], code)}]")
+    raise KeyError(f"registry CRS {code} is not an exportable CRS "
                    f"(geographic/geocentric/projected)")
 
 
@@ -337,7 +335,6 @@ def epsg_to_projjson(code) -> str:
     """PROJJSON (schema v0.7 shapes) for an EPSG CRS code."""
     db = E._load()
     code = str(code)
-    auth, disp = E.registry_id(code)
     schema = "https://proj.org/schemas/v0.7/projjson.schema.json"
 
     def _geog_json(gcode: str) -> dict:
@@ -347,19 +344,18 @@ def epsg_to_projjson(code) -> str:
         nodes)."""
         grow = db["geodetic_crs"][gcode]
         _w, jg, _name = _geog_parts(gcode, ensemble=True)
-        gauth, gdisp = E.registry_id(gcode)
         cs_row = db["coordinate_system"].get(str(grow[6]))
         if cs_row is not None and str(cs_row[2]) == "spherical":
             _ax, jax = _axes(grow[6], "spherical")
             return {"type": "GeodeticCRS", **jg,
                     "coordinate_system": {"subtype": "spherical",
                                           "axis": jax},
-                    "id": _jid(gauth, gdisp)}
+                    "id": _jid(grow[0], gcode)}
         _ax, jax = _axes(grow[6], "ellipsoidal")
         return {"type": "GeographicCRS", **jg,
                 "coordinate_system": {"subtype": "ellipsoidal",
                                       "axis": jax},
-                "id": _jid(gauth, gdisp)}
+                "id": _jid(grow[0], gcode)}
 
     if code in db["geodetic_crs"]:
         row = db["geodetic_crs"][code]
@@ -375,7 +371,7 @@ def epsg_to_projjson(code) -> str:
             obj = {"$schema": schema, "type": "GeodeticCRS", **j,
                    "coordinate_system": {"subtype": "Cartesian",
                                          "axis": jax},
-                   "id": _jid(auth, disp)}
+                   "id": _jid(row[0], code)}
             return json.dumps(_jusage(code, obj))
         return json.dumps(_jusage(code, {"$schema": schema,
                                          **_geog_json(code)}))
@@ -388,9 +384,9 @@ def epsg_to_projjson(code) -> str:
                "base_crs": _geog_json(str(row[7])),
                "conversion": jc,
                "coordinate_system": {"subtype": "Cartesian", "axis": jax},
-               "id": _jid(auth, disp)}
+               "id": _jid(row[0], code)}
         return json.dumps(_jusage(code, obj))
-    raise KeyError(f"EPSG:{code} is not an exportable CRS")
+    raise KeyError(f"registry CRS {code} is not an exportable CRS")
 
 
 # ------------------------------------------------------------ WKT1 export
@@ -477,10 +473,10 @@ def _u(s: str) -> str:
     return out.strip("_")
 
 
-def _wkt1_auth(code) -> str:
-    """WKT1 AUTHORITY node for a (possibly authority-qualified) key."""
-    auth, disp = E.registry_id(code)
-    return f'AUTHORITY[{_q(auth)},"{disp}"]'
+def _wkt1_auth(auth: str, code) -> str:
+    """WKT1 AUTHORITY node for a registry key (an authority-qualified key
+    shows its bare code)."""
+    return f'AUTHORITY[{_q(auth)},"{str(code).split(":")[-1]}"]'
 
 
 def _wkt1_geogcs(code, esri: bool, standalone: bool = False) -> str:
@@ -518,15 +514,15 @@ def _wkt1_geogcs(code, esri: bool, standalone: bool = False) -> str:
         unit = (f'UNIT["degree",{_DEG_PER_RAD},AUTHORITY["EPSG","9122"]]')
     sph = f'SPHEROID[{_q(ell_nm)},{_num(a)},{_num(rf)}'
     if not esri:
-        sph += ',' + _wkt1_auth(drow[5])
+        sph += ',' + _wkt1_auth(drow[4], drow[5])
     sph += "]"
     datum = f"DATUM[{_q(dnm)},{sph}"
     if not esri:
-        datum += ',' + _wkt1_auth(row[8])
+        datum += ',' + _wkt1_auth(row[7], row[8])
     datum += "]"
     primem = f"PRIMEM[{_q(pm_name)},{_num(pm_deg)}"
     if not esri:
-        primem += ',' + _wkt1_auth(drow[7])
+        primem += ',' + _wkt1_auth(drow[6], drow[7])
     primem += "]"
     body = f"GEOGCS[{_q(gname)},{datum},{primem},{unit}"
     ax_rows = sorted(db.get("axis_all", {}).get(str(row[6]), []),
@@ -545,7 +541,7 @@ def _wkt1_geogcs(code, esri: bool, standalone: bool = False) -> str:
                 nm = str(r[2]).split()[-1].capitalize()
                 body += f",AXIS[{_q(nm)},{str(r[4]).upper()}]"
     if not esri:
-        body += ',' + _wkt1_auth(code)
+        body += ',' + _wkt1_auth(row[0], code)
     return body + "]"
 
 
@@ -568,7 +564,7 @@ def epsg_to_wkt1(code, dialect: str = "GDAL") -> str:
                 "WKT1 has no geocentric CRS form (use WKT2)")
         return _wkt1_geogcs(code, esri, standalone=True)
     if code not in db["projected_crs"]:
-        raise KeyError(f"EPSG:{code} is not an exportable CRS")
+        raise KeyError(f"registry CRS {code} is not an exportable CRS")
     row = db["projected_crs"][code]
     geog = _wkt1_geogcs(str(row[7]), esri)
     conv = db["conversion"].get(str(row[9]))
@@ -639,4 +635,4 @@ def epsg_to_wkt1(code, dialect: str = "GDAL") -> str:
     return (f"PROJCS[{_q(row[2])},{geog},"
             f"PROJECTION[{_q(meth_name)}],"
             + ",".join(params)
-            + f",{unit}{axes}{ext}," + _wkt1_auth(code) + "]")
+            + f",{unit}{axes}{ext}," + _wkt1_auth(row[0], code) + "]")

@@ -137,6 +137,13 @@ def test_projinfo_single_crs():
     assert "+geoidgrids=" in out.getvalue()
 
 
+_WKT_ID_INF = ('GEOGCRS["x",DATUM["d",ELLIPSOID["e",6378137,298.257223563]],'
+               'CS[ellipsoidal,2],AXIS["lat",north],AXIS["lon",east],'
+               'ANGLEUNIT["degree",0.0174532925199433],ID["EPSG",1e400]]')
+_PJ_MEMBERS_INT = ('{"type":"GeographicCRS",'
+                   '"datum_ensemble":{"name":"y","members":3}}')
+
+
 @pytest.mark.parametrize("argv,rc", [
     # usage errors: an option without its value, or a malformed value
     (["cct", "-d"], 2),
@@ -161,6 +168,12 @@ def test_projinfo_single_crs():
       'UNIT["degree",0.0174532925199433]]', "EPSG:4326"], 1),
     (["projinfo", "foo"], 1),
     (["cs2cs", "EPSG:4326"], 2),
+    # a non-finite top-level id and a PROJJSON ensemble whose members are
+    # not a list identify no registry CRS
+    (["projinfo", "-s", _WKT_ID_INF, "-t", "EPSG:4326"], 1),
+    (["projinfo", "-o", "WKT2", _WKT_ID_INF], 2),
+    (["projinfo", "-s", _PJ_MEMBERS_INT, "-t", "EPSG:4326"], 1),
+    (["projinfo", "-o", "WKT2", _PJ_MEMBERS_INT], 1),
 ])
 def test_bad_input_is_one_stderr_line(argv, rc, capsys, monkeypatch):
     monkeypatch.setattr("sys.stdin", io.StringIO(""))
@@ -197,12 +210,14 @@ _NRCAN = "NAD83_CSRS_2010_UTM10_CGVD2013_2010"
     (("EPSG:4258", "epsg:4258", "urn:ogc:def:crs:EPSG::4258"), True),
     (("ESRI:102100", "urn:ogc:def:crs:ESRI::102100"), False),
     (("IGNF:RGF93G", "urn:ogc:def:crs:IGNF::RGF93G"), True),
+    (("IGNF:RGF93G.IGN69", "urn:ogc:def:crs:IGNF::RGF93G.IGN69"), True),
     (("NKG:ETRF14", "urn:ogc:def:crs:NKG::ETRF14"), True),
     (("IAU_2015:30100", "IAU:30100", "urn:ogc:def:crs:IAU_2015::30100"), True),
     ((f"NRCAN:{_NRCAN}", f"urn:ogc:def:coordinateMetadata:NRCAN::{_NRCAN}"),
      False),
     (("EPSG:4326", "WKT", "PROJJSON"), True),
-], ids=["epsg", "esri", "ignf", "nkg", "iau", "nrcan", "wkt-projjson"])
+], ids=["epsg", "esri", "ignf", "ignf-compound", "nkg", "iau", "nrcan",
+        "wkt-projjson"])
 def test_every_surface_reads_every_spelling_alike(spellings, registry,
                                                    capsys, monkeypatch):
     """compile_crs_to_crs, projinfo, cs2cs and (for a CRS with a registry
@@ -210,7 +225,7 @@ def test_every_surface_reads_every_spelling_alike(spellings, registry,
     CRS; the WKT and PROJJSON fixtures carry the id EPSG:4326."""
     import json
 
-    from proj_spark.plans.pipeline import (compile_crs_to_crs,
+    from proj_spark.plans.pipeline import (compile_crs_to_crs, crs_input,
                                            crs_registry_code)
     from proj_spark.sources.epsg_ops import candidate_operations
     from tests.test_projjson import WGS84_GEOG as PJ_WGS84
@@ -235,7 +250,7 @@ def test_every_surface_reads_every_spelling_alike(spellings, registry,
         projinfo = capsys.readouterr()
         monkeypatch.setattr("sys.stdin", io.StringIO("1 2\n2 1\n"))
         cs2cs = (main(["cs2cs", s, spellings[0]]), capsys.readouterr())
-        key = crs_registry_code(s)
+        key = crs_registry_code(crs_input(s))
         assert (key is not None) == registry
         cands = (outcome(lambda: [c.name for c in candidate_operations(
             s, spellings[0])]) if registry else None)
