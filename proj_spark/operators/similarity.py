@@ -120,57 +120,12 @@ def rhp_band_keys(
                      _keys(F.col(vec_col)).alias("bks"))
 
 
-def rhp_lsh_topk(
-    df: DataFrame, k: int, dim: int, *,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    bands: int = 16, bits: int = None, block_bits: int = None,
-    target_bucket: int = 16, seed: int = 0x5EED, n_hint: int = None,
-) -> DataFrame:
-    """Approximate self top-k: candidates share >= 1 of ``bands`` band
-    keys; exact cosine re-rank on candidates. Recall rises with bands and
-    falls with block_bits; measured against cosine_self_topk in tests.
-
-    ``block_bits`` defaults ADAPTIVELY to ~log2(n / target_bucket): bucket
-    occupancy — and with it the per-query candidate count — stays bounded
-    as n grows, so the candidate join is O(n * bands * target_bucket),
-    never the O(n^2/buckets) cliff a fixed block size hits at scale.
-    (``bits`` kept as a legacy alias: block_bits = bits // bands.)
-
-    ``n_hint``: approximate row count used for the adaptive block_bits —
-    pass it (e.g. from source metadata) to skip the ``df.count()``
-    action; block_bits only needs log2(n) so any same-magnitude estimate
-    gives the identical plan."""
-    import math as _math
-
-    if block_bits is None:
-        if bits is not None:
-            block_bits = max(1, bits // bands)
-        else:
-            n = n_hint if n_hint is not None else df.count()
-            block_bits = min(24, max(3, _math.ceil(
-                _math.log2(max(n, 2) / target_bucket))))
-    keyed = rhp_band_keys(df, dim, id_col=id_col, vec_col=vec_col,
-                          bands=bands, block_bits=block_bits, seed=seed)
-    expl = keyed.select(
-        F.col(id_col), F.col(vec_col),
-        F.posexplode(F.col("bks")).alias("band", "bk"))
-    # multiprobe (query side only): also probe every Hamming-1 bucket —
-    # one sign-flip of a hyperplane is the most likely quantization miss
-    # for a true neighbor, so this multiplies per-band hit probability
-    # ~(1 + block_bits * (1-p)/p)x while the candidate volume stays
-    # O(n * bands * block_bits * bucket) — linear in n, no n^2 cliff
-    probes = F.array(F.col("bk"), *[
-        F.col("bk").bitwiseXOR(F.lit(1 << j)) for j in range(block_bits)])
-    # candidate pairs carry ONLY ids through the bucket join + dedup
-    # shuffles; the (heavy) embedding arrays are attached afterwards with
-    # two id-keyed joins against the n-row base table
-    left = expl.select(F.col(id_col).alias("id_a"), "band",
-                       F.explode(probes).alias("bk"))
-    right = expl.select(F.col(id_col).alias("id_b"), "band", "bk")
-    pairs = (left.join(right, ["band", "bk"])
-             .filter(F.col("id_a") != F.col("id_b"))
-             .select("id_a", "id_b")
-             .dropDuplicates(["id_a", "id_b"]))
+def _rerank_topk(pairs: DataFrame, df: DataFrame, k: int, id_col: str,
+                 vec_col: str) -> DataFrame:
+    """Exact cosine re-rank of (id_a, id_b) candidate pairs and the
+    per-query top-k window. The pairs carry ONLY ids through the
+    candidate shuffles; the (heavy) embedding arrays are attached here
+    with two id-keyed joins against the n-row base table."""
     base = df.select(F.col(id_col), F.col(vec_col))
     # id_b join first, id_a join LAST: the second join leaves the data
     # hash-partitioned on id_a, which the top-k window below partitions
@@ -187,13 +142,62 @@ def rhp_lsh_topk(
         B = _normalize(_as_matrix(vb))
         return pd.Series(np.sum(A * B, axis=1))
 
-    w = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(), F.col("id_b").asc())
+    w = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(),
+                                           F.col("id_b").asc())
     return (
         cands.withColumn("cosine", _cos(F.col("va"), F.col("vb")))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(F.col("id_a").alias("qid"), F.col("id_b").alias("rid"), "cosine", "rank")
+        .select(F.col("id_a").alias("qid"), F.col("id_b").alias("rid"),
+                "cosine", "rank")
     )
+
+
+def rhp_lsh_topk(
+    df: DataFrame, k: int, dim: int, *,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+    bands: int = 16, block_bits: int = None,
+    target_bucket: int = 16, seed: int = 0x5EED, n_hint: int = None,
+) -> DataFrame:
+    """Approximate self top-k: candidates share >= 1 of ``bands`` band
+    keys; exact cosine re-rank on candidates. Recall rises with bands and
+    falls with block_bits; measured against cosine_self_topk in tests.
+
+    ``block_bits`` defaults ADAPTIVELY to ~log2(n / target_bucket): bucket
+    occupancy — and with it the per-query candidate count — stays bounded
+    as n grows, so the candidate join is O(n * bands * target_bucket),
+    never the O(n^2/buckets) cliff a fixed block size hits at scale.
+
+    ``n_hint``: approximate row count used for the adaptive block_bits —
+    pass it (e.g. from source metadata) to skip the ``df.count()``
+    action; block_bits only needs log2(n) so any same-magnitude estimate
+    gives the identical plan."""
+    import math as _math
+
+    if block_bits is None:
+        n = n_hint if n_hint is not None else df.count()
+        block_bits = min(24, max(3, _math.ceil(
+            _math.log2(max(n, 2) / target_bucket))))
+    keyed = rhp_band_keys(df, dim, id_col=id_col, vec_col=vec_col,
+                          bands=bands, block_bits=block_bits, seed=seed)
+    expl = keyed.select(
+        F.col(id_col), F.col(vec_col),
+        F.posexplode(F.col("bks")).alias("band", "bk"))
+    # multiprobe (query side only): also probe every Hamming-1 bucket —
+    # one sign-flip of a hyperplane is the most likely quantization miss
+    # for a true neighbor, so this multiplies per-band hit probability
+    # ~(1 + block_bits * (1-p)/p)x while the candidate volume stays
+    # O(n * bands * block_bits * bucket) — linear in n, no n^2 cliff
+    probes = F.array(F.col("bk"), *[
+        F.col("bk").bitwiseXOR(F.lit(1 << j)) for j in range(block_bits)])
+    left = expl.select(F.col(id_col).alias("id_a"), "band",
+                       F.explode(probes).alias("bk"))
+    right = expl.select(F.col(id_col).alias("id_b"), "band", "bk")
+    pairs = (left.join(right, ["band", "bk"])
+             .filter(F.col("id_a") != F.col("id_b"))
+             .select("id_a", "id_b")
+             .dropDuplicates(["id_a", "id_b"]))
+    return _rerank_topk(pairs, df, k, id_col, vec_col)
 
 
 def kmeans_codebook(
@@ -301,8 +305,7 @@ def ivf_topk(
                         sample_rows=sample_rows, seed=seed, n_hint=n)
     assigned = ivf_assign(df.select(F.col(id_col), F.col(vec_col)), C,
                           max(nprobe, n_assign), vec_col=vec_col)
-    # ids only through the join (embeddings attached after, same
-    # rationale as rhp_lsh_topk)
+    # ids only through the join (_rerank_topk attaches the embeddings)
     data = assigned.select(
         F.col(id_col).alias("id_b"),
         F.explode(F.slice(F.col("ivf_lists"), 1, n_assign)).alias("list_id"))
@@ -314,28 +317,7 @@ def ivf_topk(
              .select("id_a", "id_b"))
     if n_assign > 1:  # multi-assigned pairs can meet in several lists
         pairs = pairs.dropDuplicates(["id_a", "id_b"])
-    base = df.select(F.col(id_col), F.col(vec_col))
-    cands = (pairs
-             .join(base.select(F.col(id_col).alias("id_b"),
-                               F.col(vec_col).alias("vb")), "id_b")
-             .join(base.select(F.col(id_col).alias("id_a"),
-                               F.col(vec_col).alias("va")), "id_a"))
-
-    @pandas_udf("double")
-    def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        A = _normalize(_as_matrix(va))
-        B = _normalize(_as_matrix(vb))
-        return pd.Series(np.sum(A * B, axis=1))
-
-    w = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(),
-                                           F.col("id_b").asc())
-    return (
-        cands.withColumn("cosine", _cos(F.col("va"), F.col("vb")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("id_a").alias("qid"), F.col("id_b").alias("rid"),
-                "cosine", "rank")
-    )
+    return _rerank_topk(pairs, df, k, id_col, vec_col)
 
 
 def cosine_self_topk(

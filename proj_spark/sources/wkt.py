@@ -13,6 +13,19 @@ Projection methods are dispatched through sources.epsg._METHODS by EPSG
 method code (from METHOD ID[...] when present, else a name table), with
 parameters adapted to the same _Params duck-type keyed by EPSG parameter
 code.
+
+A BOUNDCRS parameter is known by its EPSG ID, else by its name (a
+PARAMETER["Y-axis translation",73.7] with no ID counts). Its value is
+converted by its unit to +towgs84's metres, arc-seconds and ppm; a value
+without a unit is already in them. A scale difference in a ppm unit is
+kept; any other scale is taken to unity and read as the abridged
+(1 + ds*1e-6) form when within 1e-2 of 1, else as unity (times 1e6); a
+unit-less scale near 1 is decoded the same way, else it is ppm.
+
+sources.projjson maps PROJJSON onto the same Node trees, so both text
+formats share this lowering, the COMPOUNDCRS rule (a GEOIDMODEL ID names
+the grid op first, else the VERTCRS's EPSG ID) and crs_epsg_code (which
+never identifies a Cartesian CRS by its datum ensemble).
 """
 
 from __future__ import annotations
@@ -138,6 +151,12 @@ def _unit_factor(node: Node | None, default: float) -> float:
     return ns[0] if ns else default
 
 
+def _is_ppm(unit: Node | None) -> bool:
+    return unit is not None and (
+        "parts per million" in unit.str0().lower()
+        or abs(_unit_factor(unit, 1.0) - 1e-6) < 1e-18)
+
+
 def _angle_value_deg(value: float, unit: Node | None) -> float:
     """Convert a WKT angular value to degrees, preferring EXACT unit
     identification (the truncated 0.0174532925199433 literal times
@@ -162,12 +181,40 @@ def _angle_value_deg(value: float, unit: Node | None) -> float:
 
 _ANGLE_UNITS = ("ANGLEUNIT", "UNIT")
 _LENGTH_UNITS = ("LENGTHUNIT", "UNIT")
+_UNITS = ("ANGLEUNIT", "LENGTHUNIT", "SCALEUNIT", "UNIT")
+
+
+def _id_code(node: Node, auth: str | None = "EPSG") -> str | None:
+    """The code of a node's ID[auth, code] / AUTHORITY[auth, "code"]
+    child, else None. An EPSG code is a finite number or a digit
+    string; auth=None takes the code of any authority."""
+    ids = node.find("ID", "AUTHORITY")
+    if ids is None or len(ids.args) < 2 or (
+            auth is not None and ids.str0().upper() != auth):
+        return None
+    c = ids.args[1]
+    if isinstance(c, float):
+        return str(int(c)) if math.isfinite(c) else None
+    if not isinstance(c, str) or (auth == "EPSG" and not c.strip().isdigit()):
+        return None
+    return c.strip()
+
+
+def _cs_subtype(crs: Node) -> str:
+    """Lower-cased CS type of a CRS node ('ellipsoidal', 'cartesian',
+    'spherical', ...), '' when it has no CS."""
+    cs = crs.find("CS")
+    return str(cs.args[0]).lower() if cs is not None and cs.args else ""
 
 
 # ------------------------------------------------------- geographic CRS
 
-def _ellipsoid_spec(ell: Node) -> str:
-    """ELLIPSOID/SPHEROID[name, a, rf, LENGTHUNIT] -> +a/+rf (or +R)."""
+def _ellipsoid_spec(datum: Node) -> str:
+    """The datum's ELLIPSOID/SPHEROID[name, a, rf, LENGTHUNIT] -> +a/+rf
+    (or +R)."""
+    ell = datum.find("ELLIPSOID", "SPHEROID")
+    if ell is None:
+        raise ValueError("datum without ELLIPSOID")
     ns = ell.nums()
     if len(ns) < 2:
         raise ValueError("ELLIPSOID needs a and 1/f")
@@ -189,10 +236,7 @@ def _geog_spec(crs: Node) -> str:
     """GEOGCRS/GEODCRS/BASEGEOGCRS/GEOGCS -> '+proj=longlat ...' spec
     (+towgs84 appended when a WKT1 TOWGS84 node is present)."""
     datum = _datum_of(crs)
-    ell = datum.find("ELLIPSOID", "SPHEROID")
-    if ell is None:
-        raise ValueError("datum without ELLIPSOID")
-    s = f"+proj=longlat {_ellipsoid_spec(ell)}"
+    s = f"+proj=longlat {_ellipsoid_spec(datum)}"
     pm = crs.find("PRIMEM") or datum.find("PRIMEM")
     if pm is not None:
         ns = pm.nums()
@@ -205,9 +249,7 @@ def _geog_spec(crs: Node) -> str:
     if tw is not None:
         vals = ",".join(repr(v) for v in tw.nums())
         s += f" +towgs84={vals}"
-    cs = crs.find("CS")
-    if cs is not None and cs.args and \
-            str(cs.args[0]).lower() == "spherical":
+    if _cs_subtype(crs) == "spherical":
         # spherical planetocentric (IAU ocentric): coordinates carry
         # geocentric latitude (reference io.cpp GEODCRS cs subtype)
         s += " +geoc"
@@ -474,17 +516,9 @@ class _WktParams:
                 ns = par.nums()
                 if not ns:
                     continue
-                self.p[code] = (ns[0], par.find("ANGLEUNIT", "LENGTHUNIT",
-                                                "SCALEUNIT", "UNIT"))
+                self.p[code] = (ns[0], par.find(*_UNITS))
                 continue
-            ids = par.find("ID", "AUTHORITY")
-            code = None
-            if ids is not None and ids.str0().upper() == "EPSG":
-                n = ids.nums()
-                if n:
-                    code = str(int(n[0]))
-            if code is None:
-                code = _PARAM_NAMES.get(name)
+            code = _id_code(par) or _PARAM_NAMES.get(name)
             if code is None:
                 continue
             if wkt1 and method_code in _WKT1_METHOD_REMAP:
@@ -492,8 +526,7 @@ class _WktParams:
             ns = par.nums()
             if not ns:
                 continue
-            self.p[code] = (ns[0], par.find("ANGLEUNIT", "LENGTHUNIT",
-                                            "SCALEUNIT", "UNIT"))
+            self.p[code] = (ns[0], par.find(*_UNITS))
 
     def deg(self, code, default=0.0):
         if str(code) not in self.p:
@@ -513,10 +546,7 @@ class _WktParams:
         if str(code) not in self.p:
             return default
         v, u = self.p[str(code)]
-        f = _unit_factor(u, 1.0)
-        if u is not None and "parts per million" in u.str0().lower():
-            f = 1e-6
-        return v * f
+        return v * (1e-6 if _is_ppm(u) else _unit_factor(u, 1.0))
 
 
 def _proj_spec(crs: Node) -> str:
@@ -530,17 +560,8 @@ def _proj_spec(crs: Node) -> str:
     meth = conv.find("METHOD", "PROJECTION")
     if meth is None:
         raise ValueError("CONVERSION without METHOD")
-    mids = meth.find("ID", "AUTHORITY")
-    code = None
-    if mids is not None and mids.str0().upper() == "EPSG":
-        n = mids.nums()
-        if n:
-            code = str(int(n[0]))
-    elif mids is not None and mids.str0().upper() == "PROJ":
-        # PROJ-authority named methods (iau.sql: SINUSOIDAL/...)
-        strs = [a for a in mids.args if isinstance(a, str)]
-        if len(strs) >= 2:
-            code = strs[1]
+    # PROJ-authority methods are named (iau.sql: SINUSOIDAL/...)
+    code = _id_code(meth) or _id_code(meth, "PROJ")
     name_l = meth.str0().strip().lower()
     default_ang = default_len = None
     if wkt1:
@@ -657,20 +678,13 @@ def _base_is_ocentric(base: Node) -> bool:
     node, or a registry lookup through the base's IAU id (WKT2 base
     nodes carry no CS — the id is the reference's own recovery route,
     test_crs.cpp:3430)."""
-    cs = base.find("CS")
-    if cs is not None and cs.args and \
-            str(cs.args[0]).lower() == "spherical":
+    if _cs_subtype(base) == "spherical":
         return True
-    bid = base.find("ID", "AUTHORITY")
-    if bid is None or bid.str0().upper() not in ("IAU_2015", "IAU"):
+    code = _id_code(base, "IAU_2015") or _id_code(base, "IAU")
+    if code is None:
         return False
-    n = bid.nums()
-    if not n:
-        return False
-    from proj_spark.sources import epsg as _E
-
-    db = _E._load()
-    row = db["geodetic_crs"].get(f"IAU_2015:{int(n[0])}")
+    db = _epsg._load()
+    row = db["geodetic_crs"].get(f"IAU_2015:{code}")
     if row is None:
         return False
     cs_row = db["coordinate_system"].get(str(row[6]))
@@ -679,9 +693,33 @@ def _base_is_ocentric(base: Node) -> bool:
 
 # ------------------------------------------------------------ bound CRS
 
-# ABRIDGEDTRANSFORMATION parameter codes (translations m, rotations
-# arc-sec, scale difference ppm — already in +towgs84's units)
-_TOWGS84_CODES = ("8605", "8606", "8607", "8608", "8609", "8610", "8611")
+# ABRIDGEDTRANSFORMATION parameter name -> EPSG code, for a PARAMETER
+# written without an ID
+_TOWGS84_NAMES = {
+    "x-axis translation": "8605", "y-axis translation": "8606",
+    "z-axis translation": "8607", "x-axis rotation": "8608",
+    "y-axis rotation": "8609", "z-axis rotation": "8610",
+    "scale difference": "8611",
+}
+
+
+def _towgs84_value(code: str, v: float, unit: Node | None) -> float:
+    """One ABRIDGEDTRANSFORMATION value in +towgs84's units (metres,
+    arc-seconds, ppm). A value without a unit is already in them."""
+    if code in ("8605", "8606", "8607"):
+        return v * _unit_factor(unit, 1.0)
+    if code != "8611":
+        return v if unit is None else _angle_value_deg(v, unit) * 3600.0
+    if _is_ppm(unit):
+        return v
+    v *= _unit_factor(unit, 1.0)
+    # the abridged spelling carries the scale as (1 + ds*1e-6); real ds
+    # is a few ppm, so the encoded value sits within ~1e-5 of 1. The
+    # tight window keeps a plain-ppm value under 0.5 (e.g. 0.3) from
+    # being misread as (0.3-1)*1e6 = -700000 ppm.
+    if abs(v - 1.0) < 1e-2:
+        return (v - 1.0) * 1e6
+    return v if unit is None else v * 1e6
 
 
 def _bound_spec(crs: Node) -> str:
@@ -693,64 +731,70 @@ def _bound_spec(crs: Node) -> str:
         raise ValueError("empty SOURCECRS")
     spec = wkt_node_to_proj(inner)
     tr = crs.find("ABRIDGEDTRANSFORMATION")
-    if tr is not None:
-        meth = tr.find("METHOD")
-        name = meth.str0().lower() if meth is not None else ""
-        vals = {c: 0.0 for c in _TOWGS84_CODES}
-        seen_rot = False
-        for par in tr.all("PARAMETER"):
-            ids = par.find("ID", "AUTHORITY")
-            code = None
-            if ids is not None and ids.str0().upper() == "EPSG":
-                n = ids.nums()
-                if n:
-                    code = str(int(n[0]))
-            ns = par.nums()
-            if code in vals and ns:
-                v = ns[0]
-                if code == "8611":
-                    # abridged form carries scale as (1 + ds*1e-6); real ds
-                    # is a few ppm, so the encoded value sits within ~1e-5
-                    # of 1. A tight window keeps a nonconformant plain-ppm
-                    # value under 0.5 (e.g. 0.3) from being misread as
-                    # (0.3-1)*1e6 = -700000 ppm.
-                    v = (v - 1.0) * 1e6 if abs(v - 1.0) < 1e-2 else v
-                vals[code] = v
-                if code in ("8608", "8609", "8610") and v != 0.0:
-                    seen_rot = True
-        rot_sign = -1.0 if "coordinate frame" in name else 1.0
-        seven = seen_rot or vals["8611"] != 0.0
-        nums = [vals["8605"], vals["8606"], vals["8607"]]
-        if seven:
-            nums += [rot_sign * vals["8608"], rot_sign * vals["8609"],
-                     rot_sign * vals["8610"], vals["8611"]]
-        spec += " +towgs84=" + ",".join(repr(v) for v in nums)
-    return spec
+    if tr is None:
+        return spec
+    vals = dict.fromkeys(_TOWGS84_NAMES.values(), 0.0)
+    for par in tr.all("PARAMETER"):
+        code = (_id_code(par)
+                or _TOWGS84_NAMES.get(par.str0().strip().lower()))
+        ns = par.nums()
+        if code in vals and ns:
+            vals[code] = _towgs84_value(code, ns[0], par.find(*_UNITS))
+    meth = tr.find("METHOD")
+    rot_sign = (-1.0 if meth is not None
+                and "coordinate frame" in meth.str0().lower() else 1.0)
+    nums = [vals["8605"], vals["8606"], vals["8607"]]
+    if any(vals[c] != 0.0 for c in ("8608", "8609", "8610", "8611")):
+        nums += [rot_sign * vals["8608"], rot_sign * vals["8609"],
+                 rot_sign * vals["8610"], vals["8611"]]
+    return spec + " +towgs84=" + ",".join(repr(v) for v in nums)
 
 
 # -------------------------------------------------------------- entry
 
+def _compound_spec(crs: Node) -> str:
+    """COMPOUNDCRS[name, horizontal, VERTCRS] -> the horizontal spec plus
+    the vertical CRS's +geoidgrids."""
+    comps = [a for a in crs.args if isinstance(a, Node) and a.name != "ID"]
+    if len(comps) != 2:
+        raise NotImplementedError("COMPOUNDCRS needs 2 components")
+    s = wkt_node_to_proj(comps[0])
+    vert = comps[1]
+    if vert.name != "VERTCRS":
+        raise NotImplementedError(f"compound second member {vert.name}")
+    gm = vert.find("GEOIDMODEL")
+    op = _id_code(gm, None) if gm is not None else None
+    if op is not None:
+        # an explicit geoid model names its grid op, which wins over the
+        # vertical-CRS-code lookup (reference io.cpp geoid_model; NRCan
+        # coordinate_metadata definitions name their op)
+        try:
+            return s + " +geoidgrids=" + _epsg.geoid_grids_for_op(op)
+        except KeyError:
+            pass    # op not bundled: fall through to the code path
+    code = _id_code(vert)
+    if code is None:
+        raise NotImplementedError(
+            "VERTCRS without an EPSG id: no geoid model path")
+    return s + _epsg._vertical_suffix(code)
+
+
 def wkt_node_to_proj(root: Node) -> str:
-    if root.name in ("GEOGCRS", "GEODCRS", "GEOGCS", "BASEGEOGCRS",
-                     "BASEGEODCRS"):
-        # a GEODCRS with a Cartesian CS is geocentric (WKT2 spells both
-        # geographic and geocentric CRSs GEODCRS; io.cpp distinguishes by
-        # the coordinate-system subtype)
-        cs = root.find("CS")
-        if cs is not None and cs.args and \
-                str(cs.args[0]).lower() == "cartesian":
-            datum = _datum_of(root)
-            ell = datum.find("ELLIPSOID", "SPHEROID")
-            return f"+proj=geocent {_ellipsoid_spec(ell)}"
+    # a GEODCRS with a Cartesian CS is geocentric (WKT2 spells both
+    # geographic and geocentric CRSs GEODCRS; io.cpp distinguishes by the
+    # coordinate-system subtype)
+    geod = root.name in ("GEOGCRS", "GEODCRS", "GEOGCS", "BASEGEOGCRS",
+                         "BASEGEODCRS")
+    if root.name == "GEOCCS" or (geod and _cs_subtype(root) == "cartesian"):
+        return f"+proj=geocent {_ellipsoid_spec(_datum_of(root))}"
+    if geod:
         return _geog_spec(root)
     if root.name in ("PROJCRS", "PROJCS"):
         return _proj_spec(root)
     if root.name == "BOUNDCRS":
         return _bound_spec(root)
-    if root.name == "GEOCCS":
-        datum = _datum_of(root)
-        ell = datum.find("ELLIPSOID", "SPHEROID")
-        return f"+proj=geocent {_ellipsoid_spec(ell)}"
+    if root.name == "COMPOUNDCRS":
+        return _compound_spec(root)
     raise NotImplementedError(f"WKT object {root.name} not supported as CRS")
 
 
@@ -775,20 +819,16 @@ def _esri_crs_aliases() -> dict:
 
 
 def crs_epsg_code(src: "str | Node") -> str | None:
-    """EPSG identification of a WKT CRS: the explicit top-level
-    ID["EPSG",n] / AUTHORITY["EPSG","n"] node when present, else the
-    ESRI name alias table — the late-binding identification io.cpp
-    performs against esri.sql so a bare .prj (which carries no ids)
-    still resolves to a registry CRS for candidate-operation dispatch."""
+    """EPSG identification of a WKT CRS (or of the node tree
+    sources.projjson builds): the explicit top-level ID["EPSG",n] /
+    AUTHORITY["EPSG","n"] node when present, else the ESRI name alias
+    table — the late-binding identification io.cpp performs against
+    esri.sql so a bare .prj (which carries no ids) still resolves to a
+    registry CRS for candidate-operation dispatch."""
     root = parse_wkt(src) if isinstance(src, str) else src
-    ids = root.find("ID", "AUTHORITY")
-    if ids is not None and ids.str0().upper() == "EPSG":
-        n = ids.nums()
-        if n and math.isfinite(n[0]):
-            return str(int(n[0]))
-        strs = [a for a in ids.args if isinstance(a, str)]
-        if len(strs) >= 2 and strs[1].strip().isdigit():
-            return strs[1].strip()
+    code = _id_code(root)
+    if code is not None:
+        return code
     alias = _esri_crs_aliases().get(root.str0().strip().lower())
     if alias is not None:
         return alias
@@ -797,13 +837,11 @@ def crs_epsg_code(src: "str | Node") -> str | None:
     # matches a registry ensemble datum — by datum name or by member-id
     # set — identifies as that datum's canonical geographic 2D CRS even
     # when the CRS itself is unnamed ("unknown" in the reference test).
+    # A Cartesian (geocentric) CRS is not geographic.
     ens = root.find("ENSEMBLE")
-    if ens is not None and root.name.startswith(("GEOGCRS", "GEOGCS",
-                                                 "GEODCRS")):
-        ids = [m.find("ID", "AUTHORITY") for m in ens.all("MEMBER")]
-        members = {str(int(i.nums()[0])) for i in ids
-                   if i is not None and i.str0().upper() == "EPSG"
-                   and i.nums() and math.isfinite(i.nums()[0])}
+    if (ens is not None and _cs_subtype(root) != "cartesian"
+            and root.name.startswith(("GEOGCRS", "GEOGCS", "GEODCRS"))):
+        members = {_id_code(m) for m in ens.all("MEMBER")} - {None}
         return _ensemble_geog2d_code(ens.str0(), members)
     return None
 
@@ -812,10 +850,8 @@ def _ensemble_geog2d_code(name: str, member_ids: set) -> str | None:
     """Canonical geographic-2D CRS code for a datum ensemble matched
     against the bundled registry: by geodetic_datum name, else by the
     set of EPSG member datum ids (geodetic_datum_ensemble_member). The
-    WKT2 ENSEMBLE node and the PROJJSON datum_ensemble both read here."""
-    from proj_spark.sources.epsg import _load
-
-    db = _load()
+    WKT2 ENSEMBLE node and the PROJJSON datum_ensemble both map here."""
+    db = _epsg._load()
     members = db["geodetic_datum_ensemble_member"]
 
     def geog2d_of(datum_code: str) -> str | None:

@@ -73,12 +73,6 @@ def _datum(code) -> tuple[str, str, dict, float, str]:
     return wd, wp, jd, pm_deg, name
 
 
-_ORIENT_JSON = {"north": "north", "south": "south", "east": "east",
-                "west": "west", "geocentricX": "geocentricX",
-                "geocentricY": "geocentricY", "geocentricZ": "geocentricZ",
-                "up": "up", "down": "down"}
-
-
 def _axes(cs_code, kind: str) -> tuple[list[str], list[dict]]:
     """(wkt AXIS list, json axis list) for a coordinate system code.
     kind: 'ellipsoidal'|'Cartesian' — used for fallback axes when the
@@ -128,7 +122,7 @@ def _axes(cs_code, kind: str) -> tuple[list[str], list[dict]]:
         w.append(f"AXIS[\"{nm.lower()} ({ab})\",{o_word},"
                  f"ORDER[{order}],{uw}]")
         j.append({"name": nm, "abbreviation": ab,
-                  "direction": _ORIENT_JSON.get(o_word, o_word),
+                  "direction": o_word,
                   "unit": ju})
     return w, j
 

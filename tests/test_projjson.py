@@ -227,6 +227,21 @@ def test_compound_by_epsg_id():
     assert "+geoidgrids=" in spec and "@egm96_15.gtx" in spec
 
 
+def test_bound_over_compound_source():
+    """A BoundCRS whose source is a CompoundCRS keeps both the geoid
+    grids and the +towgs84 of its transformation."""
+    j = json.loads(json.dumps(BOUND_ABRIDGED))
+    j["source_crs"] = {
+        "type": "CompoundCRS", "name": "DHDN-ish + EGM96 height",
+        "components": [BOUND_ABRIDGED["source_crs"],
+                       {"type": "VerticalCRS", "name": "EGM96 height",
+                        "id": {"authority": "EPSG", "code": 5773}}],
+    }
+    spec = projjson_to_proj(j)
+    assert (" +geoidgrids=@us_nga_egm96_15.tif,@egm96_15.gtx,@WW15MGH.GRD"
+            " +towgs84=598.1,") in spec
+
+
 def test_vertical_only_raises():
     with pytest.raises(NotImplementedError):
         projjson_to_proj({"type": "VerticalCRS", "name": "x"})

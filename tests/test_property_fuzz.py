@@ -17,7 +17,8 @@ from hypothesis import strategies as st
 
 from proj_spark.kernels import karney as K
 from proj_spark.plans.pipeline import (Pipeline, compile_crs_to_crs,
-                                       compile_pipeline)
+                                       compile_pipeline, crs_input,
+                                       crs_registry_code)
 
 WGS84 = K.geod_consts(6378137.0, 1 / 298.257223563)
 
@@ -100,6 +101,7 @@ _CRS_PREFIXES = [
     "EPSG:", "ESRI:", "IGNF:", "NKG:", "IAU_2015:", "NRCAN:",
     "urn:ogc:def:crs:EPSG::", "urn:ogc:def:coordinateOperation:EPSG::",
     "{", "GEOGCRS[", 'GEOGCS["x",DATUM["d",SPHEROID["s",', "+proj=merc +a=",
+    '{"type":"BoundCRS","source_crs":', "BOUNDCRS[SOURCECRS[",
 ]
 
 
@@ -109,11 +111,22 @@ _CRS_PREFIXES = [
          '0,0]],PRIMEM["Greenwich",0],UNIT["degree",0.0174532925199433]]')
 @example("{", '"type":"GeographicCRS","datum":1}')
 @example("+proj=merc +a=", "1 +rf=0.5")
+@example("GEOGCRS[", '"x",DATUM["d",ELLIPSOID["e",6378137,298.257223563]],'
+         'CS[ellipsoidal,2],AXIS["lat",north],AXIS["lon",east],'
+         'ANGLEUNIT["degree",0.0174532925199433],ID["EPSG",1e400]]')
+@example("{", '"type":"GeographicCRS",'
+         '"datum_ensemble":{"name":"y","members":3}}')
 def test_crs_text_compiles_or_raises_a_documented_error(prefix, tail):
     """Malformed CRS text never escapes as a traceback: compile_crs_to_crs
-    returns a Pipeline or raises one of the types the CLI reports."""
+    returns a Pipeline and crs_registry_code a code or None, or each
+    raises one of the types the CLI reports."""
+    text = prefix + tail
     try:
-        assert isinstance(compile_crs_to_crs(prefix + tail, "EPSG:4326"),
-                          Pipeline)
+        assert isinstance(compile_crs_to_crs(text, "EPSG:4326"), Pipeline)
+    except (ValueError, KeyError, NotImplementedError):
+        pass
+    try:
+        code = crs_registry_code(crs_input(text))
+        assert code is None or isinstance(code, str)
     except (ValueError, KeyError, NotImplementedError):
         pass

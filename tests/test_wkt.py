@@ -1,6 +1,9 @@
 """WKT1/WKT2 CRS input (sources.wkt) — parse + lower to proj-strings and
 verify numerically against the equivalent proj-string pipelines."""
 
+import math
+import re
+
 import numpy as np
 import pytest
 
@@ -192,6 +195,73 @@ def test_boundcrs_towgs84():
     # scale-diff differs (6.9 vs 6.7 ppm) by design of the fixture; only
     # assert proximity at the metre level to prove the chain wiring
     assert abs(gx[0] - wx[0]) < 1e-4 and abs(gy[0] - wy[0]) < 1e-4
+
+
+_ARCSEC_RAD = math.pi / (180.0 * 3600.0)
+_KM = {"type": "LinearUnit", "name": "kilometre", "conversion_factor": 1000}
+_RAD = {"type": "AngularUnit", "name": "radian", "conversion_factor": 1}
+_PPM = {"type": "ScaleUnit", "name": "parts per million",
+        "conversion_factor": 1e-06}
+# one BOUND parameter each, written with an explicit unit or without an
+# ID: (EPSG code, WKT PARAMETER, its PROJJSON twin's changed members)
+_BOUND_SPELLINGS = {
+    "km": ("8605", 'PARAMETER["X-axis translation",0.5981,'
+           'LENGTHUNIT["kilometre",1000],ID["EPSG",8605]]',
+           {"value": 0.5981, "unit": _KM}),
+    "radian": ("8608", f'PARAMETER["X-axis rotation",{0.202 * _ARCSEC_RAD!r},'
+               'ANGLEUNIT["radian",1],ID["EPSG",8608]]',
+               {"value": 0.202 * _ARCSEC_RAD, "unit": _RAD}),
+    "ppm": ("8611", 'PARAMETER["Scale difference",6.9,'
+            'SCALEUNIT["parts per million",1E-06],ID["EPSG",8611]]',
+            {"value": 6.9, "unit": _PPM}),
+    "no-id": ("8606", 'PARAMETER["Y-axis translation",73.7]', {"id": None}),
+}
+
+
+@pytest.mark.parametrize("spellings", [["km"], ["radian"], ["ppm"],
+                                       ["no-id"], list(_BOUND_SPELLINGS)],
+                         ids=["km", "radian", "ppm", "no-id", "all"])
+def test_boundcrs_parameter_units_and_names(spellings):
+    """A BOUNDCRS parameter's unit is applied and a parameter without an
+    ID is known by its name, the same in WKT and in PROJJSON."""
+    import copy
+
+    from proj_spark.sources.projjson import projjson_to_proj
+    from tests.test_projjson import BOUND_ABRIDGED
+
+    wkt = BOUND
+    pj = copy.deepcopy(BOUND_ABRIDGED)
+    for key in spellings:
+        code, par, members = _BOUND_SPELLINGS[key]
+        wkt = re.sub(rf'PARAMETER\["[^"]*",[-\d.]+,ID\["EPSG",{code}\]\]',
+                     par, wkt)
+        p = next(p for p in pj["transformation"]["parameters"]
+                 if p["id"]["code"] == int(code))
+        p.update(members)
+    tail = wkt_to_proj(wkt).split("+towgs84=")[1]
+    assert tail == projjson_to_proj(pj).split("+towgs84=")[1]
+    np.testing.assert_allclose(
+        [float(v) for v in tail.split(",")],
+        [598.1, 73.7, 418.2, 0.202, 0.045, -2.455, 6.9], atol=1e-6)
+
+
+@pytest.mark.parametrize("unit,value,ppm", [
+    ('SCALEUNIT["parts per million",1E-06]', 6.9, 6.9),  # ppm: kept
+    ('SCALEUNIT["ppm",1E-06]', 0.3, 0.3),                # ppm by factor
+    ('SCALEUNIT["unity",1]', 1.0000069, 6.9),            # (1 + ds*1e-6)
+    ('SCALEUNIT["unity",1]', 6.9e-06, 6.9),              # unity -> ppm
+    ('SCALEUNIT["percent",0.01]', 6.9e-04, 6.9),         # any unit: to unity
+    (None, 1.0000069, 6.9),                              # abridged form
+    (None, 6.9, 6.9),                                    # already ppm
+    (None, 0.3, 0.3),                                    # outside the window
+])
+def test_boundcrs_scale_difference_rule(unit, value, ppm):
+    par = (f'PARAMETER["Scale difference",{value!r},'
+           + (f"{unit}," if unit else "") + 'ID["EPSG",8611]]')
+    wkt = re.sub(r'PARAMETER\["Scale difference",[\d.]+,ID\["EPSG",8611\]\]',
+                 par, BOUND)
+    got = float(wkt_to_proj(wkt).split("+towgs84=")[1].split(",")[6])
+    assert got == pytest.approx(ppm, abs=1e-6)
 
 
 def test_crs_to_crs_accepts_wkt():

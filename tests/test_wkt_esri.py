@@ -232,6 +232,28 @@ def test_crs_epsg_code_identification():
                          ) is None
 
 
+def test_geocentric_crs_is_not_identified_by_its_ensemble():
+    """A Cartesian CRS whose datum is an ensemble identifies as no
+    geographic CRS: EPSG:4978 without its top-level id (WKT2 and
+    PROJJSON) and the IGNF:WGS84 export, whose id is IGNF's."""
+    import json
+
+    import pytest
+
+    from proj_spark.plans.pipeline import crs_input, crs_registry_code
+    from proj_spark.sources.epsg_ops import candidate_operations
+    from proj_spark.sources.wkt_out import epsg_to_projjson, epsg_to_wkt2
+
+    w = epsg_to_wkt2("4978")
+    w = w[:w.rindex(',ID["EPSG",4978]')] + "]"
+    j = json.loads(epsg_to_projjson("4978"))
+    del j["id"]
+    for text in (w, json.dumps(j), epsg_to_wkt2("WGS84")):
+        assert crs_registry_code(crs_input(text)) is None
+    with pytest.raises(ValueError):
+        candidate_operations(w, "EPSG:4258")
+
+
 def test_registry_dispatch_accepts_esri_prj():
     """A bare ESRI ED50 .prj drives the SAME registry candidate list as
     EPSG:4230 — late-binding identification feeding operation dispatch."""

@@ -95,10 +95,13 @@ def test_projjson_roundtrip(code):
 
 def test_registry_sweep_wkt2():
     """Every projected CRS the registry lowers must export WKT2 that
-    round-trips numerically (sampled: every 11th code for runtime)."""
+    round-trips numerically, and its WKT2:2019, WKT2:2015 and PROJJSON
+    exports must lower to the same proj-string (sampled: every 11th code
+    for runtime)."""
     from proj_spark.sources.epsg import _load, epsg_to_proj
+    from proj_spark.sources.projjson import projjson_to_proj
     from proj_spark.sources.wkt import wkt_to_proj
-    from proj_spark.sources.wkt_out import epsg_to_wkt2
+    from proj_spark.sources.wkt_out import epsg_to_projjson, epsg_to_wkt2
 
     db = _load()
     codes = sorted(db["projected_crs"])[::11]
@@ -110,9 +113,12 @@ def test_registry_sweep_wkt2():
             continue  # method out of lowering scope — not a writer issue
         checked += 1
         want = _pt(direct)
+        lowered = set()
         for ver in ("2019", "2015"):
             try:
-                got = _pt(wkt_to_proj(epsg_to_wkt2(code, version=ver)))
+                spec = wkt_to_proj(epsg_to_wkt2(code, version=ver))
+                lowered.add(spec)
+                got = _pt(spec)
             except Exception as e:
                 failures += 1
                 if failures <= 3:
@@ -123,6 +129,14 @@ def test_registry_sweep_wkt2():
                 failures += 1
                 if failures <= 3:
                     print(f"{code} wkt2:{ver}: {got} != {want}")
+        try:
+            lowered.add(projjson_to_proj(epsg_to_projjson(code)))
+        except Exception as e:
+            lowered.add(repr(e))
+        if len(lowered) != 1:
+            failures += 1
+            if failures <= 3:
+                print(f"{code} lowerings differ: {sorted(lowered)}")
     assert checked > 300
     assert failures == 0, f"{failures}/{checked} sweep round-trips failed"
 
