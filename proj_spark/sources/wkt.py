@@ -15,12 +15,12 @@ parameters adapted to the same _Params duck-type keyed by EPSG parameter
 code.
 
 A BOUNDCRS parameter is known by its EPSG ID, else by its name (a
-PARAMETER["Y-axis translation",73.7] with no ID counts). Its value is
-converted by its unit to +towgs84's metres, arc-seconds and ppm; a value
-without a unit is already in them. A scale difference in a ppm unit is
-kept; any other scale is taken to unity and read as the abridged
-(1 + ds*1e-6) form when within 1e-2 of 1, else as unity (times 1e6); a
-unit-less scale near 1 is decoded the same way, else it is ppm.
+PARAMETER["Y-axis translation",73.7] with no ID counts). Its unit
+converts its value to +towgs84's metres, arc-seconds and ppm. The scale
+difference: a ppm unit keeps the value; any other unit converts it to
+unity, and a unity value within 1e-2 of 1 is the abridged (1 + ds*1e-6)
+form, any other is multiplied by 1e6; without a unit, a value within
+1e-2 of 1 is the abridged form and any other is already ppm.
 
 sources.projjson maps PROJJSON onto the same Node trees, so both text
 formats share this lowering, the COMPOUNDCRS rule (a GEOIDMODEL ID names
@@ -705,7 +705,8 @@ _TOWGS84_NAMES = {
 
 def _towgs84_value(code: str, v: float, unit: Node | None) -> float:
     """One ABRIDGEDTRANSFORMATION value in +towgs84's units (metres,
-    arc-seconds, ppm). A value without a unit is already in them."""
+    arc-seconds, ppm). A value without a unit is already in them, except
+    a scale in the abridged form."""
     if code in ("8605", "8606", "8607"):
         return v * _unit_factor(unit, 1.0)
     if code != "8611":

@@ -116,6 +116,9 @@ _CRS_PREFIXES = [
          'ANGLEUNIT["degree",0.0174532925199433],ID["EPSG",1e400]]')
 @example("{", '"type":"GeographicCRS",'
          '"datum_ensemble":{"name":"y","members":3}}')
+@example("GEODCRS[", '"x",DATUM["d"],CS[Cartesian,3]]')
+@example("PROJCRS[", '"p",BASEGEOGCRS["g",DATUM["d",ELLIPSOID["e",6378137,'
+         '298.25]]],CONVERSION["c",METHOD["m",ID["EPSG",1e400]]]]')
 def test_crs_text_compiles_or_raises_a_documented_error(prefix, tail):
     """Malformed CRS text never escapes as a traceback: compile_crs_to_crs
     returns a Pipeline and crs_registry_code a code or None, or each
