@@ -85,12 +85,13 @@ def xyz_to_face_uv(x, y, z):
     face = np.where((face == 1) & (y < 0), 4, face)
     face = np.where((face == 2) & (z < 0), 5, face)
 
-    # per-face (u, v) ratios (reference s2.cpp ValidFaceXYZtoUV :190-216);
-    # np.select evaluates every branch, so silence the off-face div-by-zero
-    conds = [face == f for f in range(6)]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        u = np.select(conds, [y / x, -x / y, -x / z, z / x, z / y, -y / z])
-        v = np.select(conds, [z / x, z / y, -y / z, y / x, -x / y, -x / z])
+    # per-face (u, v) ratios (reference s2.cpp ValidFaceXYZtoUV :190-216):
+    # pick each point's numerators and face-axis component, then divide
+    # once; (-x)/y is -(x/y) bit for bit
+    den = np.choose(face, (x, y, z, x, y, z))
+    nx, ny = -x, -y
+    u = np.choose(face, (y, nx, nx, z, z, ny)) / den
+    v = np.choose(face, (z, z, ny, y, nx, nx)) / den
     return face.astype(np.int64), u, v
 
 
@@ -113,12 +114,17 @@ def _st_to_ij(s):
     return np.clip((np.asarray(s) * (1 << MAX_LEVEL)).astype(np.int64), 0, (1 << MAX_LEVEL) - 1)
 
 
-def _faceij_to_id(face, i, j):
-    """(face, i30, j30) -> level-30 cell id via 8 lookup-table gathers."""
+def _faceij_to_id(face, i, j, level: int = MAX_LEVEL):
+    """(face, i30, j30) -> level-30 cell id via up to 8 lookup-table
+    gathers. Only the first ``level`` position levels are exact: the first
+    round holds levels 1-2 (i and j have 30 bits), each later one 4 more,
+    and the rounds past ``level`` are skipped, leaving zero bits for
+    ``parent_id`` to truncate."""
     n = face.astype(np.int64) << (_POS_BITS - 1)
     bits = face.astype(np.int64) & _SWAP
     mask = (1 << _LOOKUP_BITS) - 1
-    for k in range(7, -1, -1):
+    rounds = 1 + -(-max(level - 2, 0) // _LOOKUP_BITS)
+    for k in range(7, 7 - rounds, -1):
         bits += ((i >> (k * _LOOKUP_BITS)) & mask) << (_LOOKUP_BITS + 2)
         bits += ((j >> (k * _LOOKUP_BITS)) & mask) << 2
         bits = _LOOKUP_POS[bits]
@@ -134,7 +140,7 @@ def s2_cell_id(lon_deg, lat_deg, level: int = MAX_LEVEL, geocentric_es: float | 
     face, u, v = xyz_to_face_uv(x, y, z)
     i = _st_to_ij(uv_to_st(u))
     j = _st_to_ij(uv_to_st(v))
-    cell = _faceij_to_id(face, i, j)
+    cell = _faceij_to_id(face, i, j, level)
     if level < MAX_LEVEL:
         cell = parent_id(cell, level)
     return cell

@@ -3,7 +3,8 @@
 The one broadcast path and its fallback:
 
   broadcast (``spatial_join_fused``; ``spatial_join`` when the cover fits):
-    points ──match UDF (CSR cover lookup + exact test)──> poly idx
+    points ──Arrow match UDF (occupancy gather, CSR cover lookup, exact
+    test)──> list of poly idx ──explode──> poly idx
   smj (``spatial_join(strategy="smj")``, for a cover too big to ship; the
   only path that reads a ``cover=`` DataFrame):
     points ──sort-merge join on cell── cover ──exact-test UDF filter──> poly idx
@@ -11,9 +12,13 @@ The one broadcast path and its fallback:
 
 The O(points x polygons) predicate becomes an int64 cell lookup or
 equi-join, and the exact test is vectorized numpy over Arrow batches that
-carry only numeric columns. The cell cover stands in for the reference's
-bucket quadtree (src/quadtree.hpp) as a flat or relational structure,
-because at 10^12 rows the index must be a lookup or a join, not a tree walk.
+carry only numeric columns. The broadcast match UDF reads and writes Arrow
+arrays directly: a bool-table gather drops the points whose cell has no
+cover cell, only the survivors are looked up and tested, and the match
+lists are built from numpy offsets, with no Python object per row. The
+cell cover stands in for the reference's bucket quadtree (src/quadtree.hpp)
+as a flat or relational structure, because at 10^12 rows the index must be
+a lookup or a join, not a tree walk.
 """
 
 from __future__ import annotations
@@ -23,9 +28,11 @@ from typing import NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from proj_spark import cells
 from proj_spark.functions import cell_parent, s2_cell_udf
@@ -35,6 +42,8 @@ from proj_spark.sources.synth import Polygon
 # ~90 deg, and quadratic-ST distortion keeps linear cell size within ~1.6x,
 # so 0.35 * 90/2^L sampling spacing guarantees >=2 samples per cell span.
 _FACE_DEG = 90.0
+# finest level of the match UDF's occupancy table (2^19 flags)
+_OCC_LEVEL = 8
 
 
 def _cell_size_deg(level: int) -> float:
@@ -207,9 +216,19 @@ def spatial_join_fused(
     cell_level: int,
 ) -> DataFrame:
     """The one broadcast path: the cover (cell -> candidate poly indices)
-    ships INSIDE a pandas UDF as a CSR array index, and the UDF returns the
-    matching poly indices per point as ``array<int>`` — exploded and mapped
-    to polygon ids by a JVM lookup into a literal array.
+    ships INSIDE an Arrow UDF as a CSR array index, and the UDF returns the
+    matching poly indices per point as ``array<int>`` (null where none
+    matches) — exploded and mapped to polygon ids by a JVM lookup into a
+    literal array.
+
+    Per Arrow batch the UDF gathers one flag per point from a driver-built
+    occupancy table (one bool per level-``min(level, 8)`` ancestor of a
+    cover cell) and keeps only the points that may have a candidate. Those
+    are searched in the CSR index, expanded to (point, poly) candidates and
+    tested exactly in one vectorized pass. The match lists come back as one
+    ``ListArray`` whose offsets are the cumulative per-point match counts,
+    polygons in ascending index order within a point. A null cell or a
+    null/NaN lon/lat matches nothing.
 
     vs the smj path: no join stage and no Python-RDD scan, and
     pass-through payload columns (captions, image bytes) never cross the
@@ -235,37 +254,46 @@ def _fused_join(points: DataFrame, polys: Sequence[Polygon], cover_pdf: pd.DataF
     ends = np.append(starts[1:], len(cov_polys))
     poly_list = list(polys)
     edges = _edge_matrices(poly_list)
+    # occupancy: one flag per level-c ancestor (face + 2c Hilbert bits) of
+    # a cover cell, c = occ_level: 2^(3+2c) bools, 512 KB at c = 8
+    occ_level = min(level, _OCC_LEVEL)
+    occ_shift = 2 * (cells.MAX_LEVEL - occ_level) + 1
+    occ_mask = (1 << (3 + 2 * occ_level)) - 1
+    occupied = np.zeros(occ_mask + 1, dtype=bool)
+    occupied[(cov_cells >> occ_shift) & occ_mask] = True
 
-    @pandas_udf("array<int>")
-    def _matches(lon_s: pd.Series, lat_s: pd.Series, cell_s: pd.Series) -> pd.Series:
-        lon = lon_s.to_numpy(dtype=np.float64)
-        lat = lat_s.to_numpy(dtype=np.float64)
-        cells_arr = cell_s.to_numpy(dtype=np.int64)
-        n = len(lon)
-        # vectorized cover lookup: searchsorted into the CSR cell index
-        pos = np.searchsorted(cov_cells, cells_arr)
-        pos_c = np.minimum(pos, len(cov_cells) - 1)
-        covered = cov_cells[pos_c] == cells_arr
-        # expand candidates: point i spans cnt[i] (point, poly) pairs
-        cnt = np.where(covered, ends[pos_c] - starts[pos_c], 0)
-        pt_idx = np.repeat(np.arange(n), cnt)
-        # candidate poly ids: starts[pos]+offset-within-range, ranges packed
+    @arrow_udf("array<int>")
+    def _matches(lon_a: pa.Array, lat_a: pa.Array, cell_a: pa.Array) -> pa.Array:
+        n = len(cell_a)
+        # a null cell reads as 0 (no S2 id), never through a float cast
+        cell = pc.fill_null(cell_a, 0).to_numpy().astype(np.int64, copy=False)
+        # one gather keeps the points whose ancestor holds a cover cell
+        pt = np.flatnonzero(occupied[(cell >> occ_shift) & occ_mask])
+        if cell_a.null_count:
+            pt = pt[cell_a.is_valid().to_numpy(zero_copy_only=False)[pt]]
+        # a null lon/lat reads as NaN; NaN coordinates match nothing
+        lon = lon_a.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)[pt]
+        lat = lat_a.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)[pt]
+        ok = ~(np.isnan(lon) | np.isnan(lat))
+        pt, lon, lat, cell = pt[ok], lon[ok], lat[ok], cell[pt[ok]]
+        # cover lookup: searchsorted into the CSR cell index
+        pos = np.minimum(np.searchsorted(cov_cells, cell), len(cov_cells) - 1)
+        cnt = np.where(cov_cells[pos] == cell, ends[pos] - starts[pos], 0)
+        # expand candidates: survivor k spans cnt[k] (point, poly) pairs
+        k_idx = np.repeat(np.arange(len(pt)), cnt)
         csum = np.concatenate(([0], np.cumsum(cnt)))
-        offs = np.arange(csum[-1]) - np.repeat(csum[:-1], cnt)
-        pl_idx = cov_polys[np.repeat(starts[pos_c], cnt) + offs]
+        offs = np.arange(csum[-1]) - csum[k_idx]
+        pl_idx = cov_polys[starts[pos][k_idx] + offs]
         # exact test for ALL candidates in one vectorized evaluation
-        match = _verify_vec(edges, lon[pt_idx], lat[pt_idx], pl_idx)
-        # assemble array<int> per point from the (small) match set
-        m_pt = pt_idx[match]
-        m_pl = pl_idx[match]
-        out: list = [None] * n
-        for i, k in zip(m_pt.tolist(), m_pl.tolist()):  # matches only (~few %)
-            cur = out[i]
-            if cur is None:
-                out[i] = [k]
-            else:
-                cur.append(k)
-        return pd.Series(out)
+        match = _verify_vec(edges, lon[k_idx], lat[k_idx], pl_idx)
+        # matches come out grouped by point, polys ascending within each:
+        # per-point counts give the list offsets directly
+        count = np.bincount(pt[k_idx[match]], minlength=n)
+        offsets = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum(count, out=offsets[1:])
+        return pa.ListArray.from_arrays(pa.array(offsets),
+                                        pa.array(pl_idx[match].astype(np.int32)),
+                                        mask=pa.array(count == 0))
 
     pts = points.withColumn(
         "_cell_j",

@@ -49,6 +49,18 @@ def _normalize_lon(x: np.ndarray) -> np.ndarray:
     return out
 
 
+def _in_bbox(bbox, lon: np.ndarray, lat: np.ndarray, norm: np.ndarray) -> np.ndarray:
+    """Points inside (west, south, east, north) by raw or normalized
+    longitude; ``norm`` is ``_normalize_lon(lon)``, computed once by the
+    caller for every candidate it tests."""
+    if bbox is None:
+        return np.ones(lon.shape, dtype=bool)
+    w, s, e, n = bbox
+    lat_ok = (lat >= s) & (lat <= n)
+    raw = (lon >= w) & (lon <= e)
+    return lat_ok & (raw | ((norm >= w) & (norm <= e)))
+
+
 @dataclass
 class Candidate:
     """One alternative operation.
@@ -86,20 +98,8 @@ class Candidate:
             * max(math.sin(math.radians(n)) - math.sin(math.radians(s)), 0.0)
         )
 
-    def _contains(self, bbox, lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
-        if bbox is None:
-            return np.ones(lon.shape, dtype=bool)
-        w, s, e, n = bbox
-        lat_ok = (lat >= s) & (lat <= n)
-        raw = (lon >= w) & (lon <= e)
-        norm = _normalize_lon(lon)
-        return lat_ok & (raw | ((norm >= w) & (norm <= e)))
-
     def matches_src(self, lon, lat):
-        return self._contains(self.src_bbox, lon, lat)
-
-    def matches_dst(self, x, y):
-        return self._contains(self.dst_bbox, x, y)
+        return _in_bbox(self.src_bbox, lon, lat, _normalize_lon(lon))
 
 
 def candidate(spec: str, src_bbox=None, dst_bbox=None, accuracy: float = -1.0,
@@ -152,6 +152,7 @@ class CandidateDispatch:
             np.asarray(z, dtype=np.float64), np.nan)
         unresolved = np.ones(lon.shape, dtype=bool)
         attempts = np.zeros(lon.shape, dtype=np.int8)
+        norm = _normalize_lon(lon)
 
         def apply(c: Candidate, m: np.ndarray):
             zi = None if z is None else np.asarray(z, dtype=np.float64)[m]
@@ -172,8 +173,8 @@ class CandidateDispatch:
             if not unresolved.any():
                 break
             c = self.candidates[i]
-            inb = (c.matches_src(lon, lat) if direction == "fwd"
-                   else c.matches_dst(lon, lat))
+            inb = _in_bbox(c.src_bbox if direction == "fwd" else c.dst_bbox,
+                           lon, lat, norm)
             m = unresolved & inb & (attempts <= _N_MAX_RETRY)
             if not m.any():
                 continue

@@ -207,8 +207,9 @@ def _parse(src: str | dict) -> Node:
         raise ValueError("PROJJSON: top-level object expected")
     try:
         return _node(obj)
-    except (AttributeError, TypeError) as e:
-        # a member of the wrong JSON type (the schema's shape errors)
+    except (AttributeError, TypeError, OverflowError) as e:
+        # a member of the wrong JSON type (the schema's shape errors), or
+        # an integer too large for a float
         raise ValueError(f"PROJJSON: malformed CRS object: {e}") from None
 
 

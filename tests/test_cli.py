@@ -142,6 +142,9 @@ _WKT_ID_INF = ('GEOGCRS["x",DATUM["d",ELLIPSOID["e",6378137,298.257223563]],'
                'ANGLEUNIT["degree",0.0174532925199433],ID["EPSG",1e400]]')
 _PJ_MEMBERS_INT = ('{"type":"GeographicCRS",'
                    '"datum_ensemble":{"name":"y","members":3}}')
+_PJ_HUGE_AXIS = ('{"type":"GeographicCRS","name":"x","datum":{"name":"d","ellipsoid":'
+                 '{"name":"e","semi_major_axis":1' + '0' * 400
+                 + ',"inverse_flattening":298.257223563}}}')
 
 
 @pytest.mark.parametrize("argv,rc", [
@@ -174,6 +177,9 @@ _PJ_MEMBERS_INT = ('{"type":"GeographicCRS",'
     (["projinfo", "-o", "WKT2", _WKT_ID_INF], 2),
     (["projinfo", "-s", _PJ_MEMBERS_INT, "-t", "EPSG:4326"], 1),
     (["projinfo", "-o", "WKT2", _PJ_MEMBERS_INT], 1),
+    # a 401-digit PROJJSON integer is beyond float range
+    (["projinfo", _PJ_HUGE_AXIS], 1),
+    (["cs2cs", _PJ_HUGE_AXIS, "EPSG:4326"], 1),
 ])
 def test_bad_input_is_one_stderr_line(argv, rc, capsys, monkeypatch):
     monkeypatch.setattr("sys.stdin", io.StringIO(""))

@@ -201,3 +201,95 @@ def test_fused_join_matches_relational(spark):
     a = {(r.id, r.polygon_id) for r in rel.select("id", "polygon_id").collect()}
     b = {(r.id, r.polygon_id) for r in fus.select("id", "polygon_id").collect()}
     assert a == b and len(a) > 0
+
+
+def _fused_rows(spark, pdf, polys, **kw):
+    """spatial_join_fused over ``pdf`` (pid, lon, lat) with a level-10 cell
+    column; rows as a multiset of (pid, polygon_id)."""
+    from collections import Counter
+
+    from proj_spark import cells
+
+    pdf = pdf.assign(cell=cells.s2_cell_id(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), 10))
+    pts = spark.createDataFrame(pdf)
+    for name, col in kw.items():
+        pts = pts.withColumn(name, col)
+    out = sj.spatial_join_fused(pts, polys, level=8, cell_col="cell", cell_level=10)
+    return Counter((int(r.pid), r.polygon_id) for r in out.select("pid", "polygon_id").collect())
+
+
+def test_fused_join_overlapping_polygons(spark, polys):
+    """A square laid over a grid polygon and the hotspot: a point inside
+    two polygons gets one row per polygon, as brute force says."""
+    from collections import Counter
+
+    sq = np.array([-10.0, -10.0, 10.0, -10.0, 10.0, 10.0, -10.0, 10.0])
+    over = list(polys) + [synth.Polygon("poly_square", "poly", sq, (-10.0, -10.0, 10.0, 10.0))]
+    g = np.linspace(-12.0, 12.0, 97)
+    lon, lat = np.meshgrid(g, g)
+    pdf = pd.DataFrame({"pid": np.arange(lon.size), "lon": lon.ravel(), "lat": lat.ravel()})
+    got = _fused_rows(spark, pdf, over)
+    expect = brute_force_matches(pdf, over)
+    assert got == Counter(expect)
+    assert max(Counter(q for q, _ in expect).values()) == 2, "no point in two polygons"
+
+
+def test_fused_join_bad_rows_match_nothing(spark, polys, points_pdf):
+    """A null cell, a NaN or a null lon/lat matches nothing, even when the
+    row's cell is covered, and fails no task."""
+    from collections import Counter
+
+    good = points_pdf.head(1000)
+    expect = brute_force_matches(good, polys)
+    # rows -1..-3 keep the cell of a matching point but lose a coordinate
+    q = min(expect)[0]
+    bad = pd.DataFrame({"pid": [-1, -2, -3], "lon": good.lon[q], "lat": good.lat[q]})
+    pdf = pd.concat([good, bad], ignore_index=True)
+    got = _fused_rows(
+        spark, pdf, polys,
+        cell=F.when(F.col("pid") % 7 != 0, F.col("cell")),
+        lon=F.when(F.col("pid") == -1, F.lit(float("nan"))).otherwise(F.col("lon")),
+        lat=F.when(F.col("pid") == -2, F.lit(float("nan")))
+        .when(F.col("pid") == -3, F.lit(None)).otherwise(F.col("lat")))
+    assert got == Counter((p, g) for p, g in expect if p % 7 != 0)
+    assert any(p % 7 == 0 for p, _ in expect)
+
+
+def test_fused_join_batch_with_no_covered_point(spark, polys):
+    """No point passes the occupancy table: every match list is null and
+    the join returns no rows."""
+    from proj_spark import cells
+
+    rng = np.random.default_rng(5)
+    pdf = pd.DataFrame({"pid": np.arange(500), "lon": rng.uniform(-180.0, 180.0, 500),
+                        "lat": rng.uniform(-85.0, -80.0, 500)})
+    cover = sj.polygon_cover(polys, 8)["cell"].to_numpy()
+    prefix = cells.s2_cell_id(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), 8)
+    assert not np.isin(prefix, cover).any()
+    assert not brute_force_matches(pdf, polys)
+    assert not _fused_rows(spark, pdf, polys)
+
+
+def test_s2_cell_id_every_level_is_the_leaf_parent():
+    """An id encoded at level L, which skips the lookup rounds past L,
+    equals the level-30 id truncated to L: random points, the poles, the
+    antimeridian and the cube-face edges (two equal |xyz| components)."""
+    from proj_spark import cells
+
+    rng = np.random.default_rng(11)
+    lon = [rng.uniform(-180.0, 180.0, 100_000)]
+    lat = [np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, 100_000)))]
+    t = np.linspace(-180.0, 180.0, 2001)
+    for edge in (np.full_like(t, 35.26438968275466),             # |x| = |y| = |z|
+                 np.degrees(np.arctan(np.abs(np.cos(np.radians(t))))),  # |z| = |x|
+                 np.degrees(np.arctan(np.abs(np.sin(np.radians(t))))),  # |z| = |y|
+                 np.zeros_like(t), np.full_like(t, 90.0), np.full_like(t, -90.0)):
+        lon.append(t)
+        lat.append(edge)
+    lon.append(np.array([45.0, -45.0, 135.0, -135.0, 180.0, -180.0]))  # |x| = |y|, lat 0
+    lat.append(np.zeros(6))
+    lon, lat = np.concatenate(lon), np.concatenate(lat)
+    leaf = cells.s2_cell_id(lon, lat, 30)
+    for level in range(31):
+        assert np.array_equal(cells.s2_cell_id(lon, lat, level),
+                              cells.parent_id(leaf, level)), level

@@ -28,8 +28,9 @@ NOTES = {
     "knn_nation_k3": "The 25-row ref side is broadcast "
                      "(BroadcastNestedLoopJoin, never a shuffled cartesian).",
     "pip_raycast_join": "Cell UDF, then the broadcast cell-cover index "
-                        "inside the match UDF (cover lookup + exact "
-                        "ray-cast): 2 Arrow crossings, no join stage.",
+                        "inside the Arrow match UDF (occupancy gather, "
+                        "cover lookup, exact ray-cast): 2 Arrow crossings, "
+                        "no join stage.",
     "cosine_topk_lsh": "Banded equi-join on (band, bucket) keys; candidate "
                        "shuffles carry ids only, vectors attached after "
                        "dedup.",
