@@ -14,12 +14,13 @@ from __future__ import annotations
 
 import json
 import math
-import os
 from dataclasses import dataclass, field
 
 import numpy as np
 
 from proj_spark.crs import Ellipsoid
+from proj_spark.kernels.geogrid import channels
+from proj_spark.sources import grids
 from proj_spark.sources.geotiff import parse_geotiff
 
 _MONTHS = (31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31)
@@ -146,8 +147,7 @@ class Component:
 class DefModel:
     """Compiled deformation model (driver-side; grids closure-captured)."""
 
-    def __init__(self, path: str, ell: Ellipsoid,
-                 search_paths: list[str] | None = None):
+    def __init__(self, path: str, ell: Ellipsoid):
         self.ell = ell
         j = json.loads(open(path).read())
         if j.get("file_type") != "deformation_model_master_file":
@@ -177,8 +177,6 @@ class DefModel:
         self.t_first = iso8601_to_decimal_year(te["first"])
         self.t_last = iso8601_to_decimal_year(te["last"])
 
-        from proj_spark.plans.pipeline import _GRID_SEARCH_PATHS
-        paths = search_paths or list(_GRID_SEARCH_PATHS)
         self.components: list[Component] = []
         for jc in j["components"]:
             disp = jc["displacement_type"]
@@ -190,32 +188,17 @@ class DefModel:
                 raise ValueError("defmodel: invalid interpolation_method")
             if not self.is_geographic and interp != "bilinear":
                 raise ValueError("defmodel: projected + geocentric_bilinear")
-            fname = sm["filename"]
-            gpath = None
-            for d in paths:
-                cand = os.path.join(d, fname)
-                if os.path.exists(cand):
-                    gpath = cand
-                    break
-            if gpath is None:
-                raise FileNotFoundError(f"defmodel grid {fname!r} not found")
-            grids = [g for g in parse_geotiff(gpath)
-                     if g.subfile_type in (0, 2)]
-            g0 = grids[0]
-            idx_e, idx_n, idx_z = 0, 1, (0 if g0.samples == 1 else 2)
-            for i in range(g0.samples):
-                d = g0.metadata_item("DESCRIPTION", i)
-                if d == "east_offset":
-                    idx_e = i
-                elif d == "north_offset":
-                    idx_n = i
-                elif d == "vertical_offset":
-                    idx_z = i
+            gpath = grids.require(sm["filename"], "defmodel grid")
+            tiff = [g for g in grids.read(gpath, parse_geotiff)
+                    if g.subfile_type in (0, 2)]
+            g0 = tiff[0]
+            idx = channels(g0, ("east_offset", "north_offset", "vertical_offset"),
+                           (0, 1, 0 if g0.samples == 1 else 2))
             self.components.append(Component(
                 disp, norm_bbox(jc["extent"]),
-                sorted(grids, key=lambda g: g.area()),
+                sorted(tiff, key=lambda g: g.area()),
                 _parse_time_function(jc["time_function"]),
-                interp == "geocentric_bilinear", idx_e, idx_n, idx_z))
+                interp == "geocentric_bilinear", *idx))
 
     # ------------------------------------------------------------------
 

@@ -18,17 +18,15 @@ closure-captured into the UDF (broadcast at scale).
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass
 
 import numpy as np
 
+from proj_spark.sources import grids as _grids
 from proj_spark.sources.geotiff import GeoTiffGrid, parse_geotiff
+from proj_spark.sources.grids import _REL_TOL
 
-_REL_TOL = 1e-5
 _ARCSEC2RAD = 1.0 / 3600 / 180 * math.pi
-
-from proj_spark.plans.pipeline import _GRID_SEARCH_PATHS as _SEARCH_PATHS  # noqa: E501  (shared bundled-fixtures-first resolution)
 
 _VERT_DESCS = ("ellipsoidal_height_offset", "geoid_undulation",
                "hydroid_height", "vertical_offset")
@@ -42,69 +40,78 @@ class GridUnit:
     grids: list          # area-ascending (children first)
 
 
-def _resolve(name: str) -> str:
-    for d in _SEARCH_PATHS:
-        cand = os.path.join(d, name)
-        if os.path.exists(cand):
-            return cand
-    raise FileNotFoundError(f"grid {name!r} not found")
+def read_grid_units(path: str) -> list[GridUnit]:
+    """One GeoTIFF's grids grouped into top-level units."""
+    grids = [g for g in parse_geotiff(path) if g.subfile_type in (0, 2)]
+    # generic grids inherit missing metadata from the file's FIRST grid
+    # (reference grids.cpp GTiffGenericGrid::metadataItem :2866-2870)
+    if len(grids) > 1:
+        first = grids[0]
+        for g in grids[1:]:
+            for k, v in first.metadata.items():
+                g.metadata.setdefault(k, v)
+            for k, v in first.sample_meta.items():
+                g.sample_meta.setdefault(k, v)
+    # top-level grids: TYPE non-empty or no containing predecessor
+    tops: list[list[GeoTiffGrid]] = []
+    for g in grids:
+        placed = False
+        parent_name = g.metadata_item("parent_grid_name")
+        gname = g.metadata_item("grid_name")
+        gtype = g.metadata_item("TYPE")
+        for unit in tops:
+            top = unit[0]
+            if parent_name and any(
+                    x.metadata_item("grid_name") == parent_name
+                    for x in unit):
+                unit.append(g)
+                placed = True
+                break
+            # spatial-extent fallback (grids.cpp insertIntoHierarchy
+            # :1410-1426): unnamed grid, same (or no) TYPE, contained
+            if (not parent_name and not gname
+                    and (not gtype
+                         or gtype == top.metadata_item("TYPE"))
+                    and top.west <= g.west and top.south <= g.south
+                    and top.east >= g.east and top.north >= g.north):
+                unit.append(g)
+                placed = True
+                break
+        if not placed:
+            tops.append([g])
+    return [GridUnit(unit[0].metadata_item("TYPE"),
+                     sorted(unit, key=lambda g: g.area()))
+            for unit in tops]
 
 
 def load_grid_units(spec: str) -> list[GridUnit]:
-    units: list[GridUnit] = []
-    for name in spec.split(","):
-        optional = name.startswith("@")
-        name = name.lstrip("@")
-        try:
-            path = _resolve(name)
-        except FileNotFoundError:
-            if optional:
-                continue
-            raise
-        grids = [g for g in parse_geotiff(path) if g.subfile_type in (0, 2)]
-        # generic grids inherit missing metadata from the file's FIRST grid
-        # (reference grids.cpp GTiffGenericGrid::metadataItem :2866-2870)
-        if len(grids) > 1:
-            first = grids[0]
-            for g in grids[1:]:
-                for k, v in first.metadata.items():
-                    g.metadata.setdefault(k, v)
-                for k, v in first.sample_meta.items():
-                    g.sample_meta.setdefault(k, v)
-        # top-level grids: TYPE non-empty or no containing predecessor
-        tops: list[list[GeoTiffGrid]] = []
-        for g in grids:
-            placed = False
-            parent_name = g.metadata_item("parent_grid_name")
-            gname = g.metadata_item("grid_name")
-            gtype = g.metadata_item("TYPE")
-            for unit in tops:
-                top = unit[0]
-                if parent_name and any(
-                        x.metadata_item("grid_name") == parent_name
-                        for x in unit):
-                    unit.append(g)
-                    placed = True
-                    break
-                # spatial-extent fallback (grids.cpp insertIntoHierarchy
-                # :1410-1426): unnamed grid, same (or no) TYPE, contained
-                if (not parent_name and not gname
-                        and (not gtype
-                             or gtype == top.metadata_item("TYPE"))
-                        and top.west <= g.west and top.south <= g.south
-                        and top.east >= g.east and top.north >= g.north):
-                    unit.append(g)
-                    placed = True
-                    break
-            if not placed:
-                tops.append([g])
-        for unit in tops:
-            units.append(GridUnit(
-                unit[0].metadata_item("TYPE"),
-                sorted(unit, key=lambda g: g.area())))
-    if not units:
-        raise FileNotFoundError(f"no usable grid in +grids={spec!r}")
-    return units
+    return _grids.load(spec, read_grid_units)
+
+
+def channels(g: GeoTiffGrid, names: tuple, default: tuple) -> list[int]:
+    """The sample whose DESCRIPTION is each of ``names`` (the last such
+    sample wins), else that name's default index."""
+    idx = list(default)
+    for i in range(g.samples):
+        d = g.metadata_item("DESCRIPTION", i)
+        if d in names:
+            idx[names.index(d)] = i
+    return idx
+
+
+def sample3(units: list[GridUnit], x, y, idx) -> list[np.ndarray]:
+    """Bilinear values of the three channels ``idx`` from the first grid
+    (units in file order, finest subgrid first) whose cell holds the point
+    with no nodata corner in any of them; NaN elsewhere."""
+    out = [np.full_like(x, np.nan) for _ in idx]
+    done = np.zeros(x.shape, dtype=bool)
+    for unit in units:
+        for g in unit.grids:
+            got = [_interp_grid(g, x, y, i, -1, -1, True, True) for i in idx]
+            hit = ~done & got[0][3] & got[1][3] & got[2][3]
+            out = [np.where(hit, v[0], o) for v, o in zip(got, out)]
+            done |= hit
+    return out
 
 
 def _qterp(x, f0, f1, f2):
@@ -150,56 +157,20 @@ def _channel_indices(g: GeoTiffGrid, want_type: str, no_z: bool):
 def _interp_grid(g: GeoTiffGrid, x, y, ix, iy, iz, east_north, bilinear):
     """Interpolate (sx, sy, sz, valid) at normalized coords (already
     longitude-wrapped into the grid span). Mirrors grid_interpolate."""
-    tl = (x - g.west) / g.resx
-    tp = (y - g.south) / g.resy
-    il = np.floor(tl).astype(np.int64)
-    ip = np.floor(tp).astype(np.int64)
-    fl = tl - il
-    fp = tp - ip
-
-    # edge-tolerant clamping (gridshift.cpp:381-408)
-    low_l = (il == -1) & (fl > 1 - 10 * _REL_TOL)
-    il = np.where(low_l, 0, il)
-    fl = np.where(low_l, 0.0, fl)
-    hi_l = (il + 1 == g.width) & (fl < 10 * _REL_TOL)
-    il = np.where(hi_l, il - 1, il)
-    fl = np.where(hi_l, 1.0, fl)
-    low_p = (ip == -1) & (fp > 1 - 10 * _REL_TOL)
-    ip = np.where(low_p, 0, ip)
-    fp = np.where(low_p, 0.0, fp)
-    hi_p = (ip + 1 == g.height) & (fp < 10 * _REL_TOL)
-    ip = np.where(hi_p, ip - 1, ip)
-    fp = np.where(hi_p, 1.0, fp)
-
-    valid = (il >= 0) & (il + 1 < g.width) & (ip >= 0) & (ip + 1 < g.height)
-    use_bilinear = bilinear or g.width < 3 or g.height < 3
+    il, ip, fl, fp, valid = _grids.cell(g, x - g.west, y - g.south)
 
     def sample(chan, iyy, ixx):
         return g.data[np.clip(iyy, 0, g.height - 1),
                       np.clip(ixx, 0, g.width - 1), chan]
 
-    if use_bilinear:
-        m10 = fl * (1.0 - fp)
-        m11 = fl * fp
-        m01 = (1.0 - fl) * fp
-        m00 = (1.0 - fl) * (1.0 - fp)
+    if bilinear or g.width < 3 or g.height < 3:
+        n = 2
 
-        def bil(chan):
-            return (m00 * sample(chan, ip, il) + m10 * sample(chan, ip, il + 1)
-                    + m01 * sample(chan, ip + 1, il)
-                    + m11 * sample(chan, ip + 1, il + 1))
-
-        sx = bil(ix) if ix >= 0 else np.zeros_like(x)
-        sy = bil(iy) if iy >= 0 else np.zeros_like(x)
-        sz = bil(iz) if iz >= 0 else np.zeros_like(x)
-        if g.nodata is not None:
-            for chan in (ix, iy, iz):
-                if chan >= 0:
-                    for dy in (0, 1):
-                        for dx in (0, 1):
-                            valid &= sample(chan, ip + dy, il + dx) != g.nodata
+        def interp(chan):
+            return _grids.bilinear(g.data[..., chan], il, ip, fl, fp)
     else:
         # shift the 3x3 window before/after the half pixel (NOAA qterp)
+        n = 3
         shift_l = ((fl <= 0.5) & (il > 0)) | (il + 2 == g.width)
         il = np.where(shift_l, il - 1, il)
         fl = np.where(shift_l, fl + 1.0, fl)
@@ -208,7 +179,7 @@ def _interp_grid(g: GeoTiffGrid, x, y, ix, iy, iz, east_north, bilinear):
         fp = np.where(shift_p, fp + 1.0, fp)
         valid &= (il >= 0) & (il + 2 < g.width) & (ip >= 0) & (ip + 2 < g.height)
 
-        def biq(chan):
+        def interp(chan):
             rows = [
                 _qterp(fl, sample(chan, ip + j, il), sample(chan, ip + j, il + 1),
                        sample(chan, ip + j, il + 2))
@@ -216,15 +187,14 @@ def _interp_grid(g: GeoTiffGrid, x, y, ix, iy, iz, east_north, bilinear):
             ]
             return _qterp(fp, rows[0], rows[1], rows[2])
 
-        sx = biq(ix) if ix >= 0 else np.zeros_like(x)
-        sy = biq(iy) if iy >= 0 else np.zeros_like(x)
-        sz = biq(iz) if iz >= 0 else np.zeros_like(x)
-        if g.nodata is not None:
-            for chan in (ix, iy, iz):
-                if chan >= 0:
-                    for dy in (0, 1, 2):
-                        for dx in (0, 1, 2):
-                            valid &= sample(chan, ip + dy, il + dx) != g.nodata
+    sx, sy, sz = (interp(c) if c >= 0 else np.zeros_like(x)
+                  for c in (ix, iy, iz))
+    if g.nodata is not None:
+        for chan in (ix, iy, iz):
+            if chan >= 0:
+                for dy in range(n):
+                    for dx in range(n):
+                        valid &= sample(chan, ip + dy, il + dx) != g.nodata
 
     if ix >= 0 and iy >= 0 and not east_north:
         sx = sx * _ARCSEC2RAD

@@ -17,9 +17,9 @@ from __future__ import annotations
 
 import numpy as np
 
+from proj_spark.sources.grids import _REL_TOL, bilinear, cell
 from proj_spark.sources.ntv2 import ShiftGrid
 
-_REL_TOL = 1e-5  # REL_TOLERANCE_HGRIDSHIFT
 _MAX_ITER = 10
 _TOL = 1e-12
 
@@ -27,44 +27,9 @@ _TOL = 1e-12
 def _interpolate(lam_n: np.ndarray, phi_n: np.ndarray, g: ShiftGrid):
     """Bilinear sample at grid-normalized coords (radians from SW corner).
     Returns (dlam, dphi, valid)."""
-    tl = lam_n / g.resx
-    tp = phi_n / g.resy
-    il = np.floor(tl).astype(np.int64)
-    ip = np.floor(tp).astype(np.int64)
-    fl = tl - il
-    fp = tp - ip
-
-    # edge-tolerance clamping (reference :3329-3355)
-    low_l = (il == -1) & (fl > 1 - 10 * _REL_TOL)
-    il = np.where(low_l, 0, il)
-    fl = np.where(low_l, 0.0, fl)
-    hi_l = (il + 1 == g.width) & (fl < 10 * _REL_TOL)
-    il = np.where(hi_l, il - 1, il)
-    fl = np.where(hi_l, 1.0, fl)
-    low_p = (ip == -1) & (fp > 1 - 10 * _REL_TOL)
-    ip = np.where(low_p, 0, ip)
-    fp = np.where(low_p, 0.0, fp)
-    hi_p = (ip + 1 == g.height) & (fp < 10 * _REL_TOL)
-    ip = np.where(hi_p, ip - 1, ip)
-    fp = np.where(hi_p, 1.0, fp)
-
-    valid = (il >= 0) & (il + 1 < g.width) & (ip >= 0) & (ip + 1 < g.height)
-    ils = np.clip(il, 0, g.width - 2)
-    ips = np.clip(ip, 0, g.height - 2)
-
-    m10 = fl * (1.0 - fp)
-    m11 = fl * fp
-    m01 = (1.0 - fl) * fp
-    m00 = (1.0 - fl) * (1.0 - fp)
-    dlam = (
-        m00 * g.lon_shift[ips, ils] + m10 * g.lon_shift[ips, ils + 1]
-        + m01 * g.lon_shift[ips + 1, ils] + m11 * g.lon_shift[ips + 1, ils + 1]
-    )
-    dphi = (
-        m00 * g.lat_shift[ips, ils] + m10 * g.lat_shift[ips, ils + 1]
-        + m01 * g.lat_shift[ips + 1, ils] + m11 * g.lat_shift[ips + 1, ils + 1]
-    )
-    return dlam, dphi, valid
+    ix, iy, fx, fy, valid = cell(g, lam_n, phi_n)
+    return (bilinear(g.lon_shift, ix, iy, fx, fy),
+            bilinear(g.lat_shift, ix, iy, fx, fy), valid)
 
 
 def _select_grid_masks(lam, phi, grids):
@@ -114,19 +79,23 @@ def _select_grid_masks(lam, phi, grids):
     yield from out
 
 
-def hgridshift_fwd(lam, phi, grids: list[ShiftGrid]):
-    lam = np.asarray(lam, dtype=np.float64)
-    phi = np.asarray(phi, dtype=np.float64)
-    # error-in-band: points outside every subgrid -> NaN (PROJ HUGE_VAL)
+def hgrid_shift(lam, phi, grids: list[ShiftGrid]):
+    """Interpolated (dlam, dphi) at each point from the grid the gridAt
+    descent selects; NaN outside every subgrid (PROJ HUGE_VAL)."""
     out_l = np.full_like(lam, np.nan)
     out_p = np.full_like(phi, np.nan)
     for g, m in _select_grid_masks(lam, phi, grids):
         dlam, dphi, valid = _interpolate(lam[m] - g.west, phi[m] - g.south, g)
-        li = np.where(valid, lam[m] + dlam, np.nan)
-        pi = np.where(valid, phi[m] + dphi, np.nan)
-        out_l[m] = li
-        out_p[m] = pi
+        out_l[m] = np.where(valid, dlam, np.nan)
+        out_p[m] = np.where(valid, dphi, np.nan)
     return out_l, out_p
+
+
+def hgridshift_fwd(lam, phi, grids: list[ShiftGrid]):
+    lam = np.asarray(lam, dtype=np.float64)
+    phi = np.asarray(phi, dtype=np.float64)
+    dlam, dphi = hgrid_shift(lam, phi, grids)
+    return lam + dlam, phi + dphi
 
 
 def vgrid_value(lam, phi, grids) -> np.ndarray:

@@ -774,228 +774,107 @@ class MolodenskyStep(Step):
         return lam, phi, (h if z is not None else z), t
 
 
-_FIXTURE_GRIDS = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__)))), "tests", "fixtures", "grids")
+class _GridStep(Step):
+    """hgridshift/vgridshift: the mandatory +grids list and the temporal
+    gate (reference hgridshift.cpp fwd_4d :73-95, vgridshift.cpp fwd_4d
+    :90-114): the shift applies only when t < t_epoch and t_final >
+    t_epoch. "now" just needs to order after any t_epoch — a fixed future
+    constant, NOT the wall clock (determinism for resume)."""
 
-_GRID_SEARCH_PATHS = [
-    ".",
-    "data",
-    # user-configured grid directory (PROJ_DATA-style)
-    *([os.environ["PROJ_SPARK_GRID_DIR"]]
-      if os.environ.get("PROJ_SPARK_GRID_DIR") else []),
-    # deployed data dir (PROJ_DATA analogue; see sources/epsg.py) for
-    # --py-files cluster runs where grids ship separately from code
-    *([os.path.join(os.environ["PROJ_SPARK_DATA"], "grids", "tests"),
-       os.path.join(os.environ["PROJ_SPARK_DATA"], "grids"),
-       os.environ["PROJ_SPARK_DATA"]]
-      if os.environ.get("PROJ_SPARK_DATA") else []),
-    # bundled micro test grids (copied from the reference's public test
-    # data) — the engine runs standalone, no reference checkout needed
-    os.path.join(_FIXTURE_GRIDS, "tests"),
-    _FIXTURE_GRIDS,                # "tests/xxx.tif"-style gie references
-    "/root/reference/data/tests",  # fallback: reference checkout if present
-    "/root/reference/data",
-]
-_GRID_CACHE: dict = {}
+    left = "rad"
+    right = "rad"
 
+    def __init__(self, params: dict, reader):
+        from proj_spark.sources import grids
 
-def _load_grids(spec: str):
-    """Resolve a +grids= list; '@name' marks an optional grid."""
-    import os
+        if "grids" not in params:
+            raise ValueError(f"{self.op}: +grids is mandatory")
+        self.grids = grids.load(str(params["grids"]), reader)
+        tf = params.get("t_final")
+        self.t_final = (3000.0 if tf == "now" else float(tf)) if tf else 0.0
+        self.t_epoch = float(params.get("t_epoch", 0.0))
 
-    from proj_spark.sources.ntv2 import parse_gsb
-
-    grids = []
-    for name in spec.split(","):
-        optional = name.startswith("@")
-        name = name.lstrip("@")
-        path = None
-        for d in _GRID_SEARCH_PATHS:
-            cand = os.path.join(d, name)
-            if os.path.exists(cand):
-                path = cand
-                break
-        if path is None:
-            if optional:
-                continue
-            raise FileNotFoundError(f"grid {name!r} not found")
-        if path not in _GRID_CACHE:
-            try:
-                if path.lower().endswith((".tif", ".tiff")):
-                    from proj_spark.sources.geotiff import load_hgrids_tiff
-                    _GRID_CACHE[path] = load_hgrids_tiff(path)
-                else:
-                    with open(path, "rb") as fh:
-                        magic = fh.read(9)
-                    if magic.startswith(b"CTABLE V2"):
-                        # datum-shift use compensates the NTv2 west-positive
-                        # convention (grids.cpp valueAt compensate=true)
-                        from proj_spark.sources.ntv2 import parse_ct2
-                        _GRID_CACHE[path] = parse_ct2(path, negate_lon=True)
-                    elif magic.startswith(b"HEADER"):
-                        from proj_spark.sources.ntv2 import parse_ntv1
-                        _GRID_CACHE[path] = parse_ntv1(path)
-                    else:
-                        _GRID_CACHE[path] = parse_gsb(path)
-            except Exception:
-                # '@'-optional grids may be unreadable; skip like the
-                # reference's canFail path (pj_hgrid_init)
-                if optional:
-                    continue
-                raise
-        grids.extend(_GRID_CACHE[path])
-    if not grids:
-        raise FileNotFoundError(f"no usable grid in +grids={spec!r}")
-    return grids
+    def _gate(self, t, shifted, unshifted):
+        """Each shifted array where the gate applies, else unshifted."""
+        if self.t_final == 0.0 or self.t_epoch == 0.0 or t is None:
+            return shifted
+        tt = np.asarray(t, dtype=np.float64)
+        apply_mask = (tt < self.t_epoch) & (self.t_final > self.t_epoch)
+        return tuple(np.where(apply_mask, s, u)
+                     for s, u in zip(shifted, unshifted))
 
 
-class HgridshiftStep(Step):
+class HgridshiftStep(_GridStep):
     """Horizontal datum shift by NTv2 grid (reference
     src/transformations/hgridshift.cpp + grids.cpp apply path). The grid
     arrays ride into Spark executors by closure capture (broadcast)."""
 
-    left = "rad"
-    right = "rad"
+    op = "hgridshift"
 
     def __init__(self, params: dict):
-        from proj_spark.kernels import gridshift as k
+        from proj_spark.sources.grids import read_hgrids
 
-        if "grids" not in params:
-            raise ValueError("hgridshift: +grids is mandatory")
-        self.k = k
-        self.grids = _load_grids(str(params["grids"]))
-        # temporal gating (reference hgridshift.cpp fwd_4d :73-95): apply
-        # only when t < t_epoch and t_final > t_epoch; "now" = any future
-        tf = params.get("t_final")
-        self.t_final = (3000.0 if tf == "now" else float(tf)) if tf else 0.0
-        self.t_epoch = float(params.get("t_epoch", 0.0))
-
-    def _gate(self, x, y, t, lam, phi):
-        if self.t_final == 0.0 or self.t_epoch == 0.0 or t is None:
-            return lam, phi
-        tt = np.asarray(t, dtype=np.float64)
-        apply_mask = (tt < self.t_epoch) & (self.t_final > self.t_epoch)
-        return (np.where(apply_mask, lam, x), np.where(apply_mask, phi, y))
+        super().__init__(params, read_hgrids)
 
     def fwd(self, x, y, z, t):
-        lam, phi = self.k.hgridshift_fwd(x, y, self.grids)
-        lam, phi = self._gate(x, y, t, lam, phi)
+        from proj_spark.kernels.gridshift import hgridshift_fwd
+
+        lam, phi = self._gate(t, hgridshift_fwd(x, y, self.grids), (x, y))
         return lam, phi, z, t
 
     def inv(self, x, y, z, t):
-        lam, phi = self.k.hgridshift_inv(x, y, self.grids)
-        lam, phi = self._gate(x, y, t, lam, phi)
+        from proj_spark.kernels.gridshift import hgridshift_inv
+
+        lam, phi = self._gate(t, hgridshift_inv(x, y, self.grids), (x, y))
         return lam, phi, z, t
 
 
-class VgridshiftStep(Step):
-    """Vertical (geoid) shift from a GTX grid (reference
+class VgridshiftStep(_GridStep):
+    """Vertical (geoid) shift from a GTX or GeoTIFF grid (reference
     src/transformations/vgridshift.cpp; forward z += value * multiplier,
     default multiplier -1.0, :201)."""
 
-    left = "rad"
-    right = "rad"
+    op = "vgridshift"
 
     def __init__(self, params: dict):
-        import os
+        from dataclasses import replace
 
-        from proj_spark.kernels import gridshift as k
-        from proj_spark.sources.gtx import parse_gtx
+        from proj_spark.sources.grids import read_vgrids
 
-        if "grids" not in params:
-            raise ValueError("vgridshift: +grids is mandatory")
-        self.k = k
+        super().__init__(params, read_vgrids)
         self.mult = float(params.get("multiplier", -1.0))
-        # temporal gating (reference vgridshift.cpp fwd_4d :90-114): apply
-        # only when t < t_epoch and t_final > t_epoch. "now" just needs to
-        # order after any t_epoch — use a fixed future constant, NOT the
-        # wall clock (determinism for resume).
-        tf = params.get("t_final")
-        self.t_final = (3000.0 if tf == "now" else float(tf)) if tf else 0.0
-        self.t_epoch = float(params.get("t_epoch", 0.0))
-        self.grids = []
-        for name in str(params["grids"]).split(","):
-            optional = name.startswith("@")
-            name = name.lstrip("@")
-            if name == "null":
-                # world-covering zero-shift fallback grid
-                # (reference grids.cpp NullVerticalShiftGrid)
-                from proj_spark.sources.gtx import VGrid
-                self.grids.append(VGrid(
-                    -math.pi, -math.pi / 2, math.pi, math.pi / 2,
-                    3, 3, np.zeros((3, 3), dtype=np.float32)))
-                continue
-            path = None
-            for d in _GRID_SEARCH_PATHS:
-                cand = os.path.join(d, name)
-                if os.path.exists(cand):
-                    path = cand
-                    break
-            # the reference's gie fixtures name egm96_15.gtx; only the
-            # downsampled extract ships in data/tests — accept it
-            if path is None and name == "egm96_15.gtx":
-                for d in _GRID_SEARCH_PATHS:
-                    cand = os.path.join(d, "egm96_15_downsampled.gtx")
-                    if os.path.exists(cand):
-                        path = cand
-                        break
-            if path is None:
-                if optional:
-                    continue
-                raise FileNotFoundError(f"grid {name!r} not found")
-            if path not in _GRID_CACHE:
-                if path.lower().endswith((".tif", ".tiff")):
-                    from proj_spark.sources.geotiff import load_vgrids_tiff
-                    _GRID_CACHE[path] = load_vgrids_tiff(path)
-                else:
-                    _GRID_CACHE[path] = parse_gtx(path)
-            self.grids.extend(_GRID_CACHE[path])
-        if not self.grids:
-            raise FileNotFoundError(f"no usable grid in {params['grids']!r}")
         # GTX nodata sentinels -> NaN so the bilinear kernel drops those
         # corners and renormalizes (reference grids.cpp GTXVerticalShiftGrid
-        # ::isNodata :355-362: |val*mult| > 1000 or val == -88.8888f)
-        masked = []
-        for g in self.grids:
-            if not hasattr(g, "values"):  # non-GTX grid shapes pass through
-                masked.append(g)
+        # ::isNodata :355-362: |val*mult| > 1000 or val == -88.8888f);
+        # GeoTIFF grids use their GDAL_NODATA tag (applied by the reader)
+        for i, g in enumerate(self.grids):
+            if not g.gtx:
                 continue
             bad = (np.abs(g.values * np.float32(self.mult)) > 1000.0) \
                 | (g.values == np.float32(-88.88880))
             if bad.any():
                 vals = g.values.copy()
                 vals[bad] = np.nan
-                g = type(g)(g.west, g.south, g.resx, g.resy,
-                            g.width, g.height, vals)
-            masked.append(g)
-        self.grids = masked
+                self.grids[i] = replace(g, values=vals)
 
-    def _gate(self, shift, t):
-        if self.t_final == 0.0 or self.t_epoch == 0.0 or t is None:
-            return shift
-        tt = np.asarray(t, dtype=np.float64)
-        apply_mask = (tt < self.t_epoch) & (self.t_final > self.t_epoch)
-        return np.where(apply_mask, shift, 0.0)
+    def _shifted(self, x, y, z, t, sign):
+        from proj_spark.kernels.gridshift import vgrid_value
 
-    def fwd(self, x, y, z, t):
         zz = z if z is not None else np.zeros_like(np.asarray(x, dtype=np.float64))
-        shift = self.k.vgrid_value(x, y, self.grids) * self.mult
-        shift = self._gate(shift, t)
+        shift, = self._gate(t, (vgrid_value(x, y, self.grids) * self.mult,),
+                            (0.0,))
         # outside every grid is a whole-coordinate error (reference
         # read_vgrid_value returns HUGE_VAL and vgridshift.cpp errors the
         # PJ_COORD), not just a missing z
         bad = np.isnan(shift)
         return (np.where(bad, np.nan, x), np.where(bad, np.nan, y),
-                zz + shift, t)
+                zz + sign * shift, t)
+
+    def fwd(self, x, y, z, t):
+        return self._shifted(x, y, z, t, 1.0)
 
     def inv(self, x, y, z, t):
-        zz = z if z is not None else np.zeros_like(np.asarray(x, dtype=np.float64))
-        shift = self.k.vgrid_value(x, y, self.grids) * self.mult
-        shift = self._gate(shift, t)
-        bad = np.isnan(shift)
-        return (np.where(bad, np.nan, x), np.where(bad, np.nan, y),
-                zz - shift, t)
+        return self._shifted(x, y, z, t, -1.0)
 
 
 class PushStep(Step):
@@ -1256,52 +1135,26 @@ class XyzgridshiftStep(Step):
     right = "cart"
 
     def __init__(self, params: dict):
-        from proj_spark.kernels import cart as k_cart
-        from proj_spark.kernels.geogrid import load_grid_units
+        from proj_spark.kernels.geogrid import channels, load_grid_units
 
         if "grids" not in params:
             raise ValueError("xyzgridshift: +grids parameter missing")
         self.ell = resolve_ellipsoid(params)
-        self.k_cart = k_cart
         self.units = load_grid_units(str(params["grids"]))
         self.mult = float(params.get("multiplier", 1.0))
         grid_ref = str(params.get("grid_ref", "input_crs"))
         if grid_ref not in ("input_crs", "output_crs"):
             raise ValueError("xyzgridshift: unsupported grid_ref")
         self.ref_is_input = grid_ref == "input_crs"
-        # channel indices (x/y/z_translation, default 0/1/2)
-        g = self.units[0].grids[0]
-        self.idx = [0, 1, 2]
-        for i in range(g.samples):
-            d = g.metadata_item("DESCRIPTION", i)
-            if d == "x_translation":
-                self.idx[0] = i
-            elif d == "y_translation":
-                self.idx[1] = i
-            elif d == "z_translation":
-                self.idx[2] = i
+        self.idx = channels(
+            self.units[0].grids[0],
+            ("x_translation", "y_translation", "z_translation"), (0, 1, 2))
 
     def _shift(self, X, Y, Z):
-        from proj_spark.kernels.geogrid import _interp_grid
+        from proj_spark.kernels.geogrid import sample3
 
-        lam, phi, _h = self.k_cart.cart_inv(X, Y, Z, self.ell)
-        dx = np.full_like(lam, np.nan)
-        dy = np.full_like(lam, np.nan)
-        dz = np.full_like(lam, np.nan)
-        done = np.zeros(lam.shape, dtype=bool)
-        for unit in self.units:
-            for g in unit.grids:
-                gx, _, _, v1 = _interp_grid(g, lam, phi, self.idx[0], -1, -1,
-                                            True, True)
-                gy, _, _, v2 = _interp_grid(g, lam, phi, self.idx[1], -1, -1,
-                                            True, True)
-                gz, _, _, v3 = _interp_grid(g, lam, phi, self.idx[2], -1, -1,
-                                            True, True)
-                hit = ~done & v1 & v2 & v3
-                dx = np.where(hit, gx, dx)
-                dy = np.where(hit, gy, dy)
-                dz = np.where(hit, gz, dz)
-                done |= hit
+        lam, phi, _h = k_cart.cart_inv(X, Y, Z, self.ell)
+        dx, dy, dz = sample3(self.units, lam, phi, self.idx)
         return dx * self.mult, dy * self.mult, dz * self.mult
 
     def _direct(self, X, Y, Z, factor):
@@ -1357,106 +1210,42 @@ class DeformationStep(Step):
     right = "cart"
 
     def __init__(self, params: dict):
-        from proj_spark.kernels import cart as k_cart
-        from proj_spark.kernels import gridshift as k_gridshift
+        from proj_spark.sources import grids
 
         self.ell = resolve_ellipsoid(params)
-        self.k_cart = k_cart
-        self.k_gridshift = k_gridshift
         self.dt = float(params["dt"]) if "dt" in params else None
         self.t_epoch = float(params["t_epoch"]) if "t_epoch" in params else None
         if self.dt is None and self.t_epoch is None:
             raise ValueError("deformation: +dt or +t_epoch is mandatory")
         self.units = None
-        self.hgrids = None
-        self.vgrids = None
         if "grids" in params:
-            from proj_spark.kernels.geogrid import load_grid_units
+            from proj_spark.kernels.geogrid import channels, load_grid_units
 
             self.units = load_grid_units(str(params["grids"]))
-            g = self.units[0].grids[0]
-            self.idx = [0, 1, 2]
-            for i in range(g.samples):
-                d = g.metadata_item("DESCRIPTION", i)
-                if d == "east_velocity":
-                    self.idx[0] = i
-                elif d == "north_velocity":
-                    self.idx[1] = i
-                elif d == "up_velocity":
-                    self.idx[2] = i
+            self.idx = channels(
+                self.units[0].grids[0],
+                ("east_velocity", "north_velocity", "up_velocity"), (0, 1, 2))
         else:
             if "xy_grids" not in params or "z_grids" not in params:
                 raise ValueError(
                     "deformation: +grids or +xy_grids/+z_grids mandatory")
-            import os
-
-            from proj_spark.sources.gtx import parse_gtx
-            from proj_spark.sources.ntv2 import parse_ct2
-
-            def find(name):
-                for d in _GRID_SEARCH_PATHS:
-                    cand = os.path.join(d, name)
-                    if os.path.exists(cand):
-                        return cand
-                # the gie corpus names egm96_15.gtx; only the downsampled
-                # extract ships in the reference's test data (same alias
-                # VgridshiftStep applies)
-                if name == "egm96_15.gtx":
-                    for d in _GRID_SEARCH_PATHS:
-                        cand = os.path.join(d, "egm96_15_downsampled.gtx")
-                        if os.path.exists(cand):
-                            return cand
-                raise FileNotFoundError(f"grid {name!r} not found")
-
-            self.hgrids = []
-            for name in str(params["xy_grids"]).lstrip("@").split(","):
-                self.hgrids.extend(parse_ct2(find(name)))
-            self.vgrids = []
-            for name in str(params["z_grids"]).lstrip("@").split(","):
-                self.vgrids.extend(parse_gtx(find(name)))
+            self.hgrids = grids.load(str(params["xy_grids"]),
+                                     grids.read_velocity_ct2)
+            self.vgrids = grids.load(str(params["z_grids"]), grids.read_vgrids)
 
     def _velocity(self, X, Y, Z):
         """(vx, vy, vz) cartesian m/yr at geocentric positions."""
-        lam, phi, _h = self.k_cart.cart_inv(X, Y, Z, self.ell)
+        lam, phi, _h = k_cart.cart_inv(X, Y, Z, self.ell)
         if self.units is not None:
-            from proj_spark.kernels.geogrid import _interp_grid
+            from proj_spark.kernels.geogrid import sample3
 
-            e = np.full_like(lam, np.nan)
-            n = np.full_like(lam, np.nan)
-            u = np.full_like(lam, np.nan)
-            done = np.zeros(lam.shape, dtype=bool)
-            for unit in self.units:
-                for g in unit.grids:
-                    ge, _, _, v1 = _interp_grid(g, lam, phi, self.idx[0], -1,
-                                                -1, True, True)
-                    gn, _, _, v2 = _interp_grid(g, lam, phi, self.idx[1], -1,
-                                                -1, True, True)
-                    gu, _, _, v3 = _interp_grid(g, lam, phi, self.idx[2], -1,
-                                                -1, True, True)
-                    hit = ~done & v1 & v2 & v3
-                    e = np.where(hit, ge, e)
-                    n = np.where(hit, gn, n)
-                    u = np.where(hit, gu, u)
-                    done |= hit
-            e /= 1000.0
-            n /= 1000.0
-            u /= 1000.0
+            e, n, u = (v / 1000.0
+                       for v in sample3(self.units, lam, phi, self.idx))
         else:
-            out_l = np.full_like(lam, np.nan)
-            out_p = np.full_like(lam, np.nan)
-            remaining = np.ones(lam.shape, dtype=bool)
-            for g in self.hgrids:
-                eps = (g.resx + g.resy) * 1e-5
-                m = remaining & g.contains(lam, phi, eps)
-                if m.any():
-                    dl, dp, valid = self.k_gridshift._interpolate(
-                        lam[m] - g.west, phi[m] - g.south, g)
-                    out_l[m] = np.where(valid, dl, np.nan)
-                    out_p[m] = np.where(valid, dp, np.nan)
-                    remaining &= ~m
-            e = out_l / 1000.0
-            n = out_p / 1000.0
-            u = self.k_gridshift.vgrid_value(lam, phi, self.vgrids) / 1000.0
+            from proj_spark.kernels.gridshift import hgrid_shift, vgrid_value
+
+            e, n = (v / 1000.0 for v in hgrid_shift(lam, phi, self.hgrids))
+            u = vgrid_value(lam, phi, self.vgrids) / 1000.0
         sp, cp = np.sin(phi), np.cos(phi)
         sl, cl = np.sin(lam), np.cos(lam)
         vx = -sp * cl * n - sl * e + cp * cl * u
@@ -1515,22 +1304,13 @@ class TinshiftStep(Step):
     right = "m"
 
     def __init__(self, params: dict):
-        import os
-
         from proj_spark.kernels.tinshift import parse_tinshift
+        from proj_spark.sources import grids
 
         if "file" not in params:
             raise ValueError("tinshift: +file parameter missing")
-        name = str(params["file"])
-        path = None
-        for d in _GRID_SEARCH_PATHS:
-            cand = os.path.join(d, name)
-            if os.path.exists(cand):
-                path = cand
-                break
-        if path is None:
-            raise FileNotFoundError(f"tinshift file {name!r} not found")
-        self.T = parse_tinshift(path)
+        self.T = grids.read(grids.require(str(params["file"]), "tinshift file"),
+                            parse_tinshift)
 
     def fwd(self, x, y, z, t):
         from proj_spark.kernels.tinshift import tinshift_apply
@@ -1553,23 +1333,14 @@ class DefmodelStep(Step):
     coordinate."""
 
     def __init__(self, params: dict):
-        import os
-
         from proj_spark.kernels.defmodel import DefModel
+        from proj_spark.sources import grids
 
         if "model" not in params:
             raise ValueError("defmodel: +model parameter missing")
-        name = str(params["model"])
-        path = None
-        for d in _GRID_SEARCH_PATHS:
-            cand = os.path.join(d, name)
-            if os.path.exists(cand):
-                path = cand
-                break
-        if path is None:
-            raise FileNotFoundError(f"defmodel master file {name!r} not found")
-        self.model = DefModel(path, resolve_ellipsoid(params),
-                              search_paths=_GRID_SEARCH_PATHS)
+        self.model = DefModel(
+            grids.require(str(params["model"]), "defmodel master file"),
+            resolve_ellipsoid(params))
         self.left = self.right = "rad" if self.model.is_geographic else "m"
 
     def fwd(self, x, y, z, t):

@@ -359,13 +359,17 @@ def load_hgrids_tiff(path: str):
     """GeoTIFF horizontal grids -> sources.ntv2.ShiftGrid list (east-positive
     radian shifts). Mirrors grids.cpp GTiffHGridShiftSet::open :2520-2650:
     default channels lat=0/lon=1, DESCRIPTION override, positive_value,
-    UNITTYPE arc-second|degree|radian; overview IFDs skipped."""
+    UNITTYPE arc-second|degree|radian; overview IFDs skipped; an IFD of
+    fewer than 2 samples refuses the file."""
     from proj_spark.sources.ntv2 import ShiftGrid
 
     out = []
     for g in parse_geotiff(path):
         if g.subfile_type not in (0, 2):
             continue
+        if g.samples < 2:
+            raise ValueError(f"{path}: a horizontal grid needs at least 2 "
+                             f"samples per pixel")
         idx_lat, idx_lon = 0, 1
         found_lat = found_lon = False
         for i in range(g.samples):

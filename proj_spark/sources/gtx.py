@@ -25,6 +25,7 @@ class VGrid:
     width: int
     height: int
     values: np.ndarray  # (H, W) float32 metres
+    gtx: bool = False   # read from GTX: vgridshift's GTX nodata rule applies
 
     @property
     def east(self) -> float:
@@ -56,7 +57,7 @@ def parse_gtx(path: str) -> list[VGrid]:
     d2r = math.pi / 180.0
     return [
         VGrid(xorigin * d2r, yorigin * d2r, xstep * d2r, ystep * d2r,
-              columns, rows, values)
+              columns, rows, values, gtx=True)
     ]
 
 

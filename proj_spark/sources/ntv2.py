@@ -13,6 +13,7 @@ rounding so interpolated values match the reference bit-for-bit.
 
 from __future__ import annotations
 
+import math
 import struct
 from dataclasses import dataclass
 

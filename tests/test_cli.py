@@ -180,6 +180,9 @@ _PJ_HUGE_AXIS = ('{"type":"GeographicCRS","name":"x","datum":{"name":"d","ellips
     # a 401-digit PROJJSON integer is beyond float range
     (["projinfo", _PJ_HUGE_AXIS], 1),
     (["cs2cs", _PJ_HUGE_AXIS, "EPSG:4326"], 1),
+    # a GeoTIFF horizontal grid with a 1-sample IFD is refused by name
+    (["cct", "+proj=hgridshift", "+grids=tests/"
+      "us_noaa_nadcon5_nad83_2007_nad83_2011_alaska_extract.tif"], 1),
 ])
 def test_bad_input_is_one_stderr_line(argv, rc, capsys, monkeypatch):
     monkeypatch.setattr("sys.stdin", io.StringIO(""))

@@ -10,12 +10,13 @@ import pytest
 
 from proj_spark.plans.pipeline import compile_pipeline
 
-NTF = "/root/reference/data/tests/ntf_r93.gsb"
-BETA = "/root/reference/data/tests/BETA2007.gsb"
+GRIDS = os.path.join(os.path.dirname(__file__), "fixtures", "grids", "tests")
+NTF = os.path.join(GRIDS, "ntf_r93.gsb")
+BETA = os.path.join(GRIDS, "BETA2007.gsb")
 
 pytestmark = pytest.mark.skipif(
     not (os.path.exists(NTF) and os.path.exists(BETA)),
-    reason="reference test grids not available",
+    reason="bundled test grids not available",
 )
 
 # DHDN -> ETRS89 fixture pairs from the reference's own regression suite
@@ -166,3 +167,106 @@ def test_three_level_descent_and_toplevel_file_order():
     out_l2, _ = hgridshift_fwd(np.array([3.0]) * d2r, np.array([3.0]) * d2r,
                                [a, b])
     np.testing.assert_allclose(out_l2[0] / d2r, 3.001, atol=1e-9)
+
+
+def test_null_hgrid_is_the_identity():
+    """``null`` is the world-covering zero-shift grid for horizontal grids
+    too (grids.cpp NullHorizontalShiftGrid), under +grids and +nadgrids."""
+    lon = np.array([-179.5, -80.0, 0.0, 10.0, 179.5])
+    lat = np.array([-89.0, 50.0, 0.0, -20.0, 89.0])
+    for spec in ("+proj=hgridshift +grids=null",
+                 "+proj=hgridshift +grids=@missing.gsb,@null"):
+        p = compile_pipeline(spec)
+        lam, phi, _, _ = p.fwd_deg(lon, lat)
+        np.testing.assert_allclose(lam, lon, rtol=0, atol=1e-12)
+        np.testing.assert_allclose(phi, lat, rtol=0, atol=1e-12)
+        lam, phi, _, _ = p.inv_deg(lon, lat)
+        np.testing.assert_allclose(lam, lon, rtol=0, atol=1e-12)
+        np.testing.assert_allclose(phi, lat, rtol=0, atol=1e-12)
+
+
+# GDAL's EPSG:3857 WKT1: the PROJ4 extension carries +nadgrids=@null
+WKT_3857 = (
+    'PROJCS["WGS 84 / Pseudo-Mercator",GEOGCS["WGS 84",DATUM["WGS_1984",'
+    'SPHEROID["WGS 84",6378137,298.257223563,AUTHORITY["EPSG","7030"]],'
+    'AUTHORITY["EPSG","6326"]],PRIMEM["Greenwich",0,AUTHORITY["EPSG","8901"]],'
+    'UNIT["degree",0.0174532925199433,AUTHORITY["EPSG","9122"]],'
+    'AUTHORITY["EPSG","4326"]],PROJECTION["Mercator_1SP"],'
+    'PARAMETER["central_meridian",0],PARAMETER["scale_factor",1],'
+    'PARAMETER["false_easting",0],PARAMETER["false_northing",0],'
+    'UNIT["metre",1,AUTHORITY["EPSG","9001"]],AXIS["Easting",EAST],'
+    'AXIS["Northing",NORTH],EXTENSION["PROJ4","+proj=merc +a=6378137 '
+    '+b=6378137 +lat_ts=0.0 +lon_0=0.0 +x_0=0.0 +y_0=0 +k=1.0 +units=m '
+    '+nadgrids=@null +wktext +no_defs"],AUTHORITY["EPSG","3857"]]')
+
+
+def test_epsg_3857_wkt_with_null_nadgrids():
+    from proj_spark.plans.pipeline import compile_crs_to_crs
+
+    lon = np.array([2.0, 151.2, 0.0, -122.4])
+    lat = np.array([49.0, -33.9, 0.0, 37.8])
+    X, Y, _, _ = compile_crs_to_crs("EPSG:4326", WKT_3857).fwd_deg(lon, lat)
+    Xr, Yr, _, _ = compile_crs_to_crs("EPSG:4326", "EPSG:3857").fwd_deg(
+        lon, lat)
+    assert np.isfinite(X).all() and np.isfinite(Y).all()
+    np.testing.assert_allclose(X, Xr, rtol=0, atol=1e-3)
+    np.testing.assert_allclose(Y, Yr, rtol=0, atol=1e-3)
+
+
+def test_ntv1_grid_reads():
+    """NTv1 (.dat) grids read and shift (more_builtins' NAD27 datum lists
+    ntv1_can.dat)."""
+    p = compile_pipeline("+proj=hgridshift +grids=ntv1_can.dat")
+    lam, phi, _, _ = p.fwd_deg(np.array([-80.0]), np.array([50.0]))
+    assert 0 < _err_m(lam[0], phi[0], -80.0, 50.0) < 100.0
+    lon2, lat2, _, _ = p.inv_deg(lam, phi)
+    assert _err_m(lon2[0], lat2[0], -80.0, 50.0) < 1e-6
+
+
+_DEF = ("+proj=pipeline +step +proj=cart +ellps=GRS80 +step +proj=deformation "
+        "+xy_grids={xy} +z_grids=tests/nkgrf03vel_realigned_z_extract.gtx "
+        "+ellps=GRS80 +dt=1 +step +proj=cart +ellps=GRS80 +inv")
+_CT2 = "tests/nkgrf03vel_realigned_xy_extract.ct2"
+
+
+@pytest.mark.parametrize("xy", [f"{_CT2},@missing.ct2", f"@missing.ct2,{_CT2}"])
+def test_deformation_optional_grid_per_name(xy):
+    """``@`` marks one name of +xy_grids optional, not the whole list:
+    either order gives the single-grid output at the gie point."""
+    args = (np.array([21.5]), np.array([63.0]), np.array([0.0]))
+    want = compile_pipeline(_DEF.format(xy=_CT2)).fwd_deg(*args)[:3]
+    got = compile_pipeline(_DEF.format(xy=xy)).fwd_deg(*args)[:3]
+    assert np.isfinite(want).all()
+    np.testing.assert_array_equal(got, want)
+
+
+def test_gtx_nodata_rule_skips_geotiff_vgrids():
+    """|value * multiplier| > 1000 marks nodata only in GTX grids
+    (GTXVerticalShiftGrid::isNodata); a GeoTIFF grid keeps its value."""
+    p = compile_pipeline(
+        "+proj=vgridshift +grids=tests/test_vgrid_float64.tif +multiplier=100")
+    _, _, z, _ = p.fwd_deg(np.array([7.0]), np.array([52.0]), np.array([0.0]))
+    assert z[0] == pytest.approx(1600.0, abs=1e-9)
+
+
+_G = "tests/us_noaa_nadcon5_nad83_2007_nad83_2011_conus_extract.tif"
+
+
+@pytest.mark.parametrize("first", ["hgridshift", "vgridshift"])
+def test_one_file_as_horizontal_and_vertical_grid(first, monkeypatch):
+    """The grid cache is keyed by reader, so one file serves hgridshift and
+    vgridshift in one process whichever is read first."""
+    from proj_spark.sources import grids
+
+    monkeypatch.setattr(grids, "_CACHE", {})
+    h = f"+step +proj=hgridshift +grids={_G}"
+    v = f"+step +proj=vgridshift +grids={_G} +multiplier=1"
+    steps = (h, v) if first == "hgridshift" else (v, h)
+    for s in steps:
+        compile_pipeline(f"+proj=pipeline {s}")
+    p = compile_pipeline(f"+proj=pipeline {h} {v}")
+    lam, phi, z, _ = p.fwd_deg(np.array([-95.5]), np.array([37.0]),
+                               np.array([0.0]))
+    assert lam[0] == pytest.approx(-95.49999982191925, abs=1e-12)
+    assert phi[0] == pytest.approx(37.00000001472325, abs=1e-12)
+    assert np.isfinite(z[0])

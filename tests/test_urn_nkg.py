@@ -95,7 +95,8 @@ def test_crs_urn_pair():
     assert abs(float(Y[0]) - 6098907.825) < 0.01
 
 
-REF_EXTRACT = "/root/repo/tests/fixtures/grids/tests/nkgrf03vel_realigned_extract.tif"
+REF_EXTRACT = os.path.join(os.path.dirname(__file__), "fixtures", "grids",
+                           "tests", "nkgrf03vel_realigned_extract.tif")
 
 
 @pytest.mark.skipif(not os.path.exists(REF_EXTRACT),
@@ -105,17 +106,13 @@ def test_nkg_chain_executes_with_extract_grid(tmp_path, monkeypatch):
     extract's coverage (21.3E 63.0N, Gulf of Bothnia), grid provided by
     renaming the extract to the registry name inside a tmpdir. Oracle:
     manual composition of the chain's two steps in published order."""
-    import proj_spark.kernels.geogrid as GG
     import proj_spark.plans.pipeline as PL
+    from proj_spark.sources import grids
 
     shutil.copy(REF_EXTRACT, tmp_path / "eur_nkg_nkgrf03vel_realigned.tif")
-    # geogrid aliases pipeline's list as _SEARCH_PATHS at import time, so
-    # patch both names
     monkeypatch.setattr(
-        PL, "_GRID_SEARCH_PATHS",
-        [str(tmp_path)] + list(PL._GRID_SEARCH_PATHS))
-    monkeypatch.setattr(
-        GG, "_SEARCH_PATHS", [str(tmp_path)] + list(GG._SEARCH_PATHS))
+        grids, "_GRID_SEARCH_PATHS",
+        [str(tmp_path)] + list(grids._GRID_SEARCH_PATHS))
 
     # geocentric coordinates of (21.3 E, 63.0 N, h=0) on GRS80
     lam, phi = math.radians(21.3), math.radians(63.0)
