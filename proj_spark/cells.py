@@ -135,15 +135,19 @@ def _faceij_to_id(face, i, j, level: int = MAX_LEVEL):
 
 
 def s2_cell_id(lon_deg, lat_deg, level: int = MAX_LEVEL, geocentric_es: float | None = None):
-    """lon/lat degrees -> S2 cell id at ``level`` (int64 ndarray)."""
-    x, y, z = lonlat_to_xyz(lon_deg, lat_deg, geocentric_es)
-    face, u, v = xyz_to_face_uv(x, y, z)
-    i = _st_to_ij(uv_to_st(u))
-    j = _st_to_ij(uv_to_st(v))
+    """lon/lat degrees -> S2 cell id at ``level`` (int64 ndarray). A
+    point whose lon or lat is not finite has no cell: its id is 0, the
+    value spatial_join keys null cells to."""
+    with np.errstate(invalid="ignore"):
+        x, y, z = lonlat_to_xyz(lon_deg, lat_deg, geocentric_es)
+        ok = np.isfinite(x)     # exactly where lon and lat both are finite
+        face, u, v = xyz_to_face_uv(x, y, z)
+        i = _st_to_ij(uv_to_st(u))
+        j = _st_to_ij(uv_to_st(v))
     cell = _faceij_to_id(face, i, j, level)
     if level < MAX_LEVEL:
         cell = parent_id(cell, level)
-    return cell
+    return cell if ok.all() else np.where(ok, cell, 0)
 
 
 def parent_id(cell_id, level: int):

@@ -298,13 +298,7 @@ def run_projinfo(argv, stdout) -> int:
             else:
                 dialect = fmt.split("_", 1)[1]
                 head = f"WKT1:{dialect} string:"
-                try:
-                    txt = wkt_out.epsg_to_wkt1(key, dialect)
-                except NotImplementedError as e:
-                    # reference WKTFormatter throws for inexpressible
-                    # CRSs (e.g. spherical planetocentric in WKT1)
-                    print(f"WKT1 export error: {e}", file=sys.stderr)
-                    return 2
+                txt = wkt_out.epsg_to_wkt1(key, dialect)
             print(head, file=stdout)
             print(txt, file=stdout)
         return 0

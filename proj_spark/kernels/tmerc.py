@@ -26,6 +26,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from proj_spark.crs import Ellipsoid
+from proj_spark.kernels.common import adjlon
 
 ORDER = 6
 # |Ce| domain limit, ~150 degrees from the central meridian
@@ -415,15 +416,11 @@ def approx_inv(x, y, C: TMercApprox):
 # UTM zone helpers (reference tmerc.cpp:737-779)
 # --------------------------------------------------------------------------
 
-def utm_zone_from_lon(lon_deg) -> np.ndarray:
-    """UTM zone 1..60 from degrees longitude (vectorized).
-
-    zone = floor((adjlon(lon)+pi) * 30/pi) clamped to [0,59], then 1-based.
-    """
-    lon = np.radians(np.asarray(lon_deg, dtype=np.float64))
-    lon = np.remainder(lon + np.pi, 2 * np.pi) - np.pi
-    z = np.floor((lon + np.pi) * 30.0 / np.pi)
-    return np.clip(z, 0, 59).astype(np.int32) + 1
+def utm_zone(lam) -> np.ndarray:
+    """UTM zone 1..60 (float, NaN for NaN) of radians longitude: the
+    6-degree band of the adjlon-wrapped longitude, so +180 degrees is zone
+    60 (tmerc.cpp:763-767)."""
+    return np.clip(np.floor((adjlon(lam) + np.pi) * 30.0 / np.pi), 0, 59) + 1.0
 
 
 def utm_params(zone: int, south: bool = False) -> dict:

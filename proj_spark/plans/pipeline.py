@@ -367,8 +367,7 @@ class UTMAutoStep(Step):
 
     def fwd(self, x, y, z, t):
         lon = np.asarray(x, dtype=np.float64)
-        zone = np.clip(np.floor((adjlon(lon) + np.pi) * 30.0 / np.pi), 0, 59)
-        lam0 = (zone + 0.5) * np.pi / 30.0 - np.pi
+        lam0 = (k_tmerc.utm_zone(lon) - 0.5) * np.pi / 30.0 - np.pi
         X, Y = k_tmerc.exact_fwd(adjlon(lon - lam0), y, self.C)
         y0 = np.where(np.asarray(y) < 0, 10000000.0, 0.0)
         return self.a * X + 500000.0, self.a * Y + y0, z, t
@@ -1933,8 +1932,7 @@ def _build_utm(params: dict) -> Step:
     if "zone" in params and params["zone"] is not True:
         zone = int(params["zone"])
     elif "lon_0" in params:
-        lon0 = math.radians(float(params["lon_0"]))
-        zone = int(np.clip(math.floor((float(adjlon(np.array([lon0]))[0]) + math.pi) * 30.0 / math.pi), 0, 59)) + 1
+        zone = int(k_tmerc.utm_zone(math.radians(float(params["lon_0"]))))
     else:
         return UTMAutoStep(ell)
     z = k_tmerc.utm_params(zone, south="south" in params)

@@ -14,6 +14,12 @@ proj4-init rules the gie/GIGS corpora request (`use_proj4_init_rules`):
 lon/lat axis order, easting/northing, no datum shift implied, prime
 meridians expressed via +pm.
 
+One record reader, `crs_record`, reads a geodetic, geocentric or
+projected CRS's rows (name, id, CS and axes, datum or ensemble with its
+ellipsoid and prime meridian, base CRS and conversion) into a `CRS`
+record. `epsg_to_proj` and every export writer in `sources.wkt_out`
+format that record instead of reading the rows themselves.
+
 Scope: geographic 2D CRSs and projected CRSs whose conversion method is
 in `_METHODS` (the Transverse Mercator / Lambert / Mercator /
 stereographic / oblique-Mercator / Albers / Cassini / polyconic / Krovak
@@ -23,9 +29,12 @@ machinery stays out of scope per SURVEY §1.3.
 
 from __future__ import annotations
 
+import functools
 import glob
+import math
 import os
 import re
+from typing import NamedTuple
 
 _SQL_DIRS = [
     # deployed data dir (PROJ_DATA analogue, reference src/filemanager.cpp
@@ -215,15 +224,22 @@ def _load() -> dict:
 
 # ---------------------------------------------------------------- units
 
-def _uom(code) -> tuple[str, float]:
-    """(type, factor_to_SI) for a unit code; 9110 handled separately."""
+class Unit(NamedTuple):
+    kind: str               # unit_of_measure type: angle, length, scale...
+    factor: float | None    # to radian, metre or unity
+    name: str
+
+
+@functools.lru_cache(maxsize=None)
+def _uom(code) -> Unit:
+    """The unit of a unit_of_measure code; 9110 handled separately."""
     row = _load()["unit_of_measure"].get(str(code))
     if row is None:
         raise KeyError(f"EPSG uom {code}")
     # auth, code, name, type, conv_factor, conv_factor_b?, deprecated
-    typ = row[3]
     factor = row[4]
-    return typ, (float(factor) if factor is not None else None)
+    return Unit(row[3], float(factor) if factor is not None else None,
+                str(row[2]))
 
 
 def _sexagesimal_to_deg(v: float) -> float:
@@ -253,17 +269,14 @@ def _angle_deg(value, uom_code) -> float:
         return float(value) / 3600.0
     if code == "9103":          # arc-minute
         return float(value) / 60.0
-    typ, factor = _uom(code)
     # factor converts to radians for other angular units
-    import math
-    return float(value) * factor * 180.0 / math.pi
+    return float(value) * _uom(code).factor * 180.0 / math.pi
 
 
 def _length_m(value, uom_code) -> float:
     if value is None:
         return 0.0
-    typ, factor = _uom(str(uom_code))
-    return float(value) * factor
+    return float(value) * _uom(uom_code).factor
 
 
 def _scale(value, uom_code) -> float:
@@ -272,112 +285,215 @@ def _scale(value, uom_code) -> float:
     code = str(uom_code)
     if code == "9201":
         return float(value)
-    typ, factor = _uom(code)
-    return float(value) * factor  # e.g. ppm
+    return float(value) * _uom(code).factor  # e.g. ppm
 
 
-# ------------------------------------------------------------ geodetic
+# ------------------------------------------------------------ CRS record
+#
+# The ellipsoid's defining pair, the prime meridian, the spherical CS, the
+# west-positive axis and the projected axis unit are each decided here
+# once, for every output.
 
-def _ellipsoid_params(code) -> str:
-    row = _load()["ellipsoid"].get(str(code))
-    if row is None:
-        raise KeyError(f"EPSG ellipsoid {code}")
-    # auth, code, name, desc, cell_auth, cell_body, semi_major,
-    # uom_auth, uom_code, inv_flattening, semi_minor, deprecated
-    a = _length_m(row[6], row[8])
-    invf = row[9]
-    semi_minor = row[10]
-    if invf is not None:
-        return f"+a={a!r} +rf={float(invf)!r}"
-    b = _length_m(semi_minor, row[8])
-    if b == a:
-        return f"+R={a!r}"
-    return f"+a={a!r} +b={b!r}"
+class Axis(NamedTuple):
+    name: str
+    abbrev: str
+    direction: str   # first word of the orientation, the WKT2 spelling
+    unit: Unit
 
 
-def _datum_parts(code) -> tuple[str, float]:
-    row = _load()["geodetic_datum"].get(str(code))
-    if row is None:
-        raise KeyError(f"EPSG datum {code}")
-    # auth, code, name, desc, ellipsoid_auth, ellipsoid_code,
-    # pm_auth, pm_code, ...
-    ell = _ellipsoid_params(row[5])
-    pm_row = _load()["prime_meridian"].get(str(row[7]))
-    # pm row: auth, code, name, longitude, uom_auth, uom_code, deprecated
-    pm_deg = _angle_deg(pm_row[3], pm_row[5]) if pm_row else 0.0
-    return ell, pm_deg
+class Ellipsoid(NamedTuple):
+    auth: str
+    code: str
+    name: str
+    a: float
+    rf: float | None   # inverse flattening, when it defines the ellipsoid
+    b: float | None    # else the semi-minor axis (b == a: a sphere)
+
+    @property
+    def inv_flattening(self) -> float:
+        """1/f as WKT spells it: 0 for a sphere."""
+        if self.rf is not None:
+            return self.rf
+        return self.a / (self.a - self.b) if self.b != self.a else 0.0
 
 
-def _geodetic_spec(code) -> str:
-    db = _load()
-    row = db["geodetic_crs"].get(str(code))
-    if row is None:
-        raise KeyError(f"EPSG geodetic CRS {code}")
-    # auth, code, name, desc, type, cs_auth, cs_code, datum_auth,
-    # datum_code, text_def, deprecated
-    ell, pm = _datum_parts(row[8])
-    cs_key = str(row[6])
-    cs = db["coordinate_system"].get(cs_key)
-    if cs is not None and str(cs[2]) == "spherical":
-        # spherical planetocentric (IAU ocentric CRSs): coordinates carry
-        # GEOCENTRIC latitude — the proj4-legacy '+geoc' spelling, the
-        # same semantics the reference's operation context expresses with
-        # a geoc step (crs.cpp:2386; its modern CRS export refuses, but
-        # this resolver implements proj4-init rules where +geoc is the
-        # published spelling). Identity on spheres, tan(phi')=(1-e^2)tan
-        # on ellipsoids.
-        s = f"+proj=longlat +geoc {ell}"
-    else:
-        s = f"+proj=longlat {ell}"
-    if pm != 0.0:
-        s += f" +pm={pm!r}"
-    # west-positive longitude (IAU ographic CRSs on retrograde-defined
-    # bodies, cs OGRAPHIC_NORTH_WEST): the reference emits an axisswap
-    # order=-1,2 for a west direction (crs.cpp:4646); +axis=wnu is the
-    # equivalent param spelling our compiler lowers to the same swap
-    for ax in db.get("axis_all", {}).get(cs_key, []):
-        if str(ax[4]).lower() == "west":
-            s += " +axis=wnu"
-            break
-    return s
+class PrimeMeridian(NamedTuple):
+    auth: str
+    code: str
+    name: str
+    lon: float       # degrees east of Greenwich
 
 
-# ----------------------------------------------------------- projected
+class Datum(NamedTuple):
+    auth: str
+    code: str
+    name: str
+    ellipsoid: Ellipsoid
+    pm: PrimeMeridian
+    members: tuple   # (auth, code, name) per ensemble member; () = frame
+    accuracy: float | None
+
+
+class Param(NamedTuple):
+    code: str
+    name: str
+    kind: str        # unit kind: angle, length or scale
+    value: float     # in degree, metre or unity
+
 
 class _Params:
+    """A conversion row: its name, method and parameters. deg/m/k read a
+    parameter by EPSG code in degree, metre and unity for the `_METHODS`
+    lowering (sources.wkt._WktParams is the same interface over WKT
+    nodes); `params` lists them all for the export writers."""
+
     def __init__(self, conv_row):
         # conversion row: auth, code, name, desc, method_auth, method_code,
         # method_name, then 7x (p_auth, p_code, p_name, value, uom_auth,
         # uom_code), deprecated
-        self.method = str(conv_row[5])
+        self.name, self.method_auth = str(conv_row[2]), str(conv_row[4])
+        self.method, self.method_name = str(conv_row[5]), str(conv_row[6])
         self.p = {}
-        base = 7
-        for k in range(7):
-            off = base + k * 6
-            if off + 5 >= len(conv_row):
-                break
-            code = conv_row[off + 1]
-            if code is None:
-                continue
-            self.p[str(code)] = (conv_row[off + 3], conv_row[off + 5])
+        for off in range(7, min(len(conv_row) - 5, 49), 6):
+            if conv_row[off + 1] is not None:
+                self.p[str(conv_row[off + 1])] = (
+                    conv_row[off + 3], conv_row[off + 5],
+                    str(conv_row[off + 2]))
 
     def deg(self, code, default=0.0):
-        if str(code) not in self.p:
-            return default
-        v, u = self.p[str(code)]
-        return _angle_deg(v, u)
+        v = self.p.get(str(code))
+        return default if v is None else _angle_deg(v[0], v[1])
 
     def m(self, code, default=0.0):
-        if str(code) not in self.p:
-            return default
-        v, u = self.p[str(code)]
-        return _length_m(v, u)
+        v = self.p.get(str(code))
+        return default if v is None else _length_m(v[0], v[1])
 
     def k(self, code, default=1.0):
-        if str(code) not in self.p:
-            return default
-        v, u = self.p[str(code)]
-        return _scale(v, u)
+        v = self.p.get(str(code))
+        return default if v is None else _scale(v[0], v[1])
+
+    @property
+    def params(self) -> list[Param]:
+        """Every parameter in registry order, read by its unit's kind."""
+        out = []
+        for code, (_v, uom, name) in self.p.items():
+            kind = _uom(uom).kind
+            read = (self.deg if kind == "angle" else
+                    self.m if kind == "length" else self.k)
+            out.append(Param(code, name, kind, read(code)))
+        return out
+
+
+class CRS(NamedTuple):
+    auth: str
+    code: str                 # the registry key
+    name: str
+    kind: str                 # geodetic_crs type, or 'projected'
+    cs: str                   # 'ellipsoidal', 'spherical' or 'Cartesian'
+    axes: tuple
+    datum: Datum              # a projected CRS's is its base's
+    west: bool                # west-positive longitude or easting
+    to_meter: float           # projected axis unit (1.0: metre)
+    base: "CRS | None"
+    conversion: _Params | None
+
+
+def _row(table: str, code, what: str) -> list:
+    row = _load()[table].get(str(code))
+    if row is None:
+        raise KeyError(f"EPSG {what} {code}")
+    return row
+
+
+@functools.lru_cache(maxsize=None)
+def _axes(cs_code) -> tuple:
+    # axis: auth, code, name, abbrev, orientation, cs_auth, cs_code,
+    # order, uom_auth, uom_code
+    rows = _load()["axis_all"].get(str(cs_code))
+    if not rows:
+        raise KeyError(f"EPSG coordinate system {cs_code} has no axes")
+    out = []
+    for r in sorted(rows, key=lambda r: int(r[7])):
+        # a qualified polar orientation ("South along 45°E") keeps its
+        # base word; geocentricX/Y/Z keep their camel case
+        word = str(r[4]).split()[0]
+        if not word.startswith("geocentric"):
+            word = word.lower()
+        out.append(Axis(str(r[2]), str(r[3]), word, _uom(r[9])))
+    return tuple(out)
+
+
+@functools.lru_cache(maxsize=None)
+def _datum(auth, code) -> Datum:
+    # geodetic_datum: auth, code, name, desc, ellipsoid_auth,
+    # ellipsoid_code, pm_auth, pm_code, ..., ensemble_accuracy (10)
+    db = _load()
+    row = _row("geodetic_datum", code, "datum")
+    # ellipsoid: auth, code, name, desc, cell_auth, cell_body, semi_major,
+    # uom_auth, uom_code, inv_flattening, semi_minor, deprecated
+    e = _row("ellipsoid", row[5], "ellipsoid")
+    a = _length_m(e[6], e[8])
+    rf = float(e[9]) if e[9] is not None else None
+    ell = Ellipsoid(str(row[4]), str(row[5]), str(e[2]), a, rf,
+                    None if rf is not None else _length_m(e[10], e[8]))
+    # prime_meridian: auth, code, name, longitude, uom_auth, uom_code
+    p = db["prime_meridian"].get(str(row[7]))
+    pm = PrimeMeridian(str(row[6]), str(row[7]),
+                       str(p[2]) if p else "Greenwich",
+                       _angle_deg(p[3], p[5]) if p else 0.0)
+    members = ()
+    if len(row) >= 11 and row[10] is not None:
+        rows = db["geodetic_datum"]
+        members = tuple(
+            (str(rows[m][0]), m, str(rows[m][2])) for _seq, m in sorted(
+                db["geodetic_datum_ensemble_member"].get(str(code), ()))
+            if m in rows)
+    return Datum(str(auth), str(code), str(row[2]), ell, pm, members,
+                 float(row[10]) if members else None)
+
+
+def _crs(row: list, kind: str, cs: str, axes: tuple, datum: Datum,
+         base: CRS | None = None, conversion: _Params | None = None) -> CRS:
+    # west-positive longitude (IAU ographic CRSs on retrograde bodies) or
+    # easting (IAU PROJECTED_WEST_NORTH cs): any axis of a geodetic CRS,
+    # the first axis of a projected one
+    west = (axes[0].direction == "west" if base else
+            any(ax.direction == "west" for ax in axes))
+    # a projected CRS's axis unit scales its linear values (+to_meter)
+    factor = axes[0].unit.factor if base else None
+    return CRS(str(row[0]), str(row[1]), str(row[2]), kind, cs, axes, datum,
+               west, factor if factor not in (None, 1.0) else 1.0, base,
+               conversion)
+
+
+@functools.lru_cache(maxsize=None)
+def _geodetic(code: str) -> CRS:
+    # geodetic_crs: auth, code, name, desc, type, cs_auth, cs_code,
+    # datum_auth, datum_code, text_def, deprecated
+    row = _row("geodetic_crs", code, "geodetic CRS")
+    cs = _load()["coordinate_system"].get(str(row[6]))
+    # a spherical CS: IAU ocentric (planetocentric latitude) CRSs
+    cs = ("Cartesian" if row[4] == "geocentric" else "spherical"
+          if cs is not None and str(cs[2]) == "spherical" else "ellipsoidal")
+    return _crs(row, str(row[4]), cs, _axes(row[6]), _datum(row[7], row[8]))
+
+
+def crs_record(code) -> CRS | None:
+    """The record of a geodetic, geocentric or projected CRS key, read
+    once from every registry row its outputs need; None for any other
+    key. Geodetic records are memoized: projected CRSs share them as
+    bases."""
+    db, code = _load(), str(code)
+    if code in db["geodetic_crs"]:
+        return _geodetic(code)
+    row = db["projected_crs"].get(code)
+    if row is None:
+        return None
+    # projected_crs: auth, code, name, desc, cs_auth, cs_code, geod_auth,
+    # geod_code, conv_auth, conv_code, text_def, deprecated
+    base = _geodetic(str(row[7]))
+    return _crs(row, "projected", "Cartesian", _axes(row[5]), base.datum,
+                base, _Params(_row("conversion", row[9], "conversion")))
 
 
 def _m_tmerc(P: _Params) -> str:
@@ -717,7 +833,7 @@ def _vertical_suffix(vert_code: str) -> str:
     s = f" +geoidgrids={geoid_model_grids(vert_code)}"
     ax = db["axis"].get(str(row[5]))
     if ax is not None and str(ax[9]) != "9001":
-        typ, factor = _uom(str(ax[9]))
+        factor = _uom(ax[9]).factor
         if factor is not None and factor != 1.0:
             s += f" +vto_meter={factor!r}"
     return s
@@ -767,53 +883,42 @@ def epsg_to_proj(code: str | int) -> str:
         raise NotImplementedError(
             f"EPSG:{code} is a vertical CRS — use it inside a compound "
             f"code or the 'HHHH+VVVV' pair spelling")
-    if code in db["geodetic_crs"]:
-        row = db["geodetic_crs"][code]
-        if row[4] == "geocentric":
-            ell, pm = _datum_parts(row[8])
-            return f"+proj=geocent {ell}"
-        return _geodetic_spec(code)
-    if code in db["projected_crs"]:
-        row = db["projected_crs"][code]
-        # auth, code, name, desc, cs_auth, cs_code, geod_auth, geod_code,
-        # conv_auth, conv_code, text_def, deprecated
-        geod = db["geodetic_crs"].get(str(row[7]))
-        if geod is None:
-            raise KeyError(f"EPSG geodetic base {row[7]} for {code}")
-        conv = db["conversion"].get(str(row[9]))
-        if conv is None:
-            raise KeyError(f"EPSG conversion {row[9]} for {code}")
-        P = _Params(conv)
+    crs = crs_record(code)
+    if crs is None:
+        raise KeyError(f"EPSG:{code} not found (geodetic/projected only)")
+    e = crs.datum.ellipsoid
+    if e.rf is not None:
+        ell = f"+a={e.a!r} +rf={e.rf!r}"
+    else:
+        ell = f"+R={e.a!r}" if e.b == e.a else f"+a={e.a!r} +b={e.b!r}"
+    if crs.kind == "geocentric":
+        return f"+proj=geocent {ell}"
+    # a spherical planetocentric CS (IAU ocentric) carries GEOCENTRIC
+    # latitude: the proj4-legacy '+geoc' spelling, the semantics the
+    # reference's operation context gives a geoc step (crs.cpp:2386) and
+    # its PROJStringParser reads as '+proj=<method> +geoc' over such a
+    # base (fwd.cpp:79-81). Identity on spheres, tan(phi')=(1-e^2)tan on
+    # ellipsoids.
+    if crs.base is None:
+        geoc = " +geoc" if crs.cs == "spherical" else ""
+        s = f"+proj=longlat{geoc} {ell}"
+    else:
+        P = crs.conversion
         fn = _METHODS.get(P.method)
         if fn is None:
             raise NotImplementedError(
                 f"EPSG:{code}: projection method {P.method} "
-                f"({conv[6]!r}) not supported")
-        ell, pm = _datum_parts(geod[8])
-        s = f"{fn(P)} {ell}"
-        base_cs = db["coordinate_system"].get(str(geod[6]))
-        if base_cs is not None and str(base_cs[2]) == "spherical":
-            # projected over a spherical-planetocentric base (IAU
-            # ocentric): the CRS's angular side carries geocentric
-            # latitude — the reference's PROJStringParser spells this
-            # '+proj=<method> +geoc' (test_operationfactory
-            # createOperation_spherical_ocentric_to_projected_of_
-            # spherical_ocentric), and fwd converts it to geodetic
-            # before the projection core (fwd.cpp:79-81)
-            s += " +geoc"
-        if pm != 0.0:
-            s += f" +pm={pm!r}"
-        # projected coordinate system units (axis table: first axis uom)
-        ax = db["axis"].get(str(row[5]))
-        if ax is not None and str(ax[9]) != "9001":
-            typ, factor = _uom(str(ax[9]))
-            if factor is not None and factor != 1.0:
-                s += f" +to_meter={factor!r}"
-        # west-positive easting (IAU PROJECTED_WEST_NORTH cs): same
-        # axisswap-equivalent as the geodetic case; methods that already
-        # fix their axes (9808 +axis=wsu) are left alone
-        if (ax is not None and str(ax[4]).lower() == "west"
-                and " +axis=" not in s):
-            s += " +axis=wnu"
-        return s
-    raise KeyError(f"EPSG:{code} not found (geodetic/projected only)")
+                f"({P.method_name!r}) not supported")
+        s = f"{fn(P)} {ell}" + (" +geoc" if crs.base.cs == "spherical"
+                                else "")
+    if crs.datum.pm.lon != 0.0:
+        s += f" +pm={crs.datum.pm.lon!r}"
+    if crs.to_meter != 1.0:
+        s += f" +to_meter={crs.to_meter!r}"
+    # west-positive longitude or easting: the reference emits an axisswap
+    # order=-1,2 (crs.cpp:4646), +axis=wnu is the param spelling our
+    # compiler lowers to the same swap; methods that fix their axes (9808
+    # +axis=wsu) are left alone
+    if crs.west and " +axis=" not in s:
+        s += " +axis=wnu"
+    return s

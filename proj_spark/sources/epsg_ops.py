@@ -69,7 +69,7 @@ def _rate(value, uom_code, to: str) -> float:
     (m/yr, arcsec/yr, or ppm/yr)."""
     if value is None:
         return 0.0
-    _typ, factor = E._uom(str(uom_code))
+    factor = E._uom(uom_code).factor
     si_per_year = float(value) * factor * _YEAR_S
     if to == "m":
         return si_per_year
@@ -208,7 +208,7 @@ def _ops_by_crs():
             op["rz"] = E._angle_deg(row[19], row[21]) * 3600.0
             ds = row[22]
             if ds is not None:
-                typ, factor = E._uom(str(row[24]))
+                factor = E._uom(row[24]).factor
                 op["ds"] = float(ds) * (factor if factor else 1e-6) / 1e-6
             else:
                 op["ds"] = 0.0

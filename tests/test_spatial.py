@@ -293,3 +293,26 @@ def test_s2_cell_id_every_level_is_the_leaf_parent():
     for level in range(31):
         assert np.array_equal(cells.s2_cell_id(lon, lat, level),
                               cells.parent_id(leaf, level)), level
+
+
+def test_s2_cell_id_of_a_non_finite_point_is_zero():
+    """A NaN or infinite lon or lat has no S2 cell: its id is 0, the value
+    spatial_join keys null cells to, at every level and with or without
+    the geocentric latitude shift, and no warning is raised; the finite
+    points of the same batch keep their ids."""
+    import warnings
+
+    from proj_spark import cells
+
+    lon = np.array([np.nan, 10.0, np.inf, 3.0, -np.inf, 3.0])
+    lat = np.array([5.0, np.nan, 0.0, 4.0, 1.0, np.inf])
+    bad = ~(np.isfinite(lon) & np.isfinite(lat))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for level in (0, 10, 30):
+            for es in (None, 0.99):
+                got = cells.s2_cell_id(lon, lat, level, es)
+                assert (got[bad] == 0).all(), (level, es)
+                good = cells.s2_cell_id(lon[~bad], lat[~bad], level, es)
+                assert (good != 0).all()
+                assert np.array_equal(got[~bad], good), (level, es)

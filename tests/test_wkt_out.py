@@ -94,17 +94,17 @@ def test_projjson_roundtrip(code):
 
 
 def test_registry_sweep_wkt2():
-    """Every projected CRS the registry lowers must export WKT2 that
-    round-trips numerically, and its WKT2:2019, WKT2:2015 and PROJJSON
-    exports must lower to the same proj-string (sampled: every 11th code
-    for runtime)."""
+    """Every projected and geodetic CRS the registry lowers must export
+    WKT2 that round-trips numerically, and its WKT2:2019, WKT2:2015 and
+    PROJJSON exports must lower to the same proj-string (sampled: every
+    11th key of each table for runtime)."""
     from proj_spark.sources.epsg import _load, epsg_to_proj
     from proj_spark.sources.projjson import projjson_to_proj
     from proj_spark.sources.wkt import wkt_to_proj
     from proj_spark.sources.wkt_out import epsg_to_projjson, epsg_to_wkt2
 
     db = _load()
-    codes = sorted(db["projected_crs"])[::11]
+    codes = sorted(db["projected_crs"])[::11] + sorted(db["geodetic_crs"])[::11]
     checked = failures = 0
     for code in codes:
         try:
@@ -185,16 +185,18 @@ def test_wkt1_roundtrip(code, dialect):
 
 
 def test_registry_sweep_wkt1():
-    """Registry sweep for both WKT1 dialects: every projected CRS the
-    registry lowers must either export WKT1 that round-trips numerically
-    or refuse with an explicit NotImplementedError; silent wrong output
-    is the failure mode under test."""
+    """Registry sweep for both WKT1 dialects: every projected and
+    geodetic CRS the registry lowers must either export WKT1 that
+    round-trips numerically or refuse with an explicit
+    NotImplementedError; silent wrong output is the failure mode under
+    test."""
     from proj_spark.sources.epsg import _load, epsg_to_proj
     from proj_spark.sources.wkt import wkt_to_proj
     from proj_spark.sources.wkt_out import epsg_to_wkt1
 
     db = _load()
-    codes = sorted(c for c in db["projected_crs"] if c.isdigit())[::11]
+    codes = (sorted(c for c in db["projected_crs"] if c.isdigit())[::11]
+             + sorted(db["geodetic_crs"])[::11])
     checked = failures = refused = 0
     for code in codes:
         try:
