@@ -7,7 +7,9 @@
 Env:
   SPARK_GRAFT_SF_DIR  (default /root/testdata/sf0.1) — oracle-table dir
   SPARK_GRAFT_CPUS    (default: host core count)     — local[N]
-  BENCH_N_IMAGES      (default 600000)               — flagship table rows
+  BENCH_N_IMAGES      (default 1000000)              — flagship table rows
+  BENCH_CACHE_DIR     (default /tmp/spark_graft_bench) — cached flagship
+                                                         parquet table
   BENCH_QUERIES       (default headline set)         — comma list override
 
 The flagship job is the north-star pipeline: read the image+caption table

@@ -2484,23 +2484,8 @@ def compile_crs_to_crs(src: str, dst: str) -> Pipeline:
 
     s1, g1, a1 = build_side(src)
     s2, g2, a2 = build_side(dst)
-    if abs(a1 - a2) > 0.007 * a2:
-        # different celestial bodies (reference
-        # coordinateoperationfactory.cpp:4459 createOperationsGeodToGeod:
-        # semi-major axes differing by more than
-        # REL_ERROR_FOR_SAME_CELESTIAL_BODY = 0.007 relative means the
-        # ellipsoids cannot belong to the same body; same env override)
-        env = os.environ.get("PROJ_IGNORE_CELESTIAL_BODY")
-        if env is None or env.upper() in ("NO", "FALSE", "OFF"):
-            from proj_spark.sources.epsg import guess_body_name
-            msg = ("Source and target ellipsoid do not belong to the same "
-                   f"celestial body ({guess_body_name(a1)} vs "
-                   f"{guess_body_name(a2)}).")
-            if env is None:
-                msg += (" You may override this check by setting the "
-                        "PROJ_IGNORE_CELESTIAL_BODY environment variable "
-                        "to YES.")
-            raise ValueError(msg)
+    from proj_spark.sources.epsg import check_same_body
+    check_same_body(a1, a2)    # different celestial bodies
     steps: list = []
     if g1 is not None:
         steps.append(Inverted(GeocStep(g1)))    # geocentric -> geodetic

@@ -14,11 +14,13 @@ proj4-init rules the gie/GIGS corpora request (`use_proj4_init_rules`):
 lon/lat axis order, easting/northing, no datum shift implied, prime
 meridians expressed via +pm.
 
-One record reader, `crs_record`, reads a geodetic, geocentric or
-projected CRS's rows (name, id, CS and axes, datum or ensemble with its
-ellipsoid and prime meridian, base CRS and conversion) into a `CRS`
-record. `epsg_to_proj` and every export writer in `sources.wkt_out`
-format that record instead of reading the rows themselves.
+Two record readers keep the writers and the planner off the row layouts.
+`crs_record` reads a geodetic, geocentric or projected CRS's rows (name,
+id, CS and axes, datum or ensemble with its ellipsoid and prime meridian,
+base CRS and conversion) into a `CRS` record, which `epsg_to_proj` and
+every export writer in `sources.wkt_out` format. `operations` reads each
+transformation and concatenated-operation row the engine lowers into an
+op record, which the candidate planner in `sources.epsg_ops` ranks.
 
 Scope: geographic 2D CRSs and projected CRSs whose conversion method is
 in `_METHODS` (the Transverse Mercator / Lambert / Mercator /
@@ -131,7 +133,10 @@ def _extract_rows(*names: str):
 
 
 def _keep(db: dict, table: str, vals: list, aux: bool) -> None:
-    """Store one parsed row under its table's registry key."""
+    """Store one parsed row under its table's registry key. A row keyed by
+    its code is stored as a tuple: no reader mutates a stored row, and the
+    collector stops tracking a tuple of atoms, so a full collection does
+    not rescan the registry."""
     if table in ("supersession", "deprecation"):
         # these two key on (object_table, code) and START with the table
         # name, not the authority:
@@ -165,6 +170,12 @@ def _keep(db: dict, table: str, vals: list, aux: bool) -> None:
         for i in range(len(vals) - 1):
             if vals[i] == "IAU_2015" and vals[i + 1] is not None:
                 vals[i + 1] = f"IAU_2015:{vals[i + 1]}"
+    if table == "usage" and vals[5] == "IGNF":
+        # IGNF extent codes are plain small integers, stored as
+        # 'IGNF:<code>' below, so the usage rows pointing at them are
+        # rewritten to match
+        vals[6] = f"IGNF:{vals[6]}"
+    vals = tuple(vals)
     if table == "axis":
         # axis: auth, code, name, abbrev, orientation, cs_auth, cs_code,
         # order, uom_auth, uom_code — key by coordinate system, first axis
@@ -179,11 +190,7 @@ def _keep(db: dict, table: str, vals: list, aux: bool) -> None:
             (int(vals[2]), str(vals[4])))
     elif table == "usage":
         # authority-qualified key (NKG/IGNF reuse small numeric usage
-        # codes); consumers read usage only through .values(). IGNF extent
-        # codes are plain small integers, stored as 'IGNF:<code>' below,
-        # so the usage rows pointing at them are rewritten to match.
-        if vals[5] == "IGNF":
-            vals[6] = f"IGNF:{vals[6]}"
+        # codes); consumers read usage only through .values()
         db[table][f"{vals[0]}:{vals[1]}"] = vals
     elif table == "extent" and vals[0] == "IGNF":
         db[table][f"IGNF:{vals[1]}"] = vals
@@ -342,23 +349,24 @@ class Param(NamedTuple):
 
 
 class _Params:
-    """A conversion row: its name, method and parameters. deg/m/k read a
-    parameter by EPSG code in degree, metre and unity for the `_METHODS`
-    lowering (sources.wkt._WktParams is the same interface over WKT
-    nodes); `params` lists them all for the export writers."""
+    """A conversion or other_transformation row: its name, method and
+    parameters. deg/m/k read a parameter by EPSG code in degree, metre and
+    unity for the `_METHODS` lowering and the offset op records
+    (sources.wkt._WktParams is the same interface over WKT nodes);
+    `params` lists them all for the export writers."""
 
-    def __init__(self, conv_row):
-        # conversion row: auth, code, name, desc, method_auth, method_code,
-        # method_name, then 7x (p_auth, p_code, p_name, value, uom_auth,
-        # uom_code), deprecated
-        self.name, self.method_auth = str(conv_row[2]), str(conv_row[4])
-        self.method, self.method_name = str(conv_row[5]), str(conv_row[6])
+    def __init__(self, row, first: int = 7):
+        # auth, code, name, desc, method_auth, method_code, method_name,
+        # (other_transformation: src_auth, src_code, dst_auth, dst_code,
+        # accuracy,) then 7x (p_auth, p_code, p_name, value, uom_auth,
+        # uom_code) from column `first`, deprecated
+        self.name, self.method_auth = str(row[2]), str(row[4])
+        self.method, self.method_name = str(row[5]), str(row[6])
         self.p = {}
-        for off in range(7, min(len(conv_row) - 5, 49), 6):
-            if conv_row[off + 1] is not None:
-                self.p[str(conv_row[off + 1])] = (
-                    conv_row[off + 3], conv_row[off + 5],
-                    str(conv_row[off + 2]))
+        for off in range(first, min(len(row) - 5, first + 42), 6):
+            if row[off + 1] is not None:
+                self.p[str(row[off + 1])] = (
+                    row[off + 3], row[off + 5], str(row[off + 2]))
 
     def deg(self, code, default=0.0):
         v = self.p.get(str(code))
@@ -684,43 +692,310 @@ _METHODS = {
 }
 
 
+# ------------------------------------------------------ operation records
+#
+# One reader, `operations`, turns every operation row the engine lowers
+# into an op record: kind, auth, code, name, method, src/dst CRS keys,
+# accuracy (-1 when unknown), the union bbox of its areas of use and its
+# parameters in metre, arc-second and ppm. sources.epsg_ops plans over
+# the records and reads no row. The datum -> canonical geographic 2D CRS
+# rule, ensemble membership and supersession are decided here too.
+
+_HELMERT_METHODS = {
+    # static geog2D domain
+    "9603", "9606", "9607",
+    # Molodensky-Badekas (pivot point; CF geog2D / PV variants)
+    "9636", "1061", "1062", "1063",
+    # static geocentric domain (datum-bridged to the geog2D pair)
+    "1031", "1032", "1033",
+    # time-dependent (rate columns + reference epoch;
+    # reference src/iso19111/operation/transformation.cpp:740)
+    "1053", "1054", "1055", "1056", "1057", "1058",
+    # time-specific (params valid at the stated epoch, no rates;
+    # lowered as static Helmert like the reference's proj-string output)
+    "1065", "1066",
+}
+_TIME_DEP_METHODS = {"1053", "1054", "1055", "1056", "1057", "1058"}
+# NADCON 9613, NTv1 9614, NTv2 9615
+_GRID_METHODS = {"9613", "9614", "9615"}
+# other_transformation methods lowered onto geogoffset (reference
+# src/iso19111/operation/transformation.cpp: longitude rotation 9601,
+# geographic2D offsets 9619, geographic2D with height offsets 9618,
+# vertical offset 9616)
+_OFFSET_METHODS = {"9601", "9619", "9618", "9616"}
+
+# "per year" uom factors convert to SI per SECOND; multiply by the
+# registry's year (uom 1029) to get the per-year rates proj-strings use
+_YEAR_S = 31556925.445
+
+# registry table of each record kind (supersession rows name it)
+_TABLE_OF_KIND = {
+    "helmert": "helmert_transformation",
+    "grid": "grid_transformation",
+    "geoid": "grid_transformation",
+    "offset": "other_transformation",
+    "projstring": "other_transformation",
+    "concat": "concatenated_operation",
+}
+
+
+@functools.cache
+def _usages() -> dict:
+    """{(object table, object code): [(extent code, scope code)]}: one
+    object can carry several usages, i.e. several areas of use."""
+    idx: dict = {}
+    # usage: auth, code, object_table, obj_auth, obj_code, ext_auth,
+    # ext_code, scope_auth, scope_code
+    for u in _load()["usage"].values():
+        idx.setdefault((str(u[2]), str(u[4])), []).append(
+            (str(u[6]), str(u[8])))
+    return idx
+
+
+def _extent(code: str) -> tuple[str, tuple | None] | None:
+    """(area name, (south, west, north, east) | None) of an extent code."""
+    ext = _load()["extent"].get(code)
+    if ext is None:
+        return None
+    # extent: auth, code, name, desc, south, north, west, east, deprecated
+    return str(ext[2]), None if ext[4] is None else (
+        float(ext[4]), float(ext[6]), float(ext[5]), float(ext[7]))
+
+
+def _area(table: str, code: str) -> tuple | None:
+    """(west, south, east, north) union of an operation's areas of use.
+    Antimeridian-crossing components (w > e) cannot join a flat min/max
+    union and are skipped unless all cross, when the first stands
+    (dispatch drops w > e candidates anyway, reference 4D_api.cpp:1740)."""
+    boxes = []
+    for ext_code, _scope in _usages().get((table, code), ()):
+        ext = _extent(ext_code)
+        if ext is not None and ext[1] is not None:
+            s, w, n, e = ext[1]
+            boxes.append((w, s, e, n))
+    flat = [b for b in boxes if b[0] <= b[2]] or boxes[:1]
+    if not flat:
+        return None
+    return (min(b[0] for b in flat), min(b[1] for b in flat),
+            max(b[2] for b in flat), max(b[3] for b in flat))
+
+
+def _head(kind: str, code: str, row: tuple, src: int = 8, dst: int = 10,
+          acc: int = 11) -> dict:
+    # helmert/grid/other_transformation: auth, code, name, desc,
+    # method_auth, method_code, method_name, src_auth, src_code, dst_auth,
+    # dst_code, accuracy, ...
+    return {"kind": kind, "code": code, "name": row[2], "auth": str(row[0]),
+            "method": str(row[5]), "method_name": str(row[6]),
+            "src": str(row[src]), "dst": str(row[dst]),
+            "accuracy": float(row[acc]) if row[acc] is not None else -1.0,
+            "bbox": _area(_TABLE_OF_KIND[kind], code)}
+
+
+def _rate(value, uom_code, to: str) -> float:
+    """Registry rate column -> per-year value in proj-string units
+    (m/yr, arcsec/yr, or ppm/yr)."""
+    if value is None:
+        return 0.0
+    si_per_year = float(value) * _uom(uom_code).factor * _YEAR_S
+    if to == "m":
+        return si_per_year
+    if to == "arcsec":
+        return si_per_year * (180.0 / math.pi) * 3600.0
+    return si_per_year * 1e6
+
+
+def _helmert(code: str, row: tuple) -> dict | None:
+    # after the head: tx, ty, tz (12-14, uom 16); rx, ry, rz (17-19, uom
+    # 21); scale difference (22, uom 24); their rates (25-27 uom 29, 30-32
+    # uom 34, 35 uom 37); reference epoch (38); Molodensky-Badekas pivot
+    # (41-43, uom 45)
+    if str(row[5]) not in _HELMERT_METHODS:
+        return None
+    op = _head("helmert", code, row)
+    op.update(tx=_length_m(row[12], row[16]), ty=_length_m(row[13], row[16]),
+              tz=_length_m(row[14], row[16]))
+    if row[17] is not None:
+        # rotations -> arcsec, scale difference -> ppm
+        op.update(rx=_angle_deg(row[17], row[21]) * 3600.0,
+                  ry=_angle_deg(row[18], row[21]) * 3600.0,
+                  rz=_angle_deg(row[19], row[21]) * 3600.0)
+        ds = row[22]
+        op["ds"] = (0.0 if ds is None else
+                    float(ds) * (_uom(row[24]).factor or 1e-6) / 1e-6)
+    if op["method"] in _TIME_DEP_METHODS and row[38] is not None:
+        op.update(dtx=_rate(row[25], row[29], "m"),
+                  dty=_rate(row[26], row[29], "m"),
+                  dtz=_rate(row[27], row[29], "m"),
+                  drx=_rate(row[30], row[34], "arcsec"),
+                  dry=_rate(row[31], row[34], "arcsec"),
+                  drz=_rate(row[32], row[34], "arcsec"),
+                  dds=_rate(row[35], row[37], "ppm"),
+                  t_epoch=float(row[38]))
+    if row[41] is not None:
+        op.update(px=_length_m(row[41], row[45]),
+                  py=_length_m(row[42], row[45]),
+                  pz=_length_m(row[43], row[45]))
+    return op
+
+
+def _grid(code: str, row: tuple) -> dict | None:
+    # after the head: grid_param_auth, grid_param_code, grid_param_name,
+    # grid_name (12-15); param 8666 is a geoid (height correction) model
+    geoid = str(row[13]) == "8666"
+    if not geoid and str(row[5]) not in _GRID_METHODS:
+        return None
+    op = _head("geoid" if geoid else "grid", code, row)
+    del op["method_name"]
+    op["grid"] = str(row[15])
+    return op
+
+
+def _other(code: str, row: tuple) -> dict | None:
+    # after the head: 7 parameter blocks as in a conversion row
+    method = str(row[5])
+    if method == "PROJString":
+        # auxiliary authorities (NKG's deformation-model and
+        # epoch-propagation steps) publish the executable spec as the row
+        op = _head("projstring", code, row)
+        op.update(method_name="PROJ-based operation", spec=str(row[6]))
+        return op
+    if method not in _OFFSET_METHODS:
+        return None
+    P = _Params(row, 12)
+    op = _head("offset", code, row)
+    # 8601 lat offset, 8602 lon offset (-> arcsec); 8603 vertical offset,
+    # 8604 geoid undulation (-> m)
+    op.update(dlat=P.deg(8601) * 3600.0, dlon=P.deg(8602) * 3600.0,
+              dh=P.m(8603, P.m(8604)))
+    return op
+
+
+def _concat(code: str, row: tuple) -> dict | None:
+    # concatenated_operation: auth, code, name, desc, src_auth, src_code,
+    # dst_auth, dst_code, accuracy, ...; "steps" holds the step op codes
+    # in step order (reference data/sql/concatenated_operation_step.sql)
+    steps = _load()["concatenated_operation_step"].get(code)
+    if not steps:
+        return None
+    op = _head("concat", code, row, src=5, dst=7, acc=8)
+    op.update(method="concat", method_name="concatenated operation",
+              steps=tuple(c for _n, c in sorted(steps)))
+    return op
+
+
+_READERS = (("helmert_transformation", _helmert),
+            ("grid_transformation", _grid),
+            ("other_transformation", _other),
+            ("concatenated_operation", _concat))
+
+
+@functools.cache
+def operations() -> tuple[dict, ...]:
+    """The op record of every non-deprecated operation row the engine
+    reads, table by table: Helmert (`_HELMERT_METHODS`), grid
+    (`_GRID_METHODS`, plus geoid models as kind 'geoid'), other (offset
+    methods and PROJ strings), concatenated. Shared: do not mutate."""
+    db = _load()
+    out = []
+    for table, read in _READERS:
+        for code, row in db[table].items():
+            op = None if row[-1] else read(code, row)
+            if op is not None:
+                out.append(op)
+    return tuple(out)
+
+
+def op_key(kind: str, code) -> tuple[str, str]:
+    """An op record's registry key: (table, code)."""
+    return _TABLE_OF_KIND.get(kind, ""), str(code)
+
+
+def supersessors(kind: str, code) -> list[tuple[str, str]]:
+    """Registry keys of the operations that supersede one: rows with
+    same_source_target_crs = 1 whose replacement is in the same table
+    (the reference's discardSuperseded join, factory.cpp:6849)."""
+    table, code = op_key(kind, code)
+    # supersession: sup_table, sup_auth, sup_code, rep_table, rep_auth,
+    # rep_code, source, same_crs
+    return [(table, str(r[5]))
+            for r in _load()["supersession"].get((table, code), ())
+            if str(r[7]) == "1" and str(r[3]) == table]
+
+
+@functools.cache
+def _geodetic_index() -> tuple[dict, dict]:
+    """({CRS key: (type, datum code)}, {datum code: canonical geographic
+    2D CRS}) over the non-deprecated geodetic CRSs."""
+    crs: dict = {}
+    geog2d: dict = {}
+    # geodetic_crs: auth, code, name, desc, type, cs_auth, cs_code,
+    # datum_auth, datum_code, text_def, deprecated
+    for code, r in _load()["geodetic_crs"].items():
+        if not r[-1]:
+            crs[code] = (str(r[4]), str(r[8]))
+            if r[4] == "geographic 2D":
+                geog2d.setdefault(str(r[8]), []).append(code)
+    # lowest numeric (EPSG) code first; alphanumeric auxiliary codes
+    # (IGNF) after, alphabetically
+    return crs, {d: min(cs, key=lambda c: (0, int(c), "") if c.isdigit()
+                        else (1, 0, c)) for d, cs in geog2d.items()}
+
+
+def datum_crs(datum_code) -> str | None:
+    """A datum's canonical CRS: its lowest-code non-deprecated
+    geographic 2D CRS, None when it has none."""
+    return _geodetic_index()[1].get(str(datum_code))
+
+
+def canonical_crs(code: str) -> str:
+    """The canonical CRS of a geodetic CRS key's datum; any other key is
+    its own. Operations are indexed under it: an op published between
+    geocentric or geographic 3D CRSs serves the geographic 2D pair of the
+    same datums, as the reference's createOperations matches datums."""
+    crs = _geodetic_index()[0].get(code)
+    return code if crs is None else _geodetic_index()[1].get(crs[1], code)
+
+
+def crs_type(code: str) -> str | None:
+    """geodetic_crs type of a non-deprecated geodetic CRS key
+    ('geographic 2D', 'geocentric', ...); None for any other key."""
+    crs = _geodetic_index()[0].get(code)
+    return None if crs is None else crs[0]
+
+
+def ensembles() -> list[Datum]:
+    """Every non-deprecated geodetic datum ensemble, read by `_datum`
+    (members in sequence order, published accuracy)."""
+    db = _load()
+    rows = db["geodetic_datum"]
+    return [_datum(rows[c][0], c) for c in db["geodetic_datum_ensemble_member"]
+            if c in rows and not rows[c][-1]]
+
+
 def geoid_model_grids(vert_code: str) -> str:
     """+geoidgrids value for a vertical CRS code: the geoid (height
-    correction) model file from the registry's grid_transformation rows
-    (param 8666), best accuracy first, each name expanded through
-    grid_alternatives (PROJ tif name, legacy gtx name, original) with
-    '@'-optional markers so whichever file is present loads (reference
+    correction) model files of the registry's geoid op records, best
+    accuracy first, each name expanded through grid_alternatives (PROJ
+    tif name, legacy gtx name, original) with '@'-optional markers so
+    whichever file is present loads (reference
     data/sql/grid_alternatives.sql + createOperations geoid-model path)."""
-    db = _load()
     vert_code = str(vert_code)
     # a "reversible alternative" row targets the compound CRS whose
     # vertical member is this code (e.g. 9708: 4979 -> 9707 for 5773)
-    compound_dsts = {c for c, r in db["compound_crs"].items()
-                     if str(r[7]) == vert_code and not r[-1]}
-    rows = []
-    for r in db["grid_transformation"].values():
-        if r[-1]:
-            continue
-        if str(r[13]) != "8666":   # geoid height-correction model file
-            continue
-        if str(r[10]) == vert_code or str(r[10]) in compound_dsts:
-            acc = float(r[11]) if r[11] is not None else 1e9
-            rows.append((acc, str(r[15])))
+    dsts = {c for c, r in _load()["compound_crs"].items()
+            if str(r[7]) == vert_code and not r[-1]} | {vert_code}
+    rows = sorted((op["accuracy"] if op["accuracy"] >= 0 else 1e9,
+                   op["grid"]) for op in operations()
+                  if op["kind"] == "geoid" and op["dst"] in dsts)
     if not rows:
         raise NotImplementedError(
             f"EPSG:{vert_code}: no geoid model in the bundled registry")
-    rows.sort()
-    names: list[str] = []
-    seen = set()
-    for _acc, orig in rows:
-        for nm in _grid_name_candidates(orig):
-            if nm not in seen:
-                seen.add(nm)
-                names.append("@" + nm)
-    # all names '@'-optional: the list is alternatives for the same
-    # model(s), whichever is present loads; if NONE load the grid-shift
-    # step's "no usable grid" guard raises with the full list
-    return ",".join(names)
+    # all names '@'-optional, each once: the list is alternatives for the
+    # same model(s), whichever is present loads; if NONE load the
+    # grid-shift step's "no usable grid" guard raises with the full list
+    return ",".join("@" + nm for nm in dict.fromkeys(
+        nm for _acc, orig in rows for nm in _grid_name_candidates(orig)))
 
 
 def _grid_name_candidates(orig: str) -> list[str]:
@@ -735,11 +1010,14 @@ def geoid_grids_for_op(op_code: str) -> str:
     """+geoidgrids value for ONE geoid-model grid_transformation row —
     the explicit ``geoid_model`` member of a PROJJSON VerticalCRS
     (reference io.cpp PROJJSONParser geoid_model; NRCan
-    coordinate_metadata definitions name their grid op directly)."""
-    row = _load()["grid_transformation"].get(str(op_code))
-    if row is None or str(row[13]) != "8666":
+    coordinate_metadata definitions name their grid op directly). A
+    deprecated row still resolves."""
+    code = str(op_code)
+    row = _load()["grid_transformation"].get(code)
+    op = None if row is None else _grid(code, row)
+    if op is None or op["kind"] != "geoid":
         raise KeyError(f"geoid model op {op_code} not in the registry")
-    return ",".join("@" + nm for nm in _grid_name_candidates(str(row[15])))
+    return ",".join("@" + nm for nm in _grid_name_candidates(op["grid"]))
 
 
 def guess_body_name(a: float) -> str:
@@ -762,42 +1040,47 @@ def guess_body_name(a: float) -> str:
     return "Non-Earth body"
 
 
+def check_same_body(a1: float, a2: float) -> None:
+    """Refuse a source/target pair whose semi-major axes differ by more
+    than REL_ERROR_FOR_SAME_CELESTIAL_BODY = 0.007 relative: the
+    ellipsoids cannot belong to the same celestial body (reference
+    coordinateoperationfactory.cpp:4459 createOperationsGeodToGeod). The
+    PROJ_IGNORE_CELESTIAL_BODY environment variable, set to anything but
+    NO/FALSE/OFF, overrides the check as in the reference."""
+    if abs(a1 - a2) <= 0.007 * a2:
+        return
+    env = os.environ.get("PROJ_IGNORE_CELESTIAL_BODY")
+    if env is not None and env.upper() not in ("NO", "FALSE", "OFF"):
+        return
+    msg = ("Source and target ellipsoid do not belong to the same "
+           f"celestial body ({guess_body_name(a1)} vs "
+           f"{guess_body_name(a2)}).")
+    if env is None:
+        msg += (" You may override this check by setting the "
+                "PROJ_IGNORE_CELESTIAL_BODY environment variable to YES.")
+    raise ValueError(msg)
+
+
 def crs_usages(code: str) -> list[tuple[str, str, tuple | None]]:
     """[(scope name, area name, (south, west, north, east) | None)] for a
     CRS code — the registry's usage -> scope/extent rows (reference
     data/sql/usage.sql + scope.sql + extent.sql; WKTFormatter emits them
     as WKT2:2019 USAGE[SCOPE[...],AREA[...],BBOX[...]] nodes)."""
     db = _load()
-    idx = db.get("_usage_by_obj")
-    if idx is None:
-        idx = {}
-        for u in db["usage"].values():
-            if len(u) >= 9:
-                idx.setdefault((str(u[2]), str(u[4])), []).append(
-                    (str(u[6]), str(u[8])))
-        db["_usage_by_obj"] = idx
-    out = []
     code = str(code)
     for table in ("geodetic_crs", "projected_crs", "vertical_crs",
                   "compound_crs"):
         if code not in db[table]:
             continue
-        for ext_code, scope_code in idx.get((table, code), []):
-            ext = db["extent"].get(ext_code)
+        out = []
+        for ext_code, scope_code in _usages().get((table, code), ()):
             sc = db["scope"].get(scope_code)
             scope_name = str(sc[2]) if sc is not None else "Not known."
-            if ext is None:
-                out.append((scope_name, "Not specified.", None))
-                continue
-            bbox = None
-            if ext[4] is not None:
-                # extent: auth, code, name, desc, south, north, west,
-                # east, deprecated -> WKT2 BBOX order s, w, n, e
-                bbox = (float(ext[4]), float(ext[6]),
-                        float(ext[5]), float(ext[7]))
-            out.append((scope_name, str(ext[2]), bbox))
-        break
-    return out
+            ext = _extent(ext_code)
+            out.append((scope_name, "Not specified.", None) if ext is None
+                       else (scope_name, *ext))
+        return out
+    return []
 
 
 def coordinate_metadata(code: str) -> tuple[str, float | None]:

@@ -3,58 +3,35 @@ planner path over the bundled EPSG dataset.
 
 The reference resolves a CRS pair to a RANKED LIST of coordinate
 operations from the EPSG registry (reference
-src/iso19111/coordinateoperation.cpp createOperations + the proj.db
-helmert_transformation / grid_transformation / usage / extent tables) and
-dispatches per point at transform time (4D_api.cpp).  This module builds
-the same candidate lists from the bundled data-only EPSG extract:
+src/iso19111/coordinateoperation.cpp createOperations) and dispatches per
+point at transform time (4D_api.cpp). This module plans over the op
+records `sources.epsg.operations` reads — Helmert (static geographic and
+geocentric, Molodensky-Badekas, time-dependent, time-specific),
+NADCON/NTv1/NTv2 grid, offset, PROJ-string and concatenated operations —
+and reads no registry row itself:
 
-* direct Helmert ops (geocentric translations 9603, position vector
-  9606, coordinate frame 9607 — geog2D domain) lowered onto the
-  engine's pipeline surface (cart -> helmert -> cart^-1);
-* direct grid ops (NTv2 9615, NTv1 9614, NADCON 9613) — kept only when
-  the grid file actually loads, mirroring skipNonInstantiable;
-* reverse rows (registry stores one direction; inverse is exact);
-* one-level composition via the WGS84 hub (EPSG:4326) when no direct
-  op exists — the registry's A->hub + hub->B chaining, accuracies
-  summed, areas intersected;
-* a ballpark (no datum change) candidate appended last, accuracy
-  unknown — the reference's ballpark transformation
-  (4D_api.cpp:2262-2312) so out-of-area points degrade instead of
+* the records are indexed under their canonical CRS pair
+  (`epsg.canonical_crs`), with a null operation between each datum
+  ensemble and its members at the ensemble accuracy; concatenated
+  operations are chained, each step's direction inferred from the CRS
+  it starts at;
+* direct candidates run in both directions (the registry stores one),
+  grid candidates only when the grid loads (skipNonInstantiable), and
+  superseded candidates are dropped;
+* with no direct op, one-level composition through any pivot CRS with
+  ops to both ends: accuracies summed, areas intersected, pivots ranked
+  by best summed accuracy with the WGS84 hub winning ties;
+* a ballpark (no datum change) candidate comes last, accuracy unknown
+  (4D_api.cpp:2262-2312), so out-of-area points degrade instead of
   erroring.
 
-Area of use comes from each op's usage -> extent row; accuracy from the
-op row.  The result plugs straight into plans.dispatch.CandidateDispatch.
+Each candidate lowers to `+step` pipeline fragments, and the list plugs
+straight into plans.dispatch.CandidateDispatch.
 """
 
 from __future__ import annotations
 
 from proj_spark.sources import epsg as E
-
-_HELMERT_METHODS = {
-    # static geog2D domain
-    "9603", "9606", "9607",
-    # Molodensky-Badekas (pivot point; CF geog2D / PV variants)
-    "9636", "1061", "1062", "1063",
-    # static geocentric domain (datum-bridged to the geog2D pair)
-    "1031", "1032", "1033",
-    # time-dependent (rate columns + reference epoch;
-    # reference src/iso19111/operation/transformation.cpp:740)
-    "1053", "1054", "1055", "1056", "1057", "1058",
-    # time-specific (params valid at the stated epoch, no rates;
-    # lowered as static Helmert like the reference's proj-string output)
-    "1065", "1066",
-}
-_TIME_DEP_METHODS = {"1053", "1054", "1055", "1056", "1057", "1058"}
-_GRID_METHODS = {"9613", "9614", "9615"}
-# other_transformation methods lowered onto geogoffset (reference
-# src/iso19111/operation/transformation.cpp: longitude rotation 9601,
-# geographic2D offsets 9619, geographic2D with height offsets 9618,
-# vertical offset 9616)
-_OFFSET_METHODS = {"9601", "9619", "9618", "9616"}
-
-# "per year" uom factors convert to SI per SECOND; multiply by the
-# registry's year (uom 1029) to get the per-year rates proj-strings use
-_YEAR_S = 31556925.445
 
 
 def _conv_of(method_name: str) -> str:
@@ -64,287 +41,93 @@ def _conv_of(method_name: str) -> str:
     return "coordinate_frame"
 
 
-def _rate(value, uom_code, to: str) -> float:
-    """Registry rate column -> per-year value in proj-string units
-    (m/yr, arcsec/yr, or ppm/yr)."""
-    if value is None:
-        return 0.0
-    factor = E._uom(uom_code).factor
-    si_per_year = float(value) * factor * _YEAR_S
-    if to == "m":
-        return si_per_year
-    if to == "arcsec":
-        import math
-        return si_per_year * (180.0 / math.pi) * 3600.0
-    if to == "ppm":
-        return si_per_year * 1e6
-    raise ValueError(to)
-
-
 _op_index = None
 
 
+def _chain(op: dict, by_code: dict) -> dict | None:
+    """A concatenated op record with its steps resolved to [(step op,
+    inverse)], each step's direction inferred from CRS chaining
+    (reference coordinateoperationfactory.cpp createOperations); None
+    when a step is unknown or the chain does not connect."""
+    canon = E.canonical_crs
+    chain = []
+    cur = op["src"]
+    for sc in op["steps"]:
+        sop = by_code.get(sc)
+        if sop is None:
+            return None
+        if canon(sop["src"]) == canon(cur):
+            chain.append((sop, False))
+            cur = sop["dst"]
+        elif canon(sop["dst"]) == canon(cur):
+            chain.append((sop, True))
+            cur = sop["src"]
+        else:
+            return None
+    if canon(cur) != canon(op["dst"]):
+        return None
+    acc = op["accuracy"]
+    if acc < 0 and all(s["accuracy"] >= 0 for s, _ in chain):
+        acc = sum(s["accuracy"] for s, _ in chain)
+    return {**op, "accuracy": acc, "steps": chain}
+
+
 def _ops_by_crs():
-    """{(src_code, dst_code): [op_row_dict, ...]} over helmert + grid."""
+    """{"idx": {(canonical src, canonical dst): [op, ...]}, "by_code":
+    {code: op}, "nbr": directed adjacency over canonical codes}."""
     global _op_index
     if _op_index is not None:
         return _op_index
-    db = E._load()
-    # usage: auth, code, object_table, obj_auth, obj_code, ext_auth,
-    # ext_code, scope_auth, scope_code -> {(table, obj_code): extent_code}
-    # an op can carry SEVERAL usage/extent rows (multiple areas of use);
-    # keep them all and use the union bbox for eligibility — last-row-wins
-    # would shrink/shift the area tested per point
-    ext_of: dict[tuple[str, str], list[str]] = {}
-    for u in db["usage"].values():
-        ext_of.setdefault((str(u[2]), str(u[4])), []).append(str(u[6]))
+    canon = E.canonical_crs
     idx: dict[tuple[str, str], list[dict]] = {}
     by_code: dict[str, dict] = {}   # step lookup for concatenated ops
 
-    # datum bridge: geocentric/geog3D-domain ops (e.g. the time-dependent
-    # ITRF rows, published between geocentric CRSs) apply to the geographic
-    # pair of the SAME datums — the cart steps of the lowering do the
-    # geog<->geocentric conversion. Canonicalize every op's src/dst to the
-    # datum's geographic 2D CRS and index under that, as the reference's
-    # createOperations does via datum matching.
-    crs_datum: dict[str, str] = {}
-    geog2d_of_datum: dict[str, str] = {}
-    for ccode, r in db["geodetic_crs"].items():
-        if r[-1]:  # deprecated
-            continue
-        datum = str(r[8])
-        crs_datum[ccode] = datum
-        if r[4] == "geographic 2D":
-            # lowest NUMERIC code wins (EPSG); alphanumeric auxiliary
-            # codes (IGNF) sort after and alphabetically among themselves
-            def _ck(c):
-                return (0, int(c), "") if c.isdigit() else (1, 0, c)
-            cur = geog2d_of_datum.get(datum)
-            if cur is None or _ck(ccode) < _ck(cur):
-                geog2d_of_datum[datum] = ccode
-
-    def canon(code: str) -> str:
-        d = crs_datum.get(code)
-        return geog2d_of_datum.get(d, code) if d is not None else code
+    def add(op: dict, indexed: bool = True) -> None:
+        by_code[op["code"]] = op
+        if indexed:
+            idx.setdefault((canon(op["src"]), canon(op["dst"])),
+                           []).append(op)
 
     # datum ensembles (reference data/sql/geodetic_datum_ensemble_member
     # .sql; factory.cpp createDatumEnsemble): a member realization is
     # equivalent to its ensemble within the PUBLISHED ensemble accuracy
-    # (geodetic_datum.ensemble_accuracy — WGS84 2.0 m, ETRS89 0.1 m), so
-    # a null transformation member<->ensemble joins the candidate index
-    # at that accuracy. This is what lets NAD27 -> "WGS 84 (G1762)"
-    # resolve as 'NAD27 to WGS 84 (33) + WGS 84 to WGS 84 (G1762)'
-    # (reference test_operationfactory.cpp NAD27_to_WGS84_G1762), while a
-    # direct member-to-member Helmert (EPSG:7667, accuracy 0.01) still
-    # outranks the 2 m ensemble path.
-    for ens_datum, members in db["geodetic_datum_ensemble_member"].items():
-        ens_row = db["geodetic_datum"].get(ens_datum)
-        ens_crs = geog2d_of_datum.get(ens_datum)
-        if ens_row is None or ens_row[-1] or ens_crs is None:
+    # (WGS84 2.0 m, ETRS89 0.1 m), so a null transformation
+    # member<->ensemble joins the candidate index at that accuracy. This
+    # is what lets NAD27 -> "WGS 84 (G1762)" resolve as 'NAD27 to WGS 84
+    # (33) + WGS 84 to WGS 84 (G1762)' (reference test_operationfactory.cpp
+    # NAD27_to_WGS84_G1762), while a direct member-to-member Helmert
+    # (EPSG:7667, accuracy 0.01) still outranks the 2 m ensemble path.
+    for ens in E.ensembles():
+        ens_crs = E.datum_crs(ens.code)
+        if ens_crs is None:
             continue
-        acc = float(ens_row[10]) if ens_row[10] is not None else -1.0
-        ens_name = str(db["geodetic_crs"][ens_crs][2])
-        for _seq, mem in sorted(members):
-            mem_crs = geog2d_of_datum.get(mem)
+        ens_name = E.crs_record(ens_crs).name
+        for _auth, mem, _name in ens.members:
+            mem_crs = E.datum_crs(mem)
             if mem_crs is None:
                 continue
-            mem_name = str(db["geodetic_crs"][mem_crs][2])
-            op = {
+            add({
                 # the code is synthetic, so it is not labelled EPSG
                 # (the reference's DERIVED_FROM(EPSG) convention)
                 "kind": "ensemble_null", "auth": "DERIVED_FROM(EPSG)",
-                "code": f"{ens_datum}-member-{mem}",
-                "name": f"{ens_name} to {mem_name}",
+                "code": f"{ens.code}-member-{mem}",
+                "name": f"{ens_name} to {E.crs_record(mem_crs).name}",
                 "method": "ensemble", "method_name": "datum ensemble member",
-                "src": ens_crs, "dst": mem_crs, "accuracy": acc,
+                "src": ens_crs, "dst": mem_crs, "accuracy": ens.accuracy,
                 "bbox": None,
-            }
-            idx.setdefault((ens_crs, mem_crs), []).append(op)
-            by_code[op["code"]] = op
+            })
 
-    def bbox_for(table, code):
-        boxes = []
-        for ec in ext_of.get((table, code), []):
-            ext = db["extent"].get(ec)
-            if ext is None:
-                continue
-            # extent: auth, code, name, desc, south, north, west, east, depr
-            s, n, w, e = (float(ext[4]), float(ext[5]),
-                          float(ext[6]), float(ext[7]))
-            boxes.append((w, s, e, n))
-        if not boxes:
-            return None
-        if len(boxes) == 1:
-            return boxes[0]
-        # union of the areas of use; antimeridian-crossing components
-        # (w > e) can't participate in a flat min/max union — skip them
-        # (dispatch drops w > e candidates anyway, reference 4D_api.cpp:1740)
-        flat = [b for b in boxes if b[0] <= b[2]]
-        if not flat:
-            return boxes[0]
-        return (min(b[0] for b in flat), min(b[1] for b in flat),
-                max(b[2] for b in flat), max(b[3] for b in flat))
+    for op in E.operations():
+        kind = op["kind"]
+        if kind == "concat":
+            op = _chain(op, by_code)
+            if op is not None:
+                add(op)
+        elif kind != "geoid":
+            # PROJ-string steps serve concatenated ops and the URN
+            # surface; vertical-only offsets are not geographic pairs
+            add(op, kind != "projstring" and op["method"] != "9616")
 
-    for code, row in db["helmert_transformation"].items():
-        if row[-1]:  # deprecated
-            continue
-        method = str(row[5])
-        if method not in _HELMERT_METHODS:
-            continue
-        op = {
-            "kind": "helmert", "code": code, "name": row[2], "auth": str(row[0]),
-            "method": method, "method_name": str(row[6]),
-            "src": str(row[8]), "dst": str(row[10]),
-            "accuracy": float(row[11]) if row[11] is not None else -1.0,
-            "tx": E._length_m(row[12], row[16]),
-            "ty": E._length_m(row[13], row[16]),
-            "tz": E._length_m(row[14], row[16]),
-            "bbox": bbox_for("helmert_transformation", code),
-        }
-        if row[17] is not None:
-            # rotations -> arcsec, scale difference -> ppm
-            op["rx"] = E._angle_deg(row[17], row[21]) * 3600.0
-            op["ry"] = E._angle_deg(row[18], row[21]) * 3600.0
-            op["rz"] = E._angle_deg(row[19], row[21]) * 3600.0
-            ds = row[22]
-            if ds is not None:
-                factor = E._uom(row[24]).factor
-                op["ds"] = float(ds) * (factor if factor else 1e-6) / 1e-6
-            else:
-                op["ds"] = 0.0
-        # rate columns (time-dependent methods 1053-1058): tx/ty/tz rates
-        # at 25-27 (uom 29), rx/ry/rz rates at 30-32 (uom 34), scale rate
-        # at 35 (uom 37); reference epoch at 38 (uom 40, year number)
-        if method in _TIME_DEP_METHODS and row[38] is not None:
-            op["dtx"] = _rate(row[25], row[29], "m")
-            op["dty"] = _rate(row[26], row[29], "m")
-            op["dtz"] = _rate(row[27], row[29], "m")
-            op["drx"] = _rate(row[30], row[34], "arcsec")
-            op["dry"] = _rate(row[31], row[34], "arcsec")
-            op["drz"] = _rate(row[32], row[34], "arcsec")
-            op["dds"] = _rate(row[35], row[37], "ppm")
-            op["t_epoch"] = float(row[38])
-        # Molodensky-Badekas pivot at 41-43 (uom 45)
-        if row[41] is not None:
-            op["px"] = E._length_m(row[41], row[45])
-            op["py"] = E._length_m(row[42], row[45])
-            op["pz"] = E._length_m(row[43], row[45])
-        idx.setdefault((canon(op["src"]), canon(op["dst"])), []).append(op)
-        by_code[code] = op
-
-    for code, row in db["grid_transformation"].items():
-        if row[-1]:
-            continue
-        method = str(row[5])
-        if method not in _GRID_METHODS:
-            continue
-        op = {
-            "kind": "grid", "code": code, "name": row[2], "auth": str(row[0]),
-            "method": method,
-            "src": str(row[8]), "dst": str(row[10]),
-            "accuracy": float(row[11]) if row[11] is not None else -1.0,
-            "grid": str(row[15]),
-            "bbox": bbox_for("grid_transformation", code),
-        }
-        idx.setdefault((canon(op["src"]), canon(op["dst"])), []).append(op)
-        by_code[code] = op
-
-    # other_transformation offset ops (params in 6-wide blocks from col
-    # 12: p_auth, p_code, p_name, value, uom_auth, uom_code)
-    for code, row in db["other_transformation"].items():
-        if row[-1]:
-            continue
-        method = str(row[5])
-        if method not in _OFFSET_METHODS:
-            continue
-        p = {}
-        for k in range(7):
-            off = 12 + k * 6
-            if off + 5 >= len(row) or row[off + 1] is None:
-                break
-            p[str(row[off + 1])] = (row[off + 3], row[off + 5])
-        op = {
-            "kind": "offset", "code": code, "name": row[2], "auth": str(row[0]),
-            "method": method, "method_name": str(row[6]),
-            "src": str(row[8]), "dst": str(row[10]),
-            "accuracy": float(row[11]) if row[11] is not None else -1.0,
-            # 8601 lat offset, 8602 lon offset (-> arcsec); 8603 vertical
-            # offset, 8604 geoid undulation (-> m)
-            "dlat": (E._angle_deg(*p["8601"]) * 3600.0
-                     if "8601" in p else 0.0),
-            "dlon": (E._angle_deg(*p["8602"]) * 3600.0
-                     if "8602" in p else 0.0),
-            "dh": (E._length_m(*p["8603"]) if "8603" in p
-                   else E._length_m(*p["8604"]) if "8604" in p else 0.0),
-            "bbox": bbox_for("other_transformation", code),
-        }
-        if method != "9616":   # vertical-only ops aren't geographic pairs
-            idx.setdefault((canon(op["src"]), canon(op["dst"])),
-                           []).append(op)
-        by_code[code] = op
-
-    # PROJ-string operations (auxiliary authorities — NKG's deformation-
-    # model and epoch-propagation steps are published directly as proj
-    # strings, method PROJ:PROJString): the executable spec IS the row.
-    # by_code only (steps of concatenated operations + the URN surface);
-    # they don't join the geographic-pair candidate index.
-    for code, row in db["other_transformation"].items():
-        if row[-1] or str(row[5]) != "PROJString":
-            continue
-        by_code[code] = {
-            "kind": "projstring", "code": code, "name": row[2], "auth": str(row[0]),
-            "method": "PROJString", "method_name": "PROJ-based operation",
-            "spec": str(row[6]),
-            "src": str(row[8]), "dst": str(row[10]),
-            "accuracy": float(row[11]) if row[11] is not None else -1.0,
-            "bbox": bbox_for("other_transformation", code),
-        }
-
-    # concatenated operations: explicit multi-step published paths
-    # (reference data/sql/concatenated_operation(_step).sql;
-    # coordinateoperationfactory.cpp createOperations walks the steps,
-    # inferring each step's direction from CRS chaining)
-    for code, row in db["concatenated_operation"].items():
-        if row[-1]:
-            continue
-        src, dst = str(row[5]), str(row[7])
-        steps = sorted(db["concatenated_operation_step"].get(code, []))
-        if not steps:
-            continue
-        chain = []
-        cur = src
-        ok = True
-        for _n, sc in steps:
-            sop = by_code.get(sc)
-            if sop is None:
-                ok = False
-                break
-            if canon(sop["src"]) == canon(cur):
-                chain.append((sop, False))
-                cur = sop["dst"]
-            elif canon(sop["dst"]) == canon(cur):
-                chain.append((sop, True))
-                cur = sop["src"]
-            else:
-                ok = False
-                break
-        if not ok or canon(cur) != canon(dst):
-            continue
-        acc = float(row[8]) if row[8] is not None else (
-            sum(s["accuracy"] for s, _ in chain)
-            if all(s["accuracy"] >= 0 for s, _ in chain) else -1.0)
-        op = {
-            "kind": "concat", "code": code, "name": row[2], "auth": str(row[0]),
-            "method": "concat", "method_name": "concatenated operation",
-            "src": src, "dst": dst, "accuracy": acc,
-            "steps": chain,
-            "bbox": bbox_for("concatenated_operation", code),
-        }
-        idx.setdefault((canon(src), canon(dst)), []).append(op)
-        by_code[code] = op
-
-    crs_type = {c: str(r[4]) for c, r in db["geodetic_crs"].items()
-                if not r[-1]}
     # directed adjacency over canonical codes for the intermediate-pivot
     # search (reference coordinateoperationfactory.cpp:1986
     # findsOpsInRegistryWithIntermediate): nbr[A][B] = [(op, inverse)]
@@ -354,70 +137,20 @@ def _ops_by_crs():
         for op in ops:
             nbr.setdefault(a, {}).setdefault(b, []).append((op, False))
             nbr.setdefault(b, {}).setdefault(a, []).append((op, True))
-    _op_index = {"idx": idx, "canon": canon, "by_code": by_code,
-                 "crs_type": crs_type, "nbr": nbr}
+    _op_index = {"idx": idx, "by_code": by_code, "nbr": nbr}
     return _op_index
 
 
-# registry table holding each op kind (supersession rows match on it)
-_TABLE_OF_KIND = {
-    "helmert": "helmert_transformation",
-    "grid": "grid_transformation",
-    "offset": "other_transformation",
-    "projstring": "other_transformation",
-    "concat": "concatenated_operation",
-}
-
-
 def _discard_superseded(cands: list) -> list:
-    """Drop candidates superseded by another candidate IN THE SAME LIST —
-    the reference's discardSuperseded pass (factory.cpp
-    createFromCRSCodesWithIntermediates / getTransformationsForGridName
-    callers, SQL at factory.cpp:6849): a supersession row applies only
-    when same_source_target_crs=1 and the replacement is in the same
-    table; the 'replacement uses an unknown grid' guard falls out
-    naturally here because a non-instantiable grid replacement never
-    enters the candidate list, so its superseded op survives."""
-    sup = E._load()["supersession"]
-    present = {(_TABLE_OF_KIND.get(c.meta.get("kind"), ""),
-                str(c.meta.get("code")))
-               for c in cands if getattr(c, "meta", None)}
-    out = []
-    for c in cands:
-        meta = getattr(c, "meta", None) or {}
-        table = _TABLE_OF_KIND.get(meta.get("kind"), "")
-        rows = sup.get((table, str(meta.get("code"))), [])
-        superseded = any(
-            str(r[7]) == "1" and str(r[3]) == table
-            and (str(r[3]), str(r[5])) in present
-            for r in rows)
-        if not superseded:
-            out.append(c)
-    return out
-
-
-def _check_same_body(src_spec: str, dst_spec: str) -> None:
-    """Cross-celestial-body guard for the dispatch path (reference
-    coordinateoperationfactory.cpp createOperationsGeodToGeod:
-    REL_ERROR_FOR_SAME_CELESTIAL_BODY = 0.007 relative on the semi-major
-    axes, PROJ_IGNORE_CELESTIAL_BODY override)."""
-    import os
-
-    from proj_spark.crs import resolve_ellipsoid
-    from proj_spark.plans.pipeline import parse_params, tokenize
-
-    a1 = resolve_ellipsoid(parse_params(tokenize(src_spec))).a
-    a2 = resolve_ellipsoid(parse_params(tokenize(dst_spec))).a
-    if abs(a1 - a2) <= 0.007 * a2:
-        return
-    env = os.environ.get("PROJ_IGNORE_CELESTIAL_BODY")
-    if env is not None and env.upper() not in ("NO", "FALSE", "OFF"):
-        return
-    from proj_spark.sources.epsg import guess_body_name
-
-    raise ValueError(
-        "Source and target ellipsoid do not belong to the same celestial "
-        f"body ({guess_body_name(a1)} vs {guess_body_name(a2)}).")
+    """Drop candidates superseded (`epsg.supersessors`) by another
+    candidate IN THE SAME LIST — the reference's discardSuperseded pass.
+    A replacement whose grid does not load never enters the list, so its
+    superseded op survives (the reference's unknown-grid guard)."""
+    metas = [getattr(c, "meta", None) or {} for c in cands]
+    present = {E.op_key(m.get("kind"), m.get("code")) for m in metas}
+    return [c for c, m in zip(cands, metas)
+            if present.isdisjoint(E.supersessors(m.get("kind"),
+                                                 m.get("code")))]
 
 
 def _geog_only(code: str) -> str:
@@ -454,6 +187,12 @@ def _helmert_params(op: dict) -> str:
     return par
 
 
+def _steps(op: dict, inverse: bool) -> list:
+    """A concatenated op's [(step op, inverse)] in the order applied."""
+    return op["steps"] if not inverse else [
+        (s, not i) for s, i in reversed(op["steps"])]
+
+
 def _op_step_fragments(op: dict, src_spec: str, dst_spec: str,
                        inverse: bool) -> list[str] | None:
     """Lower one registry op row to '+step ...' pipeline fragments.
@@ -487,12 +226,10 @@ def _op_step_fragments(op: dict, src_spec: str, dst_spec: str,
         return [f"+step {g}"]
     if op["kind"] == "concat":
         frags: list[str] = []
-        steps = op["steps"] if not inverse else [
-            (s, not i) for s, i in reversed(op["steps"])]
-        for sop, sinv in steps:
+        for sop, sinv in _steps(op, inverse):
             try:
-                s_spec = _geog_only(_canon_code(sop["src"]))
-                d_spec = _geog_only(_canon_code(sop["dst"]))
+                s_spec = _geog_only(E.canonical_crs(sop["src"]))
+                d_spec = _geog_only(E.canonical_crs(sop["dst"]))
             except Exception:
                 return None   # step between non-geographic CRSs
             if sinv:
@@ -511,10 +248,6 @@ def _op_step_fragments(op: dict, src_spec: str, dst_spec: str,
     return [f"+step {g}"]
 
 
-def _canon_code(code: str) -> str:
-    return _ops_by_crs()["canon"](code)
-
-
 def _op_pipeline_spec(op: dict, src_spec: str, dst_spec: str,
                       inverse: bool) -> str | None:
     frags = _op_step_fragments(op, src_spec, dst_spec, inverse)
@@ -531,8 +264,6 @@ def _native_fragments(op: dict, inverse: bool = False) -> list[str]:
     cart/geogoffset lowering, PROJ-string rows splice their spec
     verbatim, concatenated operations splice their steps with the stored
     per-step direction."""
-    info = _ops_by_crs()
-    ctype = info["crs_type"]
     kind = op["kind"]
     if kind == "projstring":
         toks = op["spec"].split()
@@ -541,23 +272,18 @@ def _native_fragments(op: dict, inverse: bool = False) -> list[str]:
                 "nested pipeline PROJString operation")
         return ["+step " + ("+inv " if inverse else "") + " ".join(toks)]
     if kind == "concat":
-        steps = op["steps"] if not inverse else [
-            (s, not i) for s, i in reversed(op["steps"])]
-        out: list[str] = []
-        for sop, sinv in steps:
-            out.extend(_native_fragments(sop, sinv))
-        return out
-    if kind == "helmert" and (
-            ctype.get(str(op["src"])) == "geocentric"
-            or ctype.get(str(op["dst"])) == "geocentric"):
+        return [f for sop, sinv in _steps(op, inverse)
+                for f in _native_fragments(sop, sinv)]
+    if kind == "helmert" and "geocentric" in (E.crs_type(op["src"]),
+                                              E.crs_type(op["dst"])):
         h = f"+proj=helmert {_helmert_params(op)}"
         return ["+step " + ("+inv " if inverse else "") + h]
     # geographic-domain rows reuse the pair lowering
     s_code, d_code = op["src"], op["dst"]
     if inverse:
         s_code, d_code = d_code, s_code
-    frags = _op_step_fragments(op, _geog_only(_canon_code(s_code)),
-                               _geog_only(_canon_code(d_code)), inverse)
+    frags = _op_step_fragments(op, _geog_only(E.canonical_crs(s_code)),
+                               _geog_only(E.canonical_crs(d_code)), inverse)
     if frags is None:
         raise NotImplementedError(
             f"operation {op['code']} not loweable in its native domain")
@@ -609,8 +335,10 @@ def candidate_operations(src: str, dst: str, *, hub: str = "4326",
     URN, IGNF/NKG/IAU codes, or WKT/PROJJSON text identified to a code by
     its ID node, the ESRI name alias table or its datum ensemble —
     io.cpp's late-binding identification)."""
+    from proj_spark.crs import resolve_ellipsoid
     from proj_spark.plans.dispatch import Candidate
-    from proj_spark.plans.pipeline import crs_input, crs_registry_code
+    from proj_spark.plans.pipeline import (crs_input, crs_registry_code,
+                                           parse_params, tokenize)
 
     def norm(c: str) -> str:
         key = crs_registry_code(crs_input(c))
@@ -623,12 +351,12 @@ def candidate_operations(src: str, dst: str, *, hub: str = "4326",
     src, dst = norm(src), norm(dst)
     src_spec = _geog_only(src)
     dst_spec = _geog_only(dst)
-    _check_same_body(src_spec, dst_spec)
-    ix = _ops_by_crs()
-    idx, canon = ix["idx"], ix["canon"]
+    E.check_same_body(*(resolve_ellipsoid(parse_params(tokenize(s))).a
+                        for s in (src_spec, dst_spec)))
+    idx = _ops_by_crs()["idx"]
     # ops are indexed under the datum's canonical geog2D code (the
     # datum bridge) — canonicalize the lookup the same way
-    ksrc, kdst = canon(src), canon(dst)
+    ksrc, kdst = E.canonical_crs(src), E.canonical_crs(dst)
 
     out = []
     for op in idx.get((ksrc, kdst), []):
@@ -699,9 +427,8 @@ def _pivot_candidates(src, dst, src_spec, dst_spec, cap, hub):
     from proj_spark.plans.dispatch import Candidate
     from proj_spark.plans.pipeline import Pipeline
 
-    ix = _ops_by_crs()
-    canon, nbr = ix["canon"], ix["nbr"]
-    ksrc, kdst = canon(src), canon(dst)
+    nbr = _ops_by_crs()["nbr"]
+    ksrc, kdst = E.canonical_crs(src), E.canonical_crs(dst)
     legs1_all = nbr.get(ksrc, {})
     pivots = [p for p in legs1_all
               if p not in (ksrc, kdst) and kdst in nbr.get(p, {})]
@@ -712,7 +439,7 @@ def _pivot_candidates(src, dst, src_spec, dst_spec, cap, hub):
         accs = [o["accuracy"] for o, _ in ops if o["accuracy"] >= 0]
         return min(accs) if accs else _math.inf
 
-    khub = canon(hub)
+    khub = E.canonical_crs(hub)
     pivots.sort(key=lambda p: (
         best_acc(legs1_all[p]) + best_acc(nbr[p].get(kdst, [])),
         0 if p == khub else 1, p))

@@ -683,12 +683,8 @@ def _base_is_ocentric(base: Node) -> bool:
     code = _id_code(base, "IAU_2015") or _id_code(base, "IAU")
     if code is None:
         return False
-    db = _epsg._load()
-    row = db["geodetic_crs"].get(f"IAU_2015:{code}")
-    if row is None:
-        return False
-    cs_row = db["coordinate_system"].get(str(row[6]))
-    return cs_row is not None and str(cs_row[2]) == "spherical"
+    crs = _epsg.crs_record(f"IAU_2015:{code}")
+    return crs is not None and crs.cs == "spherical"
 
 
 # ------------------------------------------------------------ bound CRS
@@ -849,29 +845,14 @@ def crs_epsg_code(src: "str | Node") -> str | None:
 
 def _ensemble_geog2d_code(name: str, member_ids: set) -> str | None:
     """Canonical geographic-2D CRS code for a datum ensemble matched
-    against the bundled registry: by geodetic_datum name, else by the
-    set of EPSG member datum ids (geodetic_datum_ensemble_member). The
-    WKT2 ENSEMBLE node and the PROJJSON datum_ensemble both map here."""
-    db = _epsg._load()
-    members = db["geodetic_datum_ensemble_member"]
-
-    def geog2d_of(datum_code: str) -> str | None:
-        best = None
-        for ccode, r in db["geodetic_crs"].items():
-            if (not r[-1] and str(r[8]) == datum_code
-                    and r[4] == "geographic 2D"):
-                k = ((0, int(ccode), "") if ccode.isdigit()
-                     else (1, 0, ccode))
-                if best is None or k < best[0]:
-                    best = (k, ccode)
-        return best[1] if best else None
-
+    against the bundled registry's ensembles: by name, else by the set of
+    EPSG member datum ids. The WKT2 ENSEMBLE node and the PROJJSON
+    datum_ensemble both map here."""
+    ensembles = _epsg.ensembles()
     name = name.strip().lower()
-    for dcode, row in db["geodetic_datum"].items():
-        if dcode in members and str(row[2]).strip().lower() == name:
-            return geog2d_of(dcode)
-    if member_ids:
-        for dcode, mems in members.items():
-            if member_ids <= {m for _s, m in mems}:
-                return geog2d_of(dcode)
-    return None
+    match = next((d for d in ensembles if d.name.strip().lower() == name),
+                 None)
+    if match is None and member_ids:
+        match = next((d for d in ensembles
+                      if member_ids <= {m[1] for m in d.members}), None)
+    return None if match is None else _epsg.datum_crs(match.code)

@@ -185,7 +185,8 @@ def test_dispatch_path_iau_and_geoc_ballpark():
     from proj_spark.cli import main
     from proj_spark.sources.epsg_ops import candidate_operations
 
-    with pytest.raises(ValueError, match="celestial body"):
+    with pytest.raises(ValueError,
+                       match="celestial body.*PROJ_IGNORE_CELESTIAL_BODY"):
         candidate_operations("IAU_2015:49900", "IAU_2015:30100")
 
     c = candidate_operations("IAU_2015:49900", "IAU_2015:49902")
