@@ -17,12 +17,25 @@ invalidated, and an archive whose bytes changed is still re-read, so
 py-files shipped during a session stay importable. The daemon primes the
 cache once before it forks, so workers start with every importer current.
 
+A reused worker also runs a full ``gc.collect()`` after every task
+(``pyspark.daemon.manager``). Without help that collection rescans every
+object the worker imported for its UDF closures: pandas, pyarrow,
+pyspark.sql and proj_spark, ~73k tracked objects, 28 ms per task on a
+4-core host and up to ~60 ms once the worker has run the engine's UDFs.
+So the daemon imports those modules itself, collects once and calls
+``gc.freeze()`` before it forks (the pattern the ``gc`` docs give for
+forking servers): every worker inherits the frozen generation, and its
+per-task collection scans only the objects made after the fork (~600
+objects, 0.2 ms). Frozen objects are never collected, so only modules,
+which live as long as the process, are frozen.
+
 Run as ``python -m proj_spark._daemon`` (Spark's
 ``spark.python.daemon.module``); it then serves as ``pyspark.daemon``.
 """
 
 from __future__ import annotations
 
+import gc
 import importlib
 import os
 import zipimport
@@ -62,11 +75,26 @@ def install() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+def preload() -> None:
+    """Import what the engine's UDF closures import, then freeze the heap
+    so a forked worker's collections skip it."""
+    import pandas  # noqa: F401
+    import pyarrow.compute  # noqa: F401
+    import pyspark.sql.pandas.serializers  # noqa: F401
+
+    import proj_spark.functions  # noqa: F401
+    import proj_spark.plans.dispatch  # noqa: F401
+
+    gc.collect()  # freeze no garbage
+    gc.freeze()
+
+
 def main() -> None:
     install()
     from pyspark import daemon
 
     importlib.invalidate_caches()  # one read per archive, inherited by forks
+    preload()
     daemon.manager()
 
 

@@ -1000,10 +1000,11 @@ def geoid_model_grids(vert_code: str) -> str:
 
 def _grid_name_candidates(orig: str) -> list[str]:
     """Registry grid name expanded through grid_alternatives (PROJ tif
-    name, legacy name, original), most-preferred first."""
+    name, legacy name, original), most-preferred first, each non-empty
+    name once."""
     alt = _load()["grid_alternatives"].get(orig)
-    return ([str(alt[1])] + ([str(alt[2])] if alt[2] else [])
-            if alt else []) + [orig]
+    names = [alt[1], alt[2]] if alt else []
+    return [str(nm) for nm in dict.fromkeys(names + [orig]) if nm]
 
 
 def geoid_grids_for_op(op_code: str) -> str:

@@ -239,13 +239,15 @@ def _op_step_fragments(op: dict, src_spec: str, dst_spec: str,
                 return None
             frags.extend(sub)
         return frags
-    # grid op: hgridshift fwd maps src->dst as stored
-    if has_pm(src_spec, dst_spec):
-        return None
-    g = f"+proj=hgridshift +grids={op['grid']}"
-    if inverse:
-        g = f"+inv {g}"
-    return [f"+step {g}"]
+    if op["kind"] == "grid":
+        # hgridshift fwd maps src->dst as stored
+        if has_pm(src_spec, dst_spec):
+            return None
+        g = f"+proj=hgridshift +grids={op['grid']}"
+        if inverse:
+            g = f"+inv {g}"
+        return [f"+step {g}"]
+    return None   # e.g. a PROJ-string step: not loweable between specs
 
 
 def _op_pipeline_spec(op: dict, src_spec: str, dst_spec: str,

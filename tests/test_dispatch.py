@@ -582,3 +582,25 @@ def test_pivot_search_prefers_hub_on_ties_and_caps_work():
 
     c = candidate_operations("4230", "4267")
     assert [x.name for x in c] == ["ballpark"]
+
+
+def test_projstring_step_chain_is_not_instantiable():
+    """A concatenated operation with a PROJ-string step (the 30 NKG
+    chains, e.g. ITRF2000_TO_NKG_ETRF00) does not lower between two
+    geographic specs: the planner drops it as not instantiable, so
+    ETRS89 -> NAD27 ends in the ballpark instead of a KeyError, and
+    ETRS89 -> ITRF2005 still composes its ensemble-member chains."""
+    from proj_spark.sources.epsg import canonical_crs
+    from proj_spark.sources.epsg_ops import (_geog_only, _op_step_fragments,
+                                             _ops_by_crs, candidate_operations)
+
+    op = _ops_by_crs()["by_code"]["ITRF2000_TO_NKG_ETRF00"]
+    assert [s["kind"] for s, _inv in op["steps"]] == ["helmert", "projstring"]
+    spec = _geog_only(canonical_crs("4258"))
+    assert _op_step_fragments(op, spec, spec, False) is None
+
+    assert [c.name for c in candidate_operations("4258", "4267")] == [
+        "ballpark"]
+    names = [c.name for c in candidate_operations("4258", "7910")]
+    assert "EPSG:10576 ITRF2005 to ETRF2020" in names[0]
+    assert names[-1] == "ballpark"

@@ -332,3 +332,21 @@ def test_two_grid_alternatives_on_one_line():
         "geoid03_conus.bin", "us_noaa_geoid03_conus.tif", "geoid03_conus.gtx"]
     assert ("@us_noaa_geoid03_conus.tif,@geoid03_conus.gtx,"
             "@geoid03_conus.bin") in epsg.geoid_model_grids("5703")
+
+
+def test_geoid_op_grids_list_each_name_once():
+    """grid_alternatives expansion drops an empty alternative and a legacy
+    name equal to the original: each grid is listed once, most-preferred
+    first."""
+    assert epsg.geoid_grids_for_op("7001") == "@naptrans2008.gtx"
+    nl = "@nl_nsgi_nlgeo2018.tif,@nlgeo2018.gtx"
+    for code in ("9283", "9597", "10466", "10467"):
+        assert epsg.geoid_grids_for_op(code) == nl
+    for code, model in (("9325", "nzgeoid2009"), ("9627", "nzgeoid2009"),
+                        ("9326", "nzgeoid2016"), ("9628", "nzgeoid2016")):
+        assert epsg.geoid_grids_for_op(code) == (
+            f"@nz_linz_{model}.tif,@{model}.gtx")
+    for op in epsg.operations():
+        if op["kind"] == "geoid":
+            names = epsg.geoid_grids_for_op(op["code"]).split(",")
+            assert "@" not in names and len(set(names)) == len(names)
