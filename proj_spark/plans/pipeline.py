@@ -19,10 +19,10 @@ callers (the gie runner, the Spark UDF factory) know whether to feed
 degrees->radians and how to read the output. Error-in-band: failed points
 carry NaN through the remaining steps, like PROJ's HUGE_VAL convention.
 
-A proj-string's I/O hooks (``+geoc``, ``+axis``, ``+units``/``+to_meter``,
-``+vunits``/``+vto_meter``; PROJ's fwd_prepare/fwd_finalize) are composed
-steps: the operation runs inside a nested ``Pipeline`` between the
-existing steps that apply them.
+A proj-string's I/O hooks (``+geoc``, the ``+towgs84``/``+nadgrids``/
+``+geoidgrids`` datum hook, ``+axis``, ``+units``/``+vunits``; PROJ's
+fwd_prepare/fwd_finalize) are composed steps: the operation runs inside a
+nested ``Pipeline`` between the existing steps that apply them.
 """
 
 from __future__ import annotations
@@ -179,88 +179,34 @@ _DATUM_DEFS = {
 }
 
 
-class DatumShiftWrap(Step):
-    """cs2cs-style datum emulation around a single operation
-    (+towgs84 / +nadgrids / +datum; reference src/fwd.cpp fwd_prepare
-    :87-105 and the mirrored inv path): angular-input forward first moves
-    the WGS84 coordinate into the op's datum (hgridshift INV, or
-    cart_wgs84 FWD -> helmert INV -> cart_local INV), the inverse moves
-    the result back to WGS84 after the core inverse."""
-
-    def __init__(self, base: Step, params: dict, ell: "Ellipsoid"):
-        self.base = base
-        self.left = base.left
-        self.right = base.right
-        self.hgrid = None
-        self.helmert = None
-        self.carts = None
-        self.vgrid = None
-        if "nadgrids" in params:
-            self.hgrid = HgridshiftStep({"grids": str(params["nadgrids"])})
-        elif "towgs84" in params:
-            vals = [float(v) for v in str(params["towgs84"]).split(",")]
-            vals += [0.0] * (7 - len(vals))
-            if any(vals):
-                keys = ("x", "y", "z", "rx", "ry", "rz", "s")
-                hp = dict(zip(keys, (str(v) for v in vals)))
-                hp["convention"] = "position_vector"
-                self.helmert = HelmertStep(k_helmert.from_params(hp))
-            # towgs84=0,0,0 still implies the WGS84<->local ellipsoid
-            # change through cartesian space (the gie corpus relies on the
-            # height change; fwd.cpp applies cart_wgs84/cart regardless)
-            if self.helmert is not None or ell.name != "WGS84":
-                self.carts = (CartStep(ELLIPSOIDS["WGS84"]), CartStep(ell))
-        if "geoidgrids" in params:
-            # vertical datum hook (fwd_prepare :101-103): fwd goes
-            # orthometric from geometric AFTER the horizontal shift
-            self.vgrid = VgridshiftStep(
-                {"grids": str(params["geoidgrids"])})
-
-    @property
-    def active(self) -> bool:
-        return (self.hgrid is not None or self.helmert is not None
-                or self.carts is not None or self.vgrid is not None)
-
-    def _to_local(self, x, y, z, t):
-        """WGS84 geodetic -> op datum geodetic (+ geoid height)."""
-        if self.hgrid is not None:
-            x, y, z, t = self.hgrid.inv(x, y, z, t)
-        elif self.carts is not None:
-            cw, cl = self.carts
-            zz = z if z is not None else np.zeros_like(
-                np.asarray(x, dtype=np.float64))
-            X, Y, Z, t = cw.fwd(x, y, zz, t)
-            if self.helmert is not None:
-                X, Y, Z, t = self.helmert.inv(X, Y, Z, t)
-            lam, phi, h, t = cl.inv(X, Y, Z, t)
-            x, y, z = lam, phi, (h if z is not None else z)
-        if self.vgrid is not None:
-            x, y, z, t = self.vgrid.fwd(x, y, z, t)
-        return x, y, z, t
-
-    def _to_wgs84(self, x, y, z, t):
-        if self.vgrid is not None:
-            x, y, z, t = self.vgrid.inv(x, y, z, t)
-        if self.hgrid is not None:
-            x, y, z, t = self.hgrid.fwd(x, y, z, t)
-        elif self.carts is not None:
-            cw, cl = self.carts
-            zz = z if z is not None else np.zeros_like(
-                np.asarray(x, dtype=np.float64))
-            X, Y, Z, t = cl.fwd(x, y, zz, t)
-            if self.helmert is not None:
-                X, Y, Z, t = self.helmert.fwd(X, Y, Z, t)
-            lam, phi, h, t = cw.inv(X, Y, Z, t)
-            x, y, z = lam, phi, (h if z is not None else z)
-        return x, y, z, t
-
-    def fwd(self, x, y, z, t):
-        x, y, z, t = self._to_local(x, y, z, t)
-        return self.base.fwd(x, y, z, t)
-
-    def inv(self, x, y, z, t):
-        x, y, z, t = self.base.inv(x, y, z, t)
-        return self._to_wgs84(x, y, z, t)
+def _datum_steps(params: dict, ell: Ellipsoid) -> list[Step]:
+    """cs2cs-style datum hook (+nadgrids / +towgs84, then +geoidgrids;
+    reference src/fwd.cpp fwd_prepare :87-105 and the mirrored inv path)
+    as the steps run before an angular-input operation: forward moves a
+    WGS84 coordinate into the operation's datum (hgridshift inverse, or
+    cart WGS84 -> helmert inverse -> cart inverse), inverse moves it back."""
+    steps: list[Step] = []
+    if "nadgrids" in params:
+        steps.append(Inverted(HgridshiftStep({"grids": str(params["nadgrids"])})))
+    elif "towgs84" in params:
+        vals = [float(v) for v in str(params["towgs84"]).split(",")]
+        vals += [0.0] * (7 - len(vals))
+        helmert = []
+        if any(vals):
+            hp = dict(zip(("x", "y", "z", "rx", "ry", "rz", "s"), map(str, vals)),
+                      convention="position_vector")
+            helmert.append(Inverted(HelmertStep(k_helmert.from_params(hp))))
+        # towgs84=0,0,0 still implies the WGS84<->local ellipsoid change
+        # through cartesian space (the gie corpus relies on the height
+        # change; fwd.cpp applies cart_wgs84/cart regardless)
+        if helmert or ell.name != "WGS84":
+            steps += [CartStep(ELLIPSOIDS["WGS84"]), *helmert,
+                      Inverted(CartStep(ell))]
+    if "geoidgrids" in params:
+        # vertical datum hook (fwd_prepare :101-103): fwd goes orthometric
+        # from geometric AFTER the horizontal shift
+        steps.append(VgridshiftStep({"grids": str(params["geoidgrids"])}))
+    return steps
 
 
 class OmitStep(Step):
@@ -283,6 +229,25 @@ class OmitStep(Step):
         if self.omit_inv:
             return x, y, z, t
         return self.base.inv(x, y, z, t)
+
+
+def _direction_base(step: Step) -> Step:
+    """The step under its direction flags (+inv, +omit_fwd/+omit_inv)."""
+    while isinstance(step, (Inverted, OmitStep)):
+        step = step.base
+    return step
+
+
+def _angular_domain(x, y):
+    """(lon, lat, invalid) of angular input (reference src/fwd.cpp:54-72
+    fwd_prepare): NaN, |lat| beyond halfpi + PJ_EPS_LAT or |lon| > 10 rad
+    is an invalid coordinate; a small overshoot is clamped to the pole."""
+    lon = np.asarray(x, dtype=np.float64)
+    lat = np.asarray(y, dtype=np.float64)
+    halfpi = 0.5 * np.pi
+    bad = (np.isnan(lon) | np.isnan(lat) | (np.abs(lat) - halfpi > 1e-12)
+           | (np.abs(lon) > 10.0))
+    return lon, np.clip(lat, -halfpi, halfpi), bad
 
 
 class ProjectionStep(Step):
@@ -310,15 +275,7 @@ class ProjectionStep(Step):
         self.pm = 0.0     # +pm= prime meridian (from_greenwich, radians)
 
     def fwd(self, x, y, z, t):
-        xin = np.asarray(x, dtype=np.float64)
-        yin = np.asarray(y, dtype=np.float64)
-        # angular-input validity (reference src/fwd.cpp:54-72 fwd_prepare):
-        # |lat| beyond halfpi + PJ_EPS_LAT or |lon| > 10 rad is an invalid
-        # coordinate; small overshoot is clamped to the pole
-        halfpi = 0.5 * np.pi
-        over_lat = np.abs(yin) - halfpi > 1e-12
-        over_lon = np.abs(xin) > 10.0
-        yin = np.clip(yin, -halfpi, halfpi)
+        xin, yin, bad = _angular_domain(x, y)
         shift = self.lam0 + self.pm
         lam = xin - shift if self.over else adjlon(xin - shift)
         with np.errstate(invalid="ignore"):
@@ -326,7 +283,6 @@ class ProjectionStep(Step):
             # in-band NaN propagation (PROJ's HUGE_VAL convention,
             # reference src/fwd.cpp:42-44): NaN in => NaN out, even where a
             # kernel's masking would otherwise produce a finite sentinel
-            bad = np.isnan(xin) | np.isnan(yin) | over_lat | over_lon
             X = np.where(bad, np.nan, X)
             Y = np.where(bad, np.nan, Y)
         return self.a * X + self.x0, self.a * Y + self.y0, z, t
@@ -363,13 +319,15 @@ class UTMAutoStep(Step):
     def __init__(self, ell: Ellipsoid):
         self.C = k_tmerc.setup_exact(ell, k0=0.9996, phi0=0.0)
         self.a = ell.a
-        self.ra = ell.ra
 
     def fwd(self, x, y, z, t):
-        lon = np.asarray(x, dtype=np.float64)
+        lon, lat, bad = _angular_domain(x, y)
         lam0 = (k_tmerc.utm_zone(lon) - 0.5) * np.pi / 30.0 - np.pi
-        X, Y = k_tmerc.exact_fwd(adjlon(lon - lam0), y, self.C)
-        y0 = np.where(np.asarray(y) < 0, 10000000.0, 0.0)
+        with np.errstate(invalid="ignore"):
+            X, Y = k_tmerc.exact_fwd(adjlon(lon - lam0), lat, self.C)
+        X = np.where(bad, np.nan, X)
+        Y = np.where(bad, np.nan, Y)
+        y0 = np.where(lat < 0, 10000000.0, 0.0)
         return self.a * X + 500000.0, self.a * Y + y0, z, t
 
     def inv(self, x, y, z, t):
@@ -478,103 +436,44 @@ def _to_meter(params: dict, key: str, units_key: str) -> float:
     return 1.0 if units in (None, "m", True) else _LINEAR_UNITS[units]
 
 
-class _Scale(Step):
-    """Output unit scaling (reference fwd.cpp fwd_finalize fr_meter and
-    vfr_meter): fwd multiplies x and y by ``xy`` and z by ``z``, inv
-    divides."""
+class UnitconvertStep(Step):
+    """Linear + angular unit conversion (reference src/conversions/unitconvert.cpp):
+    fwd multiplies x and y by ``xy`` and z by ``z`` (a None factor leaves
+    its lanes alone), inv divides; time units (mjd, decimalyear, gps_week,
+    yyyymmdd) act on t only. Also the output unit scaling of every
+    operation's +units/+vunits (fwd.cpp fwd_finalize fr_meter and
+    vfr_meter)."""
 
     left = "whatever"
     right = "whatever"
 
-    def __init__(self, xy: float, z: float):
+    def __init__(self, xy: float | None = None, z: float | None = None,
+                 t_in: str | None = None, t_out: str | None = None):
         self.xy = xy
         self.z = z
-
-    def _apply(self, op, x, y, z, t):
-        return (*(None if v is None else op(np.asarray(v, dtype=np.float64), f)
-                  for v, f in ((x, self.xy), (y, self.xy), (z, self.z))), t)
-
-    def fwd(self, x, y, z, t):
-        return self._apply(np.multiply, x, y, z, t)
-
-    def inv(self, x, y, z, t):
-        return self._apply(np.divide, x, y, z, t)
-
-
-class UnitconvertStep(Step):
-    """Linear + angular unit conversion (reference src/conversions/unitconvert.cpp).
-
-    Time-unit conversions (mjd, decimalyear, gps_week) act on t only.
-    """
-
-    left = "whatever"
-    right = "whatever"
-
-    def __init__(self, params: dict):
-        def factor(name):
-            if name in _LINEAR_UNITS:
-                return _LINEAR_UNITS[name], "linear"
-            if name in _ANGULAR_UNITS:
-                return _ANGULAR_UNITS[name], "angular"
-            try:  # bare numeric factor (reference unitconvert.cpp accepts one)
-                f = float(name)
-            except (TypeError, ValueError):
-                raise ValueError(f"unknown unit {name!r}") from None
-            if not (f > 0) or not math.isfinite(f):
-                raise ValueError(f"invalid unit factor {name!r}")
-            return f, "linear"
-
-        self.xy = None
-        self.z = None
-        if "xy_in" in params or "xy_out" in params:
-            xi = params.get("xy_in", "m")
-            xo = params.get("xy_out", "m")
-            fi, kin = factor(xi)
-            fo, kout = factor(xo)
-            if kin != kout:
-                raise ValueError("unitconvert: mixed linear/angular xy units")
-            self.xy = fi / fo
-            # IO-unit tags like the reference (unitconvert.cpp:488-517):
-            # angular input/output is RADIANS or DEGREES so the caller knows
-            # whether gie-style deg<->rad normalization applies.
-            if kin == "angular":
-                self.left = "rad" if xi == "rad" else "deg"
-                self.right = "rad" if xo == "rad" else "deg"
-        if "z_in" in params or "z_out" in params:
-            fi, kin = factor(params.get("z_in", "m"))
-            fo, kout = factor(params.get("z_out", "m"))
-            if kin != kout:
-                # reference unitconvert.cpp setup: vertical conversion
-                # between unit classes is an instantiation error (gie
-                # unitconvert.gie expects failure for z_in=rad z_out=m)
-                raise ValueError("unitconvert: mixed linear/angular z units")
-            self.z = fi / fo
-        self.t_in = params.get("t_in")
-        self.t_out = params.get("t_out")
-        for name in (self.t_in, self.t_out):
-            if name is not None and name not in _TIME_TO_MJD:
-                raise NotImplementedError(f"time unit {name!r} not supported")
+        self.t_in = t_in
+        self.t_out = t_out
 
     def _time(self, t, src, dst):
         if t is None or src is None or dst is None or src == dst:
             return t
         return _MJD_TO_TIME[dst](_TIME_TO_MJD[src](np.asarray(t, dtype=np.float64)))
 
-    def fwd(self, x, y, z, t):
+    def _scaled(self, op, x, y, z):
         if self.xy is not None:
-            x = np.asarray(x, dtype=np.float64) * self.xy
-            y = np.asarray(y, dtype=np.float64) * self.xy
+            x = op(np.asarray(x, dtype=np.float64), self.xy)
+            y = op(np.asarray(y, dtype=np.float64), self.xy)
         if self.z is not None and z is not None:
-            z = np.asarray(z, dtype=np.float64) * self.z
-        return x, y, z, self._time(t, self.t_in, self.t_out)
+            z = op(np.asarray(z, dtype=np.float64), self.z)
+        return x, y, z
+
+    def fwd(self, x, y, z, t):
+        return (*self._scaled(np.multiply, x, y, z),
+                self._time(t, self.t_in, self.t_out))
 
     def inv(self, x, y, z, t):
-        if self.xy is not None:
-            x = np.asarray(x, dtype=np.float64) / self.xy
-            y = np.asarray(y, dtype=np.float64) / self.xy
-        if self.z is not None and z is not None:
-            z = np.asarray(z, dtype=np.float64) / self.z
-        return x, y, z, self._time(t, self.t_out, self.t_in)
+        return (*self._scaled(np.divide, x, y, z),
+                self._time(t, self.t_out, self.t_in))
 
 
 # time-unit conversions through the MJD pivot (reference
@@ -636,6 +535,53 @@ _MJD_TO_TIME = {
     "gps_week": lambda t: (t - 44244.0) / 7.0,
     "yyyymmdd": _mjd_to_yyyymmdd,
 }
+
+
+def _unit_factor(name) -> tuple[float, str]:
+    """(factor to metres or radians, "linear" | "angular") of a unit name;
+    a bare number is a linear factor (reference unitconvert.cpp)."""
+    if name in _ANGULAR_UNITS:
+        return _ANGULAR_UNITS[name], "angular"
+    try:
+        f = _LINEAR_UNITS[name] if name in _LINEAR_UNITS else float(name)
+    except (TypeError, ValueError):
+        raise ValueError(f"unknown unit {name!r}") from None
+    if not (f > 0) or not math.isfinite(f):
+        raise ValueError(f"invalid unit factor {name!r}")
+    return f, "linear"
+
+
+def _unit_ratio(params: dict, lane: str) -> tuple[float, str]:
+    """(factor, kind) of unitconvert's +<lane>_in/+<lane>_out pair; a
+    conversion between unit classes is an instantiation error (gie
+    unitconvert.gie expects failure for z_in=rad z_out=m)."""
+    (fi, kin), (fo, kout) = (_unit_factor(params.get(f"{lane}_{end}", "m"))
+                             for end in ("in", "out"))
+    if kin != kout:
+        raise ValueError(f"unitconvert: mixed linear/angular {lane} units")
+    return fi / fo, kin
+
+
+def _build_unitconvert(params: dict) -> Step:
+    xy = z = tags = None
+    if "xy_in" in params or "xy_out" in params:
+        xy, kind = _unit_ratio(params, "xy")
+        # IO-unit tags like the reference (unitconvert.cpp:488-517):
+        # angular input/output is RADIANS or DEGREES so the caller knows
+        # whether gie-style deg<->rad normalization applies.
+        if kind == "angular":
+            tags = tuple("rad" if params.get(k) == "rad" else "deg"
+                         for k in ("xy_in", "xy_out"))
+    if "z_in" in params or "z_out" in params:
+        z, _ = _unit_ratio(params, "z")
+    t_in, t_out = params.get("t_in"), params.get("t_out")
+    for name in (t_in, t_out):
+        if name is not None and name not in _TIME_TO_MJD:
+            raise NotImplementedError(f"time unit {name!r} not supported")
+    step = UnitconvertStep(xy, z, t_in, t_out)
+    if tags is not None:
+        step.left, step.right = tags
+    return step
 
 
 class NoopStep(Step):
@@ -878,8 +824,8 @@ class VgridshiftStep(_GridStep):
 
 class PushStep(Step):
     """Save coordinate components across pipeline steps (reference
-    src/pipeline.cpp push/pop, stack per component :139). Stack lives on
-    the Pipeline during execution."""
+    src/pipeline.cpp push/pop, stack per component :139); ``pop`` is this
+    step inverted. Stack lives on the Pipeline during execution."""
 
     left = "whatever"
     right = "whatever"
@@ -900,28 +846,6 @@ class PushStep(Step):
             if self.stack[i]:
                 comps[i - 1] = self.stack[i].pop()
         return tuple(comps)
-
-
-class PopStep(Step):
-    left = "whatever"
-    right = "whatever"
-
-    def __init__(self, params: dict):
-        self.indices = [i for i in (1, 2, 3, 4) if f"v_{i}" in params]
-        self.stack: dict[int, list] | None = None
-
-    def fwd(self, x, y, z, t):
-        comps = [x, y, z, t]
-        for i in self.indices:
-            if self.stack[i]:
-                comps[i - 1] = self.stack[i].pop()
-        return tuple(comps)
-
-    def inv(self, x, y, z, t):  # inverse direction: pop acts as push
-        comps = [x, y, z, t]
-        for i in self.indices:
-            self.stack[i].append(np.copy(comps[i - 1]))
-        return x, y, z, t
 
 
 class LatlongStep(NoopStep):
@@ -2068,12 +1992,12 @@ _BUILDERS = {
     "hgridshift": HgridshiftStep,
     "vgridshift": VgridshiftStep,
     "axisswap": lambda p: AxisswapStep(_axisswap_order(p)),
-    "unitconvert": lambda p: UnitconvertStep(p),
+    "unitconvert": _build_unitconvert,
     "affine": AffineStep,
     "geogoffset": GeogoffsetStep,
     "set": SetStep,
     "push": PushStep,
-    "pop": PopStep,
+    "pop": lambda p: Inverted(PushStep(p)),  # pop is push run backwards
     "noop": lambda p: NoopStep(),
     "longlat": lambda p: _build_latlong(p),
     "latlong": lambda p: _build_latlong(p),
@@ -2224,22 +2148,18 @@ def _build_step(params: dict) -> Step:
         for k, v in extra.items():
             params.setdefault(k, v)
     step = _BUILDERS[name](params)
-    # cs2cs-emulation datum hooks apply to angular-input coordinate ops
-    # (reference fwd.cpp fwd_prepare), not to transform primitives that
-    # consume these params themselves
-    if (("towgs84" in params or "nadgrids" in params
-         or "geoidgrids" in params)
+    # the I/O hooks of fwd_prepare/fwd_finalize (reference src/fwd.cpp:40-121,
+    # mirrored in inv.cpp) are existing steps run before or after the
+    # operation, in one nested Pipeline. The datum hooks apply to
+    # angular-input operations, not to the primitives that read these params
+    datum: list[Step] = []
+    if ({"towgs84", "nadgrids", "geoidgrids"} & params.keys()
             and name not in ("helmert", "molobadekas", "hgridshift",
                              "vgridshift", "gridshift", "molodensky")
             and step.left == "rad"):
-        wrap = DatumShiftWrap(step, params, resolve_ellipsoid(params))
-        if wrap.active:
-            step = wrap
+        datum = _datum_steps(params, resolve_ellipsoid(params))
     if "pm" in params and isinstance(step, ProjectionStep):
         step.pm = _pm_offset_rad(params)
-    # the remaining I/O hooks of fwd_prepare/fwd_finalize (reference
-    # src/fwd.cpp:40-121, mirrored in inv.cpp) are existing steps run
-    # before or after the operation, in one nested Pipeline.
     # +geoc: the operation's angular side carries GEOCENTRIC latitude; the
     # core always sees geodetic, and the conversion precedes any datum
     # machinery (fwd.cpp:79-81). +proj=geoc IS the conversion, and latlong
@@ -2248,6 +2168,7 @@ def _build_step(params: dict) -> Step:
     if ("geoc" in params and name not in ("longlat", "latlong", "geoc")
             and step.left == "rad"):
         pre.append(Inverted(GeocStep(resolve_ellipsoid(params))))
+    pre += datum
     # unit scaling (fwd_finalize's fr_meter and vfr_meter): fr_meter scales
     # a projected x/y, or all three axes of a bare cart/geocent; a cart
     # behind a datum or +geoc hook keeps metres, and a bare cart takes
@@ -2257,16 +2178,17 @@ def _build_step(params: dict) -> Step:
     cart = isinstance(step, CartStep) and not pre
     post: list[Step] = []
     if to_meter != 1.0 and (step.right == "m" or cart):
-        post.append(_Scale(1.0 / to_meter, 1.0 / to_meter if cart else 1.0))
+        post.append(UnitconvertStep(1.0 / to_meter,
+                                    1.0 / to_meter if cart else None))
     if vto != 1.0 and (to_meter != 1.0 or not cart):
-        post.append(_Scale(1.0, 1.0 / vto))
+        post.append(UnitconvertStep(z=1.0 / vto))
     # generic output axis spec (+axis=enu-style; pj_adjust_axis semantics)
     if ("axis" in params and name != "axisswap"
             and str(params["axis"]) != "enu"):
         post.append(AxisswapStep(_axisswap_order({"axis": params["axis"]})))
     # push/pop take no hooks: they move no coordinates of their own, and
-    # Pipeline._bind_stacks binds the shared stack to direct steps only
-    if (pre or post) and not isinstance(step, (PushStep, PopStep)):
+    # Pipeline._bind_stacks binds the shared stack to its own steps only
+    if (pre or post) and not isinstance(_direction_base(step), PushStep):
         step = Pipeline([*pre, step, *post])
     if params.get("inv"):
         step = Inverted(step)
@@ -2299,11 +2221,9 @@ class Pipeline:
     def _bind_stacks(self):
         """push/pop steps share one 4-lane stack per execution
         (reference src/pipeline.cpp:139)."""
-        stacks = None
-        for s in self.steps:
-            if isinstance(s, (PushStep, PopStep)):
-                if stacks is None:
-                    stacks = {1: [], 2: [], 3: [], 4: []}
+        stacks = {1: [], 2: [], 3: [], 4: []}
+        for s in map(_direction_base, self.steps):
+            if isinstance(s, PushStep):
                 s.stack = stacks
 
     def fwd(self, x, y, z=None, t=None):
@@ -2453,8 +2373,8 @@ def crs_spec(crs: tuple[str, str | None, str]) -> tuple[str, float | None]:
 def compile_crs_to_crs(src: str, dst: str) -> Pipeline:
     """proj_create_crs_to_crs analogue for every CRS spelling crs_input
     reads: a two-step pipeline running the source op INVERSE to WGS84
-    geodetic (datum hooks included via DatumShiftWrap) then the target
-    op FORWARD (reference src/4D_api.cpp proj_create_crs_to_crs ->
+    geodetic (its datum hook steps included, see _datum_steps) then the
+    target op FORWARD (reference src/4D_api.cpp proj_create_crs_to_crs ->
     pipeline of inverse(src) + forward(dst))."""
 
     def build_side(crs: str):

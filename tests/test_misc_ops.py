@@ -173,6 +173,77 @@ def test_crs_to_crs_datum_path():
     assert abs(phi[0] - 53.498461143331) < 1e-8
 
 
+# GDAL's WKT1 for EPSG:27572: the Paris meridian in grads and a TOWGS84 hook
+_NTF_LAMBERT_II = (
+    'PROJCS["NTF (Paris) / Lambert zone II",GEOGCS["NTF (Paris)",'
+    'DATUM["Nouvelle_Triangulation_Francaise_Paris",SPHEROID["Clarke 1880 '
+    '(IGN)",6378249.2,293.466021293627,AUTHORITY["EPSG","7011"]],'
+    'TOWGS84[-168,-60,320,0,0,0,0],AUTHORITY["EPSG","6807"]],'
+    'PRIMEM["Paris",2.5969213,AUTHORITY["EPSG","8903"]],'
+    'UNIT["grad",0.0157079632679489,AUTHORITY["EPSG","9105"]],'
+    'AUTHORITY["EPSG","4807"]],PROJECTION["Lambert_Conformal_Conic_1SP"],'
+    'PARAMETER["latitude_of_origin",52],PARAMETER["central_meridian",0],'
+    'PARAMETER["scale_factor",0.99987742],PARAMETER["false_easting",600000],'
+    'PARAMETER["false_northing",2200000],UNIT["metre",1,AUTHORITY["EPSG",'
+    '"9001"]],AXIS["Easting",EAST],AXIS["Northing",NORTH],'
+    'AUTHORITY["EPSG","27572"]]')
+
+
+def test_prime_meridian_behind_a_datum_hook():
+    """+pm reaches the projection when a datum hook runs before it: the
+    WKT1 CRS gives the explicit cart -> inverse helmert -> inverse cart ->
+    lcc +pm pipeline, and +towgs84=0,0,0 on GRS80 moves tmerc by far less
+    than a millimetre."""
+    from proj_spark.plans.pipeline import compile_crs_to_crs
+
+    p = compile_crs_to_crs("+proj=longlat +datum=WGS84", _NTF_LAMBERT_II)
+    x, y, _, _ = p.fwd_deg(np.array([2.5]), np.array([47.0]))
+    assert abs(x[0] - 612_431.424) < 1e-3 and abs(y[0] - 2_222_249.759) < 1e-3
+    ref = compile_pipeline(
+        "+proj=pipeline +step +proj=cart +ellps=WGS84 "
+        "+step +inv +proj=helmert +x=-168 +y=-60 +z=320 "
+        "+convention=position_vector "
+        "+step +inv +proj=cart +a=6378249.2 +rf=293.4660212936269 "
+        "+step +proj=lcc +lat_1=46.8 +lat_0=46.8 +lon_0=0 +k_0=0.99987742 "
+        "+x_0=600000 +y_0=2200000 +a=6378249.2 +rf=293.4660212936269 "
+        "+pm=2.33722917")
+    xr, yr, _, _ = ref.fwd_deg(np.array([2.5]), np.array([47.0]))
+    assert abs(x[0] - xr[0]) < 1e-3 and abs(y[0] - yr[0]) < 1e-3
+    lon, lat = np.array([5.0]), np.array([45.0])
+    tm = "+proj=tmerc +ellps=GRS80 +pm=paris"
+    a = compile_pipeline(tm + " +towgs84=0,0,0").fwd_deg(lon, lat)
+    b = compile_pipeline(tm).fwd_deg(lon, lat)
+    assert abs(a[0][0] - b[0][0]) < 1e-3 and abs(a[1][0] - b[1][0]) < 1e-3
+
+
+@pytest.mark.parametrize("spec, inv_z", [
+    ("+proj=pipeline +step +inv +proj=pop +v_3 +step +proj=set +v_3=5 "
+     "+step +inv +proj=push +v_3", 3.0),
+    ("+proj=pipeline +inv +step +proj=push +v_3 +step +proj=set +v_3=5 "
+     "+step +proj=pop +v_3", 3.0),
+    ("+proj=pipeline +step +proj=push +v_3 +omit_inv "
+     "+step +proj=set +v_3=5 +step +proj=pop +v_3", None),
+])
+def test_push_pop_under_direction_flags(spec, inv_z):
+    """push and pop bound under +inv, a pipeline-wide +inv or +omit_inv
+    share the pipeline's stack: the pop restores the pushed z."""
+    p = compile_pipeline(spec)
+    args = [np.array([v]) for v in (2.0, 49.0, 3.0, 2020.0)]
+    assert p.fwd(*args)[2][0] == 3.0
+    z = p.inv(*args)[2]
+    assert inv_z is None or z[0] == inv_z
+
+
+def test_auto_zone_utm_keeps_the_fixed_zone_domain():
+    """Auto-zone UTM rejects the points fixed-zone UTM rejects: NaN in,
+    |lat| past 90 degrees and |lon| past 10 radians."""
+    lon = np.array([2.0, 2.0, np.nan, 700.0, 2.0])
+    lat = np.array([95.0, -91.0, 10.0, 10.0, np.nan])
+    auto = compile_pipeline("+proj=utm +ellps=WGS84").fwd_deg(lon, lat)
+    fixed = compile_pipeline("+proj=utm +zone=31 +ellps=WGS84").fwd_deg(lon, lat)
+    for a, f in zip(auto[:2], fixed[:2]):
+        assert np.array_equal(np.isnan(a), np.isnan(f))
+        assert np.isnan(a).all()
 WGS84_A = 6378137.0
 
 

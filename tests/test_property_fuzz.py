@@ -9,7 +9,9 @@ Every property draws a fixed example set (``derandomize=True``), so a run
 is reproducible.
 """
 
+import json
 import math
+import pathlib
 
 import numpy as np
 from hypothesis import assume, example, given, settings
@@ -133,3 +135,46 @@ def test_crs_text_compiles_or_raises_a_documented_error(prefix, tail):
         assert code is None or isinstance(code, str)
     except (ValueError, KeyError, NotImplementedError):
         pass
+
+
+def _single_op_points():
+    """{operation: its first three forward (accept, expect) pairs, cycled}
+    for every gie-fixture operation that is not a pipeline."""
+    ops: dict = {}
+    for f in sorted((pathlib.Path(__file__).parent / "fixtures" / "gie")
+                    .glob("*.json")):
+        for block in json.loads(f.read_text()):
+            if "step" in block["operation"].replace("+", " ").split():
+                continue
+            ops.setdefault(block["operation"], []).extend(
+                (p["accept"], p["expect"]) for p in block["points"]
+                if p.get("dir", "forward") == "forward"
+                and isinstance(p.get("expect"), list))
+    return {op: (pts * 3)[:3] for op, pts in sorted(ops.items()) if pts}
+
+
+_SINGLE_OPS = _single_op_points()
+_DIRECTION_FLAGS = ("+step {} +inv", "+step {} +omit_fwd",
+                    "+step {} +omit_inv", "+inv +step {}")
+
+
+@settings(max_examples=200, deadline=2000, derandomize=True)
+@given(st.sampled_from(sorted(_SINGLE_OPS)))
+@example("+proj=push +v_3")
+@example("+proj=pop +v_3")
+def test_direction_flags_compile_and_run_or_raise_a_documented_error(op):
+    """An operation under +inv, +omit_fwd, +omit_inv or a pipeline-wide
+    +inv compiles and runs both ways on its own fixture points, or raises
+    one of the types the CLI reports; never a TypeError."""
+    # the op's fixture inputs, then its outputs, as four coordinate lanes
+    sides = [[np.array([(list(pt[side]) + [0.0, 0.0])[i]
+                        for pt in _SINGLE_OPS[op]]) for i in range(4)]
+             for side in (0, 1)]
+    for flags in _DIRECTION_FLAGS:
+        try:
+            p = compile_pipeline("+proj=pipeline " + flags.format(op))
+            for cols in sides:
+                p.fwd_deg(*cols)
+                p.inv_deg(*cols)
+        except (ValueError, KeyError, NotImplementedError):
+            pass
