@@ -9,7 +9,8 @@ Re-derivation of /root/reference/src/transformations/gridshift.cpp:
   * antimeridian +/-2pi input normalization      — normalizeX :568-585
   * forward add; inverse fixed-point iteration (bilinear only, like NOAA
     NCAT; biquadratic single-step)               — grid_apply_internal
-  * subgrid hierarchy: most-detailed containing grid wins (grids.cpp gridAt)
+  * per-point grid choice: sources.grids.select (grids.cpp gridAt), over
+    the top-level grids of one TYPE
 
 Vectorized with per-point grid-assignment masks; grids are numpy arrays
 closure-captured into the UDF (broadcast at scale).
@@ -17,75 +18,10 @@ closure-captured into the UDF (broadcast at scale).
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass
-
 import numpy as np
 
 from proj_spark.sources import grids as _grids
-from proj_spark.sources.geotiff import GeoTiffGrid, parse_geotiff
-from proj_spark.sources.grids import _REL_TOL
-
-_ARCSEC2RAD = 1.0 / 3600 / 180 * math.pi
-
-_VERT_DESCS = ("ellipsoidal_height_offset", "geoid_undulation",
-               "hydroid_height", "vertical_offset")
-
-
-@dataclass
-class GridUnit:
-    """One top-level grid + its (recursively contained) subgrids, all of one
-    TYPE; lookup resolves to the smallest containing grid."""
-    type: str
-    grids: list          # area-ascending (children first)
-
-
-def read_grid_units(path: str) -> list[GridUnit]:
-    """One GeoTIFF's grids grouped into top-level units."""
-    grids = [g for g in parse_geotiff(path) if g.subfile_type in (0, 2)]
-    # generic grids inherit missing metadata from the file's FIRST grid
-    # (reference grids.cpp GTiffGenericGrid::metadataItem :2866-2870)
-    if len(grids) > 1:
-        first = grids[0]
-        for g in grids[1:]:
-            for k, v in first.metadata.items():
-                g.metadata.setdefault(k, v)
-            for k, v in first.sample_meta.items():
-                g.sample_meta.setdefault(k, v)
-    # top-level grids: TYPE non-empty or no containing predecessor
-    tops: list[list[GeoTiffGrid]] = []
-    for g in grids:
-        placed = False
-        parent_name = g.metadata_item("parent_grid_name")
-        gname = g.metadata_item("grid_name")
-        gtype = g.metadata_item("TYPE")
-        for unit in tops:
-            top = unit[0]
-            if parent_name and any(
-                    x.metadata_item("grid_name") == parent_name
-                    for x in unit):
-                unit.append(g)
-                placed = True
-                break
-            # spatial-extent fallback (grids.cpp insertIntoHierarchy
-            # :1410-1426): unnamed grid, same (or no) TYPE, contained
-            if (not parent_name and not gname
-                    and (not gtype
-                         or gtype == top.metadata_item("TYPE"))
-                    and top.west <= g.west and top.south <= g.south
-                    and top.east >= g.east and top.north >= g.north):
-                unit.append(g)
-                placed = True
-                break
-        if not placed:
-            tops.append([g])
-    return [GridUnit(unit[0].metadata_item("TYPE"),
-                     sorted(unit, key=lambda g: g.area()))
-            for unit in tops]
-
-
-def load_grid_units(spec: str) -> list[GridUnit]:
-    return _grids.load(spec, read_grid_units)
+from proj_spark.sources.geotiff import _ARCSEC2RAD, _VERT_DESCS, GeoTiffGrid
 
 
 def channels(g: GeoTiffGrid, names: tuple, default: tuple) -> list[int]:
@@ -99,18 +35,14 @@ def channels(g: GeoTiffGrid, names: tuple, default: tuple) -> list[int]:
     return idx
 
 
-def sample3(units: list[GridUnit], x, y, idx) -> list[np.ndarray]:
-    """Bilinear values of the three channels ``idx`` from the first grid
-    (units in file order, finest subgrid first) whose cell holds the point
-    with no nodata corner in any of them; NaN elsewhere."""
+def sample3(grids: list, x, y, idx) -> list[np.ndarray]:
+    """Bilinear values of the three channels ``idx`` from the grid
+    ``select`` picks; NaN outside every grid or at a nodata corner."""
     out = [np.full_like(x, np.nan) for _ in idx]
-    done = np.zeros(x.shape, dtype=bool)
-    for unit in units:
-        for g in unit.grids:
-            got = [_interp_grid(g, x, y, i, -1, -1, True, True) for i in idx]
-            hit = ~done & got[0][3] & got[1][3] & got[2][3]
-            out = [np.where(hit, v[0], o) for v, o in zip(got, out)]
-            done |= hit
+    for g, m, xg in _grids.select(grids, x, y, None):
+        *vals, valid = _interp_grid(g, xg, y[m], *idx, True, True)
+        for o, v in zip(out, vals):
+            o[m] = np.where(valid, v, np.nan)
     return out
 
 
@@ -210,27 +142,34 @@ class GridshiftTransform:
         if interpolation and interpolation not in ("bilinear", "biquadratic"):
             raise ValueError(
                 f"gridshift: unsupported interpolation {interpolation!r}")
-        self.units = load_grid_units(spec)
+        self.grids = _grids.load(spec, _grids.read_generic)
         self.no_z = no_z_transform
         self.interpolation = interpolation
 
-        has_horiz = any(u.type == "HORIZONTAL_OFFSET" for u in self.units)
-        has_g3d = any(u.type == "GEOGRAPHIC_3D_OFFSET" for u in self.units)
+        # a grid serves the TYPE of its top-level grid (gridAt filters the
+        # top-level grids by TYPE, then descends)
+        types: dict[str, str] = {}
+        for g in self.grids:
+            types[g.name] = types.get(g.parent) or g.metadata_item("TYPE")
+        self.by_type: dict[str, list] = {}
+        for g in self.grids:
+            self.by_type.setdefault(types[g.name], []).append(g)
+        has_horiz = "HORIZONTAL_OFFSET" in self.by_type
+        has_g3d = "GEOGRAPHIC_3D_OFFSET" in self.by_type
         vert_types = [t for t in (
             "ELLIPSOIDAL_HEIGHT_OFFSET",
             "VERTICAL_OFFSET_GEOGRAPHIC_TO_VERTICAL",
             "VERTICAL_OFFSET_VERTICAL_TO_VERTICAL",
-        ) if any(u.type == t for u in self.units)]
+        ) if t in self.by_type]
         known = {"HORIZONTAL_OFFSET", "GEOGRAPHIC_3D_OFFSET",
                  "ELLIPSOIDAL_HEIGHT_OFFSET",
                  "VERTICAL_OFFSET_GEOGRAPHIC_TO_VERTICAL",
                  "VERTICAL_OFFSET_VERTICAL_TO_VERTICAL"}
-        for u in self.units:
-            if not u.type:
+        for t in self.by_type:
+            if not t:
                 raise ValueError("gridshift: missing TYPE metadata in grid")
-            if u.type not in known:
-                raise ValueError(
-                    f"gridshift: unhandled grid TYPE {u.type!r}")
+            if t not in known:
+                raise ValueError(f"gridshift: unhandled grid TYPE {t!r}")
         if len(vert_types) > 1:
             raise ValueError("gridshift: unsupported mix of grid types")
         if has_g3d:
@@ -242,16 +181,15 @@ class GridshiftTransform:
         self.aux_type = vert_types[0] if (has_horiz and vert_types) else ""
         self.main_is_g3d = has_g3d
         self.has_horiz = has_horiz
-        self.is_projected = not self.units[0].grids[0].is_geographic
+        self.is_projected = not self.grids[0].is_geographic
 
         # constant_offset (per-axis) — S-JTSK-style post-shift offset
         # (gridshift.cpp m_offsetX/m_offsetY :84-95, :150-170)
         self.offset_x = self.offset_y = 0.0
-        for u in self.units:
-            if u.type == "HORIZONTAL_OFFSET":
-                top = u.grids[-1]
-                ox = top.metadata_item("constant_offset", 0)
-                oy = top.metadata_item("constant_offset", 1)
+        for g in self.by_type.get("HORIZONTAL_OFFSET", []):
+            if g.parent == "NONE":
+                ox = g.metadata_item("constant_offset", 0)
+                oy = g.metadata_item("constant_offset", 1)
                 if ox:
                     self.offset_x = float(ox)
                 if oy:
@@ -260,53 +198,38 @@ class GridshiftTransform:
     # -- per-point evaluation ------------------------------------------------
 
     def _interpolate(self, want_type: str, x, y, fallback_horiz: bool):
-        """(sx, sy, sz, done, bilinear_used, via_fallback) across all units
-        of want_type (file order, children-first within a unit); points not
-        matched by want_type optionally retry HORIZONTAL_OFFSET units
-        (gridshift.cpp apply :744-758)."""
+        """(sx, sy, sz, done, bilinear_used, via_fallback) from the
+        want_type grid ``select`` picks; points no want_type grid holds
+        optionally retry the HORIZONTAL_OFFSET grids (gridshift.cpp apply
+        :744-758)."""
         sx = np.zeros_like(x)
         sy = np.zeros_like(x)
         sz = np.zeros_like(x)
         done = np.zeros(x.shape, dtype=bool)
+        held = np.zeros(x.shape, dtype=bool)
         via_fallback = np.zeros(x.shape, dtype=bool)
         bilinear_used = np.ones(x.shape, dtype=bool)
         types = [want_type] + (
             ["HORIZONTAL_OFFSET"] if fallback_horiz else [])
         for t in types:
-            for unit in self.units:
-                if unit.type != t:
-                    continue
-                for g in unit.grids:
-                    rem = ~done
-                    if not rem.any():
-                        break
-                    ix, iy, iz, en = _channel_indices(g, t, self.no_z)
-                    interp = self.interpolation or g.metadata_item(
-                        "interpolation_method") or "bilinear"
-                    if interp not in ("bilinear", "biquadratic"):
-                        raise ValueError(
-                            f"gridshift: unsupported interpolation {interp!r}")
-                    # normalizeX: wrap lon into the grid span
-                    if g.is_geographic:
-                        eps = (g.resx + g.resy) * _REL_TOL
-                        xw = np.where(x < g.west - eps, x + 2 * math.pi,
-                                      np.where(x > g.east + eps,
-                                               x - 2 * math.pi, x))
-                    else:
-                        xw = x
-                    gx, gy, gz, valid = _interp_grid(
-                        g, xw, y, ix, iy, iz, en,
-                        interp == "bilinear")
-                    hit = rem & valid
-                    sx = np.where(hit, gx, sx)
-                    sy = np.where(hit, gy, sy)
-                    sz = np.where(hit, gz, sz)
-                    bilinear_used = np.where(
-                        hit,
-                        (interp == "bilinear") | (g.width < 3) | (g.height < 3),
-                        bilinear_used)
-                    via_fallback |= hit & (t != want_type)
-                    done |= hit
+            rem = np.flatnonzero(~held)
+            for g, m, xg in _grids.select(self.by_type.get(t, []),
+                                          x[rem], y[rem], None):
+                i = rem[m]
+                ix, iy, iz, en = _channel_indices(g, t, self.no_z)
+                interp = self.interpolation or g.metadata_item(
+                    "interpolation_method") or "bilinear"
+                if interp not in ("bilinear", "biquadratic"):
+                    raise ValueError(
+                        f"gridshift: unsupported interpolation {interp!r}")
+                gx, gy, gz, valid = _interp_grid(
+                    g, xg, y[i], ix, iy, iz, en, interp == "bilinear")
+                sx[i], sy[i], sz[i] = gx, gy, gz
+                bilinear_used[i] = ((interp == "bilinear") | (g.width < 3)
+                                    | (g.height < 3))
+                via_fallback[i] = t != want_type
+                done[i] = valid
+                held[i] = True
         return sx, sy, sz, done, bilinear_used, via_fallback
 
     def _apply_aux(self, need_aux, ox, oy, oz, sign: float):
@@ -365,7 +288,7 @@ class GridshiftTransform:
             itdone |= ~ok2
         oz = z - sz
         if not self.is_projected:
-            gx = np.remainder(gx + math.pi, 2 * math.pi) - math.pi
+            gx = np.remainder(gx + np.pi, 2 * np.pi) - np.pi
         ox = np.where(ok, gx, np.nan)
         oy = np.where(ok, gy, np.nan)
         oz = np.where(ok, oz, np.nan)

@@ -272,7 +272,9 @@ def robin_fwd(lam, phi, _C=None):
     lam = np.asarray(lam, dtype=np.float64)
     phi = np.asarray(phi, dtype=np.float64)
     dphi = np.abs(phi)
-    i = np.minimum(np.floor(dphi * _C1R + 1e-15).astype(np.int64), _NODES)
+    # a NaN latitude reads node 0 and stays NaN through z
+    i = np.minimum(np.nan_to_num(np.floor(dphi * _C1R + 1e-15)),
+                   _NODES).astype(np.int64)
     z = np.degrees(dphi - _RC1 * i)
     x = _spline_v(_RX, i, z) * _FXC * lam
     y = np.copysign(_spline_v(_RY, i, z) * _FYC, phi)

@@ -837,7 +837,8 @@ class PushStep(Step):
     def fwd(self, x, y, z, t):
         comps = [x, y, z, t]
         for i in self.indices:
-            self.stack[i].append(np.copy(comps[i - 1]))
+            v = comps[i - 1]  # an absent lane pops back absent
+            self.stack[i].append(None if v is None else np.copy(v))
         return x, y, z, t
 
     def inv(self, x, y, z, t):  # inverse direction: push acts as pop
@@ -1058,26 +1059,27 @@ class XyzgridshiftStep(Step):
     right = "cart"
 
     def __init__(self, params: dict):
-        from proj_spark.kernels.geogrid import channels, load_grid_units
+        from proj_spark.kernels.geogrid import channels
+        from proj_spark.sources import grids
 
         if "grids" not in params:
             raise ValueError("xyzgridshift: +grids parameter missing")
         self.ell = resolve_ellipsoid(params)
-        self.units = load_grid_units(str(params["grids"]))
+        self.grids = grids.load(str(params["grids"]), grids.read_generic)
         self.mult = float(params.get("multiplier", 1.0))
         grid_ref = str(params.get("grid_ref", "input_crs"))
         if grid_ref not in ("input_crs", "output_crs"):
             raise ValueError("xyzgridshift: unsupported grid_ref")
         self.ref_is_input = grid_ref == "input_crs"
         self.idx = channels(
-            self.units[0].grids[0],
+            self.grids[0],
             ("x_translation", "y_translation", "z_translation"), (0, 1, 2))
 
     def _shift(self, X, Y, Z):
         from proj_spark.kernels.geogrid import sample3
 
         lam, phi, _h = k_cart.cart_inv(X, Y, Z, self.ell)
-        dx, dy, dz = sample3(self.units, lam, phi, self.idx)
+        dx, dy, dz = sample3(self.grids, lam, phi, self.idx)
         return dx * self.mult, dy * self.mult, dz * self.mult
 
     def _direct(self, X, Y, Z, factor):
@@ -1140,13 +1142,13 @@ class DeformationStep(Step):
         self.t_epoch = float(params["t_epoch"]) if "t_epoch" in params else None
         if self.dt is None and self.t_epoch is None:
             raise ValueError("deformation: +dt or +t_epoch is mandatory")
-        self.units = None
+        self.grids = None
         if "grids" in params:
-            from proj_spark.kernels.geogrid import channels, load_grid_units
+            from proj_spark.kernels.geogrid import channels
 
-            self.units = load_grid_units(str(params["grids"]))
+            self.grids = grids.load(str(params["grids"]), grids.read_generic)
             self.idx = channels(
-                self.units[0].grids[0],
+                self.grids[0],
                 ("east_velocity", "north_velocity", "up_velocity"), (0, 1, 2))
         else:
             if "xy_grids" not in params or "z_grids" not in params:
@@ -1159,11 +1161,11 @@ class DeformationStep(Step):
     def _velocity(self, X, Y, Z):
         """(vx, vy, vz) cartesian m/yr at geocentric positions."""
         lam, phi, _h = k_cart.cart_inv(X, Y, Z, self.ell)
-        if self.units is not None:
+        if self.grids is not None:
             from proj_spark.kernels.geogrid import sample3
 
             e, n, u = (v / 1000.0
-                       for v in sample3(self.units, lam, phi, self.idx))
+                       for v in sample3(self.grids, lam, phi, self.idx))
         else:
             from proj_spark.kernels.gridshift import hgrid_shift, vgrid_value
 
@@ -1438,9 +1440,10 @@ class ObTranStep(Step):
 
         self.latlong = inner_name in ("latlon", "latlong", "lonlat", "longlat")
         if not self.latlong:
+            # the inner kernel runs raw: the I/O hooks belong to ob_tran
             inner_params = {k: v for k, v in params.items()
                             if not k.startswith("o_")
-                            and k not in ("lon_0", "x_0", "y_0")}
+                            and k not in ("lon_0", "x_0", "y_0", *_HOOK_KEYS)}
             inner_params["proj"] = inner_name
             inner = _build_step(inner_params)
             if not hasattr(inner, "kfwd"):
@@ -2118,6 +2121,12 @@ _INIT_DEFS = {
 }
 
 
+# the proj-string keys whose I/O hooks _build_step wraps around an operation
+_DATUM_KEYS = ("towgs84", "nadgrids", "geoidgrids")
+_HOOK_KEYS = ("datum", *_DATUM_KEYS, "geoc", "to_meter", "units",
+              "vto_meter", "vunits", "axis")
+
+
 def _build_step(params: dict) -> Step:
     if "init" in params and params.get("init") is not True:
         init = str(params["init"]).lower()
@@ -2153,7 +2162,7 @@ def _build_step(params: dict) -> Step:
     # operation, in one nested Pipeline. The datum hooks apply to
     # angular-input operations, not to the primitives that read these params
     datum: list[Step] = []
-    if ({"towgs84", "nadgrids", "geoidgrids"} & params.keys()
+    if (params.keys() & _DATUM_KEYS
             and name not in ("helmert", "molobadekas", "hgridshift",
                              "vgridshift", "gridshift", "molodensky")
             and step.left == "rad"):

@@ -11,8 +11,8 @@ georeferencing, GDAL_METADATA(42112) XML for TYPE / per-sample DESCRIPTION
 GDAL_NODATA(42113). No external TIFF library — numpy + zlib only.
 
 Each IFD becomes one ``GeoTiffGrid``; ``parse_geotiff`` returns them in file
-order with subgrid hierarchy resolved by the caller (extent containment,
-like grids.cpp insertIntoHierarchy :1380-1428).
+order, and sources/grids.py links them into a tree (grids.cpp
+insertIntoHierarchy).
 """
 
 from __future__ import annotations
@@ -42,6 +42,8 @@ class GeoTiffGrid:
     sample_meta: dict = field(default_factory=dict)     # (name, sample) -> value
     nodata: float | None = None
     subfile_type: int = 0       # TIFF NewSubfileType: 1 = overview (skip)
+    name: str = ""              # tree links, set by sources.grids
+    parent: str = "NONE"
 
     @property
     def east(self) -> float:
@@ -55,10 +57,6 @@ class GeoTiffGrid:
         if sample >= 0:
             return self.sample_meta.get((key, sample), "")
         return self.metadata.get(key, "")
-
-    def contains(self, x, y, eps: float = 0.0):
-        return ((x >= self.west - eps) & (x <= self.east + eps)
-                & (y >= self.south - eps) & (y <= self.north + eps))
 
     def area(self) -> float:
         return (self.east - self.west) * (self.north - self.south)
@@ -356,11 +354,12 @@ _VERT_DESCS = ("ellipsoidal_height_offset", "geoid_undulation",
 
 
 def load_hgrids_tiff(path: str):
-    """GeoTIFF horizontal grids -> sources.ntv2.ShiftGrid list (east-positive
-    radian shifts). Mirrors grids.cpp GTiffHGridShiftSet::open :2520-2650:
-    default channels lat=0/lon=1, DESCRIPTION override, positive_value,
-    UNITTYPE arc-second|degree|radian; overview IFDs skipped; an IFD of
-    fewer than 2 samples refuses the file."""
+    """GeoTIFF horizontal grids -> (IFD, sources.ntv2.ShiftGrid) pairs
+    (east-positive radian shifts). Mirrors grids.cpp
+    GTiffHGridShiftSet::open :2520-2650: default channels lat=0/lon=1,
+    DESCRIPTION override, positive_value, UNITTYPE
+    arc-second|degree|radian; overview IFDs skipped; an IFD of fewer than
+    2 samples refuses the file."""
     from proj_spark.sources.ntv2 import ShiftGrid
 
     out = []
@@ -393,73 +392,15 @@ def load_hgrids_tiff(path: str):
                 "radian": 1.0, "degree": math.pi / 180.0}[unit]
         lat = g.data[..., idx_lat] * conv
         lon = g.data[..., idx_lon] * conv * (1.0 if positive_east else -1.0)
-        gname = g.metadata_item("grid_name")
-        out.append((ShiftGrid(
-            gname or f"{path}#{len(out)}", g.west,
-            g.south, g.resx, g.resy, g.width, g.height, lat, lon),
-            bool(gname), g.metadata_item("parent_grid_name") or ""))
-    return _build_tiff_hierarchy(out)
-
-
-def _build_tiff_hierarchy(entries):
-    """grids.cpp insertIntoHierarchy (:1371-1430) semantics, flattened into
-    ShiftGrid.parent links for kernels.gridshift._select_grid_masks:
-
-    * an explicit parent_grid_name attaches the grid ONLY if that parent's
-      extent strictly contains the grid's extent; otherwise fall through
-      to the bounding-box method (e.g. NTv2-style files with children
-      poking outside their declared parent become top-level);
-    * a grid with a grid_name but no parent_grid_name is top-level;
-    * the bounding-box method walks top grids in file order and descends
-      into the first containing child recursively (insertGrid), else the
-      grid is top-level.
-    """
-    from dataclasses import replace
-
-    def contains(p, c):  # ExtentAndRes::contains (grids.cpp:94): strict
-        return (c.west >= p.west and c.east <= p.east
-                and c.south >= p.south and c.north <= p.north)
-
-    by_name: dict[str, object] = {}
-    top: list[str] = []
-    children: dict[str, list[str]] = {}
-    parent_of: dict[str, str] = {}
-
-    def insert_bbox(parent_name, g):
-        for ch in children.get(parent_name, []):
-            if contains(by_name[ch], g):
-                insert_bbox(ch, g)
-                return
-        children.setdefault(parent_name, []).append(g.name)
-        parent_of[g.name] = parent_name
-
-    for g, has_name, pname in entries:
-        by_name[g.name] = g
-        if pname:
-            p = by_name.get(pname)
-            if p is not None and contains(p, g):
-                children.setdefault(pname, []).append(g.name)
-                parent_of[g.name] = pname
-                continue
-            # fall through to bounding-box method
-        elif has_name:
-            top.append(g.name)
-            continue
-        for t in top:
-            if contains(by_name[t], g):
-                insert_bbox(t, g)
-                break
-        else:
-            top.append(g.name)
-
-    return [replace(g, parent=parent_of.get(g.name, "NONE"))
-            for g, _, _ in entries]
+        out.append((g, ShiftGrid("", g.west, g.south, g.resx, g.resy,
+                                 g.width, g.height, lat, lon)))
+    return out
 
 
 def load_vgrids_tiff(path: str):
-    """GeoTIFF vertical grids -> sources.gtx.VGrid list (metres). Mirrors
-    grids.cpp GTiffVGridShiftSet::open :1520-1600: channel by DESCRIPTION
-    else sample 0; overview IFDs skipped; nodata -> NaN."""
+    """GeoTIFF vertical grids -> (IFD, sources.gtx.VGrid) pairs (metres).
+    Mirrors grids.cpp GTiffVGridShiftSet::open :1520-1600: channel by
+    DESCRIPTION else sample 0; overview IFDs skipped; nodata -> NaN."""
     from proj_spark.sources.gtx import VGrid
 
     out = []
@@ -480,6 +421,6 @@ def load_vgrids_tiff(path: str):
         vals = g.data[..., idx]
         if g.nodata is not None:
             vals = np.where(vals == g.nodata, np.nan, vals)
-        out.append(VGrid(g.west, g.south, g.resx, g.resy,
-                         g.width, g.height, vals))
+        out.append((g, VGrid(g.west, g.south, g.resx, g.resy,
+                             g.width, g.height, vals)))
     return out

@@ -26,6 +26,9 @@ class VGrid:
     height: int
     values: np.ndarray  # (H, W) float32 metres
     gtx: bool = False   # read from GTX: vgridshift's GTX nodata rule applies
+    name: str = ""      # tree links (sources.grids)
+    parent: str = "NONE"
+    is_geographic = True
 
     @property
     def east(self) -> float:
@@ -34,10 +37,6 @@ class VGrid:
     @property
     def north(self) -> float:
         return self.south + (self.height - 1) * self.resy
-
-    @property
-    def full_world(self) -> bool:
-        return self.east - self.west + self.resx >= 2 * math.pi - 1e-10
 
 
 def parse_gtx(path: str) -> list[VGrid]:

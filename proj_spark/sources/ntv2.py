@@ -34,6 +34,7 @@ class ShiftGrid:
     lat_shift: np.ndarray  # (H, W) float32 radians
     lon_shift: np.ndarray  # (H, W) float32 radians, east-positive
     parent: str = "NONE"   # NTv2 PARENT record (subgrid hierarchy)
+    is_geographic = True
 
     @property
     def east(self) -> float:
@@ -42,12 +43,6 @@ class ShiftGrid:
     @property
     def north(self) -> float:
         return self.south + (self.height - 1) * self.resy
-
-    def contains(self, lam: np.ndarray, phi: np.ndarray, eps: float) -> np.ndarray:
-        return (
-            (lam >= self.west - eps) & (lam <= self.east + eps)
-            & (phi >= self.south - eps) & (phi <= self.north + eps)
-        )
 
 
 def _rec_value_f8(rec: bytes, bo: str = "<") -> float:

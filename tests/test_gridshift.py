@@ -270,3 +270,68 @@ def test_one_file_as_horizontal_and_vertical_grid(first, monkeypatch):
     assert lam[0] == pytest.approx(-95.49999982191925, abs=1e-12)
     assert phi[0] == pytest.approx(37.00000001472325, abs=1e-12)
     assert np.isfinite(z[0])
+
+
+def _lon_diff(a, b):
+    return (np.asarray(a) - np.asarray(b) + 180.0) % 360.0 - 180.0
+
+
+def test_hgridshift_tests_longitude_plus_minus_360():
+    """A grid holds a longitude past its edge at +-360 degrees (grids.cpp
+    isPointInExtent), for hgridshift as for gridshift and vgridshift:
+    alaska spans -194..-128 degrees, so 190 degrees is -170."""
+    p = compile_pipeline("+proj=hgridshift +grids=alaska")
+    for run in (p.fwd_deg, p.inv_deg):
+        lam, phi, _, _ = run(np.array([190.0]), np.array([60.0]))
+        lam0, phi0, _, _ = run(np.array([-170.0]), np.array([60.0]))
+        assert np.isfinite(lam).all() and np.isfinite(phi).all()
+        np.testing.assert_allclose(_lon_diff(lam, lam0), 0.0, atol=1e-9)
+        np.testing.assert_allclose(phi, phi0, rtol=0, atol=1e-9)
+
+
+def test_nad27_east_of_the_antimeridian():
+    """+datum=NAD27's +nadgrids list reaches 178E through alaska's
+    -182 degrees."""
+    from proj_spark.plans.pipeline import compile_crs_to_crs
+
+    p = compile_crs_to_crs("+proj=longlat +datum=NAD27",
+                           "+proj=longlat +datum=WGS84")
+    lam, phi, _, _ = p.fwd_deg(np.array([178.0]), np.array([52.0]))
+    lam0, phi0, _, _ = p.fwd_deg(np.array([-182.0]), np.array([52.0]))
+    assert np.isfinite(lam).all() and np.isfinite(phi).all()
+    np.testing.assert_allclose(_lon_diff(lam, lam0), 0.0, atol=1e-9)
+    np.testing.assert_allclose(phi, phi0, rtol=0, atol=1e-9)
+
+
+_SUBGRID = "tests/test_hgrid_with_subgrid.tif"
+
+
+def test_gridshift_and_hgridshift_pick_one_subgrid():
+    """ONtronto names CAeast as its parent but reaches 0.042 degrees west
+    of it, so it is a top-level grid (insertIntoHierarchy) for gridshift
+    as for hgridshift: inside CAeast both take CAeast."""
+    g = compile_pipeline(f"+proj=gridshift +grids={_SUBGRID}")
+    h = compile_pipeline(f"+proj=hgridshift +grids={_SUBGRID}")
+    args = (np.array([-80.48]), np.array([44.55]))
+    for a, b in zip(g.fwd_deg(*args)[:2], h.fwd_deg(*args)[:2]):
+        np.testing.assert_allclose(a, b, rtol=0, atol=1e-9)
+    # the gie Toronto point lies in ONtronto's strip west of CAeast
+    lam, phi, _, _ = g.fwd_deg(np.array([-80.5041667]),
+                               np.array([44.5458333]))
+    assert lam[0] == pytest.approx(-80.50401615833, abs=1e-9)
+    assert phi[0] == pytest.approx(44.5458827236, abs=1e-9)
+
+
+def test_vgrid_list_resolves_in_list_order():
+    """The first grid of a +grids list that holds a point serves it
+    (read_vgrid_value), not the smallest one."""
+    def z(grids):
+        p = compile_pipeline(f"+proj=vgridshift +multiplier=1 +grids={grids}")
+        return p.fwd_deg(np.array([21.3]), np.array([63.0]),
+                         np.array([0.0]))[2][0]
+
+    nkg = "tests/nkgrf03vel_realigned_z_extract.gtx"
+    alone = z("egm96_15.gtx")
+    assert alone == pytest.approx(18.959, abs=1e-3)
+    assert z(f"egm96_15.gtx,{nkg}") == alone
+    assert z(f"{nkg},egm96_15.gtx") == pytest.approx(8.377, abs=1e-3)

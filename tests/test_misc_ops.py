@@ -5,6 +5,7 @@ and the rule that every proj_spark module has a production caller."""
 
 from __future__ import annotations
 
+import json
 import pathlib
 import re
 
@@ -466,3 +467,92 @@ def test_missing_inverse_raises_one_message(spec):
     with pytest.raises(NotImplementedError,
                        match=rf"^{op}: no inverse \(reference has none\)$"):
         pipe.inv(x, y)
+
+
+_GIE = pathlib.Path(__file__).parent / "fixtures" / "gie"
+
+
+def _gie_first_points():
+    ops = {}
+    for f in sorted(_GIE.glob("*.json")):
+        for block in json.loads(f.read_text()):
+            ops.setdefault(block["operation"], block["points"][0]["accept"])
+    return ops
+
+
+def test_nan_coordinate_returns_or_refuses():
+    """Every distinct gie operation takes a NaN lane: a 2-point batch (the
+    block's first accept, then that point with a NaN latitude, a NaN
+    longitude, or both) returns, or raises NotImplementedError, in each
+    direction whose finite point alone runs."""
+    nan = float("nan")
+    failed = []
+    for op, accept in _gie_first_points().items():
+        pipe = compile_pipeline(op)
+        for run in (pipe.fwd_deg, pipe.inv_deg):
+            lanes = [np.array([v]) for v in accept]
+            try:
+                run(*lanes)
+            except Exception:
+                continue  # the finite point alone is refused
+            for bad in ((accept[0], nan), (nan, accept[1]), (nan, nan)):
+                batch = [np.array([v, w]) for v, w in
+                         zip(accept, (*bad, *accept[2:]))]
+                try:
+                    run(*batch)
+                except NotImplementedError:
+                    pass
+                except Exception as e:
+                    failed.append(f"{op} {run.__name__} {bad}: {e!r}")
+    assert not failed, "\n".join(failed)
+
+
+_PUSH_PIPE = (
+    "+proj=pipeline +step +inv +proj=lcc +lat_1=46.8 +lat_0=46.8 +lon_0=0 "
+    "+k_0=0.99987742 +x_0=600000 +y_0=2200000 +ellps=clrk80ign +pm=paris "
+    "+step +proj=push +v_3 +step +proj=cart +ellps=clrk80ign "
+    "+step +proj=xyzgridshift +grids=tests/subset_of_gr3df97a.tif "
+    "+grid_ref=output_crs +ellps=GRS80 +step +proj=cart +ellps=GRS80 +inv "
+    "+step +proj=pop +v_3 +step +proj=lcc +lat_0=46.5 +lon_0=3 +lat_1=49 "
+    "+lat_2=44 +x_0=700000 +y_0=6600000 +ellps=GRS80")
+
+
+@pytest.mark.parametrize("geoid", ["", " +geoidgrids=egm96_15.gtx"])
+def test_push_pop_of_an_absent_lane(geoid):
+    """push stores an absent z as absent and pop restores it, so a 2-D
+    call runs like the 4-D call with z = 0 (gie geotiff_grids NTF ->
+    RGF93 pipeline)."""
+    p = compile_pipeline(_PUSH_PIPE + geoid)
+    x, y = np.array([814149.529]), np.array([1887019.768])
+    x2, y2, z2, _ = p.fwd_deg(x, y)
+    x4, y4, z4, _ = p.fwd_deg(x, y, np.array([0.0]), np.array([0.0]))
+    assert np.array_equal(x2, x4) and np.array_equal(y2, y4)
+    assert x2[0] == pytest.approx(860690.804, abs=1e-3)
+    assert y2[0] == pytest.approx(6319036.849, abs=1e-3)
+    if geoid:
+        assert z2.dtype == np.float64 and np.array_equal(z2, z4)
+        assert z2[0] == pytest.approx(-50.409, abs=1e-3)
+    else:
+        assert z2 is None
+
+
+_OB_TRAN = ("+proj=ob_tran +o_proj=moll +R=6378137 +o_lon_p=0 +o_lat_p=0 "
+            "+lon_0=180")
+
+
+@pytest.mark.parametrize("hook", ["+units=km", "+vunits=ft",
+                                  "+towgs84=1,2,3", "+nadgrids=@null",
+                                  "+geoidgrids=egm96_15.gtx"])
+def test_ob_tran_hooks_wrap_the_outer_operation(hook):
+    """ob_tran's inner +o_proj kernel runs raw: the I/O hook parameters
+    belong to ob_tran, not to its inner step."""
+    x, y = np.array([10.0]), np.array([20.0])
+    bx, by, _, _ = compile_pipeline(_OB_TRAN).fwd_deg(x, y)
+    hx, hy, _, _ = compile_pipeline(f"{_OB_TRAN} {hook}").fwd_deg(x, y)
+    assert np.isfinite(hx).all() and np.isfinite(hy).all()
+    if hook == "+nadgrids=@null":  # the zero shift, up to rounding
+        np.testing.assert_allclose(hx, bx, rtol=0, atol=1e-6)
+        np.testing.assert_allclose(hy, by, rtol=0, atol=1e-6)
+    if hook == "+units=km":
+        np.testing.assert_allclose(hx, bx / 1000.0, rtol=1e-15)
+        np.testing.assert_allclose(hy, by / 1000.0, rtol=1e-15)
