@@ -7,7 +7,8 @@ functions (constant, velocity, step, reverse_step, piecewise, exponential),
 bilinear or geocentric-bilinear interpolation, horizontal offsets applied by
 addition (with the ellipsoidal easting/northing -> dlam/dphi conversion,
 impl :708-720) or geocentrically; inverse by fixed-point iteration
-(impl :1223-1263). Vectorized over point arrays.
+(impl :1223-1263). Vectorized over point arrays; sources.grids loads and
+selects a component's grids, and geotiff.channels picks their planes.
 """
 
 from __future__ import annotations
@@ -19,9 +20,8 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from proj_spark.crs import Ellipsoid
-from proj_spark.kernels.geogrid import channels
 from proj_spark.sources import grids
-from proj_spark.sources.geotiff import parse_geotiff
+from proj_spark.sources.geotiff import channels
 
 _MONTHS = (31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31)
 _MONTHS_LEAP = (31, 29, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31)
@@ -132,16 +132,25 @@ def _parse_time_function(j: dict) -> TimeFunction:
     return TimeFunction(kind, p)
 
 
+def _planes(g, displacement: str) -> list:
+    """The (east, north, vertical) planes a displacement reads (default
+    samples 0, 1 and 2, or 0 in a 1-sample grid), else None."""
+    horizontal = displacement in ("horizontal", "3d")
+    vertical = displacement in ("vertical", "3d")
+    planes = channels(g, ("east_offset", "north_offset", "vertical_offset"),
+                      ((0, 1) if horizontal else (-1, -1))
+                      + ((0 if g.samples == 1 else 2) if vertical else -1,))
+    return [p if read else None
+            for p, read in zip(planes, (horizontal, horizontal, vertical))]
+
+
 @dataclass
 class Component:
     displacement: str      # none | horizontal | vertical | 3d
     bbox: tuple            # (minx, miny, maxx, maxy) normalized
-    grids: list            # GeoTiffGrid, area-ascending
+    grids: list            # GeoTiffGrid tree (sources.grids.read_generic)
     tf: TimeFunction
     geocentric_bilinear: bool
-    idx_e: int
-    idx_n: int
-    idx_z: int
 
 
 class DefModel:
@@ -188,17 +197,13 @@ class DefModel:
                 raise ValueError("defmodel: invalid interpolation_method")
             if not self.is_geographic and interp != "bilinear":
                 raise ValueError("defmodel: projected + geocentric_bilinear")
-            gpath = grids.require(sm["filename"], "defmodel grid")
-            tiff = [g for g in grids.read(gpath, parse_geotiff)
-                    if g.subfile_type in (0, 2)]
-            g0 = tiff[0]
-            idx = channels(g0, ("east_offset", "north_offset", "vertical_offset"),
-                           (0, 1, 0 if g0.samples == 1 else 2))
+            cgrids = grids.load(sm["filename"], grids.read_generic)
+            for g in cgrids:
+                _planes(g, disp)
             self.components.append(Component(
-                disp, norm_bbox(jc["extent"]),
-                sorted(tiff, key=lambda g: g.area()),
+                disp, norm_bbox(jc["extent"]), cgrids,
                 _parse_time_function(jc["time_function"]),
-                interp == "geocentric_bilinear", *idx))
+                interp == "geocentric_bilinear"))
 
     # ------------------------------------------------------------------
 
@@ -243,23 +248,19 @@ class DefModel:
                 continue
             xg = np.clip(x, cminx, cmaxx)
             yg = np.clip(y, cminy, cmaxy)
-            tf = comp.tf.evaluate(t)
-            active = in_comp & (tf != 0.0)
-            if not active.any():
-                continue
-            done = np.zeros(x.shape, dtype=bool)
-            for g in comp.grids:
-                sel = active & ~done
-                if not sel.any():
-                    break
-                ix_d = (xg - g.west) / g.resx
-                iy_d = (yg - g.south) / g.resy
+            tf = np.broadcast_to(comp.tf.evaluate(t), x.shape)
+            active = np.flatnonzero(in_comp & (tf != 0.0))
+            for g, m, xs in grids.select(comp.grids, xg[active],
+                                         yg[active], EPS):
+                ix_d = (xs - g.west) / g.resx
+                iy_d = (yg[active][m] - g.south) / g.resy
                 inside = ((ix_d >= -EPS) & (iy_d >= -EPS)
                           & (ix_d + 1 < g.width + EPS)
                           & (iy_d + 1 < g.height + EPS))
-                sel &= inside
-                if not sel.any():
+                sel = active[m][inside]
+                if not sel.size:
                     continue
+                ix_d, iy_d, f = ix_d[inside], iy_d[inside], tf[sel]
                 ix0 = np.minimum(ix_d.astype(np.int64), g.width - 2)
                 iy0 = np.minimum(iy_d.astype(np.int64), g.height - 2)
                 ix0 = np.maximum(ix0, 0)
@@ -270,35 +271,29 @@ class DefModel:
                 m10 = fx * (1 - fy)
                 m01 = (1 - fx) * fy
                 m11 = fx * fy
+                pe, pn, pz = _planes(g, comp.displacement)
 
-                def val(chan, dy_, dx_):
-                    return g.data[iy0 + dy_, ix0 + dx_, chan]
+                def corners(p):  # c00, c01, c10, c11: c{dx}{dy}
+                    return [p[iy0 + dy_, ix0 + dx_] for dx_, dy_ in
+                            ((0, 0), (0, 1), (1, 0), (1, 1))]
 
-                if comp.displacement in ("vertical", "3d"):
-                    zi = (m00 * val(comp.idx_z, 0, 0) + m01 * val(comp.idx_z, 1, 0)
-                          + m10 * val(comp.idx_z, 0, 1) + m11 * val(comp.idx_z, 1, 1))
-                    dz = np.where(sel, dz + tf * zi, dz)
-                if comp.displacement in ("horizontal", "3d"):
-                    e00 = val(comp.idx_e, 0, 0)
-                    e10 = val(comp.idx_e, 0, 1)
-                    e01 = val(comp.idx_e, 1, 0)
-                    e11 = val(comp.idx_e, 1, 1)
-                    n00 = val(comp.idx_n, 0, 0)
-                    n10 = val(comp.idx_n, 0, 1)
-                    n01 = val(comp.idx_n, 1, 0)
-                    n11 = val(comp.idx_n, 1, 1)
+                def blend(p):
+                    c00, c01, c10, c11 = corners(p)
+                    return m00 * c00 + m01 * c01 + m10 * c10 + m11 * c11
+
+                if pz is not None:
+                    dz[sel] += f * blend(pz)
+                if pe is not None:
                     if self.unit_degree:
                         # channel values are degrees -> radians
-                        li = (m00 * e00 + m01 * e01 + m10 * e10 + m11 * e11) * deg2rad
-                        pi_ = (m00 * n00 + m01 * n01 + m10 * n10 + m11 * n11) * deg2rad
-                        dlam = np.where(sel, dlam + tf * li, dlam)
-                        dphi = np.where(sel, dphi + tf * pi_, dphi)
+                        dlam[sel] += f * (blend(pe) * deg2rad)
+                        dphi[sel] += f * (blend(pn) * deg2rad)
                     elif not comp.geocentric_bilinear:
-                        ei = m00 * e00 + m01 * e01 + m10 * e10 + m11 * e11
-                        ni = m00 * n00 + m01 * n01 + m10 * n10 + m11 * n11
-                        de = np.where(sel, de + tf * ei, de)
-                        dn = np.where(sel, dn + tf * ni, dn)
+                        de[sel] += f * blend(pe)
+                        dn[sel] += f * blend(pn)
                     else:
+                        e00, e01, e10, e11 = corners(pe)
+                        n00, n01, n10, n11 = corners(pn)
                         # geocentric bilinear (defmodel_impl.hpp GridEx):
                         # corner EN -> geocentric deltas at corner lat/lam
                         # offsets of +/- resx/2 from cell center
@@ -332,10 +327,10 @@ class DefModel:
                             sinl = np.sin(lrel)
                             cosl = np.cos(lrel)
                         ei = -dX * sinl + dY * cosl
-                        ni = (-dX * cosl - dY * sinl) * sinphi + dZ * cosphi
-                        de = np.where(sel, de + tf * ei, de)
-                        dn = np.where(sel, dn + tf * ni, dn)
-                done |= sel
+                        ni = ((-dX * cosl - dY * sinl) * sinphi[sel]
+                              + dZ * cosphi[sel])
+                        de[sel] += f * ei
+                        dn[sel] += f * ni
 
         x_out = np.asarray(np.copy(x))
         y_out = np.asarray(np.copy(y))

@@ -1057,29 +1057,27 @@ class XyzgridshiftStep(Step):
 
     left = "cart"
     right = "cart"
+    _CHANNELS = (("x_translation", "y_translation", "z_translation"),
+                 (0, 1, 2))
 
     def __init__(self, params: dict):
-        from proj_spark.kernels.geogrid import channels
         from proj_spark.sources import grids
 
         if "grids" not in params:
             raise ValueError("xyzgridshift: +grids parameter missing")
         self.ell = resolve_ellipsoid(params)
-        self.grids = grids.load(str(params["grids"]), grids.read_generic)
+        self.grids = grids.load_channels(str(params["grids"]), *self._CHANNELS)
         self.mult = float(params.get("multiplier", 1.0))
         grid_ref = str(params.get("grid_ref", "input_crs"))
         if grid_ref not in ("input_crs", "output_crs"):
             raise ValueError("xyzgridshift: unsupported grid_ref")
         self.ref_is_input = grid_ref == "input_crs"
-        self.idx = channels(
-            self.grids[0],
-            ("x_translation", "y_translation", "z_translation"), (0, 1, 2))
 
     def _shift(self, X, Y, Z):
         from proj_spark.kernels.geogrid import sample3
 
         lam, phi, _h = k_cart.cart_inv(X, Y, Z, self.ell)
-        dx, dy, dz = sample3(self.grids, lam, phi, self.idx)
+        dx, dy, dz = sample3(self.grids, lam, phi, *self._CHANNELS)
         return dx * self.mult, dy * self.mult, dz * self.mult
 
     def _direct(self, X, Y, Z, factor):
@@ -1133,6 +1131,8 @@ class DeformationStep(Step):
 
     left = "cart"
     right = "cart"
+    _CHANNELS = (("east_velocity", "north_velocity", "up_velocity"),
+                 (0, 1, 2))
 
     def __init__(self, params: dict):
         from proj_spark.sources import grids
@@ -1144,18 +1144,14 @@ class DeformationStep(Step):
             raise ValueError("deformation: +dt or +t_epoch is mandatory")
         self.grids = None
         if "grids" in params:
-            from proj_spark.kernels.geogrid import channels
-
-            self.grids = grids.load(str(params["grids"]), grids.read_generic)
-            self.idx = channels(
-                self.grids[0],
-                ("east_velocity", "north_velocity", "up_velocity"), (0, 1, 2))
+            self.grids = grids.load_channels(str(params["grids"]),
+                                             *self._CHANNELS)
         else:
             if "xy_grids" not in params or "z_grids" not in params:
                 raise ValueError(
                     "deformation: +grids or +xy_grids/+z_grids mandatory")
             self.hgrids = grids.load(str(params["xy_grids"]),
-                                     grids.read_velocity_ct2)
+                                     grids.read_velocities)
             self.vgrids = grids.load(str(params["z_grids"]), grids.read_vgrids)
 
     def _velocity(self, X, Y, Z):
@@ -1164,12 +1160,12 @@ class DeformationStep(Step):
         if self.grids is not None:
             from proj_spark.kernels.geogrid import sample3
 
-            e, n, u = (v / 1000.0
-                       for v in sample3(self.grids, lam, phi, self.idx))
+            e, n, u = (v / 1000.0 for v in sample3(self.grids, lam, phi,
+                                                   *self._CHANNELS))
         else:
-            from proj_spark.kernels.gridshift import hgrid_shift, vgrid_value
+            from proj_spark.kernels.gridshift import hgrid_apply, vgrid_value
 
-            e, n = (v / 1000.0 for v in hgrid_shift(lam, phi, self.hgrids))
+            e, n = (v / 1000.0 for v in hgrid_apply(lam, phi, self.hgrids)[:2])
             u = vgrid_value(lam, phi, self.vgrids) / 1000.0
         sp, cp = np.sin(phi), np.cos(phi)
         sl, cl = np.sin(lam), np.cos(lam)

@@ -12,7 +12,8 @@ GDAL_NODATA(42113). No external TIFF library — numpy + zlib only.
 
 Each IFD becomes one ``GeoTiffGrid``; ``parse_geotiff`` returns them in file
 order, and sources/grids.py links them into a tree (grids.cpp
-insertIntoHierarchy).
+insertIntoHierarchy). ``channels`` is the one channel resolver: every grid
+step picks an IFD's samples through it.
 """
 
 from __future__ import annotations
@@ -23,6 +24,9 @@ import zlib
 from dataclasses import dataclass, field
 
 import numpy as np
+
+from proj_spark.sources.gtx import VGrid
+from proj_spark.sources.ntv2 import ShiftGrid
 
 _TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 6: 1, 8: 2, 9: 4, 11: 4, 12: 8, 16: 8, 17: 8}
 
@@ -44,6 +48,7 @@ class GeoTiffGrid:
     subfile_type: int = 0       # TIFF NewSubfileType: 1 = overview (skip)
     name: str = ""              # tree links, set by sources.grids
     parent: str = "NONE"
+    path: str = ""              # the file, named by every error
 
     @property
     def east(self) -> float:
@@ -57,9 +62,6 @@ class GeoTiffGrid:
         if sample >= 0:
             return self.sample_meta.get((key, sample), "")
         return self.metadata.get(key, "")
-
-    def area(self) -> float:
-        return (self.east - self.west) * (self.north - self.south)
 
 
 def _read_ifd(data: bytes, bo: str, off: int, big: bool = False):
@@ -193,6 +195,9 @@ def parse_geotiff(path: str) -> list[GeoTiffGrid]:
         def read_block(raw: bytes, count: int, rows: int) -> np.ndarray:
             if comp == 8:
                 raw = zlib.decompress(raw)
+            if len(raw) < count * itemsize:
+                raise ValueError(f"{path}: truncated: a block holds "
+                                 f"{len(raw)} of {count * itemsize} bytes")
             if predictor == 3:
                 # TIFF floating-point predictor: per row, byte-delta coded
                 # then split into big-endian byte planes
@@ -254,9 +259,6 @@ def parse_geotiff(path: str) -> list[GeoTiffGrid]:
                     else:
                         raw = data[offs[idx]: offs[idx] + want * itemsize]
                     arr = read_block(raw, want, ys)
-                    if arr.size < want:  # truncated file: pad with nan
-                        pad = np.full(want - arr.size, np.nan, dtype=np.float64)
-                        arr = np.concatenate([arr.astype(np.float64), pad])
                     arr = arr.reshape(ys, w, chan_per_block).astype(np.float64)
                     if planar == 2:
                         full[y0:y0 + ys, :, plane] = arr[..., 0]
@@ -340,85 +342,90 @@ def parse_geotiff(path: str) -> list[GeoTiffGrid]:
 
         grids.append(GeoTiffGrid(
             w, h, spp, full, west, south, resx, resy, is_geo, meta, smeta,
-            nodata, _vals(tags, 254, bo, [0])[0]))
+            nodata, _vals(tags, 254, bo, [0])[0], path=path))
     return grids
 
 
 # --------------------------------------------------------------------------
-# adapters: GeoTIFF -> the classic hgridshift/vgridshift grid shapes
+# the channel resolver, and the hgridshift/vgridshift open paths over it
 # --------------------------------------------------------------------------
 
 _ARCSEC2RAD = math.pi / 180.0 / 3600.0
 _VERT_DESCS = ("ellipsoidal_height_offset", "geoid_undulation",
                "hydroid_height", "vertical_offset")
+_TO_RADIAN = {"": _ARCSEC2RAD, "arc-second": _ARCSEC2RAD,
+              "arc-seconds per year": _ARCSEC2RAD, "radian": 1.0,
+              "degree": math.pi / 180.0}
+
+
+def channels(g: GeoTiffGrid, names: tuple, default: tuple, kind: str = ""):
+    """The planes of IFD ``g`` holding ``names``, in order: the one channel
+    resolver of every grid step. A name (a DESCRIPTION, or a tuple of
+    equivalent ones) takes the last sample it describes, else its
+    ``default``: a sample, -1 for an optional plane (None when absent), or
+    None when mandatory. A missing mandatory name or a sample past the
+    IFD's own raises a ValueError naming the file.
+
+    ``kind`` "hgrid"/"vgrid" are the hgridshift/vgridshift open paths
+    (grids.cpp GTiffHGridShiftSet/GTiffVGridShiftSet::open): an IFD that
+    describes no sample as ``names`` holds other data and gives None.
+    "hgrid" turns both planes to radians by the first's UNITTYPE and keeps
+    the **positive_value rule**: the IFD's own ``positive_value=west``
+    negates the longitude plane; gridshift reads samples as stored."""
+    idx = list(default)
+    described = found = False
+    for i in range(g.samples):
+        d = g.metadata_item("DESCRIPTION", i)
+        described |= bool(d)
+        for k, n in enumerate(names):
+            if d == n or (isinstance(n, tuple) and d in n):
+                idx[k] = i
+                found = True
+    for n, i in zip(names, idx):
+        if i is None:
+            raise ValueError(f"{g.path}: no sample is described as {n}")
+        if i >= g.samples:
+            raise ValueError(f"{g.path}: {n} would be sample {i} of a grid "
+                             f"of {g.samples} samples per pixel")
+    if kind and described and not found:
+        return None
+    planes = [g.data[..., i] if i >= 0 else None for i in idx]
+    if kind == "hgrid":
+        unit = g.metadata_item("UNITTYPE", idx[0])
+        if unit not in _TO_RADIAN:
+            raise ValueError(f"{g.path}: unsupported unit {unit!r}")
+        west = g.metadata_item("positive_value", idx[1]) == "west"
+        planes = [planes[0] * _TO_RADIAN[unit],
+                  planes[1] * _TO_RADIAN[unit] * (-1.0 if west else 1.0)]
+    return planes
 
 
 def load_hgrids_tiff(path: str):
     """GeoTIFF horizontal grids -> (IFD, sources.ntv2.ShiftGrid) pairs
-    (east-positive radian shifts). Mirrors grids.cpp
-    GTiffHGridShiftSet::open :2520-2650: default channels lat=0/lon=1,
-    DESCRIPTION override, positive_value, UNITTYPE
-    arc-second|degree|radian; overview IFDs skipped; an IFD of fewer than
-    2 samples refuses the file."""
-    from proj_spark.sources.ntv2 import ShiftGrid
-
+    (east-positive radians; lat/lon default to samples 0/1)."""
     out = []
     for g in parse_geotiff(path):
         if g.subfile_type not in (0, 2):
             continue
-        if g.samples < 2:
-            raise ValueError(f"{path}: a horizontal grid needs at least 2 "
-                             f"samples per pixel")
-        idx_lat, idx_lon = 0, 1
-        found_lat = found_lon = False
-        for i in range(g.samples):
-            d = g.metadata_item("DESCRIPTION", i)
-            if d == "latitude_offset":
-                idx_lat = i
-                found_lat = True
-            elif d == "longitude_offset":
-                idx_lon = i
-                found_lon = True
-        if g.samples >= 2 and not found_lat and not found_lon and any(
-                g.metadata_item("DESCRIPTION", i) for i in range(g.samples)):
-            continue  # IFD without our channels (grids.cpp :2553-2560)
-        positive_east = True
-        pv = g.metadata_item("positive_value", idx_lon)
-        if pv == "west":
-            positive_east = False
-        unit = g.metadata_item("UNITTYPE", idx_lat)
-        conv = {"": _ARCSEC2RAD, "arc-second": _ARCSEC2RAD,
-                "arc-seconds per year": _ARCSEC2RAD,
-                "radian": 1.0, "degree": math.pi / 180.0}[unit]
-        lat = g.data[..., idx_lat] * conv
-        lon = g.data[..., idx_lon] * conv * (1.0 if positive_east else -1.0)
-        out.append((g, ShiftGrid("", g.west, g.south, g.resx, g.resy,
-                                 g.width, g.height, lat, lon)))
+        planes = channels(g, ("latitude_offset", "longitude_offset"),
+                          (0, 1), "hgrid")
+        if planes is not None:
+            out.append((g, ShiftGrid("", g.west, g.south, g.resx, g.resy,
+                                     g.width, g.height, *planes)))
     return out
 
 
 def load_vgrids_tiff(path: str):
-    """GeoTIFF vertical grids -> (IFD, sources.gtx.VGrid) pairs (metres).
-    Mirrors grids.cpp GTiffVGridShiftSet::open :1520-1600: channel by
-    DESCRIPTION else sample 0; overview IFDs skipped; nodata -> NaN."""
-    from proj_spark.sources.gtx import VGrid
-
+    """GeoTIFF vertical grids -> (IFD, sources.gtx.VGrid) pairs (metres,
+    sample 0 by default, nodata -> NaN)."""
     out = []
     for g in parse_geotiff(path):
         if g.subfile_type not in (0, 2):
             continue
-        idx = 0
-        found_any = found_shift = False
-        for i in range(g.samples):
-            d = g.metadata_item("DESCRIPTION", i)
-            if d:
-                found_any = True
-            if d in _VERT_DESCS:
-                idx = i
-                found_shift = True
-        if found_any and not found_shift:
+        planes = channels(g, (_VERT_DESCS,), (0,), "vgrid")
+        if planes is None:
             continue
-        vals = g.data[..., idx]
+        vals = planes[0]
         if g.nodata is not None:
             vals = np.where(vals == g.nodata, np.nan, vals)
         out.append((g, VGrid(g.west, g.south, g.resx, g.resy,

@@ -16,11 +16,11 @@ grid tree, one selection and one edge-clamped bilinear sampler.
   ``_tiff_tree`` (grids.cpp insertIntoHierarchy), and CTable2, NTv1, GTX
   and ``null`` are one top-level grid.
 * One selection: ``select`` picks each point's grid the way grids.cpp
-  gridAt does, for hgridshift, vgridshift, gridshift, xyzgridshift and
-  deformation alike.
-* ``cell`` + ``bilinear`` are the edge-tolerant bilinear sample shared by
-  hgridshift (grids.cpp pj_hgrid_interpolate :3314-3397) and gridshift
-  (gridshift.cpp grid_interpolate :381-408).
+  gridAt does, for hgridshift, vgridshift, gridshift, xyzgridshift,
+  deformation and defmodel alike.
+* ``cell`` + ``bilinear`` sample under kernels.gridshift ``interpolate``,
+  the sampler of the one horizontal kernel ``hgrid_apply``; the one
+  channel resolver is ``geotiff.channels``.
 
 Grids are small numpy arrays; they reach Spark executors by closure
 capture of the compiled steps.
@@ -31,11 +31,12 @@ from __future__ import annotations
 import math
 import os
 from dataclasses import replace
+from functools import partial
 
 import numpy as np
 
-from proj_spark.sources.geotiff import (load_hgrids_tiff, load_vgrids_tiff,
-                                        parse_geotiff)
+from proj_spark.sources.geotiff import (channels, load_hgrids_tiff,
+                                        load_vgrids_tiff, parse_geotiff)
 from proj_spark.sources.gtx import VGrid, parse_gtx
 from proj_spark.sources.ntv2 import (ShiftGrid, parse_ct2, parse_gsb,
                                      parse_ntv1)
@@ -95,24 +96,23 @@ def read(path: str, reader):
     return _CACHE[key]
 
 
-def read_hgrids(path: str) -> list[ShiftGrid]:
+def read_hgrids(path: str, negate_lon: bool = True) -> list[ShiftGrid]:
     """Horizontal shift grids (east-positive radians) from GeoTIFF,
-    CTable2, NTv1 or NTv2; datum-shift use compensates the NT
-    west-positive convention (grids.cpp valueAt compensate=true)."""
+    CTable2, NTv1 or NTv2; ``negate_lon`` compensates the NT formats'
+    west-positive longitudes (grids.cpp valueAt compensateNTConvention)."""
     if path.lower().endswith((".tif", ".tiff")):
         return _tiff_tree(path, load_hgrids_tiff(path))
     with open(path, "rb") as fh:
         magic = fh.read(9)
     if magic.startswith(b"CTABLE V2"):
-        return parse_ct2(path, negate_lon=True)
+        return parse_ct2(path, negate_lon)
     if magic.startswith(b"HEADER"):
-        return parse_ntv1(path)
-    return parse_gsb(path)
+        return parse_ntv1(path, negate_lon)
+    return parse_gsb(path, negate_lon)
 
 
-def read_velocity_ct2(path: str) -> list[ShiftGrid]:
-    """CTable2 velocities read verbatim (pj_hgrid_value, compensate=false)."""
-    return parse_ct2(path)
+# deformation's +xy_grids velocities (pj_hgrid_value: compensate=false)
+read_velocities = partial(read_hgrids, negate_lon=False)
 
 
 def read_vgrids(path: str) -> list[VGrid]:
@@ -226,6 +226,14 @@ def load(spec: str, reader) -> list:
     return grids
 
 
+def load_channels(spec: str, names: tuple, default: tuple) -> list:
+    """``load(spec, read_generic)``, each grid checked to hold ``names``."""
+    grids = load(spec, read_generic)
+    for g in grids:
+        channels(g, names, default)
+    return grids
+
+
 def full_world(g) -> bool:
     """A geographic grid spanning every longitude
     (ExtentAndRes::fullWorldLongitude)."""
@@ -259,10 +267,7 @@ def select(grids: list, x, y, eps):
 
     def holds(g, m):
         tol = (g.resx + g.resy) * (_REL_TOL if eps is None else eps)
-        xg = x
-        if g.is_geographic:
-            xg = np.where(x < g.west - tol, x + 2 * math.pi,
-                          np.where(x > g.east + tol, x - 2 * math.pi, x))
+        xg = wrap(g, x, tol)
         if eps is None:
             held = cell(g, x - g.west, y - g.south)[4]
             if g.is_geographic:
@@ -293,6 +298,15 @@ def select(grids: list, x, y, eps):
         if m.any():
             left &= ~m
             yield from descend(g, m, xg)
+
+
+def wrap(g, x, tol):
+    """x as geographic grid g holds it: x +- 2 pi past an edge by more than
+    ``tol``, else x (grids.cpp isPointInExtent)."""
+    if not g.is_geographic:
+        return x
+    return np.where(x < g.west - tol, x + 2 * math.pi,
+                    np.where(x > g.east + tol, x - 2 * math.pi, x))
 
 
 def cell(g, dx, dy):

@@ -9,6 +9,9 @@ east-positive), node rows run south->north, nodes within a row run
 east->west (reversed here to west->east), and shift values are arcseconds
 converted to radians AT float32 precision — we keep the same float32
 rounding so interpolated values match the reference bit-for-bit.
+
+Every reader's ``negate_lon`` is valueAt's compensateNTConvention
+(grids.cpp:2038-2040): True for a datum shift, False for velocities.
 """
 
 from __future__ import annotations
@@ -35,6 +38,7 @@ class ShiftGrid:
     lon_shift: np.ndarray  # (H, W) float32 radians, east-positive
     parent: str = "NONE"   # NTv2 PARENT record (subgrid hierarchy)
     is_geographic = True
+    nodata = None
 
     @property
     def east(self) -> float:
@@ -117,7 +121,7 @@ def synth_grid(
     )
 
 
-def parse_gsb(path: str) -> list[ShiftGrid]:
+def parse_gsb(path: str, negate_lon: bool = True) -> list[ShiftGrid]:
     with open(path, "rb") as f:
         data = f.read()
 
@@ -133,6 +137,7 @@ def parse_gsb(path: str) -> list[ShiftGrid]:
     num_file = struct.unpack(bo + "i", data[8 + 16 * 2 : 12 + 16 * 2])[0]
 
     grids: list[ShiftGrid] = []
+    sign = -1.0 if negate_lon else 1.0
     pos = 16 * 11  # skip overview block
     for _ in range(num_file):
         hdr = data[pos : pos + 16 * 11]
@@ -161,7 +166,7 @@ def parse_gsb(path: str) -> list[ShiftGrid]:
         # arcsec -> radians: float64 multiply then float32 cast, exactly the
         # reference's static_cast<float>(buffer * SEC2RAD) (valueAt :2158-62)
         lat = (nodes[:, ::-1, 0].astype(np.float64) * _SEC2RAD).astype(np.float32)
-        lon = (-nodes[:, ::-1, 1].astype(np.float64) * _SEC2RAD).astype(np.float32)
+        lon = (sign * nodes[:, ::-1, 1].astype(np.float64) * _SEC2RAD).astype(np.float32)
         grids.append(
             ShiftGrid(name, west, south, resx, resy, width, height, lat, lon,
                       parent=parent)
@@ -169,7 +174,7 @@ def parse_gsb(path: str) -> list[ShiftGrid]:
     return grids
 
 
-def parse_ntv1(path: str) -> list[ShiftGrid]:
+def parse_ntv1(path: str, negate_lon: bool = True) -> list[ShiftGrid]:
     """NTv1 (.dat) reader (reference grids.cpp NTv1Grid::open :1832-1897,
     valueAt :1899-1921): 192-byte header, big-endian float64 fields
     (record count 12 at offset 8, south/north/east/west degrees at
@@ -194,19 +199,17 @@ def parse_ntv1(path: str) -> list[ShiftGrid]:
     # east->west storage: flip columns; arcsec -> radians through float32
     # like the reference's static_cast<float>
     lat = (vals[:, ::-1, 0] * _SEC2RAD).astype(np.float32)
-    lon = (-vals[:, ::-1, 1] * _SEC2RAD).astype(np.float32)
+    lon = ((-1.0 if negate_lon else 1.0) * vals[:, ::-1, 1]
+           * _SEC2RAD).astype(np.float32)
     return [ShiftGrid(path, west, south, resx, resy, width, height,
                       lat, lon)]
 
 
-def parse_ct2(path: str, negate_lon: bool = False) -> list[ShiftGrid]:
+def parse_ct2(path: str, negate_lon: bool = True) -> list[ShiftGrid]:
     """CTable2 (.ct2) reader (reference grids.cpp CTable2Grid::open
     :1966-2018): 160-byte header with west/south/resx/resy float64 RADIANS
     at offset 96 and width/height int32 at 128, then (lon, lat) float32
-    pairs row-major south->north. ``negate_lon`` mirrors valueAt's
-    compensateNTConvention flag (:2038-2040): datum-shift use negates the
-    west-positive longitudes; the deformation velocity path reads them
-    verbatim (pj_hgrid_value passes compensate=false)."""
+    pairs row-major south->north."""
     with open(path, "rb") as f:
         data = f.read()
     if not data.startswith(b"CTABLE V2"):

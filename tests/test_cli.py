@@ -185,6 +185,9 @@ _PJ_HUGE_AXIS = ('{"type":"GeographicCRS","name":"x","datum":{"name":"d","ellips
       "us_noaa_nadcon5_nad83_2007_nad83_2011_alaska_extract.tif"], 1),
     # an export the format cannot express is refused like any other input
     (["projinfo", "-o", "WKT1_GDAL", "EPSG:4978"], 1),
+    # a truncated GeoTIFF is refused by name
+    (["cct", "+proj=vgridshift",
+      "+grids=tests/test_vgrid_single_strip_truncated.tif"], 1),
 ])
 def test_bad_input_is_one_stderr_line(argv, rc, capsys, monkeypatch):
     monkeypatch.setattr("sys.stdin", io.StringIO(""))

@@ -335,3 +335,140 @@ def test_vgrid_list_resolves_in_list_order():
     assert alone == pytest.approx(18.959, abs=1e-3)
     assert z(f"egm96_15.gtx,{nkg}") == alone
     assert z(f"{nkg},egm96_15.gtx") == pytest.approx(8.377, abs=1e-3)
+
+
+_RAGTBT = "tests/fr_ign_RAGTBT2016.tif"
+
+
+@pytest.mark.parametrize("spec", [
+    f"+proj=xyzgridshift +grids={_RAGTBT}",
+    f"+proj=deformation +grids={_RAGTBT} +dt=1",
+])
+def test_grid_with_too_few_samples_fails_at_compile(spec):
+    """A 1-sample geoid grid has no second or third channel: the channel
+    resolver refuses it when the step compiles, naming the file, instead
+    of an IndexError at the first point inside it."""
+    with pytest.raises(ValueError, match="fr_ign_RAGTBT2016.tif"):
+        compile_pipeline(spec)
+
+
+def test_null_grid_returns_the_point_unchanged():
+    """A point the ``null`` grid serves leaves hgridshift as it came, in
+    both directions (grids.cpp isNullGrid). Coordinates span eight decades
+    of magnitude: (x - west) + west drops the low bits of a small x."""
+    from proj_spark.plans.pipeline import HgridshiftStep
+
+    rng = np.random.default_rng(0)
+    lam = rng.uniform(-1, 1, 10_001) * 10 ** rng.uniform(-8, 0.49, 10_001)
+    phi = rng.uniform(-1, 1, 10_001) * 10 ** rng.uniform(-8, 0.19, 10_001)
+    step = HgridshiftStep({"grids": "null"})
+    for run in (step.fwd, step.inv):
+        out_l, out_p, _, _ = run(lam, phi, None, None)
+        assert (out_l == lam).all() and (out_p == phi).all()
+
+
+def test_deformation_xy_grids_reads_ntv2():
+    """+xy_grids reads every horizontal grid format, velocities as stored:
+    the NTv2 longitude plane is the datum-shift reading's negation."""
+    from proj_spark.sources import grids
+
+    path = grids.find("ntv2_0_downsampled.gsb")
+    for vel, shift in zip(grids.read_velocities(path),
+                          grids.read_hgrids(path)):
+        np.testing.assert_array_equal(vel.lon_shift, -shift.lon_shift)
+        np.testing.assert_array_equal(vel.lat_shift, shift.lat_shift)
+    p = compile_pipeline(_DEF.format(xy="ntv2_0_downsampled.gsb").replace(
+        "tests/nkgrf03vel_realigned_z_extract.gtx", "egm96_15.gtx"))
+    out = p.fwd_deg(np.array([-80.0]), np.array([50.0]), np.array([0.0]))
+    assert np.isfinite(out[:3]).all()
+
+
+def test_positive_value_rule_keeps_each_reading():
+    """The named positive_value rule of the channel resolver: outside its
+    subgrid, the first grid of test_hgrid_with_subgrid_no_grid_name.tif
+    says positive_value=west. hgridshift's open path honours the tag;
+    gridshift reads the sample as stored."""
+    f = "tests/test_hgrid_with_subgrid_no_grid_name.tif"
+    args = (np.array([-115.7]), np.array([51.6]))
+    for op, arcsec in (("hgridshift", 3.886), ("gridshift", -3.886)):
+        lam = compile_pipeline(f"+proj={op} +grids={f}").fwd_deg(*args)[0]
+        assert (lam[0] + 115.7) * 3600 == pytest.approx(arcsec, abs=1e-3)
+
+
+@pytest.mark.parametrize("op", ["hgridshift", "gridshift"])
+def test_inverse_switches_grid_when_an_iterate_leaves(op):
+    """Near CAeast's west edge the inverse iterate leaves CAeast; the grid
+    holding it takes over (pj_hgrid_apply_internal's grid-switch
+    fallback), so fwd(inv(x)) == x within 1e-6 m on the whole lattice."""
+    p = compile_pipeline(f"+proj={op} +grids={_SUBGRID}")
+    lon, lat = (a.ravel() for a in np.meshgrid(np.linspace(-80.56, -80.44, 121),
+                                               np.linspace(44.50, 44.59, 91)))
+    ilon, ilat, _, _ = p.inv_deg(lon, lat)
+    flon, flat, _, _ = p.fwd_deg(ilon, ilat)
+    err = np.hypot((flon - lon) * np.cos(np.radians(lat)), flat - lat)
+    held = np.isfinite(err)  # the lattice's south-west is in no grid
+    assert held.sum() == 8610
+    assert err[held].max() * np.pi / 180 * 6378137.0 < 1e-6
+
+
+_SWEEP_STEPS = {
+    "tif": ("hgridshift", "vgridshift", "gridshift", "xyzgridshift",
+            "deformation +grids", "deformation +xy_grids"),
+    "gtx": ("vgridshift",),
+    "other": ("hgridshift", "deformation +xy_grids"),
+}
+
+
+def _sweep_cases():
+    for f in sorted(os.listdir(GRIDS)):
+        if f.endswith(".json"):
+            continue
+        kind = f.rsplit(".", 1)[-1] if "." in f else "other"
+        for op in _SWEEP_STEPS.get(kind, _SWEEP_STEPS["other"]):
+            yield f, op
+
+
+def _sweep_one(f, op):
+    """None when ``op`` over ``f`` refuses at compile naming the file, or
+    runs fwd and inv to finite-or-NaN output on a lattice over the grid's
+    extent +- 2 cells; else what went wrong."""
+    from proj_spark.kernels import cart as k_cart
+
+    name, extra = f"tests/{f}", " +dt=1"
+    if op == "deformation +grids":
+        spec = f"+proj=deformation +grids={name}"
+    elif op == "deformation +xy_grids":
+        spec = f"+proj=deformation +xy_grids={name} +z_grids=egm96_15.gtx"
+    else:
+        spec, extra = f"+proj={op} +grids={name}", ""
+    try:
+        step = compile_pipeline(spec + extra).steps[0]
+    except (ValueError, FileNotFoundError) as e:
+        return None if f in str(e) else f"refused without naming it: {e}"
+    gs = next(v for v in (getattr(step, "hgrids", None),
+                          getattr(step, "grids", None),
+                          getattr(getattr(step, "t", None), "grids", None))
+              if v is not None)
+    g0 = gs[0]
+    xs = np.linspace(min(g.west for g in gs) - 2 * g0.resx,
+                     max(g.east for g in gs) + 2 * g0.resx, 15)
+    ys = np.linspace(min(g.south for g in gs) - 2 * g0.resy,
+                     max(g.north for g in gs) + 2 * g0.resy, 15)
+    x, y = (a.ravel() for a in np.meshgrid(xs, ys))
+    z = np.zeros_like(x)
+    if step.left == "cart":
+        x, y, z = k_cart.cart_fwd(x, np.clip(y, -np.pi / 2, np.pi / 2), z,
+                                  step.ell)
+    for run in (step.fwd, step.inv):
+        out = run(x, y, z, None)[:3]
+        if any(np.isinf(np.asarray(o, dtype=float)).any() for o in out):
+            return f"{run.__name__} gave an infinite value"
+    return None
+
+
+def test_every_bundled_grid_in_every_step():
+    """Every bundled grid file through every grid step that takes its
+    format either refuses at compile with an error naming the file or
+    runs both directions to finite-or-NaN output."""
+    bad = {c: r for c in _sweep_cases() if (r := _sweep_one(*c)) is not None}
+    assert not bad
