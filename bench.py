@@ -159,10 +159,11 @@ def main() -> None:
     # long-lived cluster job pays exactly once
     matched = flagship(spark, path)
 
-    # best-of-k: the sandbox VM's cycle delivery is erratic (loopback-TCP
-    # throttling phases measured at 2-20x on Arrow-heavy stages — see
-    # BENCH/REGRESSION.md round-4 section); the flagship is the headline
-    # number so it gets 3 timed repeats to catch a fast phase
+    # best-of-k: a shared host's cycle delivery can be erratic (slow phases
+    # measured at 2-20x on Arrow-heavy stages, over loopback TCP and the
+    # Unix-domain sockets get_spark now uses alike — see
+    # BENCH/REGRESSION.md rounds 4-5); the flagship is the headline number
+    # so it gets 3 timed repeats to catch a fast phase
     flagship_sec = 1e18
     for _ in range(3):
         t0 = time.time()

@@ -29,6 +29,14 @@ per-task collection scans only the objects made after the fork (~600
 objects, 0.2 ms). Frozen objects are never collected, so only modules,
 which live as long as the process, are frozen.
 
+Workers talk to the JVM over Unix-domain sockets (``get_spark``). When a
+session stops, the JVM closes its idle workers' sockets; a worker reads
+EOF, reports it, and the flush of that report fails at once with
+``BrokenPipeError`` (over TCP the same write is silently accepted), which
+the stock daemon prints as a traceback from the worker. ``quiet_worker``
+ends such a worker without the traceback: its peer is gone, so there is
+nobody left to tell.
+
 Run as ``python -m proj_spark._daemon`` (Spark's
 ``spark.python.daemon.module``); it then serves as ``pyspark.daemon``.
 """
@@ -89,8 +97,26 @@ def preload() -> None:
     gc.freeze()
 
 
+def quiet_worker() -> None:
+    """Make a worker ``pyspark.daemon`` forked stop without a traceback
+    when the JVM has closed its socket (``worker`` returns non-zero, so
+    the forked process exits instead of waiting for another task)."""
+    from pyspark import daemon
+
+    stock = daemon.worker
+
+    def worker(sock, authenticated):
+        try:
+            return stock(sock, authenticated)
+        except BrokenPipeError:
+            return 1
+
+    daemon.worker = worker
+
+
 def main() -> None:
     install()
+    quiet_worker()
     from pyspark import daemon
 
     importlib.invalidate_caches()  # one read per archive, inherited by forks

@@ -16,8 +16,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from proj_spark.sources.grids import (_REL_TOL, bilinear, cell, full_world,
-                                      select, wrap)
+from proj_spark.sources.grids import (_REL_TOL, bilinear, cell, floor_index,
+                                      full_world, select, wrap)
 from proj_spark.sources.ntv2 import ShiftGrid
 
 _MAX_ITER = 10
@@ -175,8 +175,8 @@ def vgrid_value(lam, phi, grids) -> np.ndarray:
         if world:
             gx = np.mod(np.mod(gx + g.width, g.width) + g.width, g.width)
         gy = (phi[m] - g.south) / g.resy
-        ix = np.floor(gx).astype(np.int64)
-        iy = np.floor(gy).astype(np.int64)
+        ix = floor_index(gx)
+        iy = floor_index(gy)
         ok = (ix >= 0) & (ix < g.width) & (iy >= 0) & (iy < g.height)
         fx = gx - ix
         fy = gy - iy

@@ -309,6 +309,12 @@ def wrap(g, x, tol):
                     np.where(x > g.east + tol, x - 2 * math.pi, x))
 
 
+def floor_index(t) -> np.ndarray:
+    """floor(t) as int64. Only offsets an int64 holds are cast (NaN would
+    become int64 min); NaN and far-off ones get -2, outside every grid."""
+    return np.floor(np.where(np.abs(t) < 2.0 ** 62, t, -2.0)).astype(np.int64)
+
+
 def cell(g, dx, dy):
     """(ix, iy, fx, fy, valid): the cell and in-cell fractions of offsets
     (dx, dy) from g's south-west node, in g's units. A point within
@@ -316,8 +322,8 @@ def cell(g, dx, dy):
     marks points whose cell lies inside g."""
     tx = dx / g.resx
     ty = dy / g.resy
-    ix = np.floor(tx).astype(np.int64)
-    iy = np.floor(ty).astype(np.int64)
+    ix = floor_index(tx)
+    iy = floor_index(ty)
     fx = tx - ix
     fy = ty - iy
     low = (ix == -1) & (fx > 1 - 10 * _REL_TOL)

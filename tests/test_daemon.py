@@ -125,3 +125,31 @@ def test_preload_runs_in_bare_interpreter():
                          capture_output=True, text=True, timeout=120)
     assert out.returncode == 0, out.stderr
     assert int(out.stdout.split()[-1]) > 0
+
+
+def test_worker_ends_quietly_when_the_jvm_closed_its_socket():
+    """A worker whose socket the JVM has closed (idle workers at session
+    stop) reads EOF, and over a Unix-domain socket the flush of its report
+    fails with BrokenPipeError: the stock worker raises it, for the daemon
+    to print as a traceback; the engine's daemon ends the worker with
+    code 1 instead."""
+    code = ("import os, socket\n"
+            "os.environ['PYTHON_DAEMON_KILL_WORKER_ON_FLUSH_FAILURE'] = '1'\n"
+            "from pyspark import daemon\n"
+            "from proj_spark import _daemon\n"
+            "def closed():\n"
+            "    a, b = socket.socketpair(socket.AF_UNIX)\n"
+            "    b.close()\n"
+            "    return a\n"
+            "try:\n"
+            "    daemon.worker(closed(), True)\n"
+            "except BrokenPipeError:\n"
+            "    print('stock raises')\n"
+            "_daemon.quiet_worker()\n"
+            "print('quiet', daemon.worker(closed(), True))\n")
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p))
+    out = subprocess.run([sys.executable, "-c", code], cwd=ROOT, env=env,
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split("\n")[:2] == ["stock raises", "quiet 1"]

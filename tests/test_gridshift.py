@@ -472,3 +472,22 @@ def test_every_bundled_grid_in_every_step():
     runs both directions to finite-or-NaN output."""
     bad = {c: r for c in _sweep_cases() if (r := _sweep_one(*c)) is not None}
     assert not bad
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+@pytest.mark.parametrize("spec", [
+    "+proj=hgridshift +grids=BETA2007.gsb +ellps=bessel",
+    "+proj=vgridshift +grids=egm96_15.gtx +multiplier=1",
+])
+def test_nan_points_return_nan_without_a_cast(spec):
+    """A NaN coordinate reaches no grid cell: both directions return NaN
+    for it without casting NaN to an index (numpy warns on that cast), and
+    the finite point beside it keeps the output it has alone."""
+    p = compile_pipeline(spec)
+    lon = np.array([np.nan, 10.0, np.nan, 10.0])
+    lat = np.array([50.0, np.nan, np.nan, 50.0])
+    for run in (p.fwd_deg, p.inv_deg):
+        got = run(lon, lat, np.zeros(4))[:3]
+        alone = run(lon[3:], lat[3:], np.zeros(1))[:3]
+        assert np.isnan(got[0][:3]).all() and np.isnan(got[1][:3]).all()
+        assert [g[3] for g in got] == [a[0] for a in alone]

@@ -9,7 +9,15 @@ tiles -> cell-cover + ray-cast polygon join), and writes one JSON line
 with the matched-row count and throughput.
 
   spark-submit --master local[8] --py-files dist/proj_spark.zip \
+      --conf spark.python.unix.domain.socket.enabled=true \
       tools/submit_flagship.py --n-images 200000 --out /tmp/r.json
+
+The Unix-domain-socket setting is the transport ``get_spark`` sessions use:
+over loopback TCP each Python task pays a fixed stall (see README's
+"per-task cost of Python UDFs"). Spark puts the socket files in
+``spark.python.unix.domain.socket.dir``, or else ``java.io.tmpdir``; a
+socket path holds at most 107 bytes, so name a short directory there when
+the temp directory's path is long.
 
 On a real cluster only --master changes; if the job also needs the EPSG
 registry / grid data (this flagship does not — kernels are pure code),
