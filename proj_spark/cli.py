@@ -68,7 +68,8 @@ def _read(files, stdin):
     """_parse_lines of the input files, else of stdin."""
     lines = []
     for f in files:
-        lines.extend(open(f).readlines())
+        with open(f) as fh:
+            lines.extend(fh.readlines())
     return _parse_lines(lines if files else stdin.readlines())
 
 

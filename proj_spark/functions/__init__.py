@@ -10,6 +10,12 @@ Two tiers, chosen by cost:
     One UDF per *pipeline*, not per step — steps are fused driver-side by
     plans.compile_pipeline, so a cs2cs-style chain costs a single
     JVM->Arrow->numpy->Arrow->JVM round trip per batch.
+
+A coordinate UDF hands its whole Arrow batch to its operation: Pipeline's
+degree entry points run long inputs in KERNEL_CHUNK cache blocks
+(plans.pipeline), and a CandidateDispatch walks its candidates once per
+batch. Only the fused flagship kernel (image_geo_full_udf) slices the
+batch here, so its intermediates between pipelines stay L2-resident too.
 """
 
 from __future__ import annotations
@@ -23,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from proj_spark import cells
-from proj_spark.plans.pipeline import compile_pipeline
+from proj_spark.plans.pipeline import KERNEL_CHUNK, compile_pipeline
 
 # ---------------------------------------------------------------------------
 # pandas UDF factories (numpy kernels)
@@ -45,12 +51,8 @@ def _coord_udf(op, direction: str, out: tuple[str, ...]):
 
     @pandas_udf(", ".join(f"{c} double" for c in out))
     def _udf(*cols: pd.Series) -> pd.DataFrame:
-        vs = [c.to_numpy(dtype=np.float64) for c in cols]
-
-        def run(sl):
-            return dict(zip(out, run_op(*(v[sl] for v in vs))))
-
-        return _chunked(run, len(vs[0]), list(out))
+        res = run_op(*(c.to_numpy(dtype=np.float64) for c in cols))
+        return pd.DataFrame(dict(zip(out, res)))
 
     return _udf
 
@@ -201,13 +203,9 @@ GDA_DATUM_SPEC = (
 LCC_CONUS_SPEC = "+proj=lcc +ellps=WGS84 +lat_1=33 +lat_2=45 +lat_0=39 +lon_0=-96"
 
 
-# Cache-block size for kernel chains inside pandas UDFs. Arrow hands the
-# UDF ~65k-row batches; running the whole chain on a full batch makes every
-# numpy temp a ~0.5MB stream through L3/RAM and the chain becomes memory-
-# bandwidth-bound (measured: 0.75M pts/s aggregate at 32 procs, no scaling).
-# Slicing the batch into 8k-row chunks keeps all ~50 temporaries L2-resident:
-# measured 26.8M pts/s at 32 procs with 0.93 scaling efficiency 8->32.
-KERNEL_CHUNK = 8192
+# KERNEL_CHUNK, the cache block, lives with Pipeline (plans.pipeline), whose
+# degree entry points block every long input by it. _chunked blocks the
+# fused flagship kernel, whose intermediates pass between pipelines.
 
 
 def _chunked(fn, n: int, out_cols: list[str]):

@@ -391,7 +391,8 @@ def run_gie_files(paths, stdout, verbose: bool = False,
     run instead of shrinking it (ADVICE r4)."""
     total = GieReport()
     for p in paths:
-        rep = run_gie_text(open(p, errors="replace").read(), name=str(p))
+        with open(p, errors="replace") as f:
+            rep = run_gie_text(f.read(), name=str(p))
         print(f"{p}: total {rep.total}, ok {rep.ok}, failed {rep.failed}, "
               f"skipped operations {rep.skipped_ops} "
               f"(op {rep.op_skips}, grid {rep.grid_skips})", file=stdout)

@@ -158,7 +158,8 @@ class DefModel:
 
     def __init__(self, path: str, ell: Ellipsoid):
         self.ell = ell
-        j = json.loads(open(path).read())
+        with open(path) as f:
+            j = json.load(f)
         if j.get("file_type") != "deformation_model_master_file":
             raise ValueError(f"{path}: not a deformation model master file")
         # vertical-only models may omit horizontal_offset_unit

@@ -131,13 +131,12 @@ def helmert_fwd(X, Y, Z, C: HelmertConsts, t=None):
 
     if t is None or C.t_epoch is None:
         epochs = [None]
-        groups = [slice(None)]
+        groups = [...]
     else:
         t = np.asarray(t, dtype=np.float64)
-        t = np.where(np.isfinite(t), t, C.t_epoch)
-        uniq, inverse = np.unique(t, return_inverse=True)
-        epochs = list(uniq)
-        groups = [inverse == k for k in range(len(uniq))]
+        t = np.broadcast_to(np.where(np.isfinite(t), t, C.t_epoch), X.shape)
+        epochs = list(np.unique(t))
+        groups = [t == e for e in epochs]
 
     rx0, ry0, rz0 = C.refp
     for epoch, sel in zip(epochs, groups):
@@ -170,13 +169,12 @@ def helmert_inv(X, Y, Z, C: HelmertConsts, t=None):
 
     if t is None or C.t_epoch is None:
         epochs = [None]
-        groups = [slice(None)]
+        groups = [...]
     else:
         t = np.asarray(t, dtype=np.float64)
-        t = np.where(np.isfinite(t), t, C.t_epoch)
-        uniq, inverse = np.unique(t, return_inverse=True)
-        epochs = list(uniq)
-        groups = [inverse == k for k in range(len(uniq))]
+        t = np.broadcast_to(np.where(np.isfinite(t), t, C.t_epoch), X.shape)
+        epochs = list(np.unique(t))
+        groups = [t == e for e in epochs]
 
     rx0, ry0, rz0 = C.refp
     for epoch, sel in zip(epochs, groups):

@@ -31,7 +31,8 @@ class TinShift:
 
 
 def parse_tinshift(path: str) -> TinShift:
-    j = json.loads(open(path).read())
+    with open(path) as f:
+        j = json.load(f)
     if j.get("file_type") != "triangulation_file":
         raise ValueError(f"{path}: not a triangulation file")
     fallback = j.get("fallback_strategy", "none")

@@ -23,8 +23,8 @@ Vectorization: the selection order (accuracy, pseudo-area, list order) is
 a static total order over candidates, so "per-point best with exclusion
 of failures" is exactly "walk candidates in sorted order; each candidate
 processes the still-unresolved points inside its bbox with fewer than 3
-attempts" — one numpy mask + one vectorized pipeline call per candidate,
-no per-point Python.
+attempts". One walk serves a whole Arrow batch; each candidate tests only
+the points still pending and runs one pipeline call on those it takes.
 """
 
 from __future__ import annotations
@@ -144,55 +144,55 @@ class CandidateDispatch:
         )
 
     def _run(self, lon, lat, z, t, direction: str):
-        lon = np.asarray(lon, dtype=np.float64)
-        lat = np.asarray(lat, dtype=np.float64)
-        out_x = np.full_like(lon, np.nan)
-        out_y = np.full_like(lat, np.nan)
-        out_z = None if z is None else np.full_like(
-            np.asarray(z, dtype=np.float64), np.nan)
-        unresolved = np.ones(lon.shape, dtype=bool)
-        attempts = np.zeros(lon.shape, dtype=np.int8)
-        norm = _normalize_lon(lon)
+        shape, n = np.shape(lon), np.size(lon)
+        lon, lat = (np.asarray(v, dtype=np.float64).ravel() for v in (lon, lat))
+        # z/t: None, one value for every point, or one value per point
+        zs, ts = (None if v is None else np.asarray(v, dtype=np.float64).reshape(
+            -1 if np.shape(v) == shape else np.shape(v)) for v in (z, t))
+        out_x, out_y = np.full((2, n), np.nan)
+        out_z = None if z is None else np.full(n, np.nan)
 
-        def apply(c: Candidate, m: np.ndarray):
-            zi = None if z is None else np.asarray(z, dtype=np.float64)[m]
-            ti = None if t is None else np.asarray(t, dtype=np.float64)[m]
-            if direction == "fwd":
-                x, y, zz, _ = c.pipeline.fwd_deg(lon[m], lat[m], zi, ti)
-            else:
-                x, y, zz, _ = c.pipeline.inv_deg(lon[m], lat[m], zi, ti)
+        def apply(c: Candidate, idx: np.ndarray):
+            zi, ti = (v if v is None or v.ndim == 0 else v[idx] for v in (zs, ts))
+            run = c.pipeline.fwd_deg if direction == "fwd" else c.pipeline.inv_deg
+            x, y, zz, _ = run(lon[idx], lat[idx], zi, ti)
             ok = np.isfinite(x) & np.isfinite(y)
-            idx = np.flatnonzero(m)[ok]
-            out_x[idx] = x[ok]
-            out_y[idx] = y[ok]
+            out_x[idx[ok]] = x[ok]
+            out_y[idx[ok]] = y[ok]
             if out_z is not None and zz is not None:
-                out_z[idx] = np.asarray(zz)[ok]
+                out_z[idx[ok]] = np.broadcast_to(zz, x.shape)[ok]
             return ok
 
+        # the pending points: indices, their lon/lat/normalized lon and
+        # attempts so far, compacted whenever points leave
+        pend, plon, plat, pnorm = np.arange(n), lon, lat, _normalize_lon(lon)
+        tries = np.zeros(n, dtype=np.int8)
         for i in self.order:
-            if not unresolved.any():
+            if not pend.size:
                 break
             c = self.candidates[i]
-            inb = _in_bbox(c.src_bbox if direction == "fwd" else c.dst_bbox,
-                           lon, lat, norm)
-            m = unresolved & inb & (attempts <= _N_MAX_RETRY)
-            if not m.any():
+            take = np.flatnonzero(_in_bbox(
+                c.src_bbox if direction == "fwd" else c.dst_bbox,
+                plon, plat, pnorm))
+            if not take.size:
                 continue
-            ok = apply(c, m)
-            unresolved[np.flatnonzero(m)[ok]] = False
-            attempts[m] += 1
+            ok = apply(c, pend[take])
+            tries[take] += 1
+            keep = tries <= _N_MAX_RETRY
+            keep[take[ok]] = False
+            keep = np.flatnonzero(keep)
+            pend, plon, plat, pnorm, tries = (
+                v.take(keep) for v in (pend, plon, plat, pnorm, tries))
 
-        # no-bbox-match / retries-exhausted fallback: first FILE-ORDER
-        # operation that needs no grids, applied regardless of bbox
-        # (reference :493-530)
-        m = unresolved
-        if m.any():
-            for c in self.candidates:
-                if not c.needs_grids:
-                    ok = apply(c, m)
-                    unresolved[np.flatnonzero(m)[ok]] = False
-                    break
-        return out_x, out_y, out_z, t
+        # no-bbox-match / retries-exhausted fallback (a point is unresolved
+        # while its x is NaN): first FILE-ORDER operation that needs no
+        # grids, applied regardless of bbox (reference :493-530)
+        rest = np.flatnonzero(np.isnan(out_x))
+        fallback = next((c for c in self.candidates if not c.needs_grids), None)
+        if rest.size and fallback is not None:
+            apply(fallback, rest)
+        return (out_x.reshape(shape), out_y.reshape(shape),
+                None if out_z is None else out_z.reshape(shape), t)
 
     def fwd_deg(self, lon_deg, lat_deg, z=None, t=None):
         return self._run(lon_deg, lat_deg, z, t, "fwd")

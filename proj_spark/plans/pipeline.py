@@ -10,7 +10,8 @@ each a thin wrapper over a vectorized numpy kernel with driver-side frozen
 constants. ``Pipeline.fwd/inv`` run ALL steps over whole numpy columns inside
 one function call, which is exactly what gets closure-captured into a single
 Arrow-batched pandas UDF: the whole CRS pipeline is fused per batch, with no
-shuffle and no per-row Python between steps.
+shuffle and no per-row Python between steps. ``fwd_deg``/``inv_deg`` run a
+long column in ``KERNEL_CHUNK`` cache blocks.
 
 Unit bookkeeping mirrors PROJ's ``left``/``right`` IO tags
 (src/proj_internal.h:583-586): each step declares what space it consumes and
@@ -2204,6 +2205,37 @@ def _build_step(params: dict) -> Step:
 # pipeline
 # --------------------------------------------------------------------------
 
+# Cache block of the degree entry points. A Step chain makes ~50 numpy
+# temporaries; over a whole 65,536-row Arrow batch each is a 0.5 MB stream
+# through L3/RAM and the chain turns memory-bound, while 8,192-point blocks
+# keep them L2-resident. Flagship chain (phash -> datum -> UTM -> LCC -> S2)
+# on a 4-core host, ns/pt by block size, alike in 1 and 4 concurrent
+# processes: 2,048 -> 416-442, 8,192 -> 305-308, 16,384 -> 290-294,
+# 65,536 -> 410-433. perfbench's layer microbenches slice by this value
+# too (imported through proj_spark.functions).
+KERNEL_CHUNK = 8192
+
+
+def _in_blocks(run, x, y, z, t):
+    """run(x, y, z, t) over KERNEL_CHUNK slices of a long 1-D x; y, z and t
+    are each None, a scalar or an array as long as x. An output lane comes
+    back as the concatenation of its slices when it is per point, else as
+    the first slice's value."""
+    n = x.shape[0] if x.ndim == 1 else 0
+    if n <= KERNEL_CHUNK:
+        return run(x, y, z, t)
+
+    def cut(v, sl):
+        return v[sl] if np.ndim(v) == 1 and len(v) == n else v
+
+    parts = [run(*(cut(v, slice(i, i + KERNEL_CHUNK)) for v in (x, y, z, t)))
+             for i in range(0, n, KERNEL_CHUNK)]
+    return tuple(
+        np.concatenate(lane) if np.ndim(lane[0]) == 1
+        and len(lane[0]) == KERNEL_CHUNK else lane[0]
+        for lane in zip(*parts))
+
+
 @dataclass
 class Pipeline:
     steps: list[Step]
@@ -2243,10 +2275,17 @@ class Pipeline:
             x, y, z, t = s.inv(x, y, z, t)
         return x, y, z, t
 
-    # degree-friendly entry points (what the Spark UDF factory uses)
+    # degree-friendly entry points (what the Spark UDF factory uses); a
+    # long 1-D input runs in KERNEL_CHUNK cache blocks
     def fwd_deg(self, lon_deg, lat_deg, z=None, t=None):
-        x = np.asarray(lon_deg, dtype=np.float64)
-        y = np.asarray(lat_deg, dtype=np.float64)
+        return _in_blocks(self._fwd_deg, np.asarray(lon_deg, dtype=np.float64),
+                          np.asarray(lat_deg, dtype=np.float64), z, t)
+
+    def inv_deg(self, x, y, z=None, t=None):
+        return _in_blocks(self._inv_deg, np.asarray(x, dtype=np.float64),
+                          np.asarray(y, dtype=np.float64), z, t)
+
+    def _fwd_deg(self, x, y, z, t):
         if self.left == "rad":
             x = x * DEG2RAD
             y = y * DEG2RAD
@@ -2256,9 +2295,7 @@ class Pipeline:
             y = y * RAD2DEG
         return x, y, z, t
 
-    def inv_deg(self, x, y, z=None, t=None):
-        x = np.asarray(x, dtype=np.float64)
-        y = np.asarray(y, dtype=np.float64)
+    def _inv_deg(self, x, y, z, t):
         if self.right == "rad":
             x = x * DEG2RAD
             y = y * DEG2RAD

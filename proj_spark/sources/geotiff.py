@@ -150,7 +150,8 @@ def _decode_dtype(bits: int, sf: int, bo: str):
 
 
 def parse_geotiff(path: str) -> list[GeoTiffGrid]:
-    data = open(path, "rb").read()
+    with open(path, "rb") as f:
+        data = f.read()
     if data[:2] == b"II":
         bo = "<"
     elif data[:2] == b"MM":

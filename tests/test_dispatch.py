@@ -604,3 +604,129 @@ def test_projstring_step_chain_is_not_instantiable():
     names = [c.name for c in candidate_operations("4258", "7910")]
     assert "EPSG:10576 ITRF2005 to ETRF2020" in names[0]
     assert names[-1] == "ballpark"
+
+
+# ------------------------------------------ whole-batch walk, cache blocks
+
+_ED50_GIBRALTAR = ((-5.35, 36.10), (-5.3512973, 36.0986573))  # EPSG:1629
+
+
+@pytest.fixture(scope="module")
+def ed50():
+    from proj_spark.sources.epsg_ops import crs_to_crs_epsg_dispatch
+
+    return crs_to_crs_epsg_dispatch("EPSG:4230", "EPSG:4326")
+
+
+def test_nd_and_0d_input_match_the_1d_result(ed50):
+    """The walk ravels its input: (1, N), (N, 1) and 0-d points give the
+    1-D result reshaped, whatever their order (Gibraltar, Portugal)."""
+    (glon, glat), (gx, gy) = _ED50_GIBRALTAR
+    lon = np.array([glon, -8.0, -3.0, -30.0])
+    lat = np.array([glat, 38.0, 40.0, 25.0])
+    x, y, z, _ = ed50.fwd_deg(lon, lat, np.zeros(4))
+    assert round(x[0], 7) == gx and round(y[0], 7) == gy
+    for shape in [(1, 4), (4, 1)]:
+        got = ed50.fwd_deg(lon.reshape(shape), lat.reshape(shape),
+                           np.zeros(shape))
+        for g, want in zip(got, (x, y, z)):
+            assert g.shape == shape
+            assert np.array_equal(g.ravel(), want)
+    rev = ed50.fwd_deg(lon[::-1].reshape(1, 4), lat[::-1].reshape(1, 4))
+    assert np.array_equal(rev[0][0], x[::-1])
+    for i in range(4):
+        got = ed50.fwd_deg(lon[i], lat[i], 0.0)
+        assert [g.shape for g in got[:3]] == [(), (), ()]
+        assert [float(g) for g in got[:3]] == [x[i], y[i], z[i]]
+
+
+def test_long_batches_keep_retry_and_fallback(grid_path):
+    """The retry/fallback case of test_bbox_dispatch_retry_and_fallback,
+    tiled past KERNEL_CHUNK so candidates get blocked pending sets, gives
+    every point the answer it has in the three-point call."""
+    from proj_spark.plans.pipeline import KERNEL_CHUNK
+
+    disp = CandidateDispatch([
+        candidate(f"+proj=hgridshift +grids={grid_path} +ellps=GRS80",
+                  src_bbox=(-5.0, 35.0, 15.0, 55.0), accuracy=0.05),
+        candidate("+proj=geogoffset +dlon=3600 +ellps=GRS80", accuracy=2.0),
+    ])
+    lon = np.array([5.0, -3.0, 120.0])
+    lat = np.array([42.0, 50.0, 10.0])
+    reps = 2 * KERNEL_CHUNK // 3 + 7
+    for run in (disp.fwd_deg, disp.inv_deg):
+        small = run(lon, lat)
+        big = run(np.tile(lon, reps), np.tile(lat, reps))
+        assert len(big[0]) > KERNEL_CHUNK
+        for b, s in zip(big[:2], small[:2]):
+            assert np.array_equal(b, np.tile(s, reps))
+
+
+_KINEMATIC = ("+proj=pipeline +ellps=GRS80 +step +proj=cart "
+              "+step +proj=helmert +x=0.1 +y=-0.2 +z=0.3 +rx=0.001 +s=0.01 "
+              "+dx=0.01 +drx=0.0001 +ds=0.001 +t_epoch=2010 "
+              "+convention=position_vector +step +proj=cart +inv")
+
+
+@pytest.mark.parametrize("spec, lanes", [
+    ("+proj=utm +zone=31 +ellps=WGS84", "none"),
+    (_KINEMATIC, "z"),
+    (_KINEMATIC, "zt"),
+    (_KINEMATIC, "z, scalar t"),
+])
+def test_pipeline_blocks_equal_its_slice_calls(spec, lanes):
+    """fwd_deg/inv_deg on 20,000 points equal the concatenation of their
+    KERNEL_CHUNK-slice calls, lane by lane, z and t included."""
+    from proj_spark.plans.pipeline import KERNEL_CHUNK
+
+    n = 20_000
+    i = np.arange(n)
+    lon = 0.5 + (i * 40503 % 1_000_003) / 1_000_003 * 5.0
+    lat = 40.0 + (i * 69069 % 999_983) / 999_983 * 10.0
+    z = None if lanes == "none" else (i % 97) * 10.0
+    t = {"zt": 2000.0 + (i % 7) * 3, "z, scalar t": 2015.5}.get(lanes)
+    p = compile_pipeline(spec)
+    for run in (p.fwd_deg, p.inv_deg):
+        whole = run(lon, lat, z, t)
+        parts = [run(*(v[s] if np.ndim(v) == 1 else v for v in (lon, lat, z, t)))
+                 for s in (slice(k, k + KERNEL_CHUNK)
+                           for k in range(0, n, KERNEL_CHUNK))]
+        for w, lane in zip(whole, zip(*parts)):
+            if lane[0] is None or np.ndim(lane[0]) == 0:
+                assert w is lane[0] or w == lane[0]
+            else:
+                assert np.array_equal(w, np.concatenate(lane))
+        assert (whole[2] is None) == (z is None)
+        assert whole[3] is t or np.array_equal(whole[3], t)
+
+
+def test_dispatch_udf_matches_the_driver_walk(spark, ed50):
+    """dispatch_udf over 160,000 rows in 2 partitions (65,536-row Arrow
+    batches, pending sets past KERNEL_CHUNK) equals the driver-side walk
+    over the same points bit for bit: Iberian points, mid-Atlantic points
+    served by the fallback, and null or NaN coordinates."""
+    from pyspark.sql import functions as F
+
+    from proj_spark.functions import dispatch_udf
+
+    i = F.col("id")
+    u = (i * 40503 % 1_000_003) / 1_000_003.0
+    v = (i * 69069 + 12345) % 999_983 / 999_983.0
+    atlantic = i % 10 == 9
+    lon = F.when(atlantic, -40.0 + u * 10.0).otherwise(-9.5 + u * 6.0)
+    lat = F.when(atlantic, 20.0 + v * 10.0).otherwise(36.0 + v * 7.8)
+    df = spark.range(0, 160_000, numPartitions=2).select(
+        "id",
+        F.when(i % 101 == 0, F.lit(None)).otherwise(lon).alias("lon"),
+        F.when(i % 103 == 0, F.lit(float("nan"))).otherwise(lat).alias("lat"))
+    out = df.withColumn("s", dispatch_udf(ed50)("lon", "lat")).select(
+        "id", "lon", "lat", "s.x", "s.y").toPandas()
+    lon_np, lat_np = (out[c].to_numpy(dtype=np.float64) for c in ("lon", "lat"))
+    x, y, _, _ = ed50.fwd_deg(lon_np, lat_np)
+    assert np.array_equal(out["x"].to_numpy(), x, equal_nan=True)
+    assert np.array_equal(out["y"].to_numpy(), y, equal_nan=True)
+    bad = np.isnan(lon_np) | np.isnan(lat_np)
+    assert bad.sum() > 2_500 and np.isnan(x[bad]).all()
+    mid = (out["id"].to_numpy() % 10 == 9) & ~bad
+    assert np.array_equal(x[mid], lon_np[mid])  # ballpark: no shift
+    assert np.isfinite(x[~bad]).all() and (x[~bad & ~mid] != lon_np[~bad & ~mid]).all()

@@ -491,3 +491,32 @@ def test_nan_points_return_nan_without_a_cast(spec):
         alone = run(lon[3:], lat[3:], np.zeros(1))[:3]
         assert np.isnan(got[0][:3]).all() and np.isnan(got[1][:3]).all()
         assert [g[3] for g in got] == [a[0] for a in alone]
+
+
+_READ_AND_CLOSE = """
+import gc, sys, warnings
+seen = []
+sys.unraisablehook = lambda u: seen.append(repr(u.exc_value))
+warnings.simplefilter("error", ResourceWarning)
+from proj_spark.plans.pipeline import compile_pipeline
+for spec in sys.argv[1:]:
+    compile_pipeline(spec)
+gc.collect()
+assert not seen, seen
+"""
+
+
+def test_grid_and_model_files_are_closed_after_reading():
+    """Compiling a GeoTIFF grid, a tinshift file and a defmodel master
+    file leaves no file handle for the collector to close (a fresh
+    interpreter, because grids.read caches each file it has read)."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    specs = ["+proj=gridshift +grids=tests/test_hgrid_with_subgrid.tif",
+             "+proj=tinshift +file=tests/tinshift_simplified_kkj_etrs.json",
+             "+proj=defmodel +model=tests/simple_model_degree_horizontal.json"]
+    r = subprocess.run([sys.executable, "-c", _READ_AND_CLOSE, *specs],
+                       cwd=root, capture_output=True, text=True, timeout=120)
+    assert r.returncode == 0, r.stderr[-2000:]
