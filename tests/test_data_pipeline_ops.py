@@ -241,6 +241,111 @@ def test_ivf_topk_deterministic(spark, embs):
     assert key(a) == key(b)
 
 
+def test_exact_tier_never_returns_the_query(spark):
+    """k >= n: every query gets its n - 1 other vectors, never itself
+    (the self pair's -inf cosine is dropped, not ranked last)."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 1.0]), (3, [0.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    out = similarity.cosine_self_topk(df, 3).toPandas()
+    assert len(out) == 6 and (out["qid"] != out["rid"]).all()
+    assert np.isfinite(out["cosine"]).all()
+    assert sorted(out["rank"]) == [1, 1, 1, 2, 2, 2]
+
+
+def _candidate_topk(ids, M, q_keys, d_keys, k):
+    """Numpy reference: each query's top-k by (-cosine, rid) over the data
+    vectors sharing at least one key with it, self excluded."""
+    n, nkeys = len(ids), int(max(q_keys.max(), d_keys.max())) + 1
+    qh, dh = np.zeros((n, nkeys)), np.zeros((n, nkeys))
+    qh[np.arange(n)[:, None], q_keys] = 1
+    dh[np.arange(n)[:, None], d_keys] = 1
+    cand = qh @ dh.T > 0
+    np.fill_diagonal(cand, False)
+    norms = np.linalg.norm(M, axis=1, keepdims=True)
+    M = M / np.where(norms == 0, 1.0, norms)
+    want = {}
+    for q in range(n):
+        idx = np.flatnonzero(cand[q])
+        cos = np.sum(M[q] * M[idx], axis=1)
+        top = np.lexsort((ids[idx], -cos))[:k]
+        if len(top):
+            want[int(ids[q])] = (ids[idx][top].tolist(), cos[top])
+    return want
+
+
+@pytest.mark.parametrize("tier", ["lsh", "ivf"])
+def test_scale_tiers_rank_exactly_over_their_candidates(spark, sf_dir, tier):
+    """Each scale tier returns exactly the numpy top-k over its own
+    candidate set, rebuilt here from the rhp_band_keys / ivf_assign keys:
+    LSH queries probe band * 2^block_bits + bucket and its Hamming-1
+    flips against the data's band keys; IVF queries probe their 8 nearest
+    lists against the data's 2 nearest, with nlist ~ sqrt(n)."""
+    import math
+    import pathlib
+
+    path = pathlib.Path(sf_dir).parent / "sf0.01" / "embeddings.parquet"
+    if not path.exists():
+        pytest.skip(f"{path} not generated")
+    e = spark.read.parquet(str(path))
+    n, k = e.count(), 3
+    if tier == "lsh":
+        bb = 5
+        out = similarity.rhp_lsh_topk(e, k, 64, block_bits=bb)
+        keyed = similarity.rhp_band_keys(e, 64, block_bits=bb)
+        pdf = keyed.select("vec_id", "embedding", "bks").toPandas()
+        bks = np.vstack(pdf["bks"].to_numpy())
+        d_keys = np.arange(bks.shape[1]) * (1 << bb) + bks
+        flips = 1 << np.arange(bb)
+        q_keys = np.concatenate(
+            [d_keys, (d_keys[:, :, None] ^ flips).reshape(n, -1)], axis=1)
+    else:
+        nlist = max(4, min(65536, int(math.sqrt(n))))
+        out = similarity.ivf_topk(e, k, 64, n_hint=n)
+        C = similarity.kmeans_codebook(e, nlist, 64, n_hint=n)
+        pdf = similarity.ivf_assign(e, C, 8).select(
+            "vec_id", "embedding", "ivf_lists").toPandas()
+        lists = np.vstack(pdf["ivf_lists"].to_numpy())
+        q_keys, d_keys = lists[:, :8], lists[:, :2]
+    ids = pdf["vec_id"].to_numpy()
+    M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+    want = _candidate_topk(ids, M, q_keys, d_keys, k)
+
+    got = out.toPandas().sort_values(["qid", "rank"])
+    assert set(got["qid"]) == set(want)
+    for qid, g in got.groupby("qid"):
+        rids, cos = want[qid]
+        assert g["rid"].tolist() == rids, qid
+        assert g["rank"].tolist() == list(range(1, len(rids) + 1))
+        assert np.allclose(g["cosine"].to_numpy(), cos, rtol=0, atol=1e-12)
+
+
+@pytest.mark.parametrize("tier", ["exact", "lsh", "ivf"])
+def test_null_and_ragged_embeddings(spark, embs, tier):
+    """A null embedding matches nothing and leaves the other rows' answer
+    unchanged; a vector of the wrong length raises one error naming the
+    expected length, in every tier."""
+    from pyspark.errors import PythonException
+
+    run = {"exact": lambda d: similarity.cosine_self_topk(d, 3),
+           "lsh": lambda d: similarity.rhp_lsh_topk(d, 3, 64),
+           "ivf": lambda d: similarity.ivf_topk(d, 3, 64)}[tier]
+    schema = "vec_id long, embedding array<double>"
+    base = [(int(i), [float(x) for x in v]) for i, v in
+            embs.limit(40).select("vec_id", "embedding").collect()]
+    key = lambda d: sorted(map(tuple, d[["qid", "rid", "rank"]].to_numpy()))
+
+    got = run(spark.createDataFrame(base + [(-1, None)], schema)).toPandas()
+    want = run(spark.createDataFrame(base, schema)).toPandas()
+    assert -1 not in set(got["qid"]) | set(got["rid"])
+    assert key(got) == key(want)
+
+    ragged = spark.createDataFrame(base + [(-2, base[0][1][:63])], schema)
+    with pytest.raises((ValueError, PythonException),
+                       match=r"vectors are 63-dim, expected 64"):
+        run(ragged).collect()
+
+
 # -------------------------------------------------------------- multimodal
 
 

@@ -128,23 +128,27 @@ def test_lsh_pair_join_is_equi_join_on_band(spark):
         or "BroadcastHashJoin" in plan
 
 
-def test_ivf_join_is_equi_join_and_ids_only(spark):
-    """The IVF candidate join must be a hash equi-join on list_id (not
-    cartesian), and the list-id join must move ONLY ids — the embedding
-    arrays are attached by id-joins after the candidate set is formed
-    (otherwise the heavy vectors cross the candidate shuffle twice)."""
-    from proj_spark.operators.similarity import ivf_topk
+@pytest.mark.parametrize("tier", ["rhp_lsh_topk", "ivf_topk"])
+def test_ann_tiers_rerank_in_one_cogroup_without_pair_joins(spark, tier):
+    """Both ANN scale tiers rank their candidates inside one key cogroup
+    (LSH bucket or IVF list): no pair join of any kind, one
+    FlatMapCoGroupsInPandas, and the per-qid exchange that merges the
+    groups' top-k moves (qid, rid, cosine) only — never an embedding."""
+    from proj_spark.operators import similarity
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    out = ivf_topk(e, 3, dim=64, n_hint=500)
+    out = getattr(similarity, tier)(e, 3, 64, n_hint=500)
     plan = _plan(out)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
-        or "BroadcastHashJoin" in plan
-    # the list-id join's own keys/outputs never include an embedding col:
-    # every join on list_id must reference only ids + list_id
-    for m in re.finditer(r"Join [^\n]*list_id[^\n]*", plan):
-        assert "embedding" not in m.group(0), m.group(0)
+    assert "Join" not in plan, plan
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    formatted = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"))
+    per_qid = re.findall(r"Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]\s*\n"
+                         r"Arguments: hashpartitioning\(qid", formatted)
+    assert len(per_qid) == 1, formatted
+    assert "embedding" not in per_qid[0] and "vec" not in per_qid[0], per_qid
 
 
 def test_codebook_sampler_filters_before_sort(spark):
