@@ -487,7 +487,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def cosine_topk_lsh(spark, sf):
         """Scale-tier ANN (rhp_lsh_topk: banded random-hyperplane signatures
-        -> bucket join -> exact re-rank on candidates) graded by a recall
+        -> exact re-rank inside each bucket) graded by a recall
         golden: recall@3 against the exact brute-force tier must clear 0.9.
         The oracle row asserts the same literals, so the hash matches IFF
         the distributed LSH path actually achieves the recall — a hard check

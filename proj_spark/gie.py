@@ -15,10 +15,9 @@ Only text inside ``<gie>``/``<gie-strict>`` regions executes
 (step_into_gie_block). Angular error is measured as metres on the
 operation's own sphere/ellipsoid, matching gie's proj_lpz_dist checks.
 
-The per-point check semantics are shared with tests/test_kernels_gie.py
-(the pytest conformance harness runs extracted fixtures through the same
-tolerance logic); this module is the *interactive* surface for running
-un-extracted files end to end.
+tests/test_kernels_gie.py checks the extracted fixtures through the same
+``run_point`` and ``adjusted_tolerance``; this module is also the
+*interactive* surface for running un-extracted files end to end.
 """
 
 from __future__ import annotations
@@ -177,7 +176,8 @@ class GieReport:
         return self
 
 
-def _run_point(pipe, accept, expect, tol, inverse) -> tuple[bool, str]:
+def run_point(pipe, accept, expect, tol, inverse) -> tuple[bool, str]:
+    """One gie ``accept``/``expect`` check: (passed, failure detail)."""
     x = np.array([accept[0]], dtype=np.float64)
     y = np.array([accept[1]], dtype=np.float64)
     # gie zero-initializes unset lanes (gie.cpp parse_coord pads the
@@ -323,7 +323,7 @@ def run_gie_text(text: str, name: str = "<stdin>") -> GieReport:
                 if pipe is None or accept is None or len(accept) < 2:
                     rep.ok += 1
                 else:
-                    ok, _ = _run_point(
+                    ok, _ = run_point(
                         pipe, accept,
                         [float("nan"), float("nan")], tol,
                         direction == "inverse")
@@ -344,9 +344,9 @@ def run_gie_text(text: str, name: str = "<stdin>") -> GieReport:
             exp = parse_coord(arg)
             if accept is None or not exp or len(exp) < 2:
                 continue
-            ok, detail = _run_point(pipe, accept, exp,
-                                    adjusted_tolerance(op_spec, accept, tol),
-                                    direction == "inverse")
+            ok, detail = run_point(pipe, accept, exp,
+                                   adjusted_tolerance(op_spec, accept, tol),
+                                   direction == "inverse")
             rep.total += 1
             if ok:
                 rep.ok += 1

@@ -1,4 +1,4 @@
-"""Geodesic direct/inverse on the ellipsoid — Vincenty (1975), vectorized.
+"""Geodesic inverse on the ellipsoid — Vincenty (1975), vectorized.
 
 The reference ships Karney's algorithms (/root/reference/src/geodesic.c, a
 transcription of GeographicLib; Karney 2013, doi:10.1007/s00190-012-0578-z)
@@ -22,7 +22,6 @@ All iteration is fixed-trip with convergence masks (Arrow-batch safe).
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -113,87 +112,3 @@ def geod_inverse(lon1, lat1, lon2, lat2, C: VinConsts, iters: int = 50):
     coincident = (sin_sig == 0) & done
     s12 = np.where(coincident, 0.0, s12)
     return s12, azi1, azi2, done
-
-
-def geod_direct(lon1, lat1, azi1, s12, C: VinConsts, iters: int = 50):
-    """degrees/metres -> (lon2, lat2, azi2) degrees (Vincenty direct —
-    unconditionally convergent)."""
-    lon1 = np.radians(np.asarray(lon1, dtype=np.float64))
-    lat1 = np.radians(np.asarray(lat1, dtype=np.float64))
-    alpha1 = np.radians(np.asarray(azi1, dtype=np.float64))
-    s = np.asarray(s12, dtype=np.float64)
-    f, a, b = C.f, C.a, C.b
-
-    U1 = np.arctan((1.0 - f) * np.tan(lat1))
-    sinU1, cosU1 = np.sin(U1), np.cos(U1)
-    sin_a1, cos_a1 = np.sin(alpha1), np.cos(alpha1)
-    sig1 = np.arctan2(np.tan(U1), cos_a1)
-    sin_alpha = cosU1 * sin_a1
-    cos2_alpha = 1.0 - sin_alpha * sin_alpha
-    u2 = cos2_alpha * (a * a - b * b) / (b * b)
-    A = 1.0 + u2 / 16384.0 * (4096.0 + u2 * (-768.0 + u2 * (320.0 - 175.0 * u2)))
-    B = u2 / 1024.0 * (256.0 + u2 * (-128.0 + u2 * (74.0 - 47.0 * u2)))
-
-    sig = s / (b * A)
-    done = np.zeros(sig.shape, dtype=bool)
-    cos_2sigm = np.zeros_like(sig)
-    for _ in range(iters):
-        cos_2sigm = np.cos(2.0 * sig1 + sig)
-        sin_sig, cos_sig = np.sin(sig), np.cos(sig)
-        dsig = B * sin_sig * (
-            cos_2sigm + B / 4.0 * (
-                cos_sig * (-1.0 + 2.0 * cos_2sigm ** 2)
-                - B / 6.0 * cos_2sigm * (-3.0 + 4.0 * sin_sig ** 2)
-                * (-3.0 + 4.0 * cos_2sigm ** 2)
-            )
-        )
-        sig_new = s / (b * A) + dsig
-        newly = np.abs(sig_new - sig) < 1e-13
-        sig = np.where(done, sig, sig_new)
-        done |= newly
-        if done.all():
-            break
-
-    sin_sig, cos_sig = np.sin(sig), np.cos(sig)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        lat2 = np.arctan2(
-            sinU1 * cos_sig + cosU1 * sin_sig * cos_a1,
-            (1.0 - f) * np.hypot(sin_alpha,
-                                 sinU1 * sin_sig - cosU1 * cos_sig * cos_a1),
-        )
-        lam = np.arctan2(sin_sig * sin_a1,
-                         cosU1 * cos_sig - sinU1 * sin_sig * cos_a1)
-        Cc = f / 16.0 * cos2_alpha * (4.0 + f * (4.0 - 3.0 * cos2_alpha))
-        L = lam - (1.0 - Cc) * f * sin_alpha * (
-            sig + Cc * sin_sig * (
-                cos_2sigm + Cc * cos_sig * (-1.0 + 2.0 * cos_2sigm ** 2)
-            )
-        )
-        lon2 = lon1 + L
-        azi2 = np.degrees(np.arctan2(
-            sin_alpha, -(sinU1 * sin_sig - cosU1 * cos_sig * cos_a1)))
-    lon2 = np.degrees(np.remainder(lon2 + math.pi, 2 * math.pi) - math.pi)
-    return lon2, np.degrees(lat2), azi2
-
-
-def geod_polygon_area(lons, lats, C: VinConsts) -> tuple[float, float]:
-    """Spherical-excess area (authalic sphere) + Vincenty perimeter of a
-    closed ring given in degrees. The reference's geod_polygonarea analogue
-    (geodesic.h:457) at the accuracy tier of the rest of this module."""
-    lons = np.asarray(lons, dtype=np.float64)
-    lats = np.asarray(lats, dtype=np.float64)
-    lon2 = np.roll(lons, -1)
-    lat2 = np.roll(lats, -1)
-    s12, _, _, _ = geod_inverse(lons, lats, lon2, lat2, C)
-    perimeter = float(np.sum(s12))
-    # l'Huilier-ish via the shoelace on the authalic sphere
-    R2 = C.a * C.a * (1 - C.f) ** (2.0 / 3.0)  # rough authalic radius^2
-    lam = np.radians(lons)
-    phi = np.radians(lats)
-    lam2 = np.radians(lon2)
-    phi2 = np.radians(lat2)
-    # wrap each edge's longitude delta into [-pi, pi) so antimeridian-
-    # crossing edges contribute their short-way delta, not ~2*pi
-    dlam = np.remainder(lam2 - lam + math.pi, 2.0 * math.pi) - math.pi
-    area = float(np.sum(dlam * (2.0 + np.sin(phi) + np.sin(phi2))) * R2 / 2.0)
-    return area, perimeter

@@ -1,18 +1,18 @@
 """Deduplication operators for training-data pipelines.
 
-Four tiers, all shuffle-aware:
+Four tiers, all shuffle-aware; the three pair tiers explode an array of
+keys per doc once and self-join on the key (_key_pairs):
 
   * exact_dedup          — md5 content hash + groupBy; one shuffle on the
                            hash key (near-uniform => no skew), keeps the
                            smallest doc_id as canonical. SQL-oracle-able.
   * minhash_lsh_pairs    — shingle -> 64-bit hash -> k min-hash permutations
-                           -> band buckets -> candidate join -> exact
+                           -> band keys -> candidate join -> exact
                            Jaccard verify. The scale path for near-dup at
                            10^9+ docs: cost is O(n * k) map-side plus a
-                           self-join restricted to shared band buckets.
-  * simhash64            — 64-bit SimHash signature column + hamming-
-                           distance candidate pairing on rotated prefix
-                           buckets.
+                           self-join restricted to shared band keys.
+  * simhash_near_pairs   — 64-bit SimHash signature + hamming-distance
+                           pairing on its four 16-bit blocks.
   * ngram_jaccard_pairs  — exact pairwise Jaccard via shingle explode +
                            self-join on shingle (groupBy pair); quadratic
                            in bucket size, linear in corpus — the oracle /
@@ -30,7 +30,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -49,7 +49,12 @@ _MINHASH_B = [
 ]
 
 
-def shingles(text: pd.Series, n: int = 3) -> list[list[str]]:
+_SHINGLE_N = 3
+_BANDS, _ROWS = 4, 2  # minhash_lsh_pairs: 4 bands of 2 hashes each
+_SIMHASH_BLOCKS = 4  # 16-bit blocks of the 64-bit simhash
+
+
+def shingles(text: pd.Series, n: int = _SHINGLE_N) -> list[list[str]]:
     """Lowercased whitespace-token n-gram shingles per document."""
     out = []
     for s in text:
@@ -90,7 +95,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    num_hashes: int = 8, shingle_n: int = 3,
+    num_hashes: int = 8,
 ) -> DataFrame:
     """(id, m0..m{k-1}) minhash signature columns (int64 bit patterns)."""
     assert num_hashes <= len(_MINHASH_A)
@@ -100,7 +105,7 @@ def minhash_signatures(
 
     @pandas_udf(fields)
     def _sig(text: pd.Series) -> pd.DataFrame:
-        sh = shingles(text, shingle_n)
+        sh = shingles(text)
         out = np.zeros((len(text), num_hashes), dtype=np.uint64)
         counts = np.fromiter((len(d) for d in sh), dtype=np.int64,
                              count=len(sh))
@@ -131,6 +136,25 @@ def minhash_signatures(
 
     sig = df.withColumn("_s", _sig(F.col(text_col)))
     return sig.select(F.col(id_col), *[F.col(f"_s.m{i}").alias(f"m{i}") for i in range(num_hashes)])
+
+
+def _key_pairs(df: DataFrame, id_col: str, keys: Column,
+               carry: Column | None = None) -> DataFrame:
+    """(id_a, id_b, c_a, c_b), one row per key two rows share, id_a <
+    id_b: the ``keys`` array is exploded once and self-joined on the key;
+    ``carry`` rides along per side. Keep both non-nullable: Spark infers
+    isnotnull on a nullable key or filter input below the Project and
+    re-runs the UDF behind it. explode_outer, as an inner explode of a
+    column makes Spark infer size(keys) > 0 there too; the null key of an
+    empty array joins nothing."""
+    ex = df.select(F.col(id_col).alias("id"), F.explode_outer(keys).alias("key"),
+                   (F.lit(0) if carry is None else carry).alias("c"))
+
+    def side(s: str) -> DataFrame:
+        return ex.select("key", F.col("id").alias(f"id_{s}"), F.col("c").alias(f"c_{s}"))
+
+    return (side("a").join(side("b"), "key")
+            .filter(F.col("id_a") < F.col("id_b")).drop("key"))
 
 
 def connected_components(
@@ -181,8 +205,7 @@ def connected_components(
 
 def dedup_clusters(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    threshold: float = 0.5, shingle_n: int = 3,
-    pairs: DataFrame | None = None,
+    threshold: float = 0.5, pairs: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, cluster_id, cluster_size): near-duplicate clusters.
 
@@ -191,8 +214,7 @@ def dedup_clusters(
     O(n) banded scale tier — the clustering step is identical."""
     if pairs is None:
         pairs = ngram_jaccard_pairs(df, threshold=threshold,
-                                    text_col=text_col, id_col=id_col,
-                                    shingle_n=shingle_n)
+                                    text_col=text_col, id_col=id_col)
     comp = connected_components(pairs, "id_a", "id_b")
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size"))
@@ -212,33 +234,21 @@ def dedup_clusters(
 
 def minhash_lsh_pairs(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    num_hashes: int = 8, bands: int = 4, shingle_n: int = 3,
     jaccard_threshold: float = 0.7,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard >= threshold).
 
-    Plan: signatures (one UDF pass, no shuffle) -> band keys -> self-join
-    per band (shuffle on band hash — uniform) -> distinct candidates ->
-    exact Jaccard verification via shingle-set intersection UDF on the
-    candidate pairs only. Candidates are a vanishing fraction of n^2, which
-    is the entire point of LSH at 10^12 scale.
+    Plan: signatures (one UDF pass, no shuffle) -> 4 band keys per doc ->
+    one self-join on the band key (shuffle on band hash — uniform) ->
+    distinct candidates -> exact Jaccard verification via a shingle-set
+    UDF on the candidate pairs only. Candidates are a vanishing fraction
+    of n^2, which is the entire point of LSH at 10^12 scale.
     """
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-
-    band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(F.xxhash64(F.lit(b), *cols).alias(f"band{b}"))
-    sig_b = sig.select(id_col, *band_cols)
-
-    cands = None
-    for b in range(bands):
-        left = sig_b.select(F.col(id_col).alias("id_a"), F.col(f"band{b}").alias("bk"))
-        right = sig_b.select(F.col(id_col).alias("id_b"), F.col(f"band{b}").alias("bk"))
-        pairs = left.join(right, "bk").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-        cands = pairs if cands is None else cands.unionByName(pairs)
-    cands = cands.distinct()
+    sig = minhash_signatures(df, text_col, id_col, _BANDS * _ROWS)
+    keys = F.array(*[
+        F.xxhash64(F.lit(b), *[F.col(f"m{b * _ROWS + r}") for r in range(_ROWS)])
+        for b in range(_BANDS)])
+    cands = _key_pairs(sig, id_col, keys).select("id_a", "id_b").distinct()
 
     # exact verify on candidates only
     texts = df.select(F.col(id_col), F.col(text_col))
@@ -249,8 +259,8 @@ def minhash_lsh_pairs(
 
     @pandas_udf("double")
     def _jacc(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        sa = shingles(ta, shingle_n)
-        sb = shingles(tb, shingle_n)
+        sa = shingles(ta)
+        sb = shingles(tb)
         out = np.empty(len(ta))
         for i, (x, y) in enumerate(zip(sa, sb)):
             X, Y = set(x), set(y)
@@ -309,26 +319,25 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
 
 def simhash_near_pairs(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    max_hamming: int = 3, rotations: int = 4,
+    max_hamming: int = 3,
 ) -> DataFrame:
-    """Pairs with hamming(simhash) <= max_hamming via the rotate-and-prefix
-    trick: a pair within distance d shares an identical 16-bit block in at
-    least one of 4 rotations (pigeonhole, d <= 3 < 4 blocks)."""
-    sig = simhash64(df, text_col, id_col)
-    cands = None
-    for rot in range(rotations):
-        shift = 16 * rot
-        block = F.shiftrightunsigned(F.col("simhash"), shift).bitwiseAND(F.lit(0xFFFF))
-        s = sig.withColumn("bk", F.concat(F.lit(rot * 100000), block.cast("long")))
-        left = s.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"), "bk")
-        right = s.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"), "bk")
-        p = left.join(right, "bk").filter(F.col("id_a") < F.col("id_b"))
-        cands = p if cands is None else cands.unionByName(p)
-    cands = cands.select("id_a", "id_b", "sh_a", "sh_b").distinct()
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cands.withColumn("hamming", ham.cast("int")).filter(
-        F.col("hamming") <= max_hamming
-    ).select("id_a", "id_b", "hamming")
+    """Pairs with hamming(simhash) <= max_hamming: each doc is keyed by its
+    four (block index, 16-bit block) values, and a pair within distance
+    d <= 3 shares at least one block (pigeonhole). max_hamming >= 4 raises
+    ValueError: such a pair may differ in every block."""
+    if max_hamming >= _SIMHASH_BLOCKS:
+        raise ValueError(f"max_hamming={max_hamming}: {_SIMHASH_BLOCKS} blocks "
+                         f"only guarantee a shared one for max_hamming < {_SIMHASH_BLOCKS}")
+    sh = F.coalesce(F.col("simhash"), F.lit(0))  # non-null, see _key_pairs
+    keys = F.array(*[
+        F.lit(blk << 16).bitwiseOR(
+            F.shiftrightunsigned(sh, 16 * blk).bitwiseAND(F.lit(0xFFFF)))
+        for blk in range(_SIMHASH_BLOCKS)])
+    ham = F.bit_count(F.col("c_a").bitwiseXOR(F.col("c_b"))).cast("int")
+    return (_key_pairs(simhash64(df, text_col, id_col), id_col, keys, sh)
+            .select("id_a", "id_b", ham.alias("hamming"))
+            .filter(F.col("hamming") <= max_hamming)
+            .distinct())
 
 
 # ---------------------------------------------------------------------------
@@ -337,7 +346,7 @@ def simhash_near_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    shingle_n: int = 3, threshold: float = 0.5,
+    threshold: float = 0.5,
 ) -> DataFrame:
     """Exact all-pairs Jaccard >= threshold via relational set algebra:
     explode distinct shingles, self-join on shingle, count intersections,
@@ -348,27 +357,17 @@ def ngram_jaccard_pairs(
 
     @pandas_udf("array<string>")
     def _sh(text: pd.Series) -> pd.Series:
-        return pd.Series([sorted(set(s)) for s in shingles(text, shingle_n)])
+        return pd.Series([sorted(set(s)) for s in shingles(text)])
 
-    ex = df.select(F.col(id_col), F.explode(_sh(F.col(text_col))).alias("sh"))
-    sizes = ex.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-
-    a = ex.select(F.col(id_col).alias("id_a"), "sh")
-    b = ex.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    sh = df.select(F.col(id_col), F.coalesce(
+        _sh(F.col(text_col)), F.array().cast("array<string>")).alias("sh"))
     return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
+        _key_pairs(sh, id_col, F.col("sh"), F.size("sh"))
+        .groupBy("id_a", "id_b", "c_a", "c_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
         .withColumn(
             "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
+            F.col("inter") / (F.col("c_a") + F.col("c_b") - F.col("inter")),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")

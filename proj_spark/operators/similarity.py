@@ -16,9 +16,9 @@ matching nothing:
     few. Data-adaptive.
 
 The two scale tiers only map each vector to query keys and data keys;
-_keyed_topk cogroups both sides on the key and ranks the candidates inside
-each key group, so each embedding crosses one shuffle and no candidate pair
-becomes a row.
+_keyed_topk explodes both at once and ranks each key group's queries
+against its data: one scan, one key-UDF pass, one shuffle per embedding,
+and no candidate pair becomes a row.
 
 Vector math is numpy per Arrow batch or per key group. The per-row Python
 left is building each matrix from its Series of arrays (_as_matrix).
@@ -154,13 +154,13 @@ def _keyed_topk(keyed: DataFrame, k: int, dim: int, q_keys: Column,
     data and keeps k rows per query. A pair that meets in several groups
     gets the same cosine in each, so dropping repeated (qid, rid) pairs
     and keeping the first k per qid gives the top-k over the union."""
-    def side(keys: Column) -> DataFrame:
-        return keyed.select(F.explode(keys).alias("key"),
-                            F.col(id_col).alias("id"),
-                            F.col(vec_col).alias("vec"))
+    def tag(keys: Column, is_query: bool) -> Column:
+        return F.transform(keys, lambda key: F.struct(
+            key.alias("key"), F.lit(is_query).alias("is_query")))
 
-    def _group(qp: pd.DataFrame, dp: pd.DataFrame) -> pd.DataFrame:
+    def _group(g: pd.DataFrame) -> pd.DataFrame:
         parts = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+        qp, dp = g[g["is_query"]], g[~g["is_query"]]
         if len(qp) and len(dp):
             Q = _normalize(_as_matrix(qp["vec"], dim))
             R = _normalize(_as_matrix(dp["vec"], dim))
@@ -178,8 +178,9 @@ def _keyed_topk(keyed: DataFrame, k: int, dim: int, q_keys: Column,
         q, r, c = (np.concatenate(a) for a in zip(*parts))
         return pd.DataFrame({"qid": q, "rid": r, "cosine": c})
 
-    cands = (side(q_keys).groupBy("key").cogroup(side(d_keys).groupBy("key"))
-             .applyInPandas(_group, "qid long, rid long, cosine double"))
+    cands = (keyed.select(F.inline(F.concat(tag(q_keys, True), tag(d_keys, False))),
+                          F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+             .groupBy("key").applyInPandas(_group, "qid long, rid long, cosine double"))
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(),
                                           F.col("rid").asc())
     # one exchange on qid serves the dedup and the window
@@ -307,7 +308,7 @@ def ivf_topk(
     (driver) -> broadcast it -> one matmul per Arrow batch gives every
     vector its nearest lists -> queries are keyed by their 8 nearest
     lists, data vectors by their 2 nearest (multi-assignment) -> one
-    cogroup on list id ranks each list's queries against its data ->
+    groupBy on list id ranks each list's queries against its data ->
     per-query top-k. Measured recall@3 against cosine_self_topk: 0.931 at
     sf0.01 (n = 500), 0.795 at sf0.1 (n = 2,000). nlist is ~sqrt(n) (the
     IVF heuristic), giving mean list occupancy 2n/nlist ~ sqrt(n) and
@@ -320,8 +321,7 @@ def ivf_topk(
     n_assign = min(_IVF_N_ASSIGN, nlist)
     C = kmeans_codebook(df, nlist, dim, id_col=id_col, vec_col=vec_col,
                         n_hint=n)
-    assigned = ivf_assign(df.select(F.col(id_col), F.col(vec_col)), C,
-                          max(nprobe, n_assign), vec_col=vec_col)
+    assigned = ivf_assign(df, C, max(nprobe, n_assign), vec_col=vec_col)
     return _keyed_topk(assigned, k, dim,
                        F.slice("ivf_lists", 1, nprobe),
                        F.slice("ivf_lists", 1, n_assign), id_col, vec_col)

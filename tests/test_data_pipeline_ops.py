@@ -77,9 +77,7 @@ def test_exact_dedup(spark, dup_docs):
 
 
 def test_minhash_lsh_finds_planted_near_dup(spark, dup_docs):
-    pairs = dedup.minhash_lsh_pairs(
-        dup_docs, num_hashes=8, bands=4, jaccard_threshold=0.5
-    ).toPandas()
+    pairs = dedup.minhash_lsh_pairs(dup_docs, jaccard_threshold=0.5).toPandas()
     got = set(map(tuple, pairs[["id_a", "id_b"]].to_numpy()))
     # exact dups certainly; near dup should be found at threshold 0.5
     base = dup_docs.toPandas().sort_values("doc_id")
@@ -166,6 +164,13 @@ def test_simhash_near_pairs(spark, dup_docs):
     fid = base["doc_id"].tolist()
     assert (fid[0], 100001) in got  # identical text -> hamming 0
     assert (pairs["hamming"] <= 3).all()
+
+
+def test_simhash_near_pairs_rejects_unguaranteed_distance(spark, dup_docs):
+    """Four 16-bit blocks guarantee a shared block only for distance <= 3;
+    a larger bound would silently miss pairs that differ in every block."""
+    with pytest.raises(ValueError, match="max_hamming"):
+        dedup.simhash_near_pairs(dup_docs, max_hamming=4)
 
 
 # -------------------------------------------------------------- similarity

@@ -2,24 +2,25 @@
 
 Fixtures are data-only extracts (tools/extract_gie.py) of
 /root/reference/test/gie/*.gie — each point is (operation, direction,
-tolerance, accept, expect). We assert the same tolerances the reference
-asserts (50 nm for ellipsoidal tmerc, 75/40 um for Helmert, etc.), measuring
-angular error as geodesic-ish metres so tolerances are comparable.
+tolerance, accept, expect). Each point goes through the gie runner's own
+check (proj_spark.gie.run_point), so the reference's tolerances (50 nm for
+ellipsoidal tmerc, 75/40 um for Helmert, etc.) apply as gie.cpp applies
+them: angular error in metres on the operation's ellipsoid, z folded into
+one distance, and unset lanes of a 2-D accept zero-filled.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import pathlib
 
 import numpy as np
 import pytest
 
+from proj_spark.gie import adjusted_tolerance, run_point
 from proj_spark.plans.pipeline import compile_pipeline
 
 FIXDIR = pathlib.Path(__file__).parent / "fixtures" / "gie"
-EARTH_R = 6378137.0
 
 CASES = []
 for f in sorted(FIXDIR.glob("*.json")):
@@ -27,86 +28,17 @@ for f in sorted(FIXDIR.glob("*.json")):
         CASES.append(block)
 
 
-def _angular_err_m(lon1, lat1, lon2, lat2, radius=EARTH_R):
-    """Small-angle geodesic distance between two lon/lat degrees, in the
-    operation's own length units (gie computes proj_lpz_dist on the
-    operation's ellipsoid, so +R=1 ops measure in unit-sphere 'metres')."""
-    lat = math.radians((lat1 + lat2) / 2)
-    dlon = abs(lon1 - lon2)
-    if dlon > 180:
-        dlon = 360 - dlon
-    dx = math.radians(dlon) * math.cos(lat) * radius
-    dy = math.radians(lat1 - lat2) * radius
-    return math.hypot(dx, dy)
-
-
-def _op_radius(pipe) -> float:
-    for s in pipe.steps:
-        a = getattr(s, "a", None)
-        if a:
-            return a
-        base = getattr(s, "base", None)
-        if base is not None and getattr(base, "a", None):
-            return base.a
-    return EARTH_R
-
-
-# Known numerical-sensitivity relaxations live with the interactive gie
-# runner (proj_spark/gie.py) so both harnesses share one map; see the
-# comment there (krovak near-axis rounding, mpmath-proven).
-from proj_spark.gie import KNOWN_SENSITIVE  # noqa: E402
-
-
 @pytest.mark.parametrize(
     "block", CASES, ids=[f"{i}:{c['operation'][:60]}" for i, c in enumerate(CASES)]
 )
 def test_gie_block(block):
-    pipe = compile_pipeline(block["operation"])
+    op = block["operation"]
+    pipe = compile_pipeline(op)
     for pt in block["points"]:
-        accept = pt["accept"]
-        expect = pt["expect"]
-        tol = pt["tol"]
-        for (op_sub, ax), relaxed in KNOWN_SENSITIVE.items():
-            if op_sub in block["operation"] and accept[0] == ax:
-                tol = max(tol, relaxed)
-        inverse = pt["dir"] == "inverse"
-
-        x = np.array([accept[0]])
-        y = np.array([accept[1]])
-        z = np.array([accept[2]]) if len(accept) > 2 else None
-        t = np.array([accept[3]]) if len(accept) > 3 else None
-
-        if inverse:
-            rx, ry, rz, _ = pipe.inv_deg(x, y, z, t)
-            out_angular = pipe.left == "rad"
-        else:
-            rx, ry, rz, _ = pipe.fwd_deg(x, y, z, t)
-            out_angular = pipe.right == "rad"
-
-        gx, gy = float(rx[0]), float(ry[0])
-        ex, ey = expect[0], expect[1]
-        if math.isnan(ex) or math.isnan(ey):
-            # gie "expect NaN": error-in-band must propagate, not invent values
-            assert math.isnan(gx) and math.isnan(gy), (
-                f"expected NaN propagation for {block['operation']} accept={accept}"
-            )
-            continue
-        assert np.isfinite(gx) and np.isfinite(gy), (
-            f"NaN result for {block['operation']} accept={accept}"
-        )
-        if out_angular:
-            err = _angular_err_m(gx, gy, ex, ey, _op_radius(pipe))
-        else:
-            err = math.hypot(gx - ex, gy - ey)
-        assert err <= tol, (
-            f"{block['operation']}\n dir={pt['dir']} accept={accept}\n"
-            f" got=({gx!r}, {gy!r}) expect=({ex!r}, {ey!r}) err={err:g} tol={tol:g}"
-        )
-        if len(expect) > 2 and rz is not None:
-            err_z = abs(float(rz[0]) - expect[2])
-            assert err_z <= max(tol, 1e-4), (
-                f"{block['operation']} z err={err_z:g} tol={tol:g}"
-            )
+        ok, detail = run_point(pipe, pt["accept"], pt["expect"],
+                               adjusted_tolerance(op, pt["accept"], pt["tol"]),
+                               pt["dir"] == "inverse")
+        assert ok, f"{op}\n dir={pt['dir']} accept={pt['accept']}: {detail}"
 
 
 def test_roundtrip_property():

@@ -114,26 +114,35 @@ def test_smj_join_runs_the_cell_udf_once(spark):
     assert plan.count("ArrowEvalPython") == 2, plan
 
 
-def test_lsh_pair_join_is_equi_join_on_band(spark):
-    """The minhash LSH candidate join must be a hash equi-join on the
-    band key, not a theta/cartesian join — this is THE property that
-    makes near-dup detection O(n) instead of O(n^2) at 100 TB."""
+@pytest.mark.parametrize("tier, udf", [("minhash_lsh_pairs", "_sig"),
+                                       ("simhash_near_pairs", "_sim"),
+                                       ("ngram_jaccard_pairs", "_sh")],
+                         ids=["minhash", "simhash", "ngram"])
+def test_pair_tier_is_one_equi_join_on_its_key(spark, tier, udf):
+    """Each near-dup pair tier finds its candidates with ONE hash equi-join
+    on its key (band hash, simhash block or shingle), not a theta/cartesian
+    join and not a union of per-band joins — THE property that makes
+    near-dup detection O(n) instead of O(n^2) at 100 TB. Its signature UDF
+    runs at most once per join side: a nullable key makes Spark re-run it
+    below an inferred filter."""
     from proj_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    pairs = dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.5)
-    plan = _plan(pairs)
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
-        or "BroadcastHashJoin" in plan
+    plan = _plan(getattr(dedup, tier)(docs))
+    assert "CartesianProduct" not in plan and "Union" not in plan, plan
+    key_joins = re.findall(r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"
+                           r" \[key#\d+L?\], \[key#\d+L?\]", plan)
+    assert len(key_joins) == 1, plan
+    assert plan.count(f"ArrowEvalPython [{udf}(") <= 2, plan
 
 
 @pytest.mark.parametrize("tier", ["rhp_lsh_topk", "ivf_topk"])
-def test_ann_tiers_rerank_in_one_cogroup_without_pair_joins(spark, tier):
-    """Both ANN scale tiers rank their candidates inside one key cogroup
-    (LSH bucket or IVF list): no pair join of any kind, one
-    FlatMapCoGroupsInPandas, and the per-qid exchange that merges the
-    groups' top-k moves (qid, rid, cosine) only — never an embedding."""
+def test_ann_tiers_rerank_in_one_grouped_pass_without_pair_joins(spark, tier):
+    """Both ANN scale tiers rank their candidates inside one grouped pass
+    over their keys (LSH bucket or IVF list): one scan, one key-UDF
+    evaluation, no pair join of any kind, one FlatMapGroupsInPandas, and
+    the per-qid exchange that merges the groups' top-k moves (qid, rid,
+    cosine) only — never an embedding."""
     from proj_spark.operators import similarity
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -141,7 +150,9 @@ def test_ann_tiers_rerank_in_one_cogroup_without_pair_joins(spark, tier):
     plan = _plan(out)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
     assert "Join" not in plan, plan
-    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
     formatted = out._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"))

@@ -31,11 +31,18 @@ NOTES = {
                         "inside the Arrow match UDF (occupancy gather, "
                         "cover lookup, exact ray-cast): 2 Arrow crossings, "
                         "no join stage.",
-    "cosine_topk_lsh": "Banded equi-join on (band, bucket) keys; candidate "
-                       "shuffles carry ids only, vectors attached after "
-                       "dedup.",
-    "dedup_clusters": "n-gram pair join is a hash equi-join on shingles; "
-                      "label propagation is a per-round partial-agg groupBy.",
+    "cosine_topk_lsh": "The query returns its one-row recall verdict, so "
+                       "the plan below is that row's scan. The rhp_lsh_topk "
+                       "DAG it grades scans once, runs the band-key UDF "
+                       "once, ranks each (band, bucket) group's queries "
+                       "against its data in one groupBy, and merges the "
+                       "groups' top-k in one exchange on qid: no pair join, "
+                       "and no embedding in the qid exchange.",
+    "dedup_clusters": "n-gram pairs: each doc's shingle array is exploded "
+                      "once and self-joined on the shingle (one hash "
+                      "equi-join, the shingle UDF once per side, each side "
+                      "carrying its shingle count); label propagation is a "
+                      "per-round partial-agg groupBy.",
 }
 
 
