@@ -19,21 +19,23 @@ cache once before it forks, so workers start with every importer current.
 
 A reused worker also runs a full ``gc.collect()`` after every task
 (``pyspark.daemon.manager``). Without help that collection rescans every
-object the worker imported for its UDF closures: pandas, pyarrow,
-pyspark.sql and proj_spark, ~73k tracked objects, 28 ms per task on a
-4-core host and up to ~60 ms once the worker has run the engine's UDFs.
-So the daemon imports those modules itself, collects once and calls
-``gc.freeze()`` before it forks (the pattern the ``gc`` docs give for
-forking servers): every worker inherits the frozen generation, and its
-per-task collection scans only the objects made after the fork (~600
-objects, 0.2 ms). Frozen objects are never collected, so only modules,
-which live as long as the process, are frozen.
+object the worker imported for its UDF closures: ~43k tracked objects
+for pyarrow, pyspark.sql and proj_spark (28 ms per task on a 4-core host
+with pandas' ~27k more). So the daemon imports the numeric UDFs' modules
+itself, collects once and calls ``gc.freeze()`` before it forks (the
+pattern the ``gc`` docs give for forking servers): every worker inherits
+the frozen generation, and its per-task collection scans only the objects
+made after the fork (~600 objects, 0.2 ms). It does not import pandas,
+which those Arrow UDFs never load (~32 MB per worker). A pandas UDF's
+first task on a worker imports it, so a worker applies the same rule
+after any task that grew ``sys.modules``. Frozen objects are never
+collected, so only what outlives a collection, chiefly modules, is frozen.
 
 Workers talk to the JVM over Unix-domain sockets (``get_spark``). When a
 session stops, the JVM closes its idle workers' sockets; a worker reads
 EOF, reports it, and the flush of that report fails at once with
 ``BrokenPipeError`` (over TCP the same write is silently accepted), which
-the stock daemon prints as a traceback from the worker. ``quiet_worker``
+the stock daemon prints as a traceback from the worker. ``wrap_worker``
 ends such a worker without the traceback: its peer is gone, so there is
 nobody left to tell.
 
@@ -46,6 +48,7 @@ from __future__ import annotations
 import gc
 import importlib
 import os
+import sys
 import zipimport
 
 # archive path -> (st_mtime_ns, st_size) of the bytes now held in
@@ -84,39 +87,43 @@ def install() -> None:
 
 
 def preload() -> None:
-    """Import what the engine's UDF closures import, then freeze the heap
-    so a forked worker's collections skip it."""
-    import pandas  # noqa: F401
-    import pyarrow.compute  # noqa: F401
+    """Import what the engine's numeric UDF closures import (not pandas),
+    then freeze the heap so a forked worker's collections skip it."""
     import pyspark.sql.pandas.serializers  # noqa: F401
 
     import proj_spark.functions  # noqa: F401
+    import proj_spark.operators.spatial_join  # noqa: F401
     import proj_spark.plans.dispatch  # noqa: F401
 
     gc.collect()  # freeze no garbage
     gc.freeze()
 
 
-def quiet_worker() -> None:
-    """Make a worker ``pyspark.daemon`` forked stop without a traceback
-    when the JVM has closed its socket (``worker`` returns non-zero, so
-    the forked process exits instead of waiting for another task)."""
+def wrap_worker() -> None:
+    """Wrap the task loop of a forked worker: it ends without a traceback
+    when the JVM has closed its socket (a non-zero return exits the
+    process), and it collects and freezes after a task that imported."""
     from pyspark import daemon
 
     stock = daemon.worker
 
     def worker(sock, authenticated):
+        loaded = len(sys.modules)
         try:
             return stock(sock, authenticated)
         except BrokenPipeError:
             return 1
+        finally:
+            if len(sys.modules) > loaded:
+                gc.collect()
+                gc.freeze()
 
     daemon.worker = worker
 
 
 def main() -> None:
     install()
-    quiet_worker()
+    wrap_worker()
     from pyspark import daemon
 
     importlib.invalidate_caches()  # one read per archive, inherited by forks

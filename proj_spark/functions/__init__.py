@@ -5,11 +5,14 @@ Two tiers, chosen by cost:
     elementary: slippy tiles, UTM zone selection, webmerc forward,
     haversine distance, bbox predicates. These stay inside codegen spans,
     push down, and never cross the Python boundary.
-  * Arrow-batched pandas UDFs ONLY for series kernels (tmerc/lcc/datum
-    pipelines) and S2 cell encoding, where the math genuinely needs numpy.
+  * Arrow UDFs ONLY for series kernels (tmerc/lcc/datum pipelines) and
+    S2 cell encoding, where the math genuinely needs numpy.
     One UDF per *pipeline*, not per step — steps are fused driver-side by
     plans.compile_pipeline, so a cs2cs-style chain costs a single
     JVM->Arrow->numpy->Arrow->JVM round trip per batch.
+
+Every numeric UDF goes through one numpy<->Arrow buffer bridge
+(``from_arrow``/``to_arrow``), so its workers never import pandas.
 
 A coordinate UDF hands its whole Arrow batch to its operation: Pipeline's
 degree entry points run long inputs in KERNEL_CHUNK cache blocks
@@ -23,21 +26,63 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from proj_spark import cells
 from proj_spark.plans.pipeline import KERNEL_CHUNK, compile_pipeline
 
 # ---------------------------------------------------------------------------
-# pandas UDF factories (numpy kernels)
+# numpy <-> Arrow bridge. pyarrow 16 imports pandas on Array.to_numpy,
+# np.asarray(arr), pa.array(ndarray) and pa.scalar; reading and wrapping
+# the buffers themselves does not.
+# ---------------------------------------------------------------------------
+
+
+def valid_mask(arr: pa.Array) -> np.ndarray:
+    """Bool vector of ``arr``'s non-null slots, from its validity bitmap."""
+    if not arr.null_count:
+        return np.ones(len(arr), dtype=bool)
+    bits = np.unpackbits(np.frombuffer(arr.buffers()[0], np.uint8), bitorder="little")
+    return bits[arr.offset:arr.offset + len(arr)].astype(bool)
+
+
+def from_arrow(arr: pa.Array, dtype=np.float64) -> np.ndarray:
+    """A numeric Arrow column as a ``dtype`` vector over its value buffer,
+    cast first if its type differs; a null reads as NaN (0 for integers)."""
+    dtype = np.dtype(dtype)
+    if arr.type != pa.from_numpy_dtype(dtype):
+        arr = arr.cast(pa.from_numpy_dtype(dtype), safe=False)
+    v = np.frombuffer(arr.buffers()[1], dtype, len(arr), arr.offset * dtype.itemsize)
+    return np.where(valid_mask(arr), v, 0 if dtype.kind == "i" else np.nan) \
+        if arr.null_count else v
+
+
+def to_arrow(v: np.ndarray, dtype=None) -> pa.Array:
+    """A numpy vector as an Arrow array over its buffer. A float's NaNs
+    become nulls, as the pandas UDF serializer made them."""
+    v = np.ascontiguousarray(v, dtype)
+    mask = None
+    if v.dtype.kind == "f" and np.isnan(v).any():
+        mask = pa.py_buffer(np.packbits(~np.isnan(v), bitorder="little"))
+    data = np.packbits(v, bitorder="little") if v.dtype == bool else v
+    return pa.Array.from_buffers(pa.from_numpy_dtype(v.dtype), len(v),
+                                 [mask, pa.py_buffer(data)])
+
+
+def _struct(names, vecs) -> pa.Array:
+    return pa.StructArray.from_arrays([to_arrow(v) for v in vecs], names=list(names))
+
+
+# ---------------------------------------------------------------------------
+# Arrow UDF factories (numpy kernels)
 # ---------------------------------------------------------------------------
 
 
 def _coord_udf(op, direction: str, out: tuple[str, ...]):
-    """pandas UDF (2, 3 or 4 coordinate columns) -> struct<``out`` double>.
+    """Arrow UDF (2, 3 or 4 coordinate columns) -> struct<``out`` double>.
 
     ``op`` is anything with fwd_deg/inv_deg: a compiled Pipeline or a
     plans.dispatch.CandidateDispatch (per-point candidate-operation
@@ -49,10 +94,10 @@ def _coord_udf(op, direction: str, out: tuple[str, ...]):
     """
     run_op = op.fwd_deg if direction == "fwd" else op.inv_deg
 
-    @pandas_udf(", ".join(f"{c} double" for c in out))
-    def _udf(*cols: pd.Series) -> pd.DataFrame:
-        res = run_op(*(c.to_numpy(dtype=np.float64) for c in cols))
-        return pd.DataFrame(dict(zip(out, res)))
+    @arrow_udf(", ".join(f"{c} double" for c in out))
+    def _udf(*cols: pa.Array) -> pa.Array:
+        res = run_op(*(from_arrow(c) for c in cols))
+        return _struct(out, res[:len(out)])
 
     return _udf
 
@@ -79,52 +124,48 @@ def transform4d_udf(spec: str, direction: str = "fwd"):
 
 
 def lonlat_udf():
-    """pandas UDF phash -> struct<lon double, lat double>: the canonical
-    deterministic image coordinates (sources.synth.lonlat_from_phash)."""
+    """Arrow UDF phash -> struct<lon double, lat double>: the canonical
+    deterministic image coordinates (sources.synth.lonlat_from_phash). A
+    null phash reads as 0."""
     from proj_spark.sources.synth import lonlat_from_phash
 
-    @pandas_udf("lon double, lat double")
-    def _udf(ph: pd.Series) -> pd.DataFrame:
-        lon, lat = lonlat_from_phash(ph.to_numpy())
-        return pd.DataFrame({"lon": lon, "lat": lat})
+    @arrow_udf("lon double, lat double")
+    def _udf(ph: pa.Array) -> pa.Array:
+        return _struct(("lon", "lat"), lonlat_from_phash(from_arrow(ph, np.int64)))
 
     return _udf
 
 
 def s2_cell_udf(level: int):
-    """pandas UDF (lon, lat) -> int64 S2 cell id at ``level``."""
+    """Arrow UDF (lon, lat) -> int64 S2 cell id at ``level``; 0 for a null
+    or non-finite point."""
 
-    @pandas_udf("long")
-    def _udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        cid = cells.s2_cell_id(
-            lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64), level
-        )
-        return pd.Series(cid)
+    @arrow_udf("long")
+    def _udf(lon: pa.Array, lat: pa.Array) -> pa.Array:
+        return to_arrow(cells.s2_cell_id(from_arrow(lon), from_arrow(lat), level), np.int64)
 
     return _udf
 
 
 def geod_inverse_udf(ellps: str = "WGS84"):
-    """pandas UDF (lon1, lat1, lon2, lat2) -> struct<s12, azi1, azi2>:
+    """Arrow UDF (lon1, lat1, lon2, lat2) -> struct<s12, azi1, azi2>:
     Vincenty ellipsoidal distance + forward/back azimuths (kernels.geodesic)."""
     from proj_spark.crs import ELLIPSOIDS
     from proj_spark.kernels.geodesic import geod_inverse, setup_vincenty
 
     C = setup_vincenty(ELLIPSOIDS[ellps])
 
-    @pandas_udf("s12 double, azi1 double, azi2 double")
-    def _udf(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.DataFrame:
-        s12, a1, a2, ok = geod_inverse(
-            lon1.to_numpy(np.float64), lat1.to_numpy(np.float64),
-            lon2.to_numpy(np.float64), lat2.to_numpy(np.float64), C)
+    @arrow_udf("s12 double, azi1 double, azi2 double")
+    def _udf(lon1: pa.Array, lat1: pa.Array, lon2: pa.Array, lat2: pa.Array) -> pa.Array:
+        s12, a1, a2, ok = geod_inverse(*(from_arrow(c) for c in (lon1, lat1, lon2, lat2)), C)
         s12 = np.where(ok, s12, np.nan)  # near-antipodal non-convergence
-        return pd.DataFrame({"s12": s12, "azi1": a1, "azi2": a2})
+        return _struct(("s12", "azi1", "azi2"), (s12, a1, a2))
 
     return _udf
 
 
 def geod_karney_udf(ellps: str = "WGS84"):
-    """pandas UDF (lon1, lat1, lon2, lat2) -> struct<s12, azi1, azi2,
+    """Arrow UDF (lon1, lat1, lon2, lat2) -> struct<s12, azi1, azi2,
     m12, M12>: Karney (2013) geodesic inverse (kernels.karney) —
     converges everywhere including the antipodal region, with reduced
     length and geodesic scale for distortion-aware ranking."""
@@ -134,22 +175,18 @@ def geod_karney_udf(ellps: str = "WGS84"):
     ell = ELLIPSOIDS[ellps]
     C = geod_consts(ell.a, ell.f)
 
-    @pandas_udf("s12 double, azi1 double, azi2 double, m12 double, gscale double")
-    def _udf(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series,
-             lat2: pd.Series) -> pd.DataFrame:
-        r = geod_inverse(
-            C, lat1.to_numpy(np.float64), lon1.to_numpy(np.float64),
-            lat2.to_numpy(np.float64), lon2.to_numpy(np.float64),
-            want_scale=True)
-        return pd.DataFrame({"s12": r["s12"], "azi1": r["azi1"],
-                             "azi2": r["azi2"], "m12": r["m12"],
-                             "gscale": r["M12"]})
+    @arrow_udf("s12 double, azi1 double, azi2 double, m12 double, gscale double")
+    def _udf(lon1: pa.Array, lat1: pa.Array, lon2: pa.Array, lat2: pa.Array) -> pa.Array:
+        r = geod_inverse(C, *(from_arrow(c) for c in (lat1, lon1, lat2, lon2)),
+                         want_scale=True)
+        return _struct(("s12", "azi1", "azi2", "m12", "gscale"),
+                       (r["s12"], r["azi1"], r["azi2"], r["m12"], r["M12"]))
 
     return _udf
 
 
 def polygon_area_udf(ellps: str = "WGS84"):
-    """pandas UDF ring(array<double> lon,lat interleaved) ->
+    """Arrow UDF ring(array<double> lon,lat interleaved) ->
     struct<area double, perimeter double>: exact ellipsoidal polygon
     area/perimeter via Karney's C4 series (kernels.karney
     geod_polygon_area) — CCW positive, antimeridian and pole-encircling
@@ -160,20 +197,17 @@ def polygon_area_udf(ellps: str = "WGS84"):
     ell = ELLIPSOIDS[ellps]
     C = geod_consts(ell.a, ell.f)
 
-    @pandas_udf("area double, perimeter double")
-    def _udf(ring: pd.Series) -> pd.DataFrame:
-        areas = np.empty(len(ring))
-        perims = np.empty(len(ring))
-        for i, r in enumerate(ring):
-            arr = np.asarray(r, dtype=np.float64)
-            if arr.size < 6:
-                areas[i] = np.nan
-                perims[i] = np.nan
-                continue
-            a, p = geod_polygon_area(C, arr[0::2], arr[1::2])
-            areas[i] = a
-            perims[i] = p
-        return pd.DataFrame({"area": areas, "perimeter": perims})
+    @arrow_udf("area double, perimeter double")
+    def _udf(ring: pa.Array) -> pa.Array:
+        # a ring is values[offs[i]:offs[i + 1]]; a null or short one has no area
+        offs = from_arrow(ring.offsets, np.int64)
+        vals = from_arrow(ring.values)
+        areas = np.full(len(ring), np.nan)
+        perims = np.full(len(ring), np.nan)
+        for i in np.flatnonzero(valid_mask(ring) & (np.diff(offs) >= 6)):
+            r = vals[offs[i]:offs[i + 1]]
+            areas[i], perims[i] = geod_polygon_area(C, r[0::2], r[1::2])
+        return _struct(("area", "perimeter"), (areas, perims))
 
     return _udf
 
@@ -203,21 +237,6 @@ GDA_DATUM_SPEC = (
 LCC_CONUS_SPEC = "+proj=lcc +ellps=WGS84 +lat_1=33 +lat_2=45 +lat_0=39 +lon_0=-96"
 
 
-# KERNEL_CHUNK, the cache block, lives with Pipeline (plans.pipeline), whose
-# degree entry points block every long input by it. _chunked blocks the
-# fused flagship kernel, whose intermediates pass between pipelines.
-
-
-def _chunked(fn, n: int, out_cols: list[str]):
-    """Run fn(sl) -> dict over KERNEL_CHUNK slices; concat into one frame."""
-    if n <= KERNEL_CHUNK:
-        return pd.DataFrame(fn(slice(0, n)))
-    parts = [fn(slice(i, min(i + KERNEL_CHUNK, n))) for i in range(0, n, KERNEL_CHUNK)]
-    return pd.DataFrame(
-        {c: np.concatenate([p[c] for p in parts]) for c in out_cols}
-    )
-
-
 def image_geo_full_udf(level: int = 10):
     """Fused full-chain kernel: phash -> struct<lon, lat, utm_x, utm_y,
     lcc_x, lcc_y, cell>.
@@ -228,7 +247,8 @@ def image_geo_full_udf(level: int = 10):
     no caller reads them, and every returned field crosses back to the JVM.
     This is the per-record work profile of the north-star job; it is
     compute-dominated, which is what the scaling-efficiency evidence must
-    measure.
+    measure. KERNEL_CHUNK blocks keep the intermediates between pipelines
+    L2-resident; each is written into the preallocated outputs.
     """
     from proj_spark.sources.synth import lonlat_from_phash
 
@@ -238,23 +258,23 @@ def image_geo_full_udf(level: int = 10):
 
     cols = ["lon", "lat", "utm_x", "utm_y", "lcc_x", "lcc_y", "cell"]
 
-    @pandas_udf(
+    @arrow_udf(
         "lon double, lat double, "
         "utm_x double, utm_y double, lcc_x double, lcc_y double, cell long"
     )
-    def _udf(ph: pd.Series) -> pd.DataFrame:
-        phv = ph.to_numpy()
-
-        def run(sl):
+    def _udf(ph: pa.Array) -> pa.Array:
+        phv = from_arrow(ph, np.int64)
+        out = [np.empty(len(phv), np.int64 if c == "cell" else np.float64) for c in cols]
+        for i in range(0, len(phv), KERNEL_CHUNK):
+            sl = slice(i, i + KERNEL_CHUNK)
             lon, lat = lonlat_from_phash(phv[sl])
             lon2, lat2, _, _ = datum.fwd_deg(lon, lat, np.zeros_like(lon))
             ux, uy, _, _ = utm.fwd_deg(lon2, lat2)
             lx, ly, _, _ = lcc.fwd_deg(lon2, lat2)
             cid = cells.s2_cell_id(lon2, lat2, level)
-            return {"lon": lon, "lat": lat, "utm_x": ux, "utm_y": uy,
-                    "lcc_x": lx, "lcc_y": ly, "cell": cid}
-
-        return _chunked(run, len(phv), cols)
+            for o, v in zip(out, (lon, lat, ux, uy, lx, ly, cid)):
+                o[sl] = v
+        return _struct(cols, out)
 
     return _udf
 

@@ -268,8 +268,10 @@ def minhash_lsh_pairs(
             out[i] = (len(X & Y) / u) if u else 1.0
         return pd.Series(out)
 
+    # nondeterministic, so Spark keeps the threshold filter above the
+    # Project instead of pushing it below and verifying every pair twice
     return (
-        joined.withColumn("jaccard", _jacc(F.col("_ta"), F.col("_tb")))
+        joined.withColumn("jaccard", _jacc.asNondeterministic()(F.col("_ta"), F.col("_tb")))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )

@@ -24,19 +24,20 @@ a lookup or a join, not a tree walk.
 from __future__ import annotations
 
 import math
-from typing import NamedTuple, Sequence
+from typing import TYPE_CHECKING, NamedTuple, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from proj_spark import cells
-from proj_spark.functions import cell_parent, s2_cell_udf
+from proj_spark.functions import cell_parent, from_arrow, s2_cell_udf, to_arrow, valid_mask
 from proj_spark.sources.synth import Polygon
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 # S2 ST-space edge of one cell at level L is 1/2^L of a face; one face is
 # ~90 deg, and quadratic-ST distortion keeps linear cell size within ~1.6x,
@@ -60,6 +61,8 @@ def polygon_cover(polys: Sequence[Polygon], level: int) -> pd.DataFrame:
     exact enough by construction (spacing < half min cell edge, padding >
     one cell edge), and validated against brute force in tests.
     """
+    import pandas as pd  # driver-side only: the join UDFs never load pandas
+
     out_cells: list[np.ndarray] = []
     out_idx: list[np.ndarray] = []
     size = _cell_size_deg(level)
@@ -266,14 +269,14 @@ def _fused_join(points: DataFrame, polys: Sequence[Polygon], cover_pdf: pd.DataF
     def _matches(lon_a: pa.Array, lat_a: pa.Array, cell_a: pa.Array) -> pa.Array:
         n = len(cell_a)
         # a null cell reads as 0 (no S2 id), never through a float cast
-        cell = pc.fill_null(cell_a, 0).to_numpy().astype(np.int64, copy=False)
+        cell = from_arrow(cell_a, np.int64)
         # one gather keeps the points whose ancestor holds a cover cell
         pt = np.flatnonzero(occupied[(cell >> occ_shift) & occ_mask])
         if cell_a.null_count:
-            pt = pt[cell_a.is_valid().to_numpy(zero_copy_only=False)[pt]]
+            pt = pt[valid_mask(cell_a)[pt]]
         # a null lon/lat reads as NaN; NaN coordinates match nothing
-        lon = lon_a.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)[pt]
-        lat = lat_a.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)[pt]
+        lon = from_arrow(lon_a)[pt]
+        lat = from_arrow(lat_a)[pt]
         ok = ~(np.isnan(lon) | np.isnan(lat))
         pt, lon, lat, cell = pt[ok], lon[ok], lat[ok], cell[pt[ok]]
         # cover lookup: searchsorted into the CSR cell index
@@ -291,9 +294,10 @@ def _fused_join(points: DataFrame, polys: Sequence[Polygon], cover_pdf: pd.DataF
         count = np.bincount(pt[k_idx[match]], minlength=n)
         offsets = np.zeros(n + 1, dtype=np.int32)
         np.cumsum(count, out=offsets[1:])
-        return pa.ListArray.from_arrays(pa.array(offsets),
-                                        pa.array(pl_idx[match].astype(np.int32)),
-                                        mask=pa.array(count == 0))
+        return pa.Array.from_buffers(
+            pa.list_(pa.int32()), n,
+            [pa.py_buffer(np.packbits(count > 0, bitorder="little")), pa.py_buffer(offsets)],
+            children=[to_arrow(pl_idx[match], np.int32)])
 
     pts = points.withColumn(
         "_cell_j",
@@ -327,7 +331,7 @@ def spatial_join(
 
     cell_col/cell_level: reuse an existing cell column computed at a finer
     (>=) level — the join key becomes a pure JVM prefix-truncation instead
-    of a second pandas-UDF pass over all points.
+    of a second UDF pass over all points.
 
     cover: a Spark DataFrame of ``polygon_cover`` rows, read by smj only —
     pass it when joining repeatedly against the same polygons so the
@@ -352,16 +356,15 @@ def spatial_join(
     else:
         if cover is None:
             cover = points.sparkSession.createDataFrame(cover_pdf)
-        # Exact verify as a BOOLEAN pandas UDF over (lon, lat, poly_idx)
+        # Exact verify as a BOOLEAN Arrow UDF over (lon, lat, poly_idx)
         # only — strings (image_id, caption, ...) never cross the Arrow
         # boundary; the filter itself runs JVM-side.
         edges = _edge_matrices(polys)
 
-        @pandas_udf("boolean")
-        def _inside(lon_s: pd.Series, lat_s: pd.Series, pidx_s: pd.Series) -> pd.Series:
-            return pd.Series(_verify_vec(edges, lon_s.to_numpy(dtype=np.float64),
-                                         lat_s.to_numpy(dtype=np.float64),
-                                         pidx_s.to_numpy(dtype=np.int64)))
+        @arrow_udf("boolean")
+        def _inside(lon_a: pa.Array, lat_a: pa.Array, pidx_a: pa.Array) -> pa.Array:
+            return to_arrow(_verify_vec(edges, from_arrow(lon_a), from_arrow(lat_a),
+                                        from_arrow(pidx_a, np.int64)))
 
         # co-locate both sides on the cell key; AQE splits skewed cells
         out = (

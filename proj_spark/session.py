@@ -68,9 +68,11 @@ def get_spark(
     # importlib.invalidate_caches() (~0.27 CPU-s per task, 97% of a small
     # task's worker time); the engine's daemon re-reads an archive only
     # when its bytes changed (see proj_spark/_daemon.py). The daemon also
-    # imports pandas, pyarrow and the engine's UDF modules and freezes that
-    # heap before it forks, so a reused worker's gc.collect() after each
-    # task scans ~600 objects instead of ~73k (28 ms -> 0.2 ms). Workers
+    # imports pyarrow and the engine's numeric UDF modules (not pandas: those
+    # UDFs are Arrow UDFs) and freezes that heap before it forks, so a reused
+    # worker's gc.collect() after each task scans ~600 objects instead of
+    # ~43k; a worker whose task imports more (pandas, for a pandas UDF)
+    # collects and freezes again after that task. Workers
     # import the daemon, and the UDF closures, from the package root
     # shipped on their PYTHONPATH, so any working directory serves.
     # Sessions not built here (spark-submit --py-files runs) keep the stock

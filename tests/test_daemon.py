@@ -1,19 +1,26 @@
 """The engine's Python worker daemon (proj_spark/_daemon.py): workers run
 the patched ``zipimporter.invalidate_caches``, an unchanged archive is not
 re-read on invalidation, and a rewritten one is; workers inherit a frozen,
-pre-imported heap, and that pre-import starts in a bare interpreter."""
+pre-imported heap, and that pre-import starts in a bare interpreter; a
+worker that imports pandas for a pandas UDF freezes it after that task;
+and the workers of the numeric UDFs never load pandas."""
 
 from __future__ import annotations
 
+import contextlib
 import gc
 import importlib
 import os
+import signal
 import subprocess
 import sys
 import zipfile
 import zipimport
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+from test_session import _children, _cmdline
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -88,43 +95,118 @@ def test_invalidate_rereads_only_changed_archive(tmp_path, monkeypatch):
             del sys.path_importer_cache[k]
 
 
-def test_workers_inherit_frozen_heap(spark):
-    """The daemon freezes its pre-imported heap before it forks, so a
-    worker's per-task gc.collect() tracks only what was made after the
-    fork: a tenth of the frozen objects at most."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def freeze_count(s: pd.Series) -> pd.Series:
-        return pd.Series([gc.get_freeze_count()] * len(s))
-
-    @pandas_udf("long")
-    def tracked(s: pd.Series) -> pd.Series:
-        return pd.Series([len(gc.get_objects())] * len(s))
-
-    rows = spark.range(4, numPartitions=2).select(
-        freeze_count("id").alias("frozen"), tracked("id").alias("tracked")
-    ).collect()
-    for r in rows:
-        assert r.frozen > 50_000
-        assert r.tracked < r.frozen / 10
-
-
-def test_preload_runs_in_bare_interpreter():
-    """The daemon's pre-import needs no SparkContext and no JVM: if one of
-    its imports failed, no Python task of a session could start."""
-    code = ("import gc\n"
-            "from proj_spark import _daemon\n"
-            "_daemon.preload()\n"
-            "from pyspark import SparkContext\n"
-            "assert SparkContext._gateway is None\n"
-            "print(gc.get_freeze_count())\n")
+def _fresh_interpreter(code: str) -> str:
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p))
     out = subprocess.run([sys.executable, "-c", code], cwd=ROOT, env=env,
                          capture_output=True, text=True, timeout=120)
     assert out.returncode == 0, out.stderr
-    assert int(out.stdout.split()[-1]) > 0
+    return out.stdout
+
+
+def _bare_preload_freeze_count() -> int:
+    """gc.get_freeze_count() after ``preload()`` in a bare interpreter,
+    which must need no SparkContext and no JVM."""
+    return int(_fresh_interpreter(
+        "import gc\n"
+        "from proj_spark import _daemon\n"
+        "_daemon.preload()\n"
+        "from pyspark import SparkContext\n"
+        "assert SparkContext._gateway is None\n"
+        "print(gc.get_freeze_count())\n").split()[-1])
+
+
+def test_workers_inherit_frozen_heap(spark):
+    """The daemon freezes its pre-imported heap before it forks, so a
+    worker's per-task gc.collect() tracks only what was made after the
+    fork: a tenth of the frozen objects at most. A pandas UDF's first
+    task on a worker imports pandas; the worker freezes it after that
+    task, so from its second pandas-UDF task on the same bound holds."""
+    from pyspark.sql.functions import arrow_udf, pandas_udf
+
+    from proj_spark.functions import to_arrow
+
+    @arrow_udf("long")
+    def freeze_count(a: pa.Array) -> pa.Array:
+        return to_arrow(np.full(len(a), gc.get_freeze_count()))
+
+    @arrow_udf("long")
+    def tracked(a: pa.Array) -> pa.Array:
+        return to_arrow(np.full(len(a), len(gc.get_objects())))
+
+    bare = _bare_preload_freeze_count()
+    rows = spark.range(4, numPartitions=2).select(
+        freeze_count("id").alias("frozen"), tracked("id").alias("tracked")
+    ).collect()
+    for r in rows:
+        assert r.frozen >= bare
+        assert r.tracked < r.frozen / 10
+
+    @pandas_udf("pid long, task long, frozen long, tracked long")
+    def pandas_state(s: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame({"pid": os.getpid(), "task": int(s.iloc[0]),
+                             "frozen": gc.get_freeze_count(),
+                             "tracked": len(gc.get_objects())}, index=s.index)
+
+    # more single-row tasks than the pool has workers: some worker runs two
+    tasks = spark.range(32, numPartitions=32).select(pandas_state("id").alias("s"))
+    seen, later = set(), []
+    for r in sorted((r.s for r in tasks.collect()), key=lambda s: s.task):
+        if r.pid in seen:
+            later.append(r)
+        seen.add(r.pid)
+    assert later
+    for r in later:
+        assert r.tracked < r.frozen / 10, r
+
+
+def test_preload_runs_in_bare_interpreter():
+    """The daemon's pre-import needs no SparkContext and no JVM: if one of
+    its imports failed, no Python task of a session could start."""
+    assert _bare_preload_freeze_count() > 0
+
+
+def test_numeric_udfs_never_load_pandas(spark):
+    """The kernel, dispatch and fused-join UDFs read and write Arrow
+    buffers, and neither their modules nor the daemon import pandas, so
+    no worker that ran them maps pandas' native libraries."""
+    from pyspark.sql import functions as F
+
+    from proj_spark.functions import dispatch_udf, image_geo_full_udf
+    from proj_spark.operators.spatial_join import spatial_join_fused
+    from proj_spark.sources.epsg_ops import crs_to_crs_epsg_dispatch
+    from proj_spark.sources.synth import make_polygons
+
+    out = _fresh_interpreter(
+        "import sys\n"
+        "import proj_spark.functions, proj_spark.operators.spatial_join\n"
+        "import proj_spark.plans.dispatch\n"
+        "print('pandas' in sys.modules)\n")
+    assert out.split()[-1] == "False"
+
+    jvm = spark.sparkContext._gateway.proc.pid
+    daemons = [p for p in _children(jvm) if "proj_spark._daemon" in _cmdline(p)]
+    # retire the idle workers earlier tests left, some of which ran pandas
+    # UDFs, so every worker these jobs use is forked for them
+    for w in [w for d in daemons for w in _children(d)]:
+        with contextlib.suppress(ProcessLookupError):
+            os.kill(w, signal.SIGKILL)
+    pts = spark.range(20_000, numPartitions=4).select(
+        F.xxhash64("id").alias("phash"),
+        (F.col("id") % 60 / 10.0 - 9.0).alias("lon"), (F.col("id") % 78 / 10.0 + 36.0).alias("lat"))
+    disp = dispatch_udf(crs_to_crs_epsg_dispatch("EPSG:4230", "EPSG:4326"))
+    assert pts.select(disp("lon", "lat").alias("s")).agg(F.count("s.x")).first()[0] == 20_000
+    g = image_geo_full_udf(10)("phash")
+    imgs = pts.select(g.lon.alias("lon"), g.lat.alias("lat"), g.cell.alias("cell"))
+    joined = spatial_join_fused(imgs, make_polygons(16), level=8, cell_col="cell", cell_level=10)
+    assert joined.count() > 0
+
+    daemon, = [p for p in _children(jvm) if "proj_spark._daemon" in _cmdline(p)]
+    workers = _children(daemon)
+    assert workers
+    for w in workers:
+        with open(f"/proc/{w}/maps") as f:
+            assert "pandas/_libs" not in f.read(), w
 
 
 def test_worker_ends_quietly_when_the_jvm_closed_its_socket():
@@ -145,7 +227,7 @@ def test_worker_ends_quietly_when_the_jvm_closed_its_socket():
             "    daemon.worker(closed(), True)\n"
             "except BrokenPipeError:\n"
             "    print('stock raises')\n"
-            "_daemon.quiet_worker()\n"
+            "_daemon.wrap_worker()\n"
             "print('quiet', daemon.worker(closed(), True))\n")
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p))

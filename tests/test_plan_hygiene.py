@@ -114,17 +114,18 @@ def test_smj_join_runs_the_cell_udf_once(spark):
     assert plan.count("ArrowEvalPython") == 2, plan
 
 
-@pytest.mark.parametrize("tier, udf", [("minhash_lsh_pairs", "_sig"),
-                                       ("simhash_near_pairs", "_sim"),
-                                       ("ngram_jaccard_pairs", "_sh")],
+@pytest.mark.parametrize("tier, udf, verify", [("minhash_lsh_pairs", "_sig", "_jacc"),
+                                               ("simhash_near_pairs", "_sim", None),
+                                               ("ngram_jaccard_pairs", "_sh", None)],
                          ids=["minhash", "simhash", "ngram"])
-def test_pair_tier_is_one_equi_join_on_its_key(spark, tier, udf):
+def test_pair_tier_is_one_equi_join_on_its_key(spark, tier, udf, verify):
     """Each near-dup pair tier finds its candidates with ONE hash equi-join
     on its key (band hash, simhash block or shingle), not a theta/cartesian
     join and not a union of per-band joins — THE property that makes
     near-dup detection O(n) instead of O(n^2) at 100 TB. Its signature UDF
     runs at most once per join side: a nullable key makes Spark re-run it
-    below an inferred filter."""
+    below an inferred filter. A verify UDF runs once per candidate pair: a
+    threshold filter pushed below its Project would run it twice."""
     from proj_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -134,6 +135,8 @@ def test_pair_tier_is_one_equi_join_on_its_key(spark, tier, udf):
                            r" \[key#\d+L?\], \[key#\d+L?\]", plan)
     assert len(key_joins) == 1, plan
     assert plan.count(f"ArrowEvalPython [{udf}(") <= 2, plan
+    if verify:
+        assert plan.count(f"ArrowEvalPython [{verify}(") == 1, plan
 
 
 @pytest.mark.parametrize("tier", ["rhp_lsh_topk", "ivf_topk"])
