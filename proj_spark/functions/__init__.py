@@ -249,6 +249,10 @@ def image_geo_full_udf(level: int = 10):
     compute-dominated, which is what the scaling-efficiency evidence must
     measure. KERNEL_CHUNK blocks keep the intermediates between pipelines
     L2-resident; each is written into the preallocated outputs.
+
+    The UDF is marked nondeterministic, though its output depends on phash
+    alone: Spark then keeps a filter on that output (the fused join's
+    occupancy filter on the cell) above it instead of running it twice.
     """
     from proj_spark.sources.synth import lonlat_from_phash
 
@@ -276,7 +280,7 @@ def image_geo_full_udf(level: int = 10):
                 o[sl] = v
         return _struct(cols, out)
 
-    return _udf
+    return _udf.asNondeterministic()
 
 
 # ---------------------------------------------------------------------------

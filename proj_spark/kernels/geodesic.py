@@ -27,6 +27,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from proj_spark.crs import Ellipsoid
+from proj_spark.kernels.karney import lat_fix
 
 
 @dataclass(frozen=True)
@@ -41,11 +42,12 @@ def setup_vincenty(ell: Ellipsoid) -> VinConsts:
 
 
 def geod_inverse(lon1, lat1, lon2, lat2, C: VinConsts, iters: int = 50):
-    """degrees -> (s12 metres, azi1 deg, azi2 deg, converged mask)."""
+    """degrees -> (s12 metres, azi1 deg, azi2 deg, converged mask); a
+    latitude beyond +-90 gives NaN."""
     lon1 = np.radians(np.asarray(lon1, dtype=np.float64))
-    lat1 = np.radians(np.asarray(lat1, dtype=np.float64))
+    lat1 = np.radians(lat_fix(np.asarray(lat1, dtype=np.float64)))
     lon2 = np.radians(np.asarray(lon2, dtype=np.float64))
-    lat2 = np.radians(np.asarray(lat2, dtype=np.float64))
+    lat2 = np.radians(lat_fix(np.asarray(lat2, dtype=np.float64)))
     f, a, b = C.f, C.a, C.b
 
     U1 = np.arctan((1.0 - f) * np.tan(lat1))

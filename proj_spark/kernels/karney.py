@@ -252,6 +252,11 @@ def _ang_round(x):
     return np.where(x < 0, -y, y) * 1.0
 
 
+def lat_fix(x):
+    """A latitude beyond +-90 degrees is NaN (GeographicLib LatFix)."""
+    return np.where(np.abs(x) > 90.0, np.nan, x)
+
+
 def _ang_diff(x, y):
     """(y - x) normalized to [-180, 180], exact-ish."""
     d = np.remainder(y - x, 360.0)
@@ -464,8 +469,8 @@ def geod_inverse(C: GeodConsts, lat1, lon1, lat2, lon2,
     lonsign = np.where(lon12 >= 0.0, 1.0, -1.0)
     lon12 = lonsign * _ang_round(lon12)
 
-    lat1 = _ang_round(np.clip(lat1, -90.0, 90.0))
-    lat2 = _ang_round(np.clip(lat2, -90.0, 90.0))
+    lat1 = _ang_round(lat_fix(lat1))
+    lat2 = _ang_round(lat_fix(lat2))
 
     swapp = np.where(np.abs(lat1) < np.abs(lat2), -1.0, 1.0)
     lat1s = np.where(swapp < 0, lat2, lat1)

@@ -3,8 +3,8 @@
 The one broadcast path and its fallback:
 
   broadcast (``spatial_join_fused``; ``spatial_join`` when the cover fits):
-    points ──Arrow match UDF (occupancy gather, CSR cover lookup, exact
-    test)──> list of poly idx ──explode──> poly idx
+    points ──JVM occupancy filter──> covered points ──Arrow match UDF (CSR
+    cover lookup, exact test)──> list of poly idx ──explode──> poly idx
   smj (``spatial_join(strategy="smj")``, for a cover too big to ship; the
   only path that reads a ``cover=`` DataFrame):
     points ──sort-merge join on cell── cover ──exact-test UDF filter──> poly idx
@@ -12,13 +12,14 @@ The one broadcast path and its fallback:
 
 The O(points x polygons) predicate becomes an int64 cell lookup or
 equi-join, and the exact test is vectorized numpy over Arrow batches that
-carry only numeric columns. The broadcast match UDF reads and writes Arrow
-arrays directly: a bool-table gather drops the points whose cell has no
-cover cell, only the survivors are looked up and tested, and the match
-lists are built from numpy offsets, with no Python object per row. The
-cell cover stands in for the reference's bucket quadtree (src/quadtree.hpp)
-as a flat or relational structure, because at 10^12 rows the index must be
-a lookup or a join, not a tree walk.
+carry only numeric columns. On the broadcast path a bitmap of the cover's
+coarse ancestor cells, tested in whole-stage codegen, drops the points
+that cannot match before they cross into Python. The match UDF reads and
+writes Arrow arrays directly: the survivors are looked up and tested, and
+the match lists are built from numpy offsets, with no Python object per
+row. The cell cover stands in for the reference's bucket quadtree
+(src/quadtree.hpp) as a flat or relational structure, because at 10^12
+rows the index must be a lookup or a join, not a tree walk.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 
 from proj_spark import cells
-from proj_spark.functions import cell_parent, from_arrow, s2_cell_udf, to_arrow, valid_mask
+from proj_spark.functions import cell_parent, from_arrow, s2_cell_udf, to_arrow
 from proj_spark.sources.synth import Polygon
 
 if TYPE_CHECKING:
@@ -43,8 +44,8 @@ if TYPE_CHECKING:
 # ~90 deg, and quadratic-ST distortion keeps linear cell size within ~1.6x,
 # so 0.35 * 90/2^L sampling spacing guarantees >=2 samples per cell span.
 _FACE_DEG = 90.0
-# finest level of the match UDF's occupancy table (2^19 flags)
-_OCC_LEVEL = 8
+# finest level of the JVM occupancy filter in front of the match UDF
+_FILTER_LEVEL = 6
 
 
 def _cell_size_deg(level: int) -> float:
@@ -224,10 +225,10 @@ def spatial_join_fused(
     matches) — exploded and mapped to polygon ids by a JVM lookup into a
     literal array.
 
-    Per Arrow batch the UDF gathers one flag per point from a driver-built
-    occupancy table (one bool per level-``min(level, 8)`` ancestor of a
-    cover cell) and keeps only the points that may have a candidate. Those
-    are searched in the CSR index, expanded to (point, poly) candidates and
+    In front of the UDF, a JVM filter keeps only the points whose
+    level-``min(level, 6)`` ancestor holds a cover cell: one bit per
+    ancestor in a literal array of 384 bigint words. The survivors are
+    searched in the CSR index, expanded to (point, poly) candidates and
     tested exactly in one vectorized pass. The match lists come back as one
     ``ListArray`` whose offsets are the cumulative per-point match counts,
     polygons in ascending index order within a point. A null cell or a
@@ -235,11 +236,14 @@ def spatial_join_fused(
 
     vs the smj path: no join stage and no Python-RDD scan, and
     pass-through payload columns (captions, image bytes) never cross the
-    Arrow boundary; only (lon, lat, cell) go in. The match UDF
-    is still its own Arrow crossing, so after an upstream kernel UDF the
-    plan holds two ArrowEvalPython nodes. This is the north rule's
-    "broadcast of the polygon R-tree/cell-cover index when it fits"; fall
-    back to ``spatial_join(strategy='smj')`` when it doesn't.
+    Arrow boundary; only (lon, lat, cell) of the covered points go in. The
+    match UDF is still its own Arrow crossing, so after an upstream kernel
+    UDF the plan holds two ArrowEvalPython nodes. Spark pushes the filter
+    below a deterministic Python UDF and runs that UDF again: if a UDF of
+    the caller's feeds ``cell_col``, mark it ``asNondeterministic()``, as
+    ``image_geo_full_udf`` is. This is the north rule's "broadcast of the
+    polygon R-tree/cell-cover index when it fits"; fall back to
+    ``spatial_join(strategy='smj')`` when it doesn't.
     """
     return _fused_join(points, polys, polygon_cover(polys, level), lon_col=lon_col,
                        lat_col=lat_col, level=level, cell_col=cell_col, cell_level=cell_level)
@@ -257,28 +261,17 @@ def _fused_join(points: DataFrame, polys: Sequence[Polygon], cover_pdf: pd.DataF
     ends = np.append(starts[1:], len(cov_polys))
     poly_list = list(polys)
     edges = _edge_matrices(poly_list)
-    # occupancy: one flag per level-c ancestor (face + 2c Hilbert bits) of
-    # a cover cell, c = occ_level: 2^(3+2c) bools, 512 KB at c = 8
-    occ_level = min(level, _OCC_LEVEL)
-    occ_shift = 2 * (cells.MAX_LEVEL - occ_level) + 1
-    occ_mask = (1 << (3 + 2 * occ_level)) - 1
-    occupied = np.zeros(occ_mask + 1, dtype=bool)
-    occupied[(cov_cells >> occ_shift) & occ_mask] = True
 
     @arrow_udf("array<int>")
     def _matches(lon_a: pa.Array, lat_a: pa.Array, cell_a: pa.Array) -> pa.Array:
         n = len(cell_a)
-        # a null cell reads as 0 (no S2 id), never through a float cast
+        # a null cell reads as 0 (no S2 id), a null lon/lat as NaN
         cell = from_arrow(cell_a, np.int64)
-        # one gather keeps the points whose ancestor holds a cover cell
-        pt = np.flatnonzero(occupied[(cell >> occ_shift) & occ_mask])
-        if cell_a.null_count:
-            pt = pt[valid_mask(cell_a)[pt]]
-        # a null lon/lat reads as NaN; NaN coordinates match nothing
-        lon = from_arrow(lon_a)[pt]
-        lat = from_arrow(lat_a)[pt]
-        ok = ~(np.isnan(lon) | np.isnan(lat))
-        pt, lon, lat, cell = pt[ok], lon[ok], lat[ok], cell[pt[ok]]
+        lon = from_arrow(lon_a)
+        lat = from_arrow(lat_a)
+        # NaN coordinates match nothing
+        pt = np.flatnonzero(~(np.isnan(lon) | np.isnan(lat)))
+        lon, lat, cell = lon[pt], lat[pt], cell[pt]
         # cover lookup: searchsorted into the CSR cell index
         pos = np.minimum(np.searchsorted(cov_cells, cell), len(cov_cells) - 1)
         cnt = np.where(cov_cells[pos] == cell, ends[pos] - starts[pos], 0)
@@ -299,11 +292,23 @@ def _fused_join(points: DataFrame, polys: Sequence[Polygon], cover_pdf: pd.DataF
             [pa.py_buffer(np.packbits(count > 0, bitorder="little")), pa.py_buffer(offsets)],
             children=[to_arrow(pl_idx[match], np.int32)])
 
+    # occupancy bitmap: one bit per level-c ancestor (face + 2c Hilbert
+    # bits) of a cover cell, c = min(level, 6): 24,576 bits, 384 bigint words
+    c = min(level, _FILTER_LEVEL)
+    shift = 2 * (cells.MAX_LEVEL - c) + 1
+    anc = cov_cells.view(np.uint64) >> np.uint64(shift)
+    words = np.zeros(-(-(6 << 2 * c) // 64), dtype=np.uint64)
+    np.bitwise_or.at(words, anc >> np.uint64(6), np.uint64(1) << (anc & np.uint64(63)))
+    occupied = ", ".join(f"{w}L" for w in words.view(np.int64))
+    # an unsigned shift: faces 4-5 have negative ids
+    a = f"shiftrightunsigned(_cell_j, {shift})"
+    covered = F.expr(f"shiftright(get(array({occupied}), int(shiftright({a}, 6))), "
+                     f"int({a} & 63)) & 1 = 1")
     pts = points.withColumn(
         "_cell_j",
         F.col(cell_col) if cell_level == level
         else cell_parent(F.col(cell_col), level),
-    )
+    ).filter(covered)
     matched = pts.withColumn(
         "_pidx", F.explode(_matches(F.col(lon_col), F.col(lat_col), F.col("_cell_j")))
     ).drop("_cell_j")
@@ -345,8 +350,8 @@ def spatial_join(
     if cell_col is not None and (cell_level or level) >= level:
         src = F.col(cell_col)
         cell = src if (cell_level or level) == level else cell_parent(src, level)
-    else:
-        cell = s2_cell_udf(level)(F.col(lon_col), F.col(lat_col))
+    else:  # nondeterministic: else a filter on the cell runs the UDF again
+        cell = s2_cell_udf(level).asNondeterministic()(F.col(lon_col), F.col(lat_col))
     # non-null: else the join infers isnotnull(cell), re-running the UDF; 0 is no S2 id
     pts = points.withColumn("cell", F.coalesce(cell, F.lit(0)))
 

@@ -346,6 +346,8 @@ class CartStep(Step):
 
     def fwd(self, x, y, z, t):
         zz = z if z is not None else np.zeros_like(np.asarray(x, dtype=np.float64))
+        # a latitude beyond halfpi + PJ_EPS_LAT is invalid (fwd_prepare)
+        y = np.where(np.abs(y) - 0.5 * np.pi > 1e-12, np.nan, y)
         X, Y, Z = k_cart.cart_fwd(x, y, zz, self.ell)
         return X, Y, Z, t
 

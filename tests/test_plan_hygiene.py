@@ -64,7 +64,7 @@ def test_flagship_arrow_crossings(spark):
     """The benchmarked flagship plan (perfbench's ``image_points``: fused
     kernel UDF -> JVM tiles; then the fused cover join at level 8 on the
     level-10 cell) pays exactly two Arrow crossings: the kernel UDF and
-    the cover-match UDF. More means a
+    the cover-match UDF, with the JVM occupancy filter between. More means a
     rewrite re-ran a UDF (e.g. a pushed-down filter evaluating the kernel
     twice); an ExistingRDD scan means a driver-built table became a
     Python-RDD job on every execution."""
@@ -84,6 +84,10 @@ def test_flagship_arrow_crossings(spark):
     assert plan.count("ArrowEvalPython") == 2, plan
     assert "BatchEvalPython" not in plan
     assert "ExistingRDD" not in plan, plan
+    # the occupancy filter runs between the two crossings, on the kernel
+    # UDF's output: only covered points reach the match UDF
+    first, last = plan.index("ArrowEvalPython"), plan.rindex("ArrowEvalPython")
+    assert "Filter" in plan[first:last], plan
 
 
 def test_pip_join_is_the_fused_cover_index(spark, entry):

@@ -256,8 +256,7 @@ def test_fused_join_bad_rows_match_nothing(spark, polys, points_pdf):
 
 
 def test_fused_join_batch_with_no_covered_point(spark, polys):
-    """No point passes the occupancy table: every match list is null and
-    the join returns no rows."""
+    """No point has a cover cell: the join returns no rows."""
     from proj_spark import cells
 
     rng = np.random.default_rng(5)
@@ -268,6 +267,37 @@ def test_fused_join_batch_with_no_covered_point(spark, polys):
     assert not np.isin(prefix, cover).any()
     assert not brute_force_matches(pdf, polys)
     assert not _fused_rows(spark, pdf, polys)
+
+
+def _square(pid, lon0, lat0, lon1, lat1):
+    ring = np.array([lon0, lat0, lon1, lat0, lon1, lat1, lon0, lat1], dtype=float)
+    return synth.Polygon(pid, "poly", ring, (lon0, lat0, lon1, lat1))
+
+
+def test_occupancy_filter_keeps_matches_on_every_face(spark):
+    """One polygon on each of the six S2 faces and one across the
+    antimeridian: the JVM occupancy filter drops no match, on faces 4-5
+    (negative cell ids) too, so spatial_join_fused and the broadcast
+    spatial_join both equal brute force on a dense global grid."""
+    from collections import Counter
+
+    from proj_spark import cells
+
+    polys = [_square("face0", -10, -10, 10, 10), _square("face1", 80, -10, 100, 10),
+             _square("face2", 20, 60, 40, 75), _square("face3", 150, -10, 170, 10),
+             _square("face4", -100, -10, -80, 10), _square("face5", 20, -75, 40, -60),
+             _square("antimeridian", 170, 20, 190, 30)]
+    centre = np.array([((p.bbox[0] + p.bbox[2]) / 2, (p.bbox[1] + p.bbox[3]) / 2)
+                       for p in polys[:6]])
+    face = (cells.s2_cell_id(centre[:, 0], centre[:, 1], 0) >> 61) & 7
+    assert face.tolist() == [0, 1, 2, 3, 4, 5]
+    lon, lat = np.meshgrid(np.arange(-180.0, 180.0, 0.5), np.arange(-89.75, 90.0, 0.5))
+    pdf = pd.DataFrame({"pid": np.arange(lon.size), "lon": lon.ravel(), "lat": lat.ravel()})
+    expect = brute_force_matches(pdf, polys)
+    assert {g for _, g in expect} == {p.polygon_id for p in polys}
+    assert _fused_rows(spark, pdf, polys) == Counter(expect)
+    got = sj.spatial_join(spark.createDataFrame(pdf), polys, level=8, strategy="broadcast")
+    assert Counter((int(r.pid), r.polygon_id) for r in got.collect()) == Counter(expect)
 
 
 def test_s2_cell_id_every_level_is_the_leaf_parent():

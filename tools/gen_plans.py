@@ -27,10 +27,10 @@ NOTES = {
                           "mean a skew-free shuffle.",
     "knn_nation_k3": "The 25-row ref side is broadcast "
                      "(BroadcastNestedLoopJoin, never a shuffled cartesian).",
-    "pip_raycast_join": "Cell UDF, then the broadcast cell-cover index "
-                        "inside the Arrow match UDF (occupancy gather, "
-                        "cover lookup, exact ray-cast): 2 Arrow crossings, "
-                        "no join stage.",
+    "pip_raycast_join": "Cell UDF, a JVM Filter on the cover's level-6 "
+                        "occupancy bitmap, then the broadcast cell-cover "
+                        "index inside the Arrow match UDF (cover lookup, "
+                        "exact ray-cast): 2 Arrow crossings, no join stage.",
     "cosine_topk_lsh": "The query returns its one-row recall verdict, so "
                        "the plan below is that row's scan. The rhp_lsh_topk "
                        "DAG it grades scans once, runs the band-key UDF "
@@ -62,6 +62,9 @@ def main() -> None:
         # elide file listing noise
         plan = re.sub(r"Location: [^\n]*", "Location: ...", plan)
         plan = re.sub(r", \[plan_id=\d+\]", "", plan)
+        # elide long literal arrays (the cover join's occupancy bitmap)
+        plan = re.sub(r"\[-?\d+(?:,-?\d+){15,}\]",
+                      lambda m: f"[{m.group().count(',') + 1} literals]", plan)
         lines = plan.strip().splitlines()
         if len(lines) > 80:
             lines = lines[:80] + [f"... ({len(lines) - 80} more lines; "
